@@ -52,6 +52,8 @@ RECENTLY_TOUCHED = frozenset(
         "pca_second_component", "svd_rank2_affinity",
         "multimodal_features", "ann_ivf_probe_sweep",
         "dedup_clusters", "dup_sampling_weights",
+        # the similarity_join registry queries (Arrow-batched scorer)
+        "knn_multi_query", "ann_srp_recall_eval",
     }
 )
 

@@ -4,10 +4,13 @@ Reference semantics: Qdrant stores 384-d unit vectors and scores by dot
 product, which on unit vectors IS cosine similarity
 (`pipeline/store_assets.py:42`, `pipeline/encode_assets.py:30`,
 `README.md:78` of the reference).  Here the vector is an
-``ArrayType(Float/Double)`` column and the fold runs inside whole-stage
-codegen via the higher-order functions ``zip_with``/``aggregate`` — no
-Python in the hot path, so a 100 TB scan scores vectors at JVM speed and
-embarrassingly parallel (no shuffle).
+``ArrayType(Float/Double)`` column and the fold is the higher-order
+functions ``zip_with``/``aggregate``: no Python, embarrassingly parallel
+(no shuffle).  It does NOT run in whole-stage codegen — the HOF
+``Project`` carries no codegen marker and evaluates interpreted, per row
+and per element.  Batched multi-query scoring therefore goes through the
+Arrow-batched scorer in ``operators.knn.similarity_join``, which sums in
+this fold's exact order, so its scores are bit-identical to these.
 
 All folds accumulate in DOUBLE regardless of the input element type so
 results are reproducible against the DuckDB oracle.
