@@ -19,10 +19,13 @@ first collect (compile included).  Construction is timed since round 9
 work inside ``fn(spark, sf_dir)``, which a collect-only cold sample never
 saw; ``build_queries`` / ``build_total_sec`` break that component out.
 
-Shared artifacts (the dedup family's shingle/signature tables, the IVF
-index) are built in an explicit UNTIMED setup phase — the amortized-index
-model a production pipeline runs — and the setup cost is disclosed
-separately as ``setup_sec`` so per-query timings aren't misread (ADVICE r1).
+Shared artifacts (the dedup family's shingle/signature tables, the ANN
+indexes, the suffix-rank pyramid, ...) are declared with
+``registry.artifact`` and built by ``registry.build_artifacts`` in an
+explicit UNTIMED setup phase — the amortized-index model a production
+pipeline runs.  The setup cost is disclosed separately as ``setup_sec``,
+and per artifact as ``setup_builders``, so per-query timings aren't
+misread (ADVICE r1).
 """
 
 from __future__ import annotations
@@ -80,87 +83,18 @@ def main() -> None:
     warm = spark.range(0, 1024, 1, cpus)
     warm.mapInPandas(lambda it: it, schema="id long").count()
 
-    # Explicit setup phase: build-once artifacts shared across queries.
-    from vector_search_spark.registry_dedup import (  # noqa: E402
-        _shared_components, _shared_lsh_candidates, _shared_shingles,
-        _shared_signatures, _shared_simhash_sigs, _shared_sym_edges,
-        _shared_token_blocks, _shared_verified_pairs,
-    )
-    from vector_search_spark.registry_round5 import _shared_lpa_labels  # noqa: E402
-    from vector_search_spark.registry_extensions import (  # noqa: E402
-        _shared_ivf_index, _shared_pq_index, _shared_sq_index, _shared_srp_index,
-        _shared_srpw_index,
-    )
-    from vector_search_spark.registry_text import (  # noqa: E402
-        _shared_bigram_lm, _shared_bpe, _shared_doc_features, _shared_phrase_index,
-    )
-    from vector_search_spark.registry_relational import _ps  # noqa: E402
-    from vector_search_spark.registry_round4 import (  # noqa: E402
-        _shared_ivfpq_coarse, _shared_ivfpq_residual_index,
-    )
-    from vector_search_spark.registry_suffix import (  # noqa: E402
-        _shared_sa_adjacent, _shared_suffix,
-    )
-
-    # Setup builders can be excluded by name for exploratory scale runs
-    # whose query family is skipped too (the suffix array at 1000x is
-    # ~4 GB heap per M tokens — excluded by design, so its index must not
-    # be built either).  Never set for driver runs.
-    skip_setup = {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP_SETUP", "").split(",") if s
-    }
-    builders = [
-        ("_ps", _ps),
-        ("_shared_shingles", _shared_shingles),
-        ("_shared_signatures", _shared_signatures),
-        ("_shared_simhash_sigs", _shared_simhash_sigs),
-        ("_shared_lsh_candidates", _shared_lsh_candidates),
-        ("_shared_verified_pairs", _shared_verified_pairs),
-        # dup-graph artifacts shared by 6+ queries each (round 11): the
-        # symmetric edge list, its connected-component labels, and the
-        # LPA label table were re-derived per consuming query before
-        ("_shared_sym_edges", _shared_sym_edges),
-        ("_shared_components", _shared_components),
-        ("_shared_lpa_labels", _shared_lpa_labels),
-        ("_shared_token_blocks", _shared_token_blocks),
-        ("_shared_ivf_index", _shared_ivf_index),
-        ("_shared_srp_index", _shared_srp_index),
-        # the wide-band (adaptive) index was missing here through r9 —
-        # tranche sessions built it lazily inside the first "warm" rep,
-        # which is why 1000x warm decade ratios were garbage (VERDICT r9
-        # "what's wrong" #4); with it in setup, warm times time the QUERY
-        ("_shared_srpw_index", _shared_srpw_index),
-        ("_shared_pq_index", _shared_pq_index),
-        ("_shared_sq_index", _shared_sq_index),
-        ("_shared_doc_features", _shared_doc_features),
-        ("_shared_bpe", _shared_bpe),
-        ("_shared_bigram_lm", _shared_bigram_lm),
-        ("_shared_phrase_index", _shared_phrase_index),
-        ("_shared_ivfpq_coarse", _shared_ivfpq_coarse),
-        ("_shared_ivfpq_residual_index", _shared_ivfpq_residual_index),
-        ("_shared_suffix", _shared_suffix),
-        # cross-doc SA-adjacent LCP pairs (round 11): the shared front half
-        # of corpus_suffix_repeats + corpus_exact_dedup_rewrite; skip it
-        # whenever _shared_suffix is skipped (same heap-sizing rule)
-        ("_shared_sa_adjacent", _shared_sa_adjacent),
-    ]
+    # Explicit setup phase: every registry.ARTIFACTS entry, in that order.
+    # SPARK_GRAFT_BENCH_SKIP_SETUP=a,b skips artifacts by name, and with
+    # them every artifact built on them, for exploratory scale runs whose
+    # query family is skipped too (the suffix array at 1000x is ~4 GB heap
+    # per M tokens — excluded by design, so its index must not be built
+    # either).  Never set for driver runs.
     t0 = time.perf_counter()
-    setup_builders: dict[str, float] = {}
-    if "_shared_suffix" in skip_setup:
-        # the adjacency table sits on top of the rank pyramid — skipping
-        # the pyramid (the suffix heap-sizing rule) must skip it too, or
-        # the lazy build would rebuild what the skip excluded
-        skip_setup.add("_shared_sa_adjacent")
-    for bname, builder in builders:
-        if bname in skip_setup:
-            print(f"# setup {bname}: SKIPPED", file=sys.stderr)
-            continue
-        tb = time.perf_counter()
-        builder(spark, sf_dir)
-        setup_builders[bname] = round(time.perf_counter() - tb, 3)
-        print(f"# setup {bname}: {setup_builders[bname]}s", file=sys.stderr)
+    setup_builders = registry.build_artifacts(
+        spark, sf_dir, skip=os.environ.get("SPARK_GRAFT_BENCH_SKIP_SETUP", "").split(",")
+    )
     setup_sec = round(time.perf_counter() - t0, 3)
-    print(f"# setup (shingle/signature/IVF index builds): {setup_sec}s", file=sys.stderr)
+    print(f"# setup (shared artifact builds): {setup_sec}s", file=sys.stderr)
 
     # Per-query MEDIAN of SPARK_GRAFT_BENCH_REPS collects (default 3) of ONE
     # built DataFrame: local[N] run-to-run variance is ~±30% (medians per the

@@ -93,7 +93,10 @@ TABLES = (
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] (8 when unset) to match the host; shuffle
+    # partitions stay 8 so partition counts in test outputs do not move.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("tests", cpus=cpus, shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -15,14 +15,14 @@ import duckdb
 from conftest import SF_TEST
 from vector_search_spark import registry
 from vector_search_spark.registry_round5 import LPA_ROUNDS
-from vector_search_spark.registry_round6 import (
-    ACF_MAX_LAG,
+from vector_search_spark.registry_forecast import ACF_MAX_LAG
+from vector_search_spark.registry_graph import (
     BFS_ROUNDS,
-    LOGREG_ROUNDS,
     TEXTRANK_MIN_DF,
     TEXTRANK_ROUNDS,
     TEXTRANK_TOPK,
 )
+from vector_search_spark.registry_mlfit import LOGREG_ROUNDS
 
 
 def _edges(spark, sf_dir):
@@ -276,7 +276,7 @@ def _dot(a, b):
 def test_knn_loo_eval_matches_pure_python(spark):
     import hashlib
 
-    from vector_search_spark.registry_round6 import LOO_K, LOO_MOD
+    from vector_search_spark.registry_mlfit import LOO_K, LOO_MOD
 
     rows = _emb_rows(SF_TEST)
     samp = [
@@ -311,7 +311,7 @@ def test_knn_loo_eval_matches_pure_python(spark):
 
 
 def test_mmr_matches_pure_python_greedy(spark):
-    from vector_search_spark.registry_round6 import MMR_CAND, MMR_PICKS
+    from vector_search_spark.registry_search import MMR_CAND, MMR_PICKS
 
     rows = _emb_rows(SF_TEST)
     qv = next(r[2] for r in rows if r[0] == 0)
@@ -350,7 +350,7 @@ def test_mmr_matches_pure_python_greedy(spark):
 
 
 def test_rocchio_matches_pure_python(spark):
-    from vector_search_spark.registry_round6 import PRF_FB, PRF_TOPK
+    from vector_search_spark.registry_search import PRF_FB, PRF_TOPK
 
     rows = _emb_rows(SF_TEST)
     qv = next(r[2] for r in rows if r[0] == 0)
@@ -582,7 +582,7 @@ def test_tree_depth2_matches_pure_python(spark):
 
 
 def test_double_sweep_matches_pure_python(spark):
-    from vector_search_spark.registry_round6 import DIAM_ROUNDS
+    from vector_search_spark.registry_graph import DIAM_ROUNDS
 
     edges = _edges(spark, SF_TEST)
     nbrs = defaultdict(set)
@@ -814,7 +814,7 @@ def test_markov_expected_steps_matches_python_and_exact_solve(spark):
     import numpy as np
 
     from vector_search_spark.registry_ml import _MK_TYPES
-    from vector_search_spark.registry_round6 import HIT_ROUNDS, _HIT_SCALE
+    from vector_search_spark.registry_graph import HIT_ROUNDS, _HIT_SCALE
 
     con = duckdb.connect()
     rows = con.execute(
@@ -865,7 +865,7 @@ def test_markov_expected_steps_matches_python_and_exact_solve(spark):
 
 
 def test_personalized_pagerank_matches_pure_python(spark):
-    from vector_search_spark.registry_round6 import PPR_ITER
+    from vector_search_spark.registry_graph import PPR_ITER
 
     edges = _edges(spark, SF_TEST)
     nbrs_in = defaultdict(list)
@@ -901,7 +901,7 @@ def test_bagging_split_stability_matches_pure_python(spark):
     import hashlib
 
     from vector_search_spark.registry_ml import _POIS_T
-    from vector_search_spark.registry_round6 import BAG_B
+    from vector_search_spark.registry_mlfit import BAG_B
 
     con = duckdb.connect()
     rows = con.execute(
@@ -1045,7 +1045,7 @@ def test_conformal_group_coverage_matches_pure_python(spark):
 def test_sprt_matches_pure_python_and_stops_early(spark):
     import hashlib
 
-    from vector_search_spark.registry_round6 import SPRT_THRESH_MICRO
+    from vector_search_spark.registry_stats import SPRT_THRESH_MICRO
 
     con = duckdb.connect()
     rows = con.execute(
@@ -1336,7 +1336,7 @@ def test_group_sequential_matches_pure_python_and_never_stops(spark):
 
 
 def test_ses_matches_dyadic_rebuild_and_recurrence(spark):
-    from vector_search_spark.registry_round6 import SES_MAX_E
+    from vector_search_spark.registry_forecast import SES_MAX_E
 
     con = duckdb.connect()
     rows = con.execute(
@@ -1404,7 +1404,7 @@ def test_winsorized_mean_matches_sorted_python(spark):
 def test_cuped_matches_pure_python(spark):
     import hashlib
 
-    from vector_search_spark.registry_round6 import CUPED_PRE_DAYS
+    from vector_search_spark.registry_stats import CUPED_PRE_DAYS
 
     con = duckdb.connect()
     rows = con.execute(
@@ -1458,7 +1458,7 @@ def test_cuped_matches_pure_python(spark):
 
 
 def test_brown_trend_matches_recurrences_and_integer_rebuild(spark):
-    from vector_search_spark.registry_round6 import SES_MAX_E
+    from vector_search_spark.registry_forecast import SES_MAX_E
 
     con = duckdb.connect()
     rows = con.execute(

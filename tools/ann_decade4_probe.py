@@ -91,7 +91,7 @@ def main() -> None:
            "mass": round(n * 2 ** -bits, 1), "queries": {}}
 
     t0 = time.perf_counter()
-    ib = _shared_srpw_index(spark, args.out)
+    ib, _ = _shared_srpw_index(spark, args.out)
     out["srpw_setup_sec"] = round(time.perf_counter() - t0, 1)
     print(f"# srpw setup {out['srpw_setup_sec']}s", file=sys.stderr)
 

@@ -3,6 +3,9 @@
 Usage:
     python tools/phase_profile.py <query> [...] [--sf DIR] [--cpus N] [--setup]
 
+``--setup`` pre-builds the shared artifacts first, as bench.py does
+(``registry.build_artifacts``, honoring SPARK_GRAFT_BENCH_SKIP_SETUP).
+
 For each query, measures:
   - build_s: DataFrame-construction wall time (Python + eager checkpoints)
   - phases: QueryPlanningTracker durations (analysis / optimization /
@@ -49,39 +52,9 @@ def main() -> None:
     )
     qs = registry.QUERIES
     if do_setup:
-        from vector_search_spark.registry_dedup import (
-            _shared_components, _shared_lsh_candidates, _shared_shingles,
-            _shared_signatures, _shared_simhash_sigs, _shared_sym_edges,
-            _shared_token_blocks, _shared_verified_pairs,
+        registry.build_artifacts(
+            spark, sf, skip=os.environ.get("SPARK_GRAFT_BENCH_SKIP_SETUP", "").split(",")
         )
-        from vector_search_spark.registry_round5 import _shared_lpa_labels
-        from vector_search_spark.registry_extensions import (
-            _shared_ivf_index, _shared_pq_index, _shared_sq_index,
-            _shared_srp_index, _shared_srpw_index,
-        )
-        from vector_search_spark.registry_text import (
-            _shared_bigram_lm, _shared_bpe, _shared_doc_features,
-            _shared_phrase_index,
-        )
-        from vector_search_spark.registry_relational import _ps
-        from vector_search_spark.registry_round4 import (
-            _shared_ivfpq_coarse, _shared_ivfpq_residual_index,
-        )
-        from vector_search_spark.registry_suffix import (
-            _shared_sa_adjacent, _shared_suffix,
-        )
-
-        for b in (
-            _ps, _shared_shingles, _shared_signatures, _shared_simhash_sigs,
-            _shared_lsh_candidates, _shared_verified_pairs, _shared_sym_edges,
-            _shared_components, _shared_lpa_labels, _shared_token_blocks,
-            _shared_ivf_index, _shared_srp_index, _shared_srpw_index,
-            _shared_pq_index, _shared_sq_index, _shared_doc_features,
-            _shared_bpe, _shared_bigram_lm, _shared_phrase_index,
-            _shared_ivfpq_coarse, _shared_ivfpq_residual_index,
-            _shared_suffix, _shared_sa_adjacent,
-        ):
-            b(spark, sf)
 
     # Warm the JVM/session once so the first profiled query is not charged
     # JVM start.

@@ -6,8 +6,9 @@ Usage:
 
 For each query: time DataFrame construction (build), the first collect
 (cold = build + compile + first execution) and `reps` further collects
-(warm).  ``--setup`` pre-builds the bench's shared artifacts first (the
-amortized-index model) so numbers match bench.py's regime.  ``--noop``
+(warm).  ``--setup`` pre-builds the shared artifacts first, as bench.py
+does (``registry.build_artifacts``, honoring SPARK_GRAFT_BENCH_SKIP_SETUP),
+so numbers match bench.py's regime.  ``--noop``
 consumes via the noop sink (guide §1.4) instead of the bench's checksum/
 collect consumption, isolating computation from the sink.
 """
@@ -57,41 +58,10 @@ def main() -> None:
     spark.range(0, 1024, 1, cpus).mapInPandas(lambda i: i, schema="id long").count()
 
     if do_setup:
-        import bench  # noqa: F401  (reuse the builder list indirectly)
-        from vector_search_spark.registry_dedup import (
-            _shared_components, _shared_lsh_candidates, _shared_shingles,
-            _shared_signatures, _shared_simhash_sigs, _shared_sym_edges,
-            _shared_token_blocks, _shared_verified_pairs,
-        )
-        from vector_search_spark.registry_round5 import _shared_lpa_labels
-        from vector_search_spark.registry_extensions import (
-            _shared_ivf_index, _shared_pq_index, _shared_sq_index,
-            _shared_srp_index, _shared_srpw_index,
-        )
-        from vector_search_spark.registry_text import (
-            _shared_bigram_lm, _shared_bpe, _shared_doc_features,
-            _shared_phrase_index,
-        )
-        from vector_search_spark.registry_relational import _ps
-        from vector_search_spark.registry_round4 import (
-            _shared_ivfpq_coarse, _shared_ivfpq_residual_index,
-        )
-        from vector_search_spark.registry_suffix import (
-            _shared_sa_adjacent, _shared_suffix,
-        )
-
         t0 = time.perf_counter()
-        for b in (
-            _ps, _shared_shingles, _shared_signatures, _shared_simhash_sigs,
-            _shared_lsh_candidates, _shared_verified_pairs, _shared_sym_edges,
-            _shared_components, _shared_lpa_labels, _shared_token_blocks,
-            _shared_ivf_index, _shared_srp_index, _shared_srpw_index,
-            _shared_pq_index, _shared_sq_index, _shared_doc_features,
-            _shared_bpe, _shared_bigram_lm, _shared_phrase_index,
-            _shared_ivfpq_coarse, _shared_ivfpq_residual_index,
-            _shared_suffix, _shared_sa_adjacent,
-        ):
-            b(spark, sf)
+        registry.build_artifacts(
+            spark, sf, skip=os.environ.get("SPARK_GRAFT_BENCH_SKIP_SETUP", "").split(",")
+        )
         print(f"# setup: {time.perf_counter() - t0:.2f}s", file=sys.stderr)
 
     for name in names:

@@ -6,7 +6,7 @@
 # pyramid is ~4 GB heap per M tokens; 270 M tokens does not fit the box —
 # same exclusion as every prior campaign, disclosed in SCALING_MEASURED).
 #
-# Protocol (run_r11_campaign.sh layout): slice-verify the fixture first
+# Protocol (the round-11 campaign layout): slice-verify the fixture first
 # (the standing correctness gate at scales where DuckDB oracles time
 # out), then one REPS=3 tranche with only the dedup-chain setup builders
 # enabled; SPARK_LOCAL_DIRS wiped per JVM.

@@ -1,10 +1,11 @@
-"""Result-filter operators with the reference MCP semantics (Q4/Q5/Q6).
+"""Result-filter operators with the reference MCP semantics (Q4/Q5).
 
 Reference (`mcp_server.py:152-177`): after rerank+sort, stream-filter in
 order — drop below ``min_score`` (`:154-156`), keep rows inside the
 inclusive date range where **unparseable/missing dates pass the filter**
 (`:169-171`), stop at ``limit`` (`:175-177`).  Declaratively that is:
-filter → ordered limit; Catalyst plans the tail as TakeOrderedAndProject,
+filter → ordered limit (the limit is applied in ``plans.search.search``);
+Catalyst plans the tail as TakeOrderedAndProject,
 and at 100 TB the predicates push down *below* the rerank when the rerank
 column isn't involved.
 """
@@ -40,7 +41,3 @@ def date_range_filter(
         cond = F.col(date_col).isNull() | cond
     return df.filter(cond)
 
-
-def ordered_limit(df: DataFrame, order_col: str = "rerank_score", n: int = 10) -> DataFrame:
-    """Q6: top-n of the filtered survivors, ordered desc (post-filter limit)."""
-    return df.orderBy(F.desc(order_col)).limit(n)

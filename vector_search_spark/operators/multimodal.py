@@ -64,19 +64,6 @@ def attach_binary_payload(
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic fake 'decode': dims + features from the byte content.
-
-    STUB for the real ``PIL.Image.open → resize → embed`` path; raises in
-    ``strict`` mode so callers can't mistake it for real pixels.
-    """
-    digest = hashlib.md5(payload).digest()
-    w = digest[0] * 8 + 1
-    h = digest[1] * 8 + 1
-    feats = [(b / 255.0) * 2.0 - 1.0 for b in digest[:FEATURE_DIM]]
-    return w, h, feats
-
-
 def decode_image_features(
     df: DataFrame,
     payload_col: str = "payload",

@@ -15,27 +15,10 @@ from ..partitioning import fan_out
 from ..functions.text import (
     STOPWORDS,
     md5_fingerprint,
-    punct_ratio,
     quality_score,
     rolling_hash,
-    stopword_ratio,
-    token_count_bpe,
     token_count_ws,
 )
-
-
-def document_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document stats projection: lengths, token counts, ratios, quality."""
-    t = F.col(text_col)
-    return fan_out(df, id_col).select(
-        F.col(id_col),
-        F.length(t).alias("n_chars"),
-        token_count_ws(t).alias("n_tokens_ws"),
-        token_count_bpe(t).alias("n_tokens_bpe"),
-        round4(punct_ratio(t)).alias("punct_ratio"),
-        round4(stopword_ratio(t, "en")).alias("stopword_ratio"),
-        round4(quality_score(t, "en")).alias("quality"),
-    )
 
 
 def _lang_scores(t: Column) -> dict[str, Column]:

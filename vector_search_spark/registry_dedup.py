@@ -18,7 +18,7 @@ from .operators.dedup import (
     simhash_pairs,
 )
 from .functions.scalar import round4
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 NUM_HASHES = 16
@@ -28,100 +28,78 @@ SHINGLE_N = 3
 
 # The whole dedup family reads the same (doc_id, shingle) table and minhash
 # signature table; the bench and driver run all the shingle-based queries in
-# one session, so build each once per (session, sf_dir) and persist — like a
-# production pipeline's shared feature tables.  Assumes the parquet under
-# sf_dir is immutable for the session (true for the fixture corpus); a
-# replaced entry unpersists the old DataFrame so nothing leaks.
-_SHINGLE_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_SIG_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+# one session, so each is a session-shared ``@artifact`` — like a
+# production pipeline's shared feature tables.
 
 
-def _session_cached(
-    cache, spark: SparkSession, sf_dir: str, build, checkpoint: bool = False
-) -> DataFrame:
-    """``checkpoint=True`` materializes via eager ``localCheckpoint`` —
-    same storage as persist, but the LOGICAL plan is truncated too, so
-    consumers of a deep build (the banded self-join, the cascade verify)
-    don't re-analyze the whole artifact lineage on every query plan."""
-    hit = cache.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:  # stale session: release the old persisted table
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # old session already stopped — nothing to release
-    if checkpoint:
-        df = build().localCheckpoint(eager=True)
-    else:
-        df = build().persist()
-        df.count()
-    cache[sf_dir] = (spark, df)
-    return df
-
-
+@artifact()
 def _shared_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _session_cached(
-        _SHINGLE_CACHE, spark, sf_dir,
-        lambda: shingle_table(__load(spark, sf_dir, "documents"), shingle_n=SHINGLE_N),
-    )
+    return shingle_table(__load(spark, sf_dir, "documents"), shingle_n=SHINGLE_N)
 
 
+@artifact(deps=("_shared_shingles",))
 def _shared_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import minhash_signatures
 
-    return _session_cached(
-        _SIG_CACHE, spark, sf_dir,
-        lambda: minhash_signatures(
-            __load(spark, sf_dir, "documents"),
-            num_hashes=NUM_HASHES, shingle_n=SHINGLE_N,
-            shingled=_shared_shingles(spark, sf_dir),
-        ),
+    return minhash_signatures(
+        __load(spark, sf_dir, "documents"),
+        num_hashes=NUM_HASHES, shingle_n=SHINGLE_N,
+        shingled=_shared_shingles(spark, sf_dir),
     )
 
 
-_SIMHASH_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_CAND_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@artifact(deps=("_shared_shingles", "_shared_signatures"), checkpoint=True)
 def _shared_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band candidates with est_jaccard, floor 0.0 — the one banded
     self-join the whole LSH family shares; each query filters its own
     threshold on top (a narrow filter over the persisted pair table)."""
-    return _session_cached(
-        _CAND_CACHE, spark, sf_dir,
-        lambda: minhash_lsh_pairs(
-            __load(spark, sf_dir, "documents"),
-            num_hashes=NUM_HASHES, shingle_n=SHINGLE_N, bands=BANDS,
-            min_est_jaccard=0.0,
-            shingled=_shared_shingles(spark, sf_dir),
-            signatures=_shared_signatures(spark, sf_dir),
-        ),
-        checkpoint=True,
+    return minhash_lsh_pairs(
+        __load(spark, sf_dir, "documents"),
+        num_hashes=NUM_HASHES, shingle_n=SHINGLE_N, bands=BANDS,
+        min_est_jaccard=0.0,
+        shingled=_shared_shingles(spark, sf_dir),
+        signatures=_shared_signatures(spark, sf_dir),
     )
 
 
-_SYM_EDGES_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-_CC_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
+@artifact(
+    deps=("_shared_shingles", "_shared_signatures", "_shared_lsh_candidates"),
+    checkpoint=True,
+)
+def _shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cascade-verified near-dup pairs (signature agreement >= 0.5, exact
+    Jaccard >= 0.8) — the artifact `dedup_cascade_keep`, `dedup_clusters`
+    and `dup_sampling_weights` all consume.  A production pipeline
+    materializes this pair table once per corpus snapshot; re-deriving the
+    exact-Jaccard verify join per downstream query tripled the family's
+    cost in BENCH."""
+    from .operators.dedup import neardup_cascade
+
+    return neardup_cascade(
+        __load(spark, sf_dir, "documents"),
+        num_hashes=NUM_HASHES, shingle_n=SHINGLE_N, bands=BANDS,
+        jaccard_threshold=0.8,
+        shingled=_shared_shingles(spark, sf_dir),
+        signatures=_shared_signatures(spark, sf_dir), est_floor=0.5,
+        candidates=_shared_lsh_candidates(spark, sf_dir),
+    )
 
 
+@artifact(deps=("_shared_verified_pairs",), checkpoint=True)
 def _shared_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct symmetric edge list of the verified near-dup graph —
     session-shared (round 11): six dup-graph queries each re-derived and
     re-checkpointed this same table from `_shared_verified_pairs` (one
     distinct exchange + materialization per query build)."""
     pairs = _shared_verified_pairs(spark, sf_dir)
-    return _session_cached(
-        _SYM_EDGES_CACHE, spark, sf_dir,
-        lambda: (
-            pairs.select(F.col("id_1").alias("a"), F.col("id_2").alias("b"))
-            .unionAll(pairs.select(F.col("id_2").alias("a"), F.col("id_1").alias("b")))
-            .distinct()
-        ),
-        checkpoint=True,
+    return (
+        pairs.select(F.col("id_1").alias("a"), F.col("id_2").alias("b"))
+        .unionAll(pairs.select(F.col("id_2").alias("a"), F.col("id_1").alias("b")))
+        .distinct()
     )
 
 
+@artifact(deps=("_shared_verified_pairs",))
 def _shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels (node, label) of the verified near-dup
     pair set — session-shared (round 11): five registry queries
@@ -132,48 +110,18 @@ def _shared_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     final label table is already checkpointed by the operator."""
     from .operators.dedup import connected_components
 
-    return _session_cached(
-        _CC_CACHE, spark, sf_dir,
-        lambda: connected_components(
-            _shared_verified_pairs(spark, sf_dir).select("id_1", "id_2")
-        ),
+    return connected_components(
+        _shared_verified_pairs(spark, sf_dir).select("id_1", "id_2")
     )
 
 
+@artifact(deps=("_shared_shingles",))
 def _shared_simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import simhash
 
-    return _session_cached(
-        _SIMHASH_CACHE, spark, sf_dir,
-        lambda: simhash(
-            __load(spark, sf_dir, "documents"),
-            shingle_n=SHINGLE_N, shingled=_shared_shingles(spark, sf_dir),
-        ),
-    )
-
-_VERIFIED_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
-def _shared_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cascade-verified near-dup pairs (signature agreement >= 0.5, exact
-    Jaccard >= 0.8) — the artifact `dedup_cascade_keep`, `dedup_clusters`
-    and `dup_sampling_weights` all consume.  A production pipeline
-    materializes this pair table once per corpus snapshot; re-deriving the
-    exact-Jaccard verify join per downstream query tripled the family's
-    cost in BENCH."""
-    from .operators.dedup import neardup_cascade
-
-    return _session_cached(
-        _VERIFIED_CACHE, spark, sf_dir,
-        lambda: neardup_cascade(
-            __load(spark, sf_dir, "documents"),
-            num_hashes=NUM_HASHES, shingle_n=SHINGLE_N, bands=BANDS,
-            jaccard_threshold=0.8,
-            shingled=_shared_shingles(spark, sf_dir),
-            signatures=_shared_signatures(spark, sf_dir), est_floor=0.5,
-            candidates=_shared_lsh_candidates(spark, sf_dir),
-        ),
-        checkpoint=True,
+    return simhash(
+        __load(spark, sf_dir, "documents"),
+        shingle_n=SHINGLE_N, shingled=_shared_shingles(spark, sf_dir),
     )
 
 
@@ -1367,9 +1315,7 @@ def q_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 BLOCK_TOKENS = 16
 
-_BLOCKS_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@artifact()
 def _shared_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, block_id, block_text, n_toks, block_hash): the consecutive
     16-token block table every sub-document operator consumes
@@ -1378,32 +1324,28 @@ def _shared_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the shingle/signature artifacts.  At 100 TB this is the
     block-level companion of the shingle table: materialized next to the
     corpus, ~1 row per 16 tokens."""
-
-    def build() -> DataFrame:
-        docs = __load(spark, sf_dir, "documents")
-        toks = docs.select(
-            "doc_id",
-            F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
-                "pos", "tok"
-            ),
+    docs = __load(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
+            "pos", "tok"
+        ),
+    )
+    return (
+        toks.withColumn("block_id", F.expr(f"pos DIV {BLOCK_TOKENS}"))
+        .groupBy("doc_id", "block_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
+                    lambda s: s.tok,
+                ),
+                " ",
+            ).alias("block_text"),
+            F.count(F.lit(1)).cast("long").alias("n_toks"),
         )
-        return (
-            toks.withColumn("block_id", F.expr(f"pos DIV {BLOCK_TOKENS}"))
-            .groupBy("doc_id", "block_id")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                        lambda s: s.tok,
-                    ),
-                    " ",
-                ).alias("block_text"),
-                F.count(F.lit(1)).cast("long").alias("n_toks"),
-            )
-            .withColumn("block_hash", F.md5("block_text"))
-        )
-
-    return _session_cached(_BLOCKS_CACHE, spark, sf_dir, build)
+        .withColumn("block_hash", F.md5("block_text"))
+    )
 
 
 @register(

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import round4
 from .operators.ann import ivf_build, ivf_query, srp_band_table, srp_planes, srp_topk
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 # --- SRP-LSH oracle SQL, generated from the SAME md5-derived hyperplane
@@ -55,27 +55,16 @@ _SRP_ORACLE = f"""
     WHERE rank <= 10
     """
 
-# IVF index cache per (session, sf_dir): the build (centroid sample + Lloyd
-# refine + assignment) is the amortizable part — at 100 TB it's a persisted
+# IVF index artifact: the build (centroid sample + Lloyd refine +
+# assignment) is the amortizable part — at 100 TB it's a persisted
 # partitionBy(cell) table; in-session a persisted DataFrame plays that role
 # so the registered query measures the QUERY path, not an index rebuild.
-_IVF_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _shared_ivf_index(spark: SparkSession, sf_dir: str):
-    hit = _IVF_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        try:
-            hit[2].unpersist()
-        except Exception:
-            pass  # old session already stopped
     emb = __load(spark, sf_dir, "embeddings")
     cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
     indexed = indexed.persist()
     indexed.count()
-    _IVF_CACHE[sf_dir] = (spark, cent_mat, indexed)
     return cent_mat, indexed
 
 
@@ -231,29 +220,16 @@ def q_ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SRP band-bucket index cache per (session, sf_dir) — same amortized-index
-# model as _IVF_CACHE: the 16 hyperplane-projection folds over the corpus
-# are the build cost (a partitionBy(band) parquet at scale); the registered
-# query times banding 20 query vectors + candidate join + exact rescore.
-_SRP_CACHE: dict[str, tuple] = {}
-
-
+# SRP band-bucket index artifact — same amortized-index model as the IVF
+# index: the 16 hyperplane-projection folds over the corpus are the build
+# cost (a partitionBy(band) parquet at scale); the registered query times
+# banding 20 query vectors + candidate join + exact rescore.
+@artifact()
 def _shared_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _SRP_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # old session already stopped
     emb = __load(spark, sf_dir, "embeddings")
-    ib = srp_band_table(
+    return srp_band_table(
         emb, "vec_id", "embedding", _SRP_BITS, _SRP_BANDS, dim=_SRP_DIM, spread=True
-    ).persist()
-    ib.count()
-    _SRP_CACHE[sf_dir] = (spark, ib)
-    return ib
+    )
 
 
 @register("ann_srp_topk", oracle=_SRP_ORACLE)
@@ -343,28 +319,17 @@ def q_media_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SQ code-table cache per (session, sf_dir) — same amortized-index model:
-# quantization constants + int8 codes are the build (a packed-bytes parquet
-# at scale); the registered query times approximate scan + exact rescore.
-_SQ_CACHE: dict[str, tuple] = {}
-
-
+# SQ code-table artifact — same amortized-index model: quantization
+# constants + int8 codes are the build (a packed-bytes parquet at scale);
+# the registered query times approximate scan + exact rescore.
+@artifact()
 def _shared_sq_index(spark: SparkSession, sf_dir: str):
-    hit = _SQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2], hit[3]
-    if hit is not None:
-        try:
-            hit[3].unpersist()
-        except Exception:
-            pass  # old session already stopped
     from .operators.ann import sq_code_table, sq_stats
 
     emb = __load(spark, sf_dir, "embeddings")
     mins, scales = sq_stats(emb)
     codes = sq_code_table(emb, mins, scales).persist()
     codes.count()
-    _SQ_CACHE[sf_dir] = (spark, mins, scales, codes)
     return mins, scales, codes
 
 
@@ -514,18 +479,10 @@ def _srpw_band_bits(n: int) -> int:
     return min(_SRPW_MAX_BB, max(_SRPW_MIN_BB, n.bit_length() - 4))
 
 
-_SRPW_CACHE: dict[str, tuple] = {}
-
-
-def _shared_srpw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _SRPW_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass
+@artifact()
+def _shared_srpw_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(band table, embeddings COUNT(*)) — the wide-band SRP index and the
+    corpus count its band width was sized from."""
     emb = __load(spark, sf_dir, "embeddings")
     # One count() prices the corpus at index-build time (cheap parquet
     # metadata scan) — exactly how dedup.py's cosine blocking sizes its
@@ -541,15 +498,13 @@ def _shared_srpw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed="srpw", dim=_SRP_DIM, spread=True,
     ).persist()
     ib.count()
-    _SRPW_CACHE[sf_dir] = (spark, ib, n)
-    return ib
+    return ib, n
 
 
 def _srpw_corpus_count(spark: SparkSession, sf_dir: str) -> int:
     """The embeddings COUNT(*) already paid by `_shared_srpw_index` —
     consumers size their broadcast gates from this instead of re-scanning."""
-    _shared_srpw_index(spark, sf_dir)
-    return _SRPW_CACHE[sf_dir][2]
+    return _shared_srpw_index(spark, sf_dir)[1]
 
 
 @register(
@@ -605,7 +560,7 @@ def q_dedup_embedding_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .functions.vector import dot_product
 
-    ib = _shared_srpw_index(spark, sf_dir)
+    ib = _shared_srpw_index(spark, sf_dir)[0]
     l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
     r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
     cand = (
@@ -823,28 +778,16 @@ def _pq_oracle() -> str:
     """
 
 
-_PQ_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _shared_pq_index(spark: SparkSession, sf_dir: str):
-    """(codebook, codes) — build-once artifact like the IVF/SRP/SQ caches;
+    """(codebook, codes) — build-once artifact like the IVF/SRP/SQ indexes;
     at scale the codes table is the 8-bytes-per-vector packed index one
     materializes next to the corpus."""
-    hit = _PQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     emb = __load(spark, sf_dir, "embeddings")
     cb = pq_codebook(emb).persist()
     cb.count()
     codes = pq_encode(emb, cb).persist()
     codes.count()
-    _PQ_CACHE[sf_dir] = (spark, cb, codes)
     return cb, codes
 
 
@@ -1568,7 +1511,7 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .functions.vector import dot_product
 
-    ib = _shared_srpw_index(spark, sf_dir)
+    ib = _shared_srpw_index(spark, sf_dir)[0]
     l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
     r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
     cand = (

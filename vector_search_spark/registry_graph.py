@@ -3,8 +3,6 @@
 Moved VERBATIM from `registry_round6` in the round-6 module reorg
 (VERDICT r5 #6): query names and oracle texts are the stable contract and
 are byte-identical to the pre-move blocks; only the module changed.
-`registry_round6` remains as a thin re-export shim for the constants the
-test suite imports.
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import relational as R
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as _t
 
 
@@ -986,20 +986,9 @@ from .sources.partsupp import PARTSUPP_SQL, synth_partsupp  # noqa: E402
 # model every other shared artifact follows (a real deployment would write
 # it bucketed by ps_partkey next to the other dims, not re-derive it per
 # query).
-_PS_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _ps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .registry_dedup import _session_cached
-
-    return _session_cached(
-        _PS_CACHE,
-        spark,
-        sf_dir,
-        lambda: synth_partsupp(
-            _t(spark, sf_dir, "part"), _t(spark, sf_dir, "supplier")
-        ),
-    )
+    return synth_partsupp(_t(spark, sf_dir, "part"), _t(spark, sf_dir, "supplier"))
 
 
 @register(

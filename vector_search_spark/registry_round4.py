@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.scalar import round4
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 
@@ -1083,29 +1083,17 @@ def _ivfpq_oracle() -> str:
     """
 
 
-_IVFPQ_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _shared_ivfpq_coarse(spark: SparkSession, sf_dir: str):
     """(cents, assign) — the coarse half of the IVF-PQ index; the fine
     half (codebook + codes) is registry_extensions._shared_pq_index.  At
     scale `assign` is the physical partitioning of the code table
     (write.partitionBy(cell)), built once per corpus snapshot."""
-    hit = _IVFPQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     emb = __load(spark, sf_dir, "embeddings")
     cents = coarse_cells(emb).persist()
     cents.count()
     assign = coarse_assign(emb, cents).persist()
     assign.count()
-    _IVFPQ_CACHE[sf_dir] = (spark, cents, assign)
     return cents, assign
 
 
@@ -1238,22 +1226,11 @@ def _ivfpq_residual_oracle() -> str:
     """
 
 
-_IVFPQ_RES_CACHE: dict[str, tuple] = {}
-
-
+@artifact(deps=("_shared_ivfpq_coarse",))
 def _shared_ivfpq_residual_index(spark: SparkSession, sf_dir: str):
     """(rcb, rcodes) — the residual fine half of the IVF-PQ index: PQ
     codebook sampled from RESIDUAL rows (seed 'pqr:') and per-vector
     residual codes.  Built once per corpus snapshot, like the coarse half."""
-    hit = _IVFPQ_RES_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     from .operators.ann import pq_encode, residual_codebook, residual_table
 
     emb = __load(spark, sf_dir, "embeddings")
@@ -1263,7 +1240,6 @@ def _shared_ivfpq_residual_index(spark: SparkSession, sf_dir: str):
     rcb.count()
     rcodes = pq_encode(resid, rcb, vec_col="rvec").persist()
     rcodes.count()
-    _IVFPQ_RES_CACHE[sf_dir] = (spark, rcb, rcodes)
     return rcb, rcodes
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.scalar import round4
-from .registry import register
+from .registry import artifact, register
 from .registry_dedup import (
     NUM_HASHES,
     _SQL_BAND_KEYS,
@@ -79,17 +79,13 @@ def _lpa_round_sql(prev: str, cur: str) -> str:
       WHERE rn = 1)"""
 
 
-_LPA_CACHE: dict[str, tuple] = {}
-
-
+@artifact(deps=("_shared_sym_edges",), checkpoint=True)
 def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final (doc_id, label) table of the fixed-round synchronous LPA —
     session-shared (round 11): both `dup_label_propagation` and
     `dup_community_modularity` ran the full 4-round loop independently.
-    The loop's last round already ends in an eager localCheckpoint."""
-    hit = _LPA_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    Every round ends in an eager localCheckpoint; ``checkpoint=True``
+    takes the last one."""
     from .registry_dedup import _shared_sym_edges
 
     edges = _shared_sym_edges(spark, sf_dir)
@@ -97,7 +93,9 @@ def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.col("doc_id").cast("long")
     )
     w = Window.partitionBy("b").orderBy(F.desc("c"), F.asc("label"))
-    for _ in range(LPA_ROUNDS):
+    for r in range(LPA_ROUNDS):
+        if r:
+            labels = labels.localCheckpoint(eager=True)
         cnt = (
             edges.join(labels, edges.a == labels.doc_id)
             .groupBy("b", "label")
@@ -107,9 +105,7 @@ def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             cnt.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("b").alias("doc_id"), "label")
-            .localCheckpoint(eager=True)
         )
-    _LPA_CACHE[sf_dir] = (spark, labels)
     return labels
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .operators.suffix import adjacent_lcp, lcp_walk, suffix_ranks
 from .partitioning import global_order_stats, maybe_broadcast
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 _SA_CAP = 128     # tokens considered per doc (fixture max is 99)
@@ -28,13 +28,8 @@ _SA_LEVELS = 7    # 2^7 = 128 >= cap -> top level totally orders each doc
 # pyramid is an INDEX over the corpus — built once per (session, sf_dir)
 # and reused, like the shingle/signature/IVF artifacts; bench setup
 # pre-builds it untimed.
-_SA_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _shared_suffix(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
-    hit = _SA_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
     docs = _docs(spark, sf_dir)
     tok = docs.select(
         "doc_id",
@@ -42,9 +37,8 @@ def _shared_suffix(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, _SA_CAP)
         ).alias("pos", "tok"),
     ).localCheckpoint()
-    ranks = suffix_ranks(tok, _SA_LEVELS)
-    _SA_CACHE[sf_dir] = (spark, tok, ranks)
-    return tok, ranks
+    return tok, suffix_ranks(tok, _SA_LEVELS)
+
 
 # Cross-document SA adjacency + exact LCPs — the shared front half of
 # `corpus_suffix_repeats` AND `corpus_exact_dedup_rewrite` (round 11):
@@ -55,13 +49,8 @@ def _shared_suffix(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
 # session-shared index set: built once per (session, sf_dir), eagerly
 # checkpointed, disclosed in bench setup_sec.  Kept at the lcp >= 2
 # floor — the weakest consumer filter — so both queries read subsets.
-_SA_ADJ_CACHE: dict[str, tuple] = {}
-
-
+@artifact(deps=("_shared_suffix",), checkpoint=True)
 def _shared_sa_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _SA_ADJ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
     tok, ranks = _shared_suffix(spark, sf_dir)
     top = ranks[_SA_LEVELS]
     # Round 12: checkpoint the ranked SA once — un-checkpointed, the
@@ -90,13 +79,7 @@ def _shared_sa_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_i") != F.col("doc_j"))
         .select("doc_i", "i", "doc_j", "j")
     )
-    walked = (
-        lcp_walk(pairs, ranks, _SA_LEVELS)
-        .filter(F.col("lcp") >= 2)
-        .localCheckpoint()
-    )
-    _SA_ADJ_CACHE[sf_dir] = (spark, walked)
-    return walked
+    return lcp_walk(pairs, ranks, _SA_LEVELS).filter(F.col("lcp") >= 2)
 
 
 _SA_ORACLE = f"""

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from .functions.text import BPE_TOKEN_PATTERN, PUNCT_PATTERN, STOPWORDS
 from .functions.scalar import round4
-from .registry import register
+from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 # ---------------------------------------------------------------------------
@@ -31,11 +31,8 @@ from .sources.tables import load_table as __load
 # this is the standard amortized-feature-table model: one scan-bound pass
 # materializes the narrow feature projection, queries never re-touch text.
 # ---------------------------------------------------------------------------
-_FEATURE_CACHE: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
+@artifact()
 def _shared_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .registry_dedup import _session_cached
     from .functions.text import (
         md5_fingerprint,
         punct_ratio,
@@ -48,30 +45,27 @@ def _shared_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.text_analysis import _lang_scores
     from .partitioning import fan_out
 
-    def build() -> DataFrame:
-        docs = __load(spark, sf_dir, "documents")
-        t = F.col("text")
-        s = _lang_scores(t)
-        return fan_out(docs, "doc_id").select(
-            "doc_id",
-            "lang",
-            "source",
-            F.length(t).alias("n_chars"),
-            token_count_ws(t).alias("n_tokens_ws"),
-            F.when(F.trim(t) == "", F.lit(0))
-            .otherwise(F.size(F.array_distinct(F.split(F.trim(F.lower(t)), r"\s+"))))
-            .cast("int")
-            .alias("n_tokens_distinct"),
-            token_count_bpe(t).alias("n_tokens_bpe"),
-            punct_ratio(t).alias("punct_raw"),
-            stopword_ratio(t, "en").alias("stop_raw"),
-            quality_score(t, "en").alias("quality_raw"),
-            *[s[lang].alias(f"score_{lang}") for lang in ("en", "es", "fr", "de")],
-            md5_fingerprint(t).alias("fingerprint"),
-            rolling_hash(t).alias("rhash"),
-        )
-
-    return _session_cached(_FEATURE_CACHE, spark, sf_dir, build)
+    docs = __load(spark, sf_dir, "documents")
+    t = F.col("text")
+    s = _lang_scores(t)
+    return fan_out(docs, "doc_id").select(
+        "doc_id",
+        "lang",
+        "source",
+        F.length(t).alias("n_chars"),
+        token_count_ws(t).alias("n_tokens_ws"),
+        F.when(F.trim(t) == "", F.lit(0))
+        .otherwise(F.size(F.array_distinct(F.split(F.trim(F.lower(t)), r"\s+"))))
+        .cast("int")
+        .alias("n_tokens_distinct"),
+        token_count_bpe(t).alias("n_tokens_bpe"),
+        punct_ratio(t).alias("punct_raw"),
+        stopword_ratio(t, "en").alias("stop_raw"),
+        quality_score(t, "en").alias("quality_raw"),
+        *[s[lang].alias(f"score_{lang}") for lang in ("en", "es", "fr", "de")],
+        md5_fingerprint(t).alias("fingerprint"),
+        rolling_hash(t).alias("rhash"),
+    )
 
 
 def _sql_ws_tokens(col: str = "text") -> str:
@@ -2026,23 +2020,10 @@ def q_bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per (session, sf_dir); queries time only their own probe/scoring pass.
 # bench.py builds these in its untimed setup phase.
 # ---------------------------------------------------------------------------
-_BPE_CACHE: dict[str, tuple] = {}
-_BIGRAM_LM_CACHE: dict[str, tuple] = {}
-_PHRASE_IDX_CACHE: dict[str, tuple] = {}
-
-
+@artifact()
 def _shared_bpe(spark: SparkSession, sf_dir: str):
     """(merges_df, final_seqs_df): the trained tokenizer — 3 merge rounds
     over the word-TYPE table, built once and persisted."""
-    hit = _BPE_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for df in hit[1:]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # old session already stopped
     docs = __load(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     # Round 12: checkpoint the word-type table and each round's 1-row
     # argmax.  Un-checkpointed, round k's `best` re-executed its full
@@ -2111,21 +2092,13 @@ def _shared_bpe(spark: SparkSession, sf_dir: str):
     merges_df.count()
     seqs_df = seqs.persist()
     seqs_df.count()
-    _BPE_CACHE[sf_dir] = (spark, merges_df, seqs_df)
     return merges_df, seqs_df
 
 
+@artifact()
 def _shared_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fitted interpolated-bigram LM: (a, b, lp_micro) per observed
     bigram type, quantized once — built once and persisted."""
-    hit = _BIGRAM_LM_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # old session already stopped
     docs = __load(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
@@ -2144,7 +2117,7 @@ def _shared_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     bcnt = big.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
     ua = uni.select(F.col("tok").alias("a"), F.col("cnt").alias("c_a"))
     ub = uni.select(F.col("tok").alias("b"), F.col("cnt").alias("c_b"))
-    term = (
+    return (
         bcnt.join(ua, "a")
         .join(ub, "b")
         .crossJoin(F.broadcast(total))
@@ -2160,29 +2133,18 @@ def _shared_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 0.5
             ).cast("long").alias("lp_micro"),
         )
-        .persist()
     )
-    term.count()
-    _BIGRAM_LM_CACHE[sf_dir] = (spark, term)
-    return term
 
 
+@artifact()
 def _shared_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The positional trigram posting table (doc_id, pos, phrase) — the
     inverted index `phrase_search` probes; built once and persisted."""
-    hit = _PHRASE_IDX_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # old session already stopped
     docs = __load(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
     )
-    tri = (
+    return (
         toks.filter(F.size("t") >= 3)
         .select(
             "doc_id",
@@ -2194,11 +2156,7 @@ def _shared_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
         .select("doc_id", F.col("p.pos").alias("pos"), F.col("p.phrase").alias("phrase"))
-        .persist()
     )
-    tri.count()
-    _PHRASE_IDX_CACHE[sf_dir] = (spark, tri)
-    return tri
 
 
 # ---------------------------------------------------------------------------
