@@ -1,6 +1,23 @@
-"""Benchmark harness (driver contract): run every registry query at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and print ONE JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness (driver contract) and the one timing loop for registry
+queries.
+
+Usage:
+    python bench.py [query ...]
+
+With no names it runs every registry query and prints ONE JSON line
+{"metric", "value", "unit", "queries", "sf", ...}, writes the same record
+to ``bench_out.json`` next to this script, and ends with a compact line
+sized for a 2 KB tail capture.  Named queries (checked against
+``registry.QUERIES`` before Spark starts) run alone, in the same regime;
+such a subset run prints both lines but leaves ``bench_out.json`` as it is.
+
+Options (environment):
+    SPARK_GRAFT_SF_DIR              fixture dir (default: the sf0.1 fixture)
+    SPARK_GRAFT_CPUS                local[N] cores (default: this process's
+                                    CPU affinity, ``session.DEFAULT_CPUS``)
+    SPARK_GRAFT_BENCH_REPS          collects per query (default 3)
+    SPARK_GRAFT_BENCH_SKIP_SETUP    artifacts not to build (comma list)
+    SPARK_GRAFT_BENCH_FORCE_CHECKSUM=1  checksum-consume ordered queries too
 
 Each query is timed to full materialization: a JVM-side xxhash64 checksum
 aggregate for the unordered majority (forces evaluation of every output
@@ -18,6 +35,9 @@ first collect (compile included).  Construction is timed since round 9
 (ADVICE r8): helpers that eagerly checkpoint at build time do real engine
 work inside ``fn(spark, sf_dir)``, which a collect-only cold sample never
 saw; ``build_queries`` / ``build_total_sec`` break that component out.
+``phase_queries`` holds the Catalyst phase times (analysis, optimization,
+planning; seconds) of each consumed frame's first collect, so a cold time
+splits into driver-side planning and execution.
 
 Shared artifacts (the dedup family's shingle/signature tables, the ANN
 indexes, the suffix-rank pyramid, ...) are declared with
@@ -38,7 +58,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vector_search_spark import registry  # noqa: E402
-from vector_search_spark.session import get_spark, shuffle_partitions_for  # noqa: E402
+from vector_search_spark.session import DEFAULT_CPUS, get_spark, shuffle_partitions_for  # noqa: E402
 
 
 def _err_str(e: Exception) -> str:
@@ -59,9 +79,58 @@ def _err_str(e: Exception) -> str:
     return str(e).split("\n")[0][:300]
 
 
+def _phases(df) -> dict[str, float]:
+    """Catalyst phase durations (s) from ``df``'s QueryPlanningTracker.
+
+    Read right after the first collect: a phase measured again later is
+    recorded as one span from its first start to its last end.
+    """
+    phases = {}
+    it = df._jdf.queryExecution().tracker().phases().iterator()
+    while it.hasNext():
+        kv = it.next()
+        phases[str(kv._1())] = round((kv._2().endTimeMs() - kv._2().startTimeMs()) / 1000, 3)
+    return dict(sorted(phases.items()))
+
+
+def compact_line(record: dict, full_run: bool) -> str:
+    """The compact record, sized to survive a 2 KB tail capture intact:
+    same metric/value/unit/sf, with "queries" trimmed to the slowest
+    entries that fit 1,500 bytes, and n_queries/n_errors, so the tail
+    alone shows whether the whole set ran."""
+    timings = record["queries"]
+    compact = {
+        "metric": record["metric"],
+        "value": record["value"],
+        "unit": record["unit"],
+        "queries": {},
+        "setup_sec": record["setup_sec"],
+        "cold_total_sec": record["cold_total_sec"],
+        "sf": record["sf"],
+        "n_queries": len(timings),
+        "n_errors": len(record.get("errors", {})),
+        "full_record": "bench_out.json" if full_run else None,
+        # widest possible value while filling, so the final line fits too
+        "queries_elided": len(timings),
+    }
+    for name in sorted(timings, key=timings.get, reverse=True):
+        compact["queries"][name] = timings[name]
+        if len(json.dumps(compact)) > 1500:
+            del compact["queries"][name]
+            break
+    compact["queries_elided"] = len(timings) - len(compact["queries"])
+    return json.dumps(compact)
+
+
 def main() -> None:
+    unknown = [n for n in sys.argv[1:] if n not in registry.QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown query: {' '.join(unknown)}")
+    names = sorted(set(sys.argv[1:])) or sorted(registry.QUERIES)
+    full_run = len(sys.argv) == 1
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
@@ -83,7 +152,8 @@ def main() -> None:
     warm = spark.range(0, 1024, 1, cpus)
     warm.mapInPandas(lambda it: it, schema="id long").count()
 
-    # Explicit setup phase: every registry.ARTIFACTS entry, in that order.
+    # Explicit setup phase: every registry.ARTIFACTS entry, in that order,
+    # also for a subset run, so its numbers match a full run's regime.
     # SPARK_GRAFT_BENCH_SKIP_SETUP=a,b skips artifacts by name, and with
     # them every artifact built on them, for exploratory scale runs whose
     # query family is skipped too (the suffix array at 1000x is ~4 GB heap
@@ -106,17 +176,11 @@ def main() -> None:
     # (and summed as cold_total_sec) so nothing is hidden — a production
     # pipeline compiles once and runs the plan many times.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # Exploratory-scale runs can exclude the documented quadratic-by-design
-    # demo/baseline queries (e.g. the exact O(n²) dedup_embedding_cosine and
-    # the narrow-band SRP demo at 100×, where they are hours of compute and
-    # an OOM by design, not a regression).  Never set for driver runs.
-    skip = {
-        s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",") if s
-    }
     force_checksum = os.environ.get("SPARK_GRAFT_BENCH_FORCE_CHECKSUM", "") == "1"
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     builds: dict[str, float] = {}
+    phases: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
     session_restarts: list[str] = []
 
@@ -134,8 +198,6 @@ def main() -> None:
         except Exception:
             stopped = True
         if stopped:
-            from vector_search_spark.session import get_spark
-
             try:
                 spark.stop()
             except Exception:
@@ -170,10 +232,7 @@ def main() -> None:
         return False
 
     spark_conf_shuffle = spark.conf.get("spark.sql.shuffle.partitions", None)
-    for name in sorted(registry.QUERIES):
-        if name in skip:
-            print(f"# {name}: SKIPPED (SPARK_GRAFT_BENCH_SKIP)", file=sys.stderr)
-            continue
+    for name in names:
         fn = registry.QUERIES[name]
         # A query that breaks at an exploratory scale (the round-6 100x run
         # died on the FIRST query's overflow and lost the whole record) is
@@ -214,6 +273,8 @@ def main() -> None:
                     rows = consume.collect()
                     n_rows = len(rows) if ordered else rows[0]["n"]
                     samples.append(time.perf_counter() - t0)
+                    if i == 0:
+                        phases[name] = _phases(consume)
                 last_err = None
                 break
             except Exception as e:  # noqa: BLE001
@@ -234,6 +295,7 @@ def main() -> None:
                         file=sys.stderr,
                     )
         if last_err is not None:
+            phases.pop(name, None)
             errors[name] = _err_str(last_err)
             print(f"# {name}: ERROR {errors[name][:160]}", file=sys.stderr)
             continue
@@ -249,23 +311,23 @@ def main() -> None:
         timings[name] = round(med, 3)
         print(
             f"# {name}: {timings[name]:.3f}s warm-median / {cold[name]:.3f}s cold"
+            f" / {builds[name]:.3f}s build, phases {phases[name]}"
             f" ({n_rows} rows, {reps} reps{', collect' if ordered else ''})",
             file=sys.stderr,
         )
 
-    total = round(sum(timings.values()), 3)
-    cold_total = round(sum(cold.values()), 3)
     record = {
         "metric": "registry_queries_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "setup_sec": setup_sec,
         "setup_builders": setup_builders,
-        "cold_total_sec": cold_total,
+        "cold_total_sec": round(sum(cold.values()), 3),
         "cold_queries": cold,
         "build_total_sec": round(sum(builds.values()), 3),
         "build_queries": builds,
+        "phase_queries": phases,
         # semantics version for cold_queries (ADVICE r9): 2 = build +
         # first collect (r9+); records without the field are 1 =
         # collect-only.  decade_compare --cold refuses mixed pairs.
@@ -289,39 +351,20 @@ def main() -> None:
         record["env_extra_conf"] = dict(LAST_ENV_EXTRA_CONF)
     if force_checksum:
         record["force_checksum"] = True
-    if skip:
-        record["skipped"] = sorted(skip)
     if errors:
         record["errors"] = errors
     line = json.dumps(record)
     # The driver's log capture keeps only the last ~2 KB of stdout and the
     # full 150+-query line exceeds that (BENCH_r02/r03 recorded parsed:null);
     # persist the full machine-readable record next to the script so
-    # round-over-round comparisons never depend on scrollback.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json"), "w") as f:
-        f.write(line + "\n")
+    # round-over-round comparisons never depend on scrollback.  A subset
+    # run leaves the full-registry record alone.
+    if full_run:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_out.json"), "w") as f:
+            f.write(line + "\n")
     print(line)
-    # ...and ALSO emit a compact record as the FINAL stdout line, sized to
-    # survive a 2 KB tail capture intact: same metric/value/unit/sf, with
-    # "queries" trimmed to the slowest entries that fit the budget.
-    compact = {
-        "metric": record["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": {},
-        "setup_sec": setup_sec,
-        "cold_total_sec": cold_total,
-        "sf": sf,
-        "n_queries": len(timings),
-        "full_record": "bench_out.json",
-    }
-    for name in sorted(timings, key=timings.get, reverse=True):
-        compact["queries"][name] = timings[name]
-        if len(json.dumps(compact)) > 1500:
-            del compact["queries"][name]
-            break
-    compact["queries_elided"] = len(timings) - len(compact["queries"])
-    print(json.dumps(compact))
+    # ...and ALSO emit a compact record as the FINAL stdout line.
+    print(compact_line(record, full_run))
 
 
 if __name__ == "__main__":

@@ -14,7 +14,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from vector_search_spark.session import get_spark  # noqa: E402
+from vector_search_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF_TEST = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -93,10 +93,9 @@ TABLES = (
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[$SPARK_GRAFT_CPUS] (8 when unset) to match the host; shuffle
-    # partitions stay 8 so partition counts in test outputs do not move.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    s = get_spark("tests", cpus=cpus, shuffle_partitions=8)
+    # local[DEFAULT_CPUS] to match the host; shuffle partitions stay 8 so
+    # partition counts in test outputs do not move.
+    s = get_spark("tests", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     yield s
     s.stop()
 

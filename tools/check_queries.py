@@ -41,9 +41,9 @@ def main() -> None:
     from conftest import compare_with_oracle  # noqa: E402
 
     from vector_search_spark import registry
-    from vector_search_spark.session import get_spark
+    from vector_search_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark("check-queries", cpus=8, shuffle_partitions=8)
+    spark = get_spark("check-queries", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     bad = 0

@@ -60,6 +60,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from vector_search_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
+
 OFFSET = 10_000_000
 
 # (key columns to offset) per table; dimensions are copied once.
@@ -230,7 +232,7 @@ def main() -> None:
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1"))
     ap.add_argument("--copies", type=int, default=10)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     ap.add_argument(
         "--emb-family", default="signed-perm", choices=["signed-perm", "rotsign"],
         help="embedding replica transform: signed-perm (r11 default, "
@@ -260,8 +262,6 @@ def main() -> None:
         f"{len(letter_maps)} distinct maps; cross-replica text twins would "
         "plant fake duplicates"
     )
-
-    from vector_search_spark.session import get_spark
 
     spark = get_spark("make-scaled-fixture", cpus=args.cpus, shuffle_partitions=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -13,16 +13,7 @@
 set -x
 cd /root/repo
 
-DUPGRAPH=dedup_clusters,dup_sampling_weights,dedup_cluster_keep_best,dup_community_modularity,graph_double_sweep_diameter,dup_label_propagation,dup_eigencentrality,dup_graph_pagerank,dup_personalized_pagerank,dup_bfs_hops,graph_kcore
-
-comp () {  # complement of $1 over the registry
-  python - "$1" <<'EOF'
-import sys
-from vector_search_spark import registry
-keep = set(sys.argv[1].split(","))
-print(",".join(sorted(set(registry.QUERIES) - keep)))
-EOF
-}
+DUPGRAPH="dedup_clusters dup_sampling_weights dedup_cluster_keep_best dup_community_modularity graph_double_sweep_diameter dup_label_propagation dup_eigencentrality dup_graph_pagerank dup_personalized_pagerank dup_bfs_hops graph_kcore"
 
 # skip every setup builder EXCEPT the dedup chain the dup-graph family reads
 SKIP_SETUP=_ps,_shared_simhash_sigs,_shared_token_blocks,_shared_ivf_index,_shared_srp_index,_shared_srpw_index,_shared_pq_index,_shared_sq_index,_shared_doc_features,_shared_bpe,_shared_bigram_lm,_shared_phrase_index,_shared_ivfpq_coarse,_shared_ivfpq_residual_index,_shared_suffix,_shared_sa_adjacent
@@ -39,9 +30,8 @@ rm -rf "$SPARK_LOCAL_DIRS"; mkdir -p "$SPARK_LOCAL_DIRS"
 df -h / | tail -1
 SPARK_GRAFT_SF_DIR=/root/repo/.scale/sf100 SPARK_DRIVER_MEMORY=96g \
   SPARK_GRAFT_BENCH_FORCE_CHECKSUM=1 SPARK_GRAFT_BENCH_REPS=3 \
-  SPARK_GRAFT_BENCH_SKIP=$(comp "$DUPGRAPH") \
   SPARK_GRAFT_BENCH_SKIP_SETUP=$SKIP_SETUP \
-  python bench.py > bench_sf100_r12_dupgraph.raw 2> bench_sf100_r12_dupgraph.err
+  python bench.py $DUPGRAPH > bench_sf100_r12_dupgraph.raw 2> bench_sf100_r12_dupgraph.err
 echo "sf100 dup-graph exit $?"
 grep '"metric"' bench_sf100_r12_dupgraph.raw | head -1 > bench_sf100_r12_dupgraph.json || true
 

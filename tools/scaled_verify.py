@@ -119,6 +119,8 @@ def _key(row):
 
 
 def main() -> None:
+    from vector_search_spark.session import DEFAULT_CPUS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir")
     ap.add_argument("tag")
@@ -128,8 +130,7 @@ def main() -> None:
     ap.add_argument("--slice-dir", default=None)
     ap.add_argument("--rebuild-slice", action="store_true")
     ap.add_argument("--only", nargs="*", default=None)
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    ap.add_argument("--cpus", type=int, default=DEFAULT_CPUS)
     args = ap.parse_args()
 
     import duckdb

@@ -13,7 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: $SPARK_GRAFT_CPUS when set, else the CPUs this process
+# may run on (what `nproc` reports).
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # The SPARK_GRAFT_EXTRA_CONF pairs applied by the most recent get_spark()
 # call — bench.py copies this into its output record so any env override
