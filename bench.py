@@ -330,7 +330,7 @@ def main() -> None:
         "phase_queries": phases,
         # semantics version for cold_queries (ADVICE r9): 2 = build +
         # first collect (r9+); records without the field are 1 =
-        # collect-only.  decade_compare --cold refuses mixed pairs.
+        # collect-only; compare cold times only between equal versions.
         "cold_semantics": 2,
         "sf": sf,
         "reps": reps,

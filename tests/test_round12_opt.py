@@ -53,21 +53,39 @@ def test_global_dense_rank_matches_reference_dense_rank(spark):
         }
         assert got == ref, f"num_ranges={num_ranges}"
 
-    # two-column keys with ties on the first column
-    rows2 = [(a, b, i) for i, (a, b) in enumerate(
-        itertools.product(range(6), range(5)) ) for _ in (0,)]
-    df2 = spark.createDataFrame(rows2, "a int, b int, tid int")
-    got2 = {
-        (r.a, r.b, r.tid): r["__dense"]
-        for r in global_dense_rank(df2, ["a", "b"], ["tid"], num_ranges=4).collect()
-    }
+    # two-column keys with ties on the first column, and 2-3 rows per
+    # (a, b) group so that multi-row composite-key groups straddle range
+    # boundaries
+    rows2 = [
+        (a, b)
+        for a, b in itertools.product(range(6), range(5))
+        for _ in range(2 + (a + b) % 2)
+    ]
+    rows2 = [(a, b, i) for i, (a, b) in enumerate(rows2)]
+    df2 = spark.createDataFrame(rows2, "a int, b int, tid int").repartition(5)
     ref2 = {
         (r.a, r.b, r.tid): r.ref
         for r in df2.withColumn(
             "ref", F.dense_rank().over(Window.orderBy("a", "b"))
         ).collect()
     }
-    assert got2 == ref2
+    for num_ranges in (4, 32):
+        spans = (
+            df2.repartitionByRange(num_ranges, "a", "b", "tid")
+            .withColumn("pid", F.spark_partition_id())
+            .groupBy("a", "b")
+            .agg(F.countDistinct("pid").alias("n"))
+            .agg(F.max("n"))
+            .first()[0]
+        )
+        assert spans > 1, f"num_ranges={num_ranges}: no group straddles a boundary"
+        got2 = {
+            (r.a, r.b, r.tid): r["__dense"]
+            for r in global_dense_rank(
+                df2, ["a", "b"], ["tid"], num_ranges=num_ranges
+            ).collect()
+        }
+        assert got2 == ref2, f"num_ranges={num_ranges}"
 
 
 def test_probe_sweep_legs_equal_single_leg_ivf_query(spark):

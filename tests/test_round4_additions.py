@@ -11,15 +11,9 @@ import pytest
 
 from conftest import SF_SMOKE, SF_TEST
 from vector_search_spark import registry
-from vector_search_spark.registry_round4 import (
-    _BLOOM_K,
-    _BLOOM_M,
-    _DP_M,
-    _KCORE_K,
-    _KMV_K,
-    _RUN_BLOCK,
-    _dp_rungs,
-)
+from vector_search_spark.registry_analytics import _BLOOM_K, _BLOOM_M, _DP_M, _KMV_K, _dp_rungs
+from vector_search_spark.registry_dedup import _RUN_BLOCK
+from vector_search_spark.registry_graph import _KCORE_K
 
 
 def test_dp_ladder_is_a_probability_distribution():
@@ -103,7 +97,6 @@ def test_kcore_members_have_core_degree(spark):
     converged (it does on the fixture: one extra round changes nothing)."""
     from pyspark.sql import functions as F
 
-    from vector_search_spark import registry_round4 as r4
     from vector_search_spark.registry_dedup import _shared_verified_pairs
 
     out = registry.QUERIES["graph_kcore"](spark, SF_TEST)
@@ -349,7 +342,7 @@ def test_pca_matches_numpy_eigendecomposition(spark):
     rounding of numpy's top eigenvalue."""
     import numpy as np
 
-    from vector_search_spark.registry_round4 import _PCA_D, _PCA_FEATURES, _PCA_Q
+    from vector_search_spark.registry_ml import _PCA_D, _PCA_FEATURES, _PCA_Q
 
     rows = registry.QUERIES["pca_top_component"](spark, SF_TEST).collect()
     v = np.array([r.loading for r in sorted(rows, key=lambda r: r.dim)])

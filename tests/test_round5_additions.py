@@ -13,7 +13,7 @@ import duckdb
 
 from conftest import SF_TEST
 from vector_search_spark import registry
-from vector_search_spark.registry_round5 import EIGEN_ROUNDS, EIGEN_SCALE, LPA_ROUNDS
+from vector_search_spark.registry_graph import EIGEN_ROUNDS, EIGEN_SCALE, LPA_ROUNDS
 
 
 def _edges(spark, sf_dir):
@@ -204,7 +204,7 @@ def test_pca_second_component_matches_numpy(spark):
     import numpy as np
     import pytest
 
-    from vector_search_spark.registry_round4 import _PCA_D, _PCA_FEATURES, _PCA_Q
+    from vector_search_spark.registry_ml import _PCA_D, _PCA_FEATURES, _PCA_Q
 
     rows = registry.QUERIES["pca_second_component"](spark, SF_TEST).collect()
     v = np.array([r.loading for r in sorted(rows, key=lambda r: r.dim)])
@@ -269,10 +269,7 @@ def test_svd_rank2_matches_numpy(spark):
 def test_basket_pairs_match_pure_python(spark):
     """Brute-force basket pair mining in pure Python (no Apriori prefilter
     — proving the prefilter lossless) must reproduce the top-20 exactly."""
-    from vector_search_spark.registry_round5 import (
-        _BASKET_MIN_SUPPORT,
-        _BASKET_TOP,
-    )
+    from vector_search_spark.registry_analytics import _BASKET_MIN_SUPPORT, _BASKET_TOP
 
     con = duckdb.connect()
     rows = con.execute(
@@ -322,7 +319,7 @@ def test_streaming_spend_cells_reproduce_batch_gram(spark):
     rank-2 factorization is reproducible from streaming state."""
     from pyspark.sql import functions as F
 
-    from vector_search_spark.registry_round5 import _SVD2_K, _SVD2_TYPES
+    from vector_search_spark.registry_ml import _SVD2_K, _SVD2_TYPES
     from vector_search_spark.streaming.events import (
         stream_events_from_parquet,
         streaming_spend_cells,

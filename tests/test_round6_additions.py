@@ -14,10 +14,10 @@ import duckdb
 
 from conftest import SF_TEST
 from vector_search_spark import registry
-from vector_search_spark.registry_round5 import LPA_ROUNDS
 from vector_search_spark.registry_forecast import ACF_MAX_LAG
 from vector_search_spark.registry_graph import (
     BFS_ROUNDS,
+    LPA_ROUNDS,
     TEXTRANK_MIN_DF,
     TEXTRANK_ROUNDS,
     TEXTRANK_TOPK,

@@ -21,10 +21,9 @@ BOTH engines can run every oracle on bit-exactly in normal time:
   transform are what the oracles chew on),
 - and it is a DETERMINISTIC slice: same replica, same bytes, same hashes.
 
-The full-corpus runs stay covered by the complementary pins this tool does
+The full-corpus runs stay covered by the complementary pin this tool does
 NOT duplicate: bench.py's per-query rows+checksum record at the full
-fixture (stable across partitioning regimes and re-runs) and the decade
-classification in tools/decade_compare.py.
+fixture (stable across partitioning regimes and re-runs).
 
 Keys are rebased (offset subtracted) so data-keyed oracle constants —
 knn_topk's `vec_id = 0`, the demo caps' lowest-K ids — bind to real rows;

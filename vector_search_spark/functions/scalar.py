@@ -3,7 +3,9 @@
 - sigmoid: `query.py:16-18` of the reference (logit → probability)
 - relevance label: `query.py:21-27` (logit ≥3 high / ≥0 medium / else low)
 
-Both are pure Catalyst expressions (SURVEY.md §2.3) — no UDF.
+Both are pure Catalyst expressions (SURVEY.md §2.3) — no UDF.  The
+SQL-text helpers below (``_CENTS``, ``_fdiv``) are shared by the query
+registry's modules for their DuckDB oracles and shared expression text.
 """
 
 from __future__ import annotations
@@ -23,6 +25,24 @@ def round4(x: Column | str) -> Column:
     """
     x = F.col(x) if isinstance(x, str) else x
     return F.floor(x.cast("double") * 10000.0 + F.lit(0.5)) / 10000.0
+
+
+# SQL twin of ``operators.relational.cents``: money to integer cents, as
+# ``_CENTS.format(x=...)``.
+_CENTS = "floor({x}*100 + 0.5)::BIGINT"
+
+
+def _fdiv(a: str, b: str) -> str:
+    """Floor division as shared SQL text, exact on negatives in BOTH
+    engines: Spark's ``DIV`` truncates toward zero while DuckDB's ``//``
+    floors, so neither operator is portable once residual sums go
+    negative.  ``a - pmod(a, b)`` is divisible by ``b`` exactly, and both
+    engines' ``%`` is C-style truncated remainder, so the text below is
+    engine-independent (the double divide is exact: the quotient is an
+    integer < 2^53)."""
+    return (
+        f"CAST((({a}) - (((({a}) % ({b})) + ({b})) % ({b}))) / ({b}) AS BIGINT)"
+    )
 
 
 def sigmoid(x: Column | str) -> Column:

@@ -6,9 +6,11 @@ shingle definitions the Spark operators use — bit-identical across engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import artifact, register
+from .functions.scalar import round4
 from .operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup_groups,
@@ -17,8 +19,6 @@ from .operators.dedup import (
     shingle_table,
     simhash_pairs,
 )
-from .functions.scalar import round4
-from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 NUM_HASHES = 16
@@ -2197,4 +2197,119 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "/10000.0 AS DOUBLE)"
             ).alias("reduction_ratio"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Maximal duplicated-substring runs between near-dup documents
+# (gaps-and-islands over shared token-block positions).
+# ---------------------------------------------------------------------------
+_RUN_BLOCK = 16
+_RUN_MAXDOCS = 50
+
+
+@register(
+    "dup_substring_runs",
+    oracle=f"""
+    WITH toks AS (
+      SELECT doc_id,
+             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
+             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
+      FROM documents),
+    blocks AS (
+      SELECT doc_id, (ord - 1) // {_RUN_BLOCK} AS block_id,
+             md5(string_agg(tok, ' ' ORDER BY ord)) AS block_hash
+      FROM toks GROUP BY 1, 2),
+    freq AS (
+      SELECT block_hash FROM (
+        SELECT block_hash, count(DISTINCT doc_id) AS n_docs
+        FROM blocks GROUP BY 1)
+      WHERE n_docs BETWEEN 2 AND {_RUN_MAXDOCS}),
+    hits AS (
+      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
+             x.block_id AS pos_a, y.block_id AS pos_b
+      FROM blocks x
+      JOIN freq f ON x.block_hash = f.block_hash
+      JOIN blocks y ON x.block_hash = y.block_hash AND x.doc_id < y.doc_id),
+    isl AS (
+      SELECT doc_a, doc_b, pos_a, pos_b,
+             pos_a - row_number() OVER (
+               PARTITION BY doc_a, doc_b, pos_a - pos_b ORDER BY pos_a) AS grp,
+             pos_a - pos_b AS diag
+      FROM hits),
+    runs AS (
+      SELECT doc_a, doc_b, diag, grp, count(*)::BIGINT AS run_len
+      FROM isl GROUP BY 1, 2, 3, 4)
+    SELECT doc_a, doc_b,
+           count(*)::BIGINT AS n_runs,
+           max(run_len)::BIGINT AS longest_run,
+           sum(run_len)::BIGINT AS n_shared_blocks
+    FROM runs GROUP BY 1, 2
+    HAVING sum(run_len) >= 2
+    ORDER BY doc_a, doc_b
+    """,
+)
+def q_dup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximal duplicated-substring RUNS between document pairs: where
+    sub-document block dedup (subdoc_block_dedup) scores isolated repeated
+    16-token blocks, this merges diagonally-consecutive shared blocks into
+    maximal runs — the scalable stand-in for suffix-array substring dedup
+    (Lee et al.'s "Deduplicating Training Data Makes Language Models
+    Better"): a shared run of r blocks certifies a duplicated substring of
+    ~r*16 tokens.  Emits per-pair run count, longest run, and total shared
+    blocks.
+
+    Scale: pair generation is keyed on the 16-byte block hash (never a
+    doc×doc join) and pre-filtered to hashes in 2..50 docs — the same
+    df-bound that keeps token_pair_lift's square bounded; ubiquitous
+    boilerplate blocks are excluded BEFORE the join (they belong to
+    boilerplate_ngrams, not pair evidence).  The gaps-and-islands window
+    partitions by (pair, diagonal) — bounded by document length, no
+    global sort anywhere.
+    """
+    blocks = _shared_token_blocks(spark, sf_dir).select(
+        "doc_id", "block_id", "block_hash"
+    )
+    freq = (
+        blocks.groupBy("block_hash")
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
+        .filter((F.col("n_docs") >= 2) & (F.col("n_docs") <= _RUN_MAXDOCS))
+        .select("block_hash")
+    )
+    fb = blocks.join(freq, "block_hash")
+    hits = (
+        fb.alias("x")
+        .join(
+            fb.alias("y"),
+            (F.col("x.block_hash") == F.col("y.block_hash"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            F.col("x.block_id").alias("pos_a"),
+            F.col("y.block_id").alias("pos_b"),
+        )
+    )
+    w = Window.partitionBy("doc_a", "doc_b", F.col("pos_a") - F.col("pos_b")).orderBy(
+        "pos_a"
+    )
+    isl = hits.select(
+        "doc_a",
+        "doc_b",
+        (F.col("pos_a") - F.col("pos_b")).alias("diag"),
+        (F.col("pos_a") - F.row_number().over(w)).alias("grp"),
+    )
+    runs = isl.groupBy("doc_a", "doc_b", "diag", "grp").agg(
+        F.count(F.lit(1)).cast("long").alias("run_len")
+    )
+    return (
+        runs.groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_runs"),
+            F.max("run_len").cast("long").alias("longest_run"),
+            F.sum("run_len").cast("long").alias("n_shared_blocks"),
+        )
+        .filter(F.col("n_shared_blocks") >= 2)
+        .orderBy("doc_a", "doc_b")
     )

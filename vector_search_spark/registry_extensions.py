@@ -1,16 +1,37 @@
-"""Registry entries for genuinely non-SQL-expressible operators (no
-DuckDB oracle — the driver records rows-only checks): multimodal decode
-plumbing and approximate (IVF) vector search.  Both are deterministic, so
-row counts and values are stable across runs."""
+"""Registry entries: multimodal decode plumbing and approximate vector
+search (IVF, SRP-LSH, int8-SQ, PQ, IVF-PQ).  Every query but the two
+Lloyd-refined IVF ones has a bit-exact DuckDB oracle; those two are
+deterministic, so the driver's rows-only checks are stable across runs."""
 
 from __future__ import annotations
+
+import hashlib as _hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import artifact, register
 from .functions.scalar import round4
-from .operators.ann import ivf_build, ivf_query, srp_band_table, srp_planes, srp_topk
-from .registry import artifact, register
+from .operators.ann import (
+    IVFPQ_CELLS,
+    IVFPQ_NPROBE,
+    IVFPQ_RESCORE,
+    PQ_CODES,
+    PQ_RESCORE,
+    PQ_SD,
+    PQ_SUB,
+    coarse_assign,
+    coarse_cells,
+    ivf_build,
+    ivf_query,
+    ivfpq_topk,
+    pq_codebook,
+    pq_encode,
+    pq_topk,
+    srp_band_table,
+    srp_planes,
+    srp_topk,
+)
 from .sources.tables import load_table as __load
 
 # --- SRP-LSH oracle SQL, generated from the SAME md5-derived hyperplane
@@ -701,11 +722,6 @@ def q_dedup_embedding_srp_narrow_demo(spark: SparkSession, sf_dir: str) -> DataF
 # PQ ANN with a full bit-exact oracle (hash-sampled codebooks keep every
 # stage SQL-expressible; see operators/ann.py PQ section).
 # ---------------------------------------------------------------------------
-from .operators.ann import (  # noqa: E402
-    PQ_CODES, PQ_RESCORE, PQ_SD, PQ_SUB, pq_codebook, pq_encode, pq_topk,
-)
-
-
 def _pq_slice(expr: str, s: int) -> str:
     return f"({expr})[{s * PQ_SD + 1}:{(s + 1) * PQ_SD}]"
 
@@ -1304,8 +1320,6 @@ JL_PAIR_IDS = 50  # all C(50,2) = 1225 pairs among vec_id < 50
 
 # ±1 sign matrix from md5 — deterministic constants, like srp_planes but
 # Rademacher (the Achlioptas 2003 database-friendly JL construction).
-import hashlib as _hashlib  # noqa: E402
-
 _JL_SIGNS = [
     [
         1.0 if int(_hashlib.md5(f"jl|{r}|{j}".encode()).hexdigest()[:8], 16) % 2 == 0
@@ -1571,3 +1585,263 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
         .select("id_1", "id_2", "rank_12", "rank_21", round4("cos").alias("cosine"))
     )
+
+
+# ---------------------------------------------------------------------------
+# IVF-PQ composed ANN: coarse inverted-file pruning x PQ compression, with
+# a generated bit-exact oracle (the coarse quantizer is hash-sampled, so —
+# unlike the Lloyd-refined ann_ivf_topk — every stage is SQL-expressible).
+# ---------------------------------------------------------------------------
+def _ivfpq_oracle() -> str:
+    base = _pq_oracle()
+    # reuse the PQ oracle's ordered/cb/dist/codes CTE block verbatim (it
+    # ends right before the "q AS" query CTE), then add the coarse stages.
+    prefix = base[: base.index("q AS (SELECT")]
+    d_cen = (
+        "list_dot_product(co.cvec, co.cvec)"
+        " - 2.0 * list_dot_product(v.embedding::DOUBLE[], co.cvec)"
+    )
+    d_q = (
+        "list_dot_product(co.cvec, co.cvec)"
+        " - 2.0 * list_dot_product(q.qvec, co.cvec)"
+    )
+    codes_long = "\n      UNION ALL ".join(
+        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
+    )
+    lut_long = "\n      UNION ALL ".join(
+        f"SELECT q.qid, {s} AS s, cb.code, "
+        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('cb.cvec', s)}) AS l "
+        f"FROM q CROSS JOIN cb"
+        for s in range(PQ_SUB)
+    )
+    return f"""{prefix}co_ordered AS (
+      SELECT embedding::DOUBLE[] AS cvec
+      FROM embeddings ORDER BY md5('ivf:' || vec_id::VARCHAR), vec_id
+      LIMIT {IVFPQ_CELLS}),
+    coarse AS (SELECT row_number() OVER () - 1 AS cell, cvec FROM co_ordered),
+    assign AS (
+      SELECT v.vec_id, first(co.cell ORDER BY {d_cen}, co.cell) AS cell
+      FROM embeddings v CROSS JOIN coarse co GROUP BY v.vec_id),
+    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
+          FROM embeddings WHERE vec_id < 20),
+    probe AS (
+      SELECT qid, cell FROM (
+        SELECT q.qid, co.cell,
+               row_number() OVER (PARTITION BY q.qid
+                                  ORDER BY {d_q}, co.cell) AS rn
+        FROM q CROSS JOIN coarse co)
+      WHERE rn <= {IVFPQ_NPROBE}),
+    cand_ids AS (
+      SELECT p.qid, a.vec_id FROM assign a JOIN probe p ON a.cell = p.cell),
+    codes_long AS (
+      {codes_long}),
+    lut_long AS (
+      {lut_long}),
+    approx AS (
+      SELECT cl.vec_id, c.qid,
+             list_reduce(list_prepend(0.0, list(lu.l ORDER BY lu.s)),
+                         (a, b) -> a + b) AS a
+      FROM cand_ids c
+      JOIN codes_long cl ON cl.vec_id = c.vec_id
+      JOIN lut_long lu ON lu.qid = c.qid AND lu.s = cl.s AND lu.code = cl.code
+      GROUP BY cl.vec_id, c.qid),
+    cand AS (
+      SELECT qid, vec_id FROM (
+        SELECT qid, vec_id,
+               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
+        FROM approx)
+      WHERE rn <= {IVFPQ_RESCORE}),
+    exact AS (
+      SELECT cand.qid AS query_id, cand.vec_id,
+             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
+      FROM cand
+      JOIN embeddings e ON cand.vec_id = e.vec_id
+      JOIN q qq ON cand.qid = qq.qid)
+    SELECT query_id, vec_id,
+           floor(raw*10000 + 0.5)/10000.0 AS score,
+           rank::INTEGER AS rank
+    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                       ORDER BY raw DESC, vec_id) AS rank
+          FROM exact)
+    WHERE rank <= 10
+    """
+
+
+@artifact()
+def _shared_ivfpq_coarse(spark: SparkSession, sf_dir: str):
+    """(cents, assign) — the coarse half of the IVF-PQ index; the fine
+    half (codebook + codes) is registry_extensions._shared_pq_index.  At
+    scale `assign` is the physical partitioning of the code table
+    (write.partitionBy(cell)), built once per corpus snapshot."""
+    emb = __load(spark, sf_dir, "embeddings")
+    cents = coarse_cells(emb).persist()
+    cents.count()
+    assign = coarse_assign(emb, cents).persist()
+    assign.count()
+    return cents, assign
+
+
+@register("ann_ivfpq_topk", oracle=_ivfpq_oracle())
+def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ composed ANN top-10 for 20 queries — the 5th ANN path
+    (IVF / SRP-LSH / int8-SQ / PQ / IVF-PQ), and the FAISS-style layout a
+    100 TB corpus actually deploys: coarse cells prune the scan to
+    nprobe/cells of the corpus, PQ codes compress what remains to 8
+    bytes/vector, exact rescore restores ranking fidelity on the
+    short-list.  Hash-sampled coarse centroids keep every stage
+    SQL-expressible, so the composition is verified BIT-EXACTLY against
+    DuckDB (cells, probes, ADC scores, candidate set, final ranks) —
+    recall floor pinned in pytest alongside.  Scale notes in
+    operators/ann.py (partition-pruned cell layout, broadcast LUTs)."""
+    emb = __load(spark, sf_dir, "embeddings")
+    cb, codes = _shared_pq_index(spark, sf_dir)
+    cents, assign = _shared_ivfpq_coarse(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 20)
+    out = ivfpq_topk(emb, codes, cb, cents, assign, queries, k=10)
+    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")
+
+
+# ---------------------------------------------------------------------------
+# IVF-PQ with residual encoding — the production FAISS layout, oracle-exact.
+# ---------------------------------------------------------------------------
+def _ivfpq_residual_oracle() -> str:
+    d_cen = (
+        "list_dot_product(co.cvec, co.cvec)"
+        " - 2.0 * list_dot_product(v.embedding::DOUBLE[], co.cvec)"
+    )
+    d_q = (
+        "list_dot_product(co.cvec, co.cvec)"
+        " - 2.0 * list_dot_product(q.qvec, co.cvec)"
+    )
+    rd_cols = ",\n             ".join(
+        f"list_dot_product({_pq_slice('rc.cvec', s)}, {_pq_slice('rc.cvec', s)})"
+        f" - 2.0 * list_dot_product({_pq_slice('r.rvec', s)}, {_pq_slice('rc.cvec', s)})"
+        f" AS d{s}"
+        for s in range(PQ_SUB)
+    )
+    c_aggs = ",\n             ".join(
+        f"first(code ORDER BY d{s}, code) AS c{s}" for s in range(PQ_SUB)
+    )
+    codes_long = "\n      UNION ALL ".join(
+        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
+    )
+    lut_long = "\n      UNION ALL ".join(
+        f"SELECT q.qid, {s} AS s, rc.code, "
+        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('rc.cvec', s)}) AS l "
+        f"FROM q CROSS JOIN rcb rc"
+        for s in range(PQ_SUB)
+    )
+    return f"""
+    WITH co_ordered AS (
+      SELECT embedding::DOUBLE[] AS cvec
+      FROM embeddings ORDER BY md5('ivf:' || vec_id::VARCHAR), vec_id
+      LIMIT {IVFPQ_CELLS}),
+    coarse AS (SELECT row_number() OVER () - 1 AS cell, cvec FROM co_ordered),
+    assign AS MATERIALIZED (
+      SELECT v.vec_id, first(co.cell ORDER BY {d_cen}, co.cell) AS cell
+      FROM embeddings v CROSS JOIN coarse co GROUP BY v.vec_id),
+    resid AS MATERIALIZED (
+      SELECT v.vec_id, a.cell,
+             list_transform(v.embedding::DOUBLE[], (x, i) -> x - co.cvec[i])
+               AS rvec
+      FROM embeddings v
+      JOIN assign a ON v.vec_id = a.vec_id
+      JOIN coarse co ON a.cell = co.cell),
+    rcb_ordered AS (
+      SELECT rvec AS cvec FROM resid
+      ORDER BY md5('pqr:' || vec_id::VARCHAR), vec_id LIMIT {PQ_CODES}),
+    rcb AS (SELECT row_number() OVER () - 1 AS code, cvec FROM rcb_ordered),
+    dist AS (
+      SELECT r.vec_id, rc.code,
+             {rd_cols}
+      FROM resid r CROSS JOIN rcb rc),
+    codes AS MATERIALIZED (
+      SELECT vec_id,
+             {c_aggs}
+      FROM dist GROUP BY vec_id),
+    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
+          FROM embeddings WHERE vec_id < 20),
+    probe AS (
+      SELECT qid, cell, qcen FROM (
+        SELECT q.qid, co.cell,
+               list_dot_product(q.qvec, co.cvec) AS qcen,
+               row_number() OVER (PARTITION BY q.qid
+                                  ORDER BY {d_q}, co.cell) AS rn
+        FROM q CROSS JOIN coarse co)
+      WHERE rn <= {IVFPQ_NPROBE}),
+    cand_ids AS (
+      SELECT p.qid, a.vec_id, p.qcen
+      FROM assign a JOIN probe p ON a.cell = p.cell),
+    codes_long AS (
+      {codes_long}),
+    lut_long AS (
+      {lut_long}),
+    approx AS (
+      SELECT cl.vec_id, c.qid,
+             list_reduce(list_prepend(c.qcen, list(lu.l ORDER BY lu.s)),
+                         (a, b) -> a + b) AS a
+      FROM cand_ids c
+      JOIN codes_long cl ON cl.vec_id = c.vec_id
+      JOIN lut_long lu ON lu.qid = c.qid AND lu.s = cl.s AND lu.code = cl.code
+      GROUP BY cl.vec_id, c.qid, c.qcen),
+    cand AS (
+      SELECT qid, vec_id FROM (
+        SELECT qid, vec_id,
+               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
+        FROM approx)
+      WHERE rn <= {IVFPQ_RESCORE}),
+    exact AS (
+      SELECT cand.qid AS query_id, cand.vec_id,
+             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
+      FROM cand
+      JOIN embeddings e ON cand.vec_id = e.vec_id
+      JOIN q qq ON cand.qid = qq.qid)
+    SELECT query_id, vec_id,
+           floor(raw*10000 + 0.5)/10000.0 AS score,
+           rank::INTEGER AS rank
+    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+                                       ORDER BY raw DESC, vec_id) AS rank
+          FROM exact)
+    WHERE rank <= 10
+    """
+
+
+@artifact(deps=("_shared_ivfpq_coarse",))
+def _shared_ivfpq_residual_index(spark: SparkSession, sf_dir: str):
+    """(rcb, rcodes) — the residual fine half of the IVF-PQ index: PQ
+    codebook sampled from RESIDUAL rows (seed 'pqr:') and per-vector
+    residual codes.  Built once per corpus snapshot, like the coarse half."""
+    from .operators.ann import pq_encode, residual_codebook, residual_table
+
+    emb = __load(spark, sf_dir, "embeddings")
+    cents, assign = _shared_ivfpq_coarse(spark, sf_dir)
+    resid = residual_table(emb, cents, assign)
+    rcb = residual_codebook(resid).persist()
+    rcb.count()
+    rcodes = pq_encode(resid, rcb, vec_col="rvec").persist()
+    rcodes.count()
+    return rcb, rcodes
+
+
+@register("ann_ivfpq_residual_topk", oracle=_ivfpq_residual_oracle())
+def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Residual IVF-PQ ANN top-10 for 20 queries — `ann_ivfpq_topk` with
+    the PQ codes quantizing (vector − coarse centroid) instead of the raw
+    vector, which is what FAISS's "IVFx,PQy" actually stores: residuals
+    concentrate near 0, so the same 8-byte code budget resolves
+    within-cell geometry instead of re-encoding the cell's position —
+    the property that keeps recall up at high compression.  ADC scores
+    decompose exactly as q·cen(cell) + Σ LUT[s, code] (the base term
+    rides along from the probe), so the whole path — residuals, residual
+    codebook, codes, probes, ADC, ranks — stays SQL-expressible and is
+    verified BIT-EXACTLY against DuckDB; the recall floor vs the
+    non-residual path on the same probe/rescore budget is pinned in
+    pytest.  Scale notes in operators/ann.py."""
+    emb = __load(spark, sf_dir, "embeddings")
+    from .operators.ann import ivfpq_residual_topk
+
+    cents, assign = _shared_ivfpq_coarse(spark, sf_dir)
+    rcb, rcodes = _shared_ivfpq_residual_index(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 20)
+    out = ivfpq_residual_topk(emb, rcodes, rcb, cents, assign, queries, k=10)
+    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")

@@ -25,13 +25,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import register
 from .functions.scalar import round4
-from .registry import register
-from .sources.tables import load_table as __load
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return __load(spark, sf_dir, name)
+from .registry_dedup import (
+    NUM_HASHES,
+    _SQL_AGREE,
+    _SQL_BAND_KEYS,
+    _SQL_CAND,
+    _SQL_SHINGLES,
+    _SQL_SIG,
+    _shared_verified_pairs,
+)
+from .registry_ml import (
+    _MK_ITERS,
+    _MK_K,
+    _MK_SCALE,
+    _MK_TYPES,
+    _hof_once,
+    _mk_np_hof_expr,
+    _mk_step_exprs,
+    _plan_cached,
+)
+from .registry_text import _SQL_ND, _SQL_NT, _SQL_QUALITY, _SQL_SR, _shared_doc_features
+from .sources.tables import load_table as _t
 
 
 _GAP_US = 600_000_000        # 10-minute session gap (the house rule)
@@ -105,8 +121,8 @@ def q_session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
        cell packed with equal-length heavily-overlapping sessions defeats
        any length prune — but there the TRUE overlap count is itself
        quadratic, i.e. candidate mass tracks genuine output, which is the
-       bound VERDICT r10 asked for (tools/session_dense_probe.py pins
-       this: runtime tracks survivor mass, not raw session count).
+       bound VERDICT r10 asked for (session_dense_probe_r11.json
+       records this: runtime tracks survivor mass, not raw session count).
 
     2. EMIT-ONCE CELL.  A pair overlapping strictly shares the cell of
        greatest(s_a, s_b): that instant lies in BOTH intervals (it is the
@@ -664,8 +680,6 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-free.  The plan compiles ~300 generated columns, so it is served
     from the prepared-statement cache like the other unrolled iterations.
     """
-    from .registry_ml import _plan_cached
-
     return _plan_cached(
         "markov_attribution", spark, sf_dir, lambda: _ma_plan(spark, sf_dir)
     )
@@ -748,8 +762,6 @@ def _ma_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barriers (~6.8 s build per fresh plan); the HOF form is five small
     # expressions with the same per-round text (_ma_np_hof_expr), so the
     # arithmetic — and therefore the result — is unchanged.
-    from .registry_ml import _hof_once
-
     for v, exc in _MA_VARIANTS:
         xs = [x for x in _MA_STATES if x != exc]
         init = ", ".join("CAST(0 AS BIGINT)" for _ in xs)
@@ -1153,19 +1165,13 @@ def q_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Entropy rate of the user-journey Markov chain (predictability metric).
 # ---------------------------------------------------------------------------
-def _me_parts():
-    from .registry_ml import _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
-
-    return _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
-
-
 def _me_entropy_exprs() -> list[tuple[str, str]]:
     """[(name, sql)] shared text: per-state micro-nat entropies + the rate.
 
     h_i = Σ_j (c_ij/r_i)·(ln r_i − ln c_ij) with every ln taken of an
     integer and micro-quantized once; H = Σ_i π_i·h_i / 1e6.
     """
-    _, K, SCALE, _, _ = _me_parts()
+    K, SCALE = _MK_K, _MK_SCALE
     outs = []
     for i in range(K):
         terms = []
@@ -1196,7 +1202,7 @@ def _me_entropy_exprs() -> list[tuple[str, str]]:
 
 
 def _me_oracle() -> str:
-    ITERS, K, SCALE, TYPES, step = _me_parts()
+    ITERS, K, SCALE, TYPES, step = _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
     cnt = ", ".join(
         f"sum(CASE WHEN prev = '{a}' AND event_type = '{b}' THEN 1 ELSE 0 END)"
         f"::BIGINT AS c{i}_{j}"
@@ -1263,15 +1269,13 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, corpus-size-free iteration; the entropy layer is pure scalar
     text on the 1-row frame.  Plan-cached like the other unrolled plans.
     """
-    from .registry_ml import _plan_cached
-
     return _plan_cached(
         "markov_entropy_rate", spark, sf_dir, lambda: _me_plan(spark, sf_dir)
     )
 
 
 def _me_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ITERS, K, SCALE, TYPES, step = _me_parts()
+    ITERS, K, SCALE, TYPES, step = _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
@@ -1299,8 +1303,6 @@ def _me_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HOF-loop form of the stationary iteration (round 11): same per-round
     # text as the oracle via _mk_np_hof_expr, one aggregate() expression
     # instead of ITERS unrolled layers + localCheckpoint barriers.
-    from .registry_ml import _hof_once, _mk_np_hof_expr
-
     steps = ", ".join(_mk_np_hof_expr(j, "acc") for j in range(K))
     init = ", ".join(f"CAST({SCALE // K} AS BIGINT)" for _ in range(K))
     it = _hof_once(
@@ -1696,16 +1698,6 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # End-to-end curation funnel: quality gate -> dedup keep, docs AND tokens.
 # ---------------------------------------------------------------------------
 def _cur_oracle() -> str:
-    from .registry_dedup import (
-        _SQL_AGREE,
-        _SQL_BAND_KEYS,
-        _SQL_CAND,
-        _SQL_SHINGLES,
-        _SQL_SIG,
-        NUM_HASHES,
-    )
-    from .registry_text import _SQL_ND, _SQL_NT, _SQL_QUALITY, _SQL_SR
-
     return f"""
     WITH fl AS MATERIALIZED (
       SELECT doc_id, {_SQL_NT} AS nt,
@@ -1770,9 +1762,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against the dropped-doc set (near-dups are a small minority by
     construction); the funnel is reshaped from a 1-row aggregate.
     """
-    from .registry_dedup import _shared_verified_pairs
-    from .registry_text import _shared_doc_features
-
     feats = _shared_doc_features(spark, sf_dir)
     nt = F.col("n_tokens_ws")
     mwl = F.col("n_chars") * F.lit(1.0) / nt

@@ -48,15 +48,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import register
-from .registry_round5 import _fdiv
-from .sources.tables import load_table as __load
+from .catalog import register
+from .functions.scalar import _fdiv
+from .sources.tables import load_table as _t
 
 HW_MAX_E = 40  # same truncation as SES/Brown: weight < 2^-40 is defined out
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return __load(spark, sf_dir, name)
 
 
 def _wfdiv_spark(a: str, b: str) -> str:

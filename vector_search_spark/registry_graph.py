@@ -1,8 +1,7 @@
-"""Registry entries: dup-graph / random-walk algorithms (BFS hops, modularity, double-sweep diameter, personalized PageRank, Markov hitting times, TextRank).
+"""Registry entries: dup-graph / random-walk algorithms (label-propagation communities, eigenvector centrality, k-core, BFS hops, modularity, double-sweep diameter, personalized PageRank, Markov hitting times, TextRank).
 
-Moved VERBATIM from `registry_round6` in the round-6 module reorg
-(VERDICT r5 #6): query names and oracle texts are the stable contract and
-are byte-identical to the pre-move blocks; only the module changed.
+Query names and oracle texts are the stable contract; module moves keep
+them byte-identical.
 """
 
 from __future__ import annotations
@@ -10,26 +9,207 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import register
-from .registry_round5 import _SQL_DUP_EDGES, _fdiv, _lpa_round_sql, LPA_ROUNDS
-from .registry_round5 import q_dup_label_propagation
-from .sources.tables import load_table as __load
+from .catalog import artifact, register
+from .functions.scalar import _fdiv
+from .registry_dedup import (
+    _SQL_BAND_KEYS,
+    _SQL_CAND,
+    _SQL_SHINGLES,
+    _SQL_SIG,
+    _SQL_VERIFIED_BLOCK,
+    _shared_components,
+    _shared_sym_edges,
+)
+from .registry_ml import _MK_K, _MK_TYPES, _hof_once
+from .sources.tables import load_table as _t
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return __load(spark, sf_dir, name)
-
-
-def _sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric directed edge list of the verified near-dup graph —
-    session-shared since round 11 (`_shared_sym_edges`): the four graph
-    queries here each re-derived and re-checkpointed it per build."""
-    from .registry_dedup import _shared_sym_edges
-
-    return _shared_sym_edges(spark, sf_dir)
+# Shared oracle prefix: the verified near-dup graph as symmetric edges.
+_SQL_DUP_EDGES = f"""
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIG},
+    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
+    cand AS ({_SQL_CAND}),
+    {_SQL_VERIFIED_BLOCK},
+    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
+              UNION SELECT id_2, id_1 FROM verified)
+"""
 
 
 # ---------------------------------------------------------------------------
+# Label-propagation communities over the dup graph.
+# ---------------------------------------------------------------------------
+LPA_ROUNDS = 4
+
+
+def _lpa_round_sql(prev: str, cur: str) -> str:
+    """One synchronous LPA round as an unrolled CTE: node b adopts the most
+    frequent label among its neighbors' round-(i-1) labels; ties break to
+    the smallest label.  Integer-only, so the Spark twin is bit-exact."""
+    return f"""
+    {cur} AS (
+      SELECT b AS doc_id, label FROM (
+        SELECT e.b, p.label, count(*) AS c,
+               row_number() OVER (PARTITION BY e.b
+                                  ORDER BY count(*) DESC, p.label) AS rn
+        FROM edges e JOIN {prev} p ON e.a = p.doc_id
+        GROUP BY e.b, p.label)
+      WHERE rn = 1)"""
+
+
+@artifact(deps=("_shared_sym_edges",), checkpoint=True)
+def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Final (doc_id, label) table of the fixed-round synchronous LPA —
+    session-shared (round 11): both `dup_label_propagation` and
+    `dup_community_modularity` ran the full 4-round loop independently.
+    Every round ends in an eager localCheckpoint; ``checkpoint=True``
+    takes the last one."""
+    edges = _shared_sym_edges(spark, sf_dir)
+    labels = edges.select(F.col("a").alias("doc_id")).distinct().withColumn(
+        "label", F.col("doc_id").cast("long")
+    )
+    w = Window.partitionBy("b").orderBy(F.desc("c"), F.asc("label"))
+    for r in range(LPA_ROUNDS):
+        if r:
+            labels = labels.localCheckpoint(eager=True)
+        cnt = (
+            edges.join(labels, edges.a == labels.doc_id)
+            .groupBy("b", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        labels = (
+            cnt.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(F.col("b").alias("doc_id"), "label")
+        )
+    return labels
+
+
+@register(
+    "dup_label_propagation",
+    oracle=_SQL_DUP_EDGES
+    + ",\n    l0 AS (SELECT DISTINCT a AS doc_id, a AS label FROM edges),"
+    + ",".join(_lpa_round_sql(f"l{i}", f"l{i + 1}") for i in range(LPA_ROUNDS))
+    + f"""
+    SELECT doc_id, label::BIGINT AS community,
+           (count(*) OVER (PARTITION BY label))::BIGINT AS community_size
+    FROM l{LPA_ROUNDS} ORDER BY doc_id
+    """,
+)
+def q_dup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection on the verified near-duplicate graph by
+    synchronous label propagation (4 fixed rounds): every node adopts the
+    majority label among its neighbors, ties to the smallest label.
+    Communities are the template families connected-components can't
+    separate — a bridge edge merges two cliques into one component, but
+    majority voting keeps each clique on its own label, so remediation
+    (pick-one-per-template) acts on the right granularity.
+
+    Determinism: labels are doc_ids (integers); each round is a count +
+    (count DESC, label ASC) argmax — no floats, no data-dependent
+    iteration count, so any partitioning and the unrolled-CTE DuckDB twin
+    produce identical labels.  Standard async LPA is nondeterministic by
+    construction (visit order decides); the synchronous fixed-round form
+    is the one a distributed engine can honestly promise.
+
+    Scale: each round is ONE join of the O(near-dup) edge list against
+    the label table plus a partial-agg'd (b, label) count — the
+    `dup_graph_pagerank` economics; eager localCheckpoint per round keeps
+    the plan constant-size.  Rounds are O(graph diameter) to stabilize;
+    dup graphs are shallow (templates are star/clique-like), so a fixed
+    small round count is the production setting.
+    """
+    labels = _shared_lpa_labels(spark, sf_dir)
+    w_sz = Window.partitionBy("label")
+    return labels.select(
+        "doc_id",
+        F.col("label").cast("long").alias("community"),
+        F.count(F.lit(1)).over(w_sz).cast("long").alias("community_size"),
+    ).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# Eigenvector centrality by integer power iteration.
+# ---------------------------------------------------------------------------
+EIGEN_ROUNDS = 6
+EIGEN_SCALE = 1_000_000
+
+
+def _eigen_oracle() -> str:
+    ctes = ["x0 AS (SELECT DISTINCT a AS doc_id, 1000000::BIGINT AS x FROM edges)"]
+    for i in range(EIGEN_ROUNDS):
+        ctes.append(
+            f"""s{i} AS MATERIALIZED (
+      SELECT e.b AS doc_id, sum(p.x)::BIGINT AS s
+      FROM edges e JOIN x{i} p ON e.a = p.doc_id GROUP BY e.b)"""
+        )
+        ctes.append(
+            f"""x{i + 1} AS MATERIALIZED (
+      SELECT s.doc_id,
+             (s.s // (1 + ((SELECT sum(s) FROM s{i})
+                           // ((SELECT count(*) FROM x0) * {EIGEN_SCALE}))))::BIGINT
+               AS x
+      FROM s{i} s)"""
+        )
+    return (
+        _SQL_DUP_EDGES
+        + ",\n    "
+        + ",\n    ".join(ctes)
+        + f"""
+    SELECT doc_id, x AS centrality_micro FROM x{EIGEN_ROUNDS} ORDER BY doc_id
+    """
+    )
+
+
+@register("dup_eigencentrality", oracle=_eigen_oracle())
+def q_dup_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Eigenvector centrality of the verified near-duplicate graph — x ∝
+    A·x by 6 power-iteration rounds.  Where PageRank's degree division
+    flattens hubs, eigencentrality concentrates mass inside the densest
+    clique: the top-centrality docs ARE the dominant boilerplate template,
+    found without thresholding degree.
+
+    Exactness: iteration state is integer micro-units.  Renormalization
+    divides every score by the SAME integer d = 1 + Σs // (N·1e6) — a
+    uniform scalar, so relative order (the centrality semantics) is
+    unaffected while values stay in BIGINT range at any graph size; since
+    both the neighbor sums and d are exact integers, any cluster size,
+    any partitioning, and the unrolled-CTE DuckDB twin agree bit-for-bit
+    (a float-normalized power iteration would drift by reduction order).
+
+    Scale: per round one join + partial-agg'd shuffle over O(near-dup)
+    edges, plus a 1-row global sum broadcast back — the
+    `dup_graph_pagerank` economics; eager localCheckpoint per round keeps
+    plan and codegen constant-size.  Neighbor sums fit BIGINT up to
+    ~1e12-node graphs (score ≤ N·1e6); beyond that the accumulator moves
+    to DECIMAL(38,0) per the house second-moment rule.
+    """
+    edges = _shared_sym_edges(spark, sf_dir)
+    nodes = edges.select(F.col("a").alias("doc_id")).distinct()
+    nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
+    x = nodes.withColumn("x", F.lit(EIGEN_SCALE).cast("long"))
+    for _ in range(EIGEN_ROUNDS):
+        s = (
+            edges.join(x, edges.a == x.doc_id)
+            .groupBy("b")
+            .agg(F.sum("x").cast("long").alias("s"))
+        )
+        d = (
+            s.agg(F.sum("s").cast("long").alias("tot"))
+            .crossJoin(F.broadcast(nn))
+            .select(
+                (
+                    F.lit(1)
+                    + F.expr(f"tot DIV (n_nodes * {EIGEN_SCALE})")
+                ).cast("long").alias("d")
+            )
+        )
+        x = (
+            s.crossJoin(F.broadcast(d))
+            .select(F.col("b").alias("doc_id"), F.expr("s DIV d").cast("long").alias("x"))
+            .localCheckpoint(eager=True)
+        )
+    return x.select("doc_id", F.col("x").alias("centrality_micro")).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -85,7 +265,7 @@ def q_dup_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     why distance-to-nearest-seed is the form a 1000-executor Pregel job
     actually runs.
     """
-    edges = _sym_edges(spark, sf_dir)
+    edges = _shared_sym_edges(spark, sf_dir)
     seed = (
         edges.groupBy("b")
         .agg(F.min("a").alias("min_nbr"))
@@ -198,9 +378,7 @@ def q_dup_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg'd groupBys per partition — O(edges), no squares, no
     iteration.
     """
-    from .registry_dedup import _shared_components
-
-    edges = _sym_edges(spark, sf_dir)
+    edges = _shared_sym_edges(spark, sf_dir)
     cc = _shared_components(spark, sf_dir).select(
         F.lit("components").alias("scheme"),
         F.col("node").alias("doc_id"),
@@ -497,9 +675,7 @@ def q_graph_double_sweep_diameter(spark: SparkSession, sf_dir: str) -> DataFrame
     regardless of component count; eager localCheckpoint per round keeps
     the plan constant-size.
     """
-    from .registry_dedup import _shared_components
-
-    edges = _sym_edges(spark, sf_dir)
+    edges = _shared_sym_edges(spark, sf_dir)
     cc = _shared_components(spark, sf_dir).select(
         F.col("node").alias("doc_id"), F.col("label").cast("long").alias("comp")
     )
@@ -553,8 +729,6 @@ _HIT_SCALE = 1_000_000
 
 
 def _hit_nonabs() -> list[int]:
-    from .registry_ml import _MK_TYPES
-
     return [i for i, t in enumerate(_MK_TYPES) if t != "purchase"]
 
 
@@ -579,8 +753,6 @@ def _hit_step_exprs() -> list[tuple[str, str]]:
 
 
 def _hit_oracle() -> str:
-    from .registry_ml import _MK_K, _MK_TYPES
-
     nonabs = _hit_nonabs()
     pidx = _MK_TYPES.index("purchase")
     cnt = ", ".join(
@@ -655,8 +827,6 @@ def q_markov_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 1-row arithmetic (checkpoint barriers every 4 rounds keep
     generated methods under the 64 KB codegen limit).
     """
-    from .registry_ml import _MK_K, _MK_TYPES
-
     nonabs = _hit_nonabs()
     pidx = _MK_TYPES.index("purchase")
     ev = _t(spark, sf_dir, "events")
@@ -698,8 +868,6 @@ def q_markov_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST({_HIT_SCALE} + floor(({mv}) / CAST(r{i} AS DOUBLE) + 0.5)"
             f" AS BIGINT)"
         )
-
-    from .registry_ml import _hof_once
 
     init = ", ".join("CAST(0 AS BIGINT)" for _ in nonabs)
     steps = ", ".join(_hit_hof_expr(i) for i in nonabs)
@@ -793,7 +961,7 @@ def q_dup_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     economics to the uniform variant; the seed and node-count scalars
     are 1-row broadcasts.
     """
-    edges = _sym_edges(spark, sf_dir)
+    edges = _shared_sym_edges(spark, sf_dir)
     nodes = edges.select(F.col("a").alias("doc_id")).distinct().localCheckpoint(eager=True)
     deg = edges.groupBy(F.col("a").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
@@ -827,3 +995,76 @@ def q_dup_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("doc_id", F.col("r").alias("ppr_micro")).orderBy("doc_id")
 
 
+# ---------------------------------------------------------------------------
+# k-core decomposition (fixed-round peeling) on the near-dup graph.
+# ---------------------------------------------------------------------------
+_KCORE_K = 2
+_KCORE_ROUNDS = 3
+
+
+def _kcore_oracle() -> str:
+    # every e{r} feeds BOTH d{r} and e{r+1}, and a{r} feeds both join
+    # sides — without AS MATERIALIZED DuckDB inlines each reference and
+    # re-evaluates the whole upstream shingle/LSH/verify pipeline
+    # ~2^rounds times, which is what blew its 24 GiB temp cap at slice
+    # scale in r8/r9 (the house multi-consumer-CTE rule, applied late)
+    rounds = []
+    for r in range(_KCORE_ROUNDS):
+        rounds.append(
+            f"d{r} AS (SELECT a, count(*)::BIGINT AS deg FROM e{r} GROUP BY a),\n"
+            f"    a{r} AS MATERIALIZED (SELECT a FROM d{r} WHERE deg >= {_KCORE_K}),\n"
+            f"    e{r + 1} AS MATERIALIZED (SELECT e.a, e.b FROM e{r} e"
+            f" JOIN a{r} x ON e.a = x.a JOIN a{r} y ON e.b = y.a)"
+        )
+    last = _KCORE_ROUNDS
+    return f"""
+    WITH {_SQL_SHINGLES},
+    {_SQL_SIG},
+    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
+    cand AS ({_SQL_CAND}),
+    {_SQL_VERIFIED_BLOCK},
+    e0 AS MATERIALIZED (SELECT id_1 AS a, id_2 AS b FROM verified
+           UNION ALL SELECT id_2, id_1 FROM verified),
+    {",".join(rounds)}
+    SELECT a AS doc_id, count(*)::BIGINT AS core_degree
+    FROM e{last} GROUP BY a ORDER BY doc_id
+    """
+
+
+@register("graph_kcore", oracle=_kcore_oracle())
+def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-core of the verified near-duplicate graph by fixed-round peeling
+    (3 rounds): repeatedly drop nodes with degree < 2 and the edges that
+    touch them, then emit the survivors with their residual degree.  The
+    graph-analytics companion to dedup_clusters / dup_graph_pagerank /
+    dup_graph_triangles: the k-core separates genuinely interlinked
+    template families (every member has >= k near-dup partners even after
+    peeling) from star-shaped accretion around one hub doc.  Fixed round
+    count (not to-convergence) keeps both engines bit-identical by
+    construction; on the fixture the peeling converges within 3 rounds.
+
+    Scale: each round is one partial-agg'd degree count over the
+    (near-dup-edge-sized) pair table plus two semi-joins against the
+    shrinking alive set — the same per-round economics as the unrolled
+    pagerank, over an edge table that only ever shrinks.  Eager
+    localCheckpoint between rounds keeps the logical plan constant-size
+    (the iterative-Spark lineage trap).
+    """
+    # session-shared symmetric edge table (round 11); pairs are unique
+    # with id_1 < id_2, so the old non-distinct union is the same set
+    edges = _shared_sym_edges(spark, sf_dir)
+    for _ in range(_KCORE_ROUNDS):
+        deg = edges.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+        alive = deg.filter(F.col("deg") >= _KCORE_K).select("a")
+        edges = (
+            edges.join(alive, "a")
+            .join(alive.withColumnRenamed("a", "b"), "b")
+            .select("a", "b")
+            .localCheckpoint(eager=False)
+        )
+    return (
+        edges.groupBy("a")
+        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+        .select(F.col("a").alias("doc_id"), "core_degree")
+        .orderBy("doc_id")
+    )

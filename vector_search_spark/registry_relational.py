@@ -1,16 +1,17 @@
-"""Registry entries: relational spine (joins/aggs/windows/set-ops) on the
-TPC-H-style fixture tables — the §2.6 categories the reference lacks."""
+"""Registry entries: relational spine (joins/aggs/windows/set-ops, 2-D
+skyline) on the TPC-H-style fixture tables — the §2.6 categories the
+reference lacks."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from .catalog import artifact, register
+from .functions.scalar import _CENTS, round4
 from .operators import relational as R
-from .registry import artifact, register
+from .sources.partsupp import PARTSUPP_SQL, synth_partsupp
 from .sources.tables import load_table as _t
-
-
-_CENTS = "floor({x}*100 + 0.5)::BIGINT"
 
 
 def _cents(x: str) -> str:
@@ -271,7 +272,6 @@ def q_purchase_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     union+window merge (operators/asof.py); DuckDB oracle is its native
     ASOF LEFT JOIN — two entirely different formulations, bit-identical."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from .operators.asof import asof_join_backward
 
@@ -329,8 +329,6 @@ def q_purchase_attribution_window(spark: SparkSession, sf_dir: str) -> DataFrame
     bucketed interval join (operators/rangejoin.py — equi-join on
     (user, time-bucket), exact BETWEEN filter); the oracle is the naive
     BETWEEN theta-join DuckDB can afford at sf0.01."""
-    from pyspark.sql import functions as F
-
     from .operators.rangejoin import interval_join
 
     window_us = 5 * 60 * 1_000_000
@@ -454,8 +452,6 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_part_type_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 flavor: revenue share per part type (window over agg)."""
-    from .functions.scalar import round4
-
     out = R.part_type_revenue(_t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part"))
     return out.select(
         "p_type", "revenue_cents", "n_items",
@@ -531,9 +527,6 @@ def q_brand_supplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linear-interpolated percentiles (both engines use the same
     continuous-quantile convention on DOUBLE input)."""
-    from pyspark.sql import functions as F
-    from .functions.scalar import round4
-
     ev = _t(spark, sf_dir, "events")
     pct = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.25)).alias("__p25"),
@@ -705,10 +698,6 @@ def q_props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     round4(integer_sum / count) — one division after exact BIGINT sums, so
     it cannot drift with partitioning.
     """
-    from pyspark.sql import functions as F
-
-    from .functions.scalar import round4
-
     ev = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
@@ -938,7 +927,6 @@ def q_click_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     different formulations, bit-identical including tie handling (right
     side pre-deduped to one row per (user, ts))."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from .operators.asof import asof_join_forward
 
@@ -980,8 +968,6 @@ def q_click_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # item 5).  The oracle CTE is generated from the same constants the Spark
 # synthesis uses, so neither side can drift.
 # ---------------------------------------------------------------------------
-from .sources.partsupp import PARTSUPP_SQL, synth_partsupp  # noqa: E402
-
 # Session-shared synthesized partsupp — the "materialize the dim once"
 # model every other shared artifact follows (a real deployment would write
 # it bucketed by ps_partkey next to the other dims, not re-derive it per
@@ -1119,7 +1105,6 @@ def q_revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); the join chain is the Q5 shape (orderkey exchange, dims
     broadcast)."""
     li = _t(spark, sf_dir, "lineitem")
-    from pyspark.sql import functions as F
     from .operators.relational import cents
 
     rev = li.select(
@@ -1192,8 +1177,7 @@ def q_order_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     so every position — and therefore every emitted fraction — is
     deterministic (peer-group-free).  The month predicate pushes to the
     scan."""
-    from pyspark.sql import Window, functions as F
-    from .functions.scalar import round4
+    from pyspark.sql import Window
     from .operators.relational import cents
 
     o = (
@@ -1242,8 +1226,6 @@ def q_click_days_without_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
     distinct (user, day) keys before the single exchange, so the shuffle
     is O(distinct pairs), not O(events); day is integer epoch-day from
     the exact nanos column."""
-    from pyspark.sql import functions as F
-
     ev = _t(spark, sf_dir, "events")
     day = F.expr("ts_ns DIV 86400000000000").alias("day")
     clicked = ev.filter(F.col("event_type") == "click").select("user_id", day)
@@ -1298,8 +1280,6 @@ def q_data_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan predicates counted map-side.  The six 1-row results union into a
     6-row report — no check ever materializes violating rows unless asked.
     """
-    from pyspark.sql import functions as F
-
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     lineitem = _t(spark, sf_dir, "lineitem")
@@ -1396,8 +1376,6 @@ def q_order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents; outputs are NULL-free by construction (absent cells aggregate
     zero rows → coalesced to 0).
     """
-    from pyspark.sql import functions as F
-
     o = _t(spark, sf_dir, "orders").select(
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),
         "o_orderstatus",
@@ -1429,42 +1407,6 @@ def q_order_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZORDER_BITS = 4
 
 
-@register(
-    "zorder_cells",
-    oracle=None,  # assigned below — built from the shared morton generator
-)
-def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton (Z-order) cell statistics for orders bucketed by (custkey %
-    16, order month % 16): the interleaved code `zorder_rewrite` clusters
-    files on, emitted per cell with order counts and integer-cents revenue
-    so the clustering key itself is value-verified cross-engine.
-
-    Scale: the code is pure codegen'd bit arithmetic on two bucket ints —
-    no UDF, no shuffle beyond the final per-cell aggregate (256 cells at
-    any data size: the exchange is O(cells), map-side combined).  The
-    locality property (file-level 2-D pruning) is exercised by
-    `tests/test_maintenance.py::test_zorder_rewrite_bounds_both_dims`."""
-    from pyspark.sql import functions as F
-
-    from .plans.maintenance import morton_sql
-
-    o = _t(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % 16).alias("xb"),
-        ((F.year("o_orderdate") * 12 + F.month("o_orderdate")) % 16).alias("yb"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-    )
-    code = F.expr(morton_sql("xb", "yb", ZORDER_BITS)).cast("long")
-    return (
-        o.withColumn("morton", code)
-        .groupBy("morton", "xb", "yb")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("rev_cents"),
-        )
-        .orderBy("morton")
-    )
-
-
 def _zorder_oracle() -> str:
     from .plans.maintenance import morton_sql_duckdb
 
@@ -1483,9 +1425,35 @@ def _zorder_oracle() -> str:
     """
 
 
-from .registry import ORACLES as _ORACLES  # noqa: E402
+@register("zorder_cells", oracle=_zorder_oracle())
+def q_zorder_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Morton (Z-order) cell statistics for orders bucketed by (custkey %
+    16, order month % 16): the interleaved code `zorder_rewrite` clusters
+    files on, emitted per cell with order counts and integer-cents revenue
+    so the clustering key itself is value-verified cross-engine.
 
-_ORACLES["zorder_cells"] = _zorder_oracle()
+    Scale: the code is pure codegen'd bit arithmetic on two bucket ints —
+    no UDF, no shuffle beyond the final per-cell aggregate (256 cells at
+    any data size: the exchange is O(cells), map-side combined).  The
+    locality property (file-level 2-D pruning) is exercised by
+    `tests/test_maintenance.py::test_zorder_rewrite_bounds_both_dims`."""
+    from .plans.maintenance import morton_sql
+
+    o = _t(spark, sf_dir, "orders").select(
+        (F.col("o_custkey") % 16).alias("xb"),
+        ((F.year("o_orderdate") * 12 + F.month("o_orderdate")) % 16).alias("yb"),
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+    )
+    code = F.expr(morton_sql("xb", "yb", ZORDER_BITS)).cast("long")
+    return (
+        o.withColumn("morton", code)
+        .groupBy("morton", "xb", "yb")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_orders"),
+            F.sum("cents").cast("long").alias("rev_cents"),
+        )
+        .orderBy("morton")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1546,7 +1514,6 @@ def q_table_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle matches bit-for-bit; the HLL family covers the approximate
     path where exactness can be traded."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     ev = _t(spark, sf_dir, "events")
     stack_args = ", ".join(
@@ -1583,4 +1550,67 @@ def q_table_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "top_count",
         )
         .orderBy("column_name")
+    )
+
+
+# ---------------------------------------------------------------------------
+# 2-D skyline (Pareto frontier) via distributed prefix-min.
+# ---------------------------------------------------------------------------
+@register(
+    "skyline_orders",
+    oracle="""
+    WITH pts AS (
+      SELECT o_orderkey, floor(o_totalprice*100 + 0.5)::BIGINT AS cents,
+             o_orderdate AS d
+      FROM orders),
+    mins AS (
+      SELECT o_orderkey, cents, d,
+             min(d) OVER (ORDER BY cents DESC, d ASC, o_orderkey
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS pm
+      FROM pts)
+    SELECT o_orderkey,
+           floor((cents / 100.0) * 10000 + 0.5) / 10000.0 AS price,
+           d AS o_orderdate
+    FROM mins WHERE pm IS NULL OR pm > d
+    ORDER BY o_orderdate, o_orderkey
+    """,
+)
+def q_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skyline (Pareto-frontier) operator: orders not dominated by any
+    other order on (totalprice max, orderdate min) — "no earlier order was
+    also worth more".  A classic OLAP operator the reference lacks
+    entirely (SURVEY.md §2.6: no joins/aggregates at all); Spark has no
+    built-in skyline, so this is the canonical 2-D reduction: sort by
+    dim-1 DESC and a point is in the skyline iff the running MIN of dim-2
+    over all strictly-better dim-1 points exceeds its own.
+
+    Scale: the running min uses partitioning.global_prefix_min — a range
+    exchange + per-range window + a 32-row broadcast prefix table — NEVER
+    a partition-less window (the one-task sort trap).  Dominance math is
+    on exact integer cents; (cents, date, orderkey) is a total order so
+    the prefix min is partitioning-invariant (covered by the invariance
+    suite).
+    """
+    from .partitioning import global_prefix_min
+
+    orders = _t(spark, sf_dir, "orders")
+    pts = orders.select(
+        "o_orderkey",
+        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        F.col("o_orderdate").alias("d"),
+    )
+    g = global_prefix_min(
+        pts,
+        [F.col("cents").desc(), F.col("d").asc(), F.col("o_orderkey").asc()],
+        "d",
+    )
+    return (
+        g.filter(F.col("__prior_min").isNull() | (F.col("__prior_min") > F.col("d")))
+        .select(
+            "o_orderkey",
+            round4(F.col("cents") / 100.0).alias("price"),
+            F.col("d").alias("o_orderdate"),
+        )
+        .orderBy("o_orderdate", "o_orderkey")
     )

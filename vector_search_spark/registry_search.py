@@ -1,6 +1,10 @@
-"""Registry entries: lexical BM25 + hybrid (dense ⊕ lexical) search.
+"""Registry entries: dense KNN search, the MCP search path, lexical BM25
+and hybrid (dense ⊕ lexical) search.
 
-The reference is dense-vector-only; a user switching engines gets the
+The paper's own query surface comes first: exact KNN top-k (single query,
+batched similarity join, payload-filtered), rerank scoring, and the full
+MCP path (over-fetch, rerank, score and date filters).  The reference is
+dense-vector-only; a user switching engines gets the
 standard production companions here: BM25 keyword ranking over the same
 corpus and reciprocal-rank-fusion hybrid search combining the BM25 list
 with the dense KNN list (doc_id ≡ vec_id, same identity `search_pipeline`
@@ -19,16 +23,206 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.scalar import round4
+from .catalog import register
+from .encoders import hash_rerank_score
+from .functions.scalar import _fdiv, relevance_label, round4, sigmoid
 from .functions.vector import dot_product
 from .operators.bm25 import bm25_topk, rrf_fuse
-from .registry import register
-from .registry_round5 import _fdiv
-from .sources.tables import load_table as __load
+from .operators.knn import knn_topk, similarity_join
+from .sources.tables import load_table as _t
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return __load(spark, sf_dir, name)
+# ---------------------------------------------------------------------------
+# Q1 — KNN top-k by dot product (reference `query.py:53-55`, k=20).
+# Query vector = embeddings row vec_id=0, so both engines derive it from the
+# same data.  Exact scored scan; plan is TakeOrderedAndProject (no shuffle).
+# ---------------------------------------------------------------------------
+@register(
+    "knn_topk",
+    oracle="""
+    WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
+    SELECT e.vec_id, e.label,
+           floor((list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]))*10000 + 0.5)/10000.0 AS score
+    FROM embeddings e CROSS JOIN q
+    ORDER BY list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC, e.vec_id
+    LIMIT 20
+    """,
+)
+def q_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__qvec"))
+    scored = emb.crossJoin(F.broadcast(q)).withColumn(
+        "raw_score", dot_product("embedding", "__qvec")
+    )
+    return (
+        scored.orderBy(F.desc("raw_score"), F.asc("vec_id"))
+        .limit(20)
+        .select("vec_id", "label", round4("raw_score").alias("score"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Q2 — batched multi-query KNN (similarity join): the Spark-native
+# generalization of the reference's per-query entry points (SURVEY.md §2.4).
+# Queries = embeddings rows vec_id<5; top-10 per query.
+# ---------------------------------------------------------------------------
+@register(
+    "knn_multi_query",
+    oracle="""
+    WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5)
+    SELECT query_id, vec_id, floor((score)*10000 + 0.5)/10000.0 AS score, rank::INTEGER AS rank FROM (
+      SELECT q.query_id, e.vec_id,
+             list_dot_product(e.embedding::DOUBLE[], q.qvec::DOUBLE[]) AS score,
+             row_number() OVER (
+               PARTITION BY q.query_id
+               ORDER BY list_dot_product(e.embedding::DOUBLE[], q.qvec::DOUBLE[]) DESC, e.vec_id
+             ) AS rank
+      FROM embeddings e CROSS JOIN q
+    ) WHERE rank <= 10
+    """,
+)
+def q_knn_multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    out = similarity_join(emb, queries, k=10)
+    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
+
+
+# ---------------------------------------------------------------------------
+# Q1-filtered — KNN with a payload predicate (MCP filtered search).  The
+# label filter pushes down to the parquet scan BEFORE scoring.
+# ---------------------------------------------------------------------------
+@register(
+    "knn_filtered",
+    oracle="""
+    WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0)
+    SELECT e.vec_id, e.label,
+           floor((list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]))*10000 + 0.5)/10000.0 AS score
+    FROM embeddings e CROSS JOIN q
+    WHERE e.label = 3
+    ORDER BY list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC, e.vec_id
+    LIMIT 20
+    """,
+)
+def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    out = knn_topk(
+        emb, qvec, k=20, payload_cols=["label"], where=F.col("label") == 3
+    )
+    return out.select("vec_id", "label", round4("score").alias("score"))
+
+
+# ---------------------------------------------------------------------------
+# E3/E4/E5 — rerank scoring surface: deterministic cross-encoder stub +
+# sigmoid probability + relevance label (reference query.py:16-27,57-66).
+# ---------------------------------------------------------------------------
+_RERANK_SQL = "((('0x'||substr(md5('what is spark' || '|' || text),1,8))::BIGINT % 100000)/100000.0*8-4)"
+
+
+@register(
+    "rerank_scores",
+    oracle=f"""
+    SELECT doc_id,
+           floor((rr)*10000 + 0.5)/10000.0 AS rerank_score,
+           floor((1/(1+exp(-rr)))*10000 + 0.5)/10000.0 AS probability,
+           CASE WHEN rr >= 3 THEN 'high' WHEN rr >= 0 THEN 'medium' ELSE 'low' END AS relevance
+    FROM (SELECT doc_id, {_RERANK_SQL} AS rr FROM documents)
+    ORDER BY rr DESC, doc_id
+    LIMIT 20
+    """,
+)
+def q_rerank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents")
+    rr = docs.withColumn("rr", hash_rerank_score(F.lit("what is spark"), F.col("text")))
+    return (
+        rr.orderBy(F.desc("rr"), F.asc("doc_id"))
+        .limit(20)
+        .select(
+            "doc_id",
+            round4("rr").alias("rerank_score"),
+            round4(sigmoid("rr")).alias("probability"),
+            relevance_label("rr").alias("relevance"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Full MCP query path (SURVEY.md §3.3): KNN k=50 over-fetch → rerank →
+# min_score → inclusive date range with null pass-through → limit 10 →
+# projection with 4-dp score (`mcp_server.py:79-215`).
+# The chunks table is synthesized deterministically from documents ⋈
+# embeddings (fixture docs carry no date/category; both engines derive the
+# same ones from doc_id).
+# ---------------------------------------------------------------------------
+@register(
+    "search_pipeline",
+    oracle=f"""
+    WITH chunks AS (
+      SELECT e.vec_id AS chunk_id, e.embedding, d.text,
+             'Doc ' || d.doc_id AS title,
+             CASE WHEN d.doc_id % 17 = 0 THEN NULL
+                  ELSE DATE '2024-01-01' + (d.doc_id % 365)::INT END AS date,
+             CASE d.doc_id % 3 WHEN 0 THEN 'idea' WHEN 1 THEN 'quote'
+                  ELSE 'question' END AS category,
+             'https://example.com/' || d.source || '/' || d.doc_id AS url
+      FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
+    ),
+    q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
+    cand AS (
+      SELECT c.*, list_dot_product(c.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS knn_score
+      FROM chunks c CROSS JOIN q
+      ORDER BY knn_score DESC, chunk_id LIMIT 50
+    ),
+    rr AS (SELECT *, {_RERANK_SQL} AS rerank_score FROM cand)
+    SELECT chunk_id, title, date, category, url, text, floor((rerank_score)*10000 + 0.5)/10000.0 AS score
+    FROM rr
+    WHERE rerank_score >= 0.0
+      AND (date IS NULL OR (date >= DATE '2024-02-01' AND date <= DATE '2024-11-30'))
+    ORDER BY rerank_score DESC, chunk_id
+    LIMIT 10
+    """,
+)
+def q_search_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .plans.search import search
+
+    emb = _t(spark, sf_dir, "embeddings")
+    docs = _t(spark, sf_dir, "documents")
+    chunks = (
+        emb.join(docs, emb.vec_id == docs.doc_id)
+        .select(
+            F.col("vec_id").alias("chunk_id"),
+            "embedding",
+            "text",
+            F.concat(F.lit("Doc "), F.col("doc_id")).alias("title"),
+            F.when(F.col("doc_id") % 17 == 0, F.lit(None).cast("date"))
+            .otherwise(
+                F.date_add(F.lit("2024-01-01").cast("date"), (F.col("doc_id") % 365).cast("int"))
+            )
+            .alias("date"),
+            F.element_at(
+                F.array(F.lit("idea"), F.lit("quote"), F.lit("question")),
+                (F.col("doc_id") % 3 + 1).cast("int"),
+            ).alias("category"),
+            F.concat_ws(
+                "/", F.lit("https://example.com"), F.col("source"), F.col("doc_id")
+            ).alias("url"),
+        )
+    )
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    return search(
+        chunks,
+        qvec,
+        "what is spark",
+        k=50,
+        min_score=0.0,
+        from_date="2024-02-01",
+        to_date="2024-11-30",
+        limit=10,
+    )
+
 
 _BM25_QUERY = "spark join stream"
 _K1 = 1.2
@@ -84,7 +278,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: postings are filtered to the query terms before the tf/df
     shuffles (exchange is O(matching docs)); the final top-k is a window
     row_number over the scored set — bounded output, tie-broken by id."""
-    docs = __load(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     out = bm25_topk(docs, _BM25_QUERY, k=20, k1=_K1, b=_B)
     return out.select("doc_id", round4("raw_score").alias("score"), "rank")
 
@@ -127,8 +321,8 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  Ranks are −1-sentinel NULL-free ints."""
     from pyspark.sql import Window
 
-    docs = __load(spark, sf_dir, "documents")
-    emb = __load(spark, sf_dir, "embeddings")
+    docs = _t(spark, sf_dir, "documents")
+    emb = _t(spark, sf_dir, "embeddings")
 
     lex = bm25_topk(docs, _BM25_QUERY, k=50, k1=_K1, b=_B).select("doc_id", "rank")
 

@@ -1,8 +1,7 @@
-"""Registry entries: statistical inference and experimentation (robust centers, A/B monitors and tests, survival, calibration, k-anonymity).
+"""Registry entries: statistical inference and experimentation (robust centers, A/B monitors and tests, Mann–Kendall trend, survival, calibration, k-anonymity).
 
-Moved VERBATIM from `registry_round6` in the round-6 module reorg
-(VERDICT r5 #6): query names and oracle texts are the stable contract and
-are byte-identical to the pre-move blocks; only the module changed.
+Query names and oracle texts are the stable contract; module moves keep
+them byte-identical.
 """
 
 from __future__ import annotations
@@ -10,13 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import register
-from .registry_round5 import _fdiv
-from .sources.tables import load_table as __load
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return __load(spark, sf_dir, name)
+from .catalog import register
+from .sources.tables import load_table as _t
 
 
 # ---------------------------------------------------------------------------
@@ -2513,7 +2507,7 @@ def q_wilson_lcb_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs on the cell table (thousands of sources at 100 TB, still
     one task).
     """
-    docs = __load(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents")
     cells = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
@@ -2584,8 +2578,8 @@ def q_eb_shrunk_segment_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the customer dimension broadcasts (no shuffle of orders); one
     partial-agg'd scan to 5 cells; everything downstream constant-size.
     """
-    orders = __load(spark, sf_dir, "orders")
-    cust = __load(spark, sf_dir, "customer").select(
+    orders = _t(spark, sf_dir, "orders")
+    cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
     cells = (
@@ -2643,4 +2637,127 @@ def q_eb_shrunk_segment_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shrink_weight"),
         )
         .orderBy("segment")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Mann–Kendall monotone-trend test on daily purchase revenue.
+# ---------------------------------------------------------------------------
+# Shared float expression text (identical in both engines, computed from the
+# exact integers n [days], s [MK statistic], tsum [Σ t(t-1)(2t+5) over tie
+# groups]): tie-corrected variance, continuity-corrected z, and tau-a.
+_MK_VAR = (
+    "((CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)"
+    " * (2.0 * CAST(n AS DOUBLE) + 5.0) - CAST(tsum AS DOUBLE)) / 18.0)"
+)
+_MK_Z = (
+    f"(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt({_MK_VAR})"
+    f" WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt({_MK_VAR})"
+    f" ELSE 0.0 END)"
+)
+_MK_TAU = (
+    "(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0))"
+)
+_MK_TREND = (
+    f"(CASE WHEN {_MK_Z} > 1.959964 THEN 'increasing'"
+    f" WHEN {_MK_Z} < -1.959964 THEN 'decreasing'"
+    f" ELSE 'no_trend' END)"
+)
+
+
+@register(
+    "mann_kendall_daily",
+    oracle=f"""
+    WITH daily AS (
+      SELECT CAST(ts AS DATE) AS day,
+             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
+      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    sp AS (
+      SELECT sum(CASE WHEN b.cents > a.cents THEN 1
+                      WHEN b.cents < a.cents THEN -1 ELSE 0 END)::BIGINT AS s
+      FROM daily a JOIN daily b ON b.day > a.day),
+    ties AS (
+      SELECT coalesce(sum(t * (t - 1) * (2 * t + 5)), 0)::BIGINT AS tsum
+      FROM (SELECT count(*)::BIGINT AS t FROM daily GROUP BY cents)
+      WHERE t > 1),
+    nd AS (SELECT count(*)::BIGINT AS n FROM daily)
+    SELECT n AS n_days, s AS s_stat,
+           floor(({_MK_TAU})*10000 + 0.5)/10000.0 AS tau,
+           floor(({_MK_Z})*10000 + 0.5)/10000.0 AS z,
+           {_MK_TREND} AS trend
+    FROM sp CROSS JOIN ties CROSS JOIN nd
+    """,
+)
+def q_mann_kendall_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann–Kendall monotone-trend test on daily purchase revenue: S =
+    Σ_{{i<j}} sign(c_j − c_i), tie-corrected variance, continuity-corrected
+    z, and Kendall's tau-a — the nonparametric "is revenue drifting"
+    monitor beside `theil_sen_daily_trend` (which estimates the slope MK
+    only tests) and `runs_test_daily` (randomness, not monotonicity).
+
+    Exactness: S and the tie term Σt(t−1)(2t+5) are exact integers from
+    the cents-quantized day table; variance/z/tau are ONE shared DOUBLE
+    expression text over those integers (identical operand order ⇒
+    IEEE-identical in both engines), floor-quantized to 4 dp on emit.
+
+    Scale: the O(days²) sign join runs on the AGGREGATE day table (one
+    row per day — decades fit in ~10⁴ rows), not on events; everything
+    upstream is one partial-agg'd groupBy(day) over the purchase slice.
+    """
+    ev = _t(spark, sf_dir, "events")
+    daily = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy(F.col("ts").cast("date").alias("day"))
+        .agg(
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
+            .cast("long")
+            .alias("cents")
+        )
+        # the day table fans out to the sign-join's two sides, the tie
+        # fold and the day count — checkpoint it or each consumer
+        # replays the events scan (plan audit showed x4)
+        .localCheckpoint(eager=True)
+    )
+    a = daily.select(F.col("day").alias("da"), F.col("cents").alias("ca"))
+    b = daily.select(F.col("day").alias("db"), F.col("cents").alias("cb"))
+    sp = (
+        a.crossJoin(b)
+        .filter(F.col("db") > F.col("da"))
+        .agg(
+            F.sum(
+                F.when(F.col("cb") > F.col("ca"), 1)
+                .when(F.col("cb") < F.col("ca"), -1)
+                .otherwise(0)
+            )
+            .cast("long")
+            .alias("s")
+        )
+    )
+    ties = (
+        daily.groupBy("cents")
+        .agg(F.count(F.lit(1)).cast("long").alias("t"))
+        .filter(F.col("t") > 1)
+        .agg(
+            F.coalesce(
+                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)), F.lit(0)
+            )
+            .cast("long")
+            .alias("tsum")
+        )
+    )
+    nd = daily.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    return (
+        sp.crossJoin(F.broadcast(ties))
+        .crossJoin(F.broadcast(nd))
+        .select(
+            F.col("n").alias("n_days"),
+            F.col("s").alias("s_stat"),
+            F.expr(
+                f"CAST(floor(({_MK_TAU})*10000 + 0.5)/10000.0 AS DOUBLE)"
+            ).alias("tau"),
+            F.expr(
+                f"CAST(floor(({_MK_Z})*10000 + 0.5)/10000.0 AS DOUBLE)"
+            ).alias("z"),
+            F.expr(_MK_TREND).alias("trend"),
+        )
     )

@@ -16,9 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .catalog import artifact, register
 from .operators.suffix import adjacent_lcp, lcp_walk, suffix_ranks
 from .partitioning import global_order_stats, maybe_broadcast
-from .registry import artifact, register
 from .sources.tables import load_table as __load
 
 _SA_CAP = 128     # tokens considered per doc (fixture max is 99)

@@ -8,9 +8,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.text import BPE_TOKEN_PATTERN, PUNCT_PATTERN, STOPWORDS
+from .catalog import artifact, register
 from .functions.scalar import round4
-from .registry import artifact, register
+from .functions.text import BPE_TOKEN_PATTERN, PUNCT_PATTERN, STOPWORDS
 from .sources.tables import load_table as __load
 
 # ---------------------------------------------------------------------------
