@@ -343,6 +343,8 @@ def main() -> None:
         record["warm_is_first_collect"] = True
     if session_restarts:
         record["session_restarts"] = session_restarts
+    # the effective Spark conf (worker daemon included), as perfbench records it
+    record["spark_conf"] = dict(sorted(spark.sparkContext.getConf().getAll()))
     from vector_search_spark.session import LAST_ENV_EXTRA_CONF
 
     if LAST_ENV_EXTRA_CONF:

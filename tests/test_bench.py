@@ -46,6 +46,7 @@ def test_subset_run_records_named_queries_and_keeps_bench_out():
         assert {"analysis", "optimization", "planning"} <= set(phases)
         assert all(v >= 0 for v in phases.values())
     assert "errors" not in record
+    assert record["spark_conf"]["spark.python.daemon.module"] == "vector_search_spark.worker_daemon"
     assert compact["n_queries"] == 2 and compact["n_errors"] == 0
     assert (out.read_bytes() if out.exists() else None) == before
 

@@ -105,7 +105,10 @@ def _topk_scorer(query_ids: list, query_vecs: list, k: int, out_schema):
     merges them into the running top-k under the exact order.
 
     Every function the workers run is nested in here, so cloudpickle ships
-    it by value: a worker needs numpy and pyarrow, not this package."""
+    it by value: the scoring needs numpy and pyarrow, not this package.
+    The workers still import the package itself, because a session from
+    ``session.get_spark`` runs them under ``worker_daemon`` (and puts the
+    package on their path)."""
     nq = len(query_vecs)
     block_rows = max(1, _BLOCK_BYTES // (8 * max(1, nq)))
 
