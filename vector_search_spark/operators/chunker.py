@@ -1,10 +1,22 @@
 """Newsletter chunker (reference T7, `pipeline/utils.py:93-187`) as native
-Catalyst expressions: split → posexplode → per-category regexp transforms.
+Catalyst expressions in one pass: split sections → classify → one
+``posexplode`` of each section's parts → one projection per field.
 
-No Python in the data path — the whole operator is
-``split``/``posexplode``/``regexp_*``/higher-order filters, so it scales as
-a pure projection+explode over a 100 TB document scan (no shuffle at all;
-the explode fan-out is local to each task).
+No Python in the data path, no shuffle and no union.  Every category goes
+through the same explode: idea and quote sections explode their
+roman-numeral split, a question section explodes ``array('', question)``,
+and ``part_pos >= 1`` drops the header remnant (or the placeholder).  The
+per-category transforms are ``CASE category`` branches of one projection.
+So the plan reads each file once and has two ``Generate`` nodes, and an
+embed UDF above it runs one Python task per file split.  A union of three
+per-category branches, each starting from the sections, would have
+re-read every file three times: Spark does not share a subtree across
+union branches.
+
+The expressions are SQL text (``selectExpr`` and ``where``), regexes as
+raw ``r'…'`` literals: each projection is then a few gateway calls, where
+a chain of ``F.*`` calls is one or more per function, so the chunk chain
+builds in tens of round trips instead of thousands.
 
 Bug-for-bug semantics preserved (SURVEY.md §2.2 T7):
 - section headers matched by **case-sensitive substring containment**
@@ -31,48 +43,31 @@ Bug-for-bug semantics preserved (SURVEY.md §2.2 T7):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 IDEA_PREFIX = "Idea from James Clear: "
 
-
-def py_strip(c: Column) -> Column:
-    r"""Python ``str.strip()`` (all whitespace) — Spark's ``trim`` only
-    removes spaces.  (?U) because Python's \s is Unicode (matches \xa0)
-    while Java's default is ASCII-only; the corpus contains nbsp."""
-    return F.regexp_replace(F.regexp_replace(c, r"(?U)^\s+", ""), r"(?U)\s+$", "")
+_LINKED_SOURCE = r"r'(?U)\*Source:\*\s*\[([^\]]+)\]\(([^\)]+)\)'"
+_TEXT_SOURCE = r"r'(?mU)\*Source:\*\s*(.+)$'"
 
 
-def trim_empty_lines(c: Column) -> Column:
+def strip_sql(e: str) -> str:
+    r"""SQL text of Python ``str.strip()`` (all whitespace) of SQL
+    expression ``e`` — Spark's ``trim`` only removes spaces.  (?U) because
+    Python's \s is Unicode (matches \xa0) while Java's default is
+    ASCII-only; the corpus contains nbsp."""
+    return rf"regexp_replace(regexp_replace({e}, r'(?U)^\s+', ''), r'(?U)\s+$', '')"
+
+
+def _trim_empty_lines(e: str) -> str:
     """Reference `utils.py:88-90`: drop blank lines (keeping original line
     content), join with \\n, strip both ends."""
-    lines = F.split(py_strip(c), "\n")
-    kept = F.filter(lines, lambda l: py_strip(l) != "")
-    return py_strip(F.array_join(kept, "\n"))
+    kept = rf"filter(split({strip_sql(e)}, r'\n'), l -> {strip_sql('l')} != '')"
+    return strip_sql(f"array_join({kept}, chr(10))")
 
 
-def clean_links(c: Column) -> Column:
-    """Reference `utils.py:83-85`: [text](url) → text."""
-    return F.regexp_replace(c, r"\[([^\]]+)\]\([^\)]+\)", "$1")
-
-
-def _sections(df: DataFrame, content_col: str) -> DataFrame:
-    """Remove share-lines, split on ``^##\\s+`` headers, classify sections."""
-    clean = F.regexp_replace(F.col(content_col), r"(?m)^\[Share this on.*\n?", "")
-    df = df.select(
-        *[c for c in df.columns if c != content_col],
-        F.posexplode(F.split(clean, r"(?mU)^##\s+")).alias("sec_pos", "sec_raw"),
-    )
-    sec = F.replace(py_strip(F.col("sec_raw")), F.lit("---"), F.lit(""))
-    category = (
-        F.when(sec.contains("3 IDEAS FROM ME"), F.lit("idea"))
-        .when(sec.contains("2 QUOTES FROM OTHERS"), F.lit("quote"))
-        .when(sec.contains("1 QUESTION FOR YOU"), F.lit("question"))
-    )
-    return df.withColumn("section", sec).withColumn("category", category).filter(
-        F.col("category").isNotNull()
-    ).drop("sec_raw")
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def parse_newsletter_chunks(
@@ -88,79 +83,56 @@ def parse_newsletter_chunks(
     index, date, source, source_name) — the reference chunk schema
     (SURVEY.md §1.2) plus the deterministic position keys.
     """
-    keep = [c for c in df.columns if c not in (content_col, date_col)]
-    secs = _sections(df, content_col)
-
-    # --- ideas + quotes: roman-numeral split, first element skipped -------
-    iq = secs.filter(F.col("category").isin("idea", "quote")).select(
+    keep = [_quoted(c) for c in df.columns if c not in (content_col, date_col)]
+    header_cut = strip_sql("replace(section, '1 QUESTION FOR YOU', '')")
+    question = strip_sql(f"split({header_cut}, 'Until next week')[0]")
+    link_title = f"regexp_extract(part, {_LINKED_SOURCE}, 1)"
+    text_title = f"regexp_extract(part, {_TEXT_SOURCE}, 1)"
+    body = strip_sql(
+        rf"""replace(replace(regexp_replace(regexp_replace(part,
+            r'(?s)\n\*Source:\*.*', ''), r'\[([^\]]+)\]\([^\)]+\)', '$1'), '**', ''), '  ', ' ')"""
+    )
+    quote = "CASE WHEN source_name != '' THEN concat('Quote from ', source_name, ': ', body) ELSE body END"
+    parts = (
+        # share-lines removed, sections split on `^##\s+` headers and stripped
+        df.selectExpr(
+            "*",
+            rf"""posexplode(transform(
+                split(regexp_replace({_quoted(content_col)}, r'(?m)^\[Share this on.*\n?', ''), r'(?mU)^##\s+'),
+                s -> replace({strip_sql('s')}, '---', ''))) AS (sec_pos, section)""",
+        )
+        .selectExpr(
+            "*",
+            """CASE WHEN contains(section, '3 IDEAS FROM ME') THEN 'idea'
+                WHEN contains(section, '2 QUOTES FROM OTHERS') THEN 'quote'
+                WHEN contains(section, '1 QUESTION FOR YOU') THEN 'question' END AS category""",
+        )
+        .where("category IS NOT NULL")
+        .selectExpr(
+            "*",
+            rf"""posexplode(CASE category WHEN 'question' THEN array('', {question})
+                ELSE split(section, r'[IVX]+\.') END) AS (part_pos, part)""",
+        )
+        .where("part_pos >= 1")
+    )
+    quotes = parts.selectExpr(
+        "*",
+        f"""CASE WHEN category = 'quote' THEN CASE
+            WHEN {link_title} != '' THEN replace({link_title}, '*', '')
+            WHEN {text_title} != '' THEN replace({text_title}, '*', '') END END AS source_name""",
+        f"CASE WHEN category = 'quote' AND {link_title} != '' THEN regexp_extract(part, {_LINKED_SOURCE}, 2) END AS source",
+        f"CASE WHEN category = 'quote' THEN {body} END AS body",
+    )
+    return quotes.selectExpr(
         *keep,
-        date_col,
         "sec_pos",
+        "part_pos",
+        f"""CASE category WHEN 'idea' THEN concat('{IDEA_PREFIX}', {_trim_empty_lines('part')})
+            WHEN 'quote' THEN {_trim_empty_lines(quote)}
+            ELSE {_trim_empty_lines('part')} END AS text""",
         "category",
-        F.posexplode(F.split(F.col("section"), r"[IVX]+\.")).alias("part_pos", "part"),
-    ).filter(F.col("part_pos") >= 1)
-
-    ideas = iq.filter(F.col("category") == "idea").select(
-        *keep,
-        "sec_pos",
-        F.col("part_pos"),
-        F.concat(F.lit(IDEA_PREFIX), trim_empty_lines(F.col("part"))).alias("text"),
-        F.col("category"),
-        F.col("part_pos").cast("int").alias("index"),
-        F.col(date_col).alias("date"),
-        F.lit(None).cast("string").alias("source"),
-        F.lit(None).cast("string").alias("source_name"),
+        "part_pos AS index",
+        f"{_quoted(date_col)} AS date",
+        "source",
+        "source_name",
     )
-
-    quotes_raw = iq.filter(F.col("category") == "quote")
-    link_title = F.regexp_extract(
-        F.col("part"), r"(?U)\*Source:\*\s*\[([^\]]+)\]\(([^\)]+)\)", 1
-    )
-    link_url = F.regexp_extract(F.col("part"), r"(?U)\*Source:\*\s*\[([^\]]+)\]\(([^\)]+)\)", 2)
-    text_title = F.regexp_extract(F.col("part"), r"(?mU)\*Source:\*\s*(.+)$", 1)
-    source_name = (
-        F.when(link_title != "", F.replace(link_title, F.lit("*"), F.lit("")))
-        .when(text_title != "", F.replace(text_title, F.lit("*"), F.lit("")))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    source_url = F.when(link_title != "", link_url).otherwise(F.lit(None).cast("string"))
-    body = F.regexp_replace(F.col("part"), r"(?s)\n\*Source:\*.*", "")
-    body = clean_links(body)
-    body = F.replace(body, F.lit("**"), F.lit(""))
-    body = py_strip(F.replace(body, F.lit("  "), F.lit(" ")))
-    quote_text = trim_empty_lines(
-        F.when(
-            source_name.isNotNull() & (source_name != ""),
-            F.concat(F.lit("Quote from "), source_name, F.lit(": "), body),
-        ).otherwise(body)
-    )
-    quotes = quotes_raw.select(
-        *keep,
-        "sec_pos",
-        F.col("part_pos"),
-        quote_text.alias("text"),
-        F.col("category"),
-        F.col("part_pos").cast("int").alias("index"),
-        F.col(date_col).alias("date"),
-        source_url.alias("source"),
-        source_name.alias("source_name"),
-    )
-
-    # --- question: single chunk, cut at the sign-off ----------------------
-    qsec = secs.filter(F.col("category") == "question")
-    qtext = F.replace(F.col("section"), F.lit("1 QUESTION FOR YOU"), F.lit(""))
-    qtext = py_strip(qtext)
-    qtext = py_strip(F.split(qtext, "Until next week").getItem(0))
-    questions = qsec.select(
-        *keep,
-        "sec_pos",
-        F.lit(1).alias("part_pos"),
-        trim_empty_lines(qtext).alias("text"),
-        F.col("category"),
-        F.lit(1).cast("int").alias("index"),
-        F.col(date_col).alias("date"),
-        F.lit(None).cast("string").alias("source"),
-        F.lit(None).cast("string").alias("source_name"),
-    )
-
-    return ideas.unionByName(quotes).unionByName(questions)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..encoders import HashEncoder
-from ..operators.chunker import parse_newsletter_chunks, py_strip
+from ..operators.chunker import parse_newsletter_chunks, strip_sql
 from ..sources.files import read_markdown_dir
 
 
@@ -23,22 +23,14 @@ def enrich_title_url(docs: DataFrame, content_col: str = "content") -> DataFrame
     """Reference T8 (`embeddings_assets.py:53-62`): title from a leading
     '# ' line (fallback 'Unknown'); url rebuilt as
     https://jamesclear.com/3-2-1/{month-name}-{day}-{year} with a
-    NON-zero-padded day (`%-d`)."""
-    first_line = F.substring_index(F.col(content_col), "\n", 1)
-    title = F.when(
-        first_line.startswith("# "),
-        py_strip(F.replace(first_line, F.lit("# "), F.lit(""))),
-    ).otherwise(F.lit("Unknown"))
-    d = F.to_date(F.col("date"))
-    url = F.concat(
-        F.lit("https://jamesclear.com/3-2-1/"),
-        F.lower(F.date_format(d, "MMMM")),
-        F.lit("-"),
-        F.dayofmonth(d).cast("string"),
-        F.lit("-"),
-        F.year(d).cast("string"),
-    )
-    return docs.withColumn("title", title).withColumn("url", url)
+    NON-zero-padded day (`%-d`).  SQL text, like the chunker: one gateway
+    call per column instead of one per function."""
+    first_line = f"substring_index(`{content_col}`, chr(10), 1)"
+    title = f"""CASE WHEN startswith({first_line}, '# ')
+        THEN {strip_sql(f"replace({first_line}, '# ', '')")} ELSE 'Unknown' END"""
+    url = """concat('https://jamesclear.com/3-2-1/', lower(date_format(to_date(date), 'MMMM')), '-',
+        CAST(dayofmonth(to_date(date)) AS STRING), '-', CAST(year(to_date(date)) AS STRING))"""
+    return docs.selectExpr("*", f"{title} AS title", f"{url} AS url")
 
 
 def build_chunks(docs: DataFrame) -> DataFrame:
@@ -49,11 +41,7 @@ def build_chunks(docs: DataFrame) -> DataFrame:
     chunks = parse_newsletter_chunks(enriched, content_col="content", date_col="date")
     return chunks.withColumn(
         "chunk_id",
-        F.substring(
-            F.md5(F.concat_ws("|", "date", "category", F.col("index").cast("string"), "text")),
-            1,
-            16,
-        ),
+        F.expr("substring(md5(concat_ws('|', date, category, CAST(index AS STRING), text)), 1, 16)"),
     )
 
 
@@ -85,31 +73,43 @@ def write_index(index: DataFrame, path: str, partition_by: str = "year") -> None
 
 
 def update_index(
-    spark: SparkSession, index_path: str, new_docs: DataFrame
+    spark: SparkSession,
+    index_path: str,
+    new_docs: DataFrame,
+    encoder: HashEncoder | None = None,
 ) -> int:
     """Incremental index maintenance (reference S2 'skip existing'):
-    chunk+embed ``new_docs`` and append only chunks whose content-hash id
+    chunk+embed ``new_docs`` with ``encoder`` (``build_index``'s default
+    when None; pass the index's own encoder, or the appended rows get a
+    different dimension) and append only chunks whose content-hash id
     isn't already in the index.  Returns the number of appended rows."""
     import os
 
-    new_index = build_index(new_docs).withColumn("year", F.year(F.to_date("date")))
+    new_index = build_index(new_docs, encoder).withColumn("year", F.year(F.to_date("date")))
     if os.path.exists(index_path):
         existing = spark.read.parquet(index_path).select("chunk_id")
         new_index = new_index.join(existing, "chunk_id", "left_anti")
     new_index = new_index.cache()
-    n = new_index.count()
-    if n:
-        new_index.write.mode("append").partitionBy("year").parquet(index_path)
+    try:
+        n = new_index.count()
+        if n:
+            new_index.write.mode("append").partitionBy("year").parquet(index_path)
+    finally:
+        new_index.unpersist()
     return n
 
 
 def ingest_markdown_dir(
-    spark: SparkSession, md_dir: str, out_path: str | None = None
+    spark: SparkSession,
+    md_dir: str,
+    out_path: str | None = None,
+    encoder: HashEncoder | None = None,
 ) -> DataFrame:
     """End-to-end: markdown directory → chunk+vector index DataFrame
-    (optionally written as the partitioned index table)."""
+    embedded with ``encoder`` (``build_index``'s default when None),
+    optionally written as the partitioned index table."""
     docs = read_markdown_dir(spark, md_dir)
-    index = build_index(docs)
+    index = build_index(docs, encoder)
     if out_path:
         write_index(index, out_path)
     return index
