@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_spark.encoders import HashEncoder
+from vector_search_spark.operators.chunker import parse_newsletter_chunks
 from vector_search_spark.plans.ingest import build_chunks, build_index, update_index
 from vector_search_spark.sources.files import read_markdown_dir
 
@@ -59,6 +60,26 @@ def test_build_chunks_matches_golden(spark):
     got = sorted(map(key, map(list, chunks.collect())))
     assert got == sorted(map(key, GOLDEN["rows"]))
     assert len(got) == 422
+
+
+def test_passthrough_columns_keep_their_names(spark):
+    """Input columns named like the chunker's steps (``section``, ``part``,
+    ``body``) pass through, and an existing ``title`` is replaced."""
+    extra = ["section", "part", "body"]
+    docs = _docs(spark).selectExpr("*", *(f"'{c}' AS {c}" for c in extra), "'old' AS title")
+    chunks = build_chunks(docs)
+    assert sorted(chunks.columns) == sorted(GOLDEN["columns"] + extra)
+    got = chunks.select(*GOLDEN["columns"], *extra).collect()
+    assert {tuple(r[c] for c in extra) for r in got} == {tuple(extra)}
+    key = json.dumps
+    assert sorted(key(list(r)[: len(GOLDEN["columns"])]) for r in got) == sorted(map(key, GOLDEN["rows"]))
+
+
+@pytest.mark.parametrize("name", ["source", "category", "_part"])
+def test_reserved_input_column_names_raise(spark, name):
+    docs = spark.createDataFrame([("2024-01-01", "x", "y")], f"date string, content string, `{name}` string")
+    with pytest.raises(ValueError, match=name):
+        parse_newsletter_chunks(docs)
 
 
 def test_ingest_plan_reads_each_file_once(spark, issue_dir):

@@ -50,6 +50,10 @@ IDEA_PREFIX = "Idea from James Clear: "
 _LINKED_SOURCE = r"r'(?U)\*Source:\*\s*\[([^\]]+)\]\(([^\)]+)\)'"
 _TEXT_SOURCE = r"r'(?mU)\*Source:\*\s*(.+)$'"
 
+_OUTPUT = ("sec_pos", "part_pos", "text", "category", "index", "date", "source", "source_name")
+# Intermediate columns sit next to the input's in each projection.
+_INTERNAL = ("_sec_pos", "_section", "_category", "_part_pos", "_part", "_source_name", "_source", "_body")
+
 
 def strip_sql(e: str) -> str:
     r"""SQL text of Python ``str.strip()`` (all whitespace) of SQL
@@ -78,61 +82,67 @@ def parse_newsletter_chunks(
     """Markdown documents → typed chunk rows.
 
     Input: one row per document with ``content_col`` (markdown text),
-    ``date_col`` (issue date string) and any passthrough columns.
+    ``date_col`` (issue date string) and any passthrough columns not named
+    like an output column or an intermediate one (``_INTERNAL``); such a
+    name raises ``ValueError``.
     Output: passthrough columns + (sec_pos, part_pos, text, category,
     index, date, source, source_name) — the reference chunk schema
     (SURVEY.md §1.2) plus the deterministic position keys.
     """
-    keep = [_quoted(c) for c in df.columns if c not in (content_col, date_col)]
-    header_cut = strip_sql("replace(section, '1 QUESTION FOR YOU', '')")
+    cols = df.columns
+    keep = [c for c in cols if c not in (content_col, date_col)]
+    clash = [c for c in cols if c in _INTERNAL] + [c for c in keep if c in _OUTPUT]
+    if clash:
+        raise ValueError(f"parse_newsletter_chunks: reserved column names in the input: {clash}")
+    header_cut = strip_sql("replace(_section, '1 QUESTION FOR YOU', '')")
     question = strip_sql(f"split({header_cut}, 'Until next week')[0]")
-    link_title = f"regexp_extract(part, {_LINKED_SOURCE}, 1)"
-    text_title = f"regexp_extract(part, {_TEXT_SOURCE}, 1)"
+    link_title = f"regexp_extract(_part, {_LINKED_SOURCE}, 1)"
+    text_title = f"regexp_extract(_part, {_TEXT_SOURCE}, 1)"
     body = strip_sql(
-        rf"""replace(replace(regexp_replace(regexp_replace(part,
+        rf"""replace(replace(regexp_replace(regexp_replace(_part,
             r'(?s)\n\*Source:\*.*', ''), r'\[([^\]]+)\]\([^\)]+\)', '$1'), '**', ''), '  ', ' ')"""
     )
-    quote = "CASE WHEN source_name != '' THEN concat('Quote from ', source_name, ': ', body) ELSE body END"
+    quote = "CASE WHEN _source_name != '' THEN concat('Quote from ', _source_name, ': ', _body) ELSE _body END"
     parts = (
         # share-lines removed, sections split on `^##\s+` headers and stripped
         df.selectExpr(
             "*",
             rf"""posexplode(transform(
                 split(regexp_replace({_quoted(content_col)}, r'(?m)^\[Share this on.*\n?', ''), r'(?mU)^##\s+'),
-                s -> replace({strip_sql('s')}, '---', ''))) AS (sec_pos, section)""",
+                s -> replace({strip_sql('s')}, '---', ''))) AS (_sec_pos, _section)""",
         )
         .selectExpr(
             "*",
-            """CASE WHEN contains(section, '3 IDEAS FROM ME') THEN 'idea'
-                WHEN contains(section, '2 QUOTES FROM OTHERS') THEN 'quote'
-                WHEN contains(section, '1 QUESTION FOR YOU') THEN 'question' END AS category""",
+            """CASE WHEN contains(_section, '3 IDEAS FROM ME') THEN 'idea'
+                WHEN contains(_section, '2 QUOTES FROM OTHERS') THEN 'quote'
+                WHEN contains(_section, '1 QUESTION FOR YOU') THEN 'question' END AS _category""",
         )
-        .where("category IS NOT NULL")
+        .where("_category IS NOT NULL")
         .selectExpr(
             "*",
-            rf"""posexplode(CASE category WHEN 'question' THEN array('', {question})
-                ELSE split(section, r'[IVX]+\.') END) AS (part_pos, part)""",
+            rf"""posexplode(CASE _category WHEN 'question' THEN array('', {question})
+                ELSE split(_section, r'[IVX]+\.') END) AS (_part_pos, _part)""",
         )
-        .where("part_pos >= 1")
+        .where("_part_pos >= 1")
     )
     quotes = parts.selectExpr(
         "*",
-        f"""CASE WHEN category = 'quote' THEN CASE
+        f"""CASE WHEN _category = 'quote' THEN CASE
             WHEN {link_title} != '' THEN replace({link_title}, '*', '')
-            WHEN {text_title} != '' THEN replace({text_title}, '*', '') END END AS source_name""",
-        f"CASE WHEN category = 'quote' AND {link_title} != '' THEN regexp_extract(part, {_LINKED_SOURCE}, 2) END AS source",
-        f"CASE WHEN category = 'quote' THEN {body} END AS body",
+            WHEN {text_title} != '' THEN replace({text_title}, '*', '') END END AS _source_name""",
+        f"CASE WHEN _category = 'quote' AND {link_title} != '' THEN regexp_extract(_part, {_LINKED_SOURCE}, 2) END AS _source",
+        f"CASE WHEN _category = 'quote' THEN {body} END AS _body",
     )
     return quotes.selectExpr(
-        *keep,
-        "sec_pos",
-        "part_pos",
-        f"""CASE category WHEN 'idea' THEN concat('{IDEA_PREFIX}', {_trim_empty_lines('part')})
+        *[_quoted(c) for c in keep],
+        "_sec_pos AS sec_pos",
+        "_part_pos AS part_pos",
+        f"""CASE _category WHEN 'idea' THEN concat('{IDEA_PREFIX}', {_trim_empty_lines('_part')})
             WHEN 'quote' THEN {_trim_empty_lines(quote)}
-            ELSE {_trim_empty_lines('part')} END AS text""",
-        "category",
-        "part_pos AS index",
+            ELSE {_trim_empty_lines('_part')} END AS text""",
+        "_category AS category",
+        "_part_pos AS index",
         f"{_quoted(date_col)} AS date",
-        "source",
-        "source_name",
+        "_source AS source",
+        "_source_name AS source_name",
     )

@@ -23,14 +23,15 @@ def enrich_title_url(docs: DataFrame, content_col: str = "content") -> DataFrame
     """Reference T8 (`embeddings_assets.py:53-62`): title from a leading
     '# ' line (fallback 'Unknown'); url rebuilt as
     https://jamesclear.com/3-2-1/{month-name}-{day}-{year} with a
-    NON-zero-padded day (`%-d`).  SQL text, like the chunker: one gateway
-    call per column instead of one per function."""
+    NON-zero-padded day (`%-d`); an existing title or url column is
+    replaced.  SQL text, like the chunker: a few gateway calls per column
+    instead of one per function."""
     first_line = f"substring_index(`{content_col}`, chr(10), 1)"
     title = f"""CASE WHEN startswith({first_line}, '# ')
         THEN {strip_sql(f"replace({first_line}, '# ', '')")} ELSE 'Unknown' END"""
     url = """concat('https://jamesclear.com/3-2-1/', lower(date_format(to_date(date), 'MMMM')), '-',
         CAST(dayofmonth(to_date(date)) AS STRING), '-', CAST(year(to_date(date)) AS STRING))"""
-    return docs.selectExpr("*", f"{title} AS title", f"{url} AS url")
+    return docs.withColumns({"title": F.expr(title), "url": F.expr(url)})
 
 
 def build_chunks(docs: DataFrame) -> DataFrame:
@@ -100,16 +101,12 @@ def update_index(
 
 
 def ingest_markdown_dir(
-    spark: SparkSession,
-    md_dir: str,
-    out_path: str | None = None,
-    encoder: HashEncoder | None = None,
+    spark: SparkSession, md_dir: str, out_path: str | None = None
 ) -> DataFrame:
     """End-to-end: markdown directory → chunk+vector index DataFrame
-    embedded with ``encoder`` (``build_index``'s default when None),
-    optionally written as the partitioned index table."""
+    (optionally written as the partitioned index table)."""
     docs = read_markdown_dir(spark, md_dir)
-    index = build_index(docs, encoder)
+    index = build_index(docs)
     if out_path:
         write_index(index, out_path)
     return index
