@@ -4,8 +4,10 @@ order-insensitive value comparison)."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -54,6 +56,8 @@ RECENTLY_TOUCHED = frozenset(
         "dedup_clusters", "dup_sampling_weights",
         # the similarity_join registry queries (Arrow-batched scorer)
         "knn_multi_query", "ann_srp_recall_eval",
+        # the PQ family (one copy of each search stage, shared)
+        "ann_pq_topk", "ann_ivfpq_topk", "ann_ivfpq_residual_topk",
     }
 )
 
@@ -89,6 +93,25 @@ def stream_sf(default: str) -> str:
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+# The chunker golden (see tests/test_ingest_generated.py); its 20 generated
+# 3-2-1 issues are the committed markdown corpus of the ingest-driven tests.
+CHUNKER_GOLDEN = json.loads(
+    (Path(__file__).parent / "fixtures" / "chunker_golden.json").read_text("utf-8")
+)
+GOLDEN_ISSUES = [
+    doc for doc in CHUNKER_GOLDEN["inputs"] if re.fullmatch(r"\d{4}-\d{2}-\d{2}\.md", doc[0])
+]
+
+
+@pytest.fixture
+def issue_dir(tmp_path):
+    """The chunker golden's generated issues as ``YYYY-MM-DD.md`` files."""
+    md = tmp_path / "md"
+    md.mkdir()
+    for name, _, content in GOLDEN_ISSUES:
+        (md / name).write_text(content, encoding="utf-8")
+    return str(md)
 
 
 @pytest.fixture(scope="session")

@@ -51,8 +51,8 @@ def test_fetch_throttled_with_injected_fetcher(spark):
     assert rows == {"u1": (6, True), "u2": (6, True), "bad": (0, False)}
 
 
-def test_api_response_shape(spark):
-    index = ingest_markdown_dir(spark, "/root/reference/data/raw/md")
+def test_api_response_shape(spark, issue_dir):
+    index = ingest_markdown_dir(spark, issue_dir)
     qvec = HashEncoder(dim=64).encode_one("identity habits")
     out = search_newsletter(index, qvec, "identity habits", min_score=-99, limit=3)
     assert set(out) == {"query", "filters", "total_results", "results"}
@@ -64,8 +64,8 @@ def test_api_response_shape(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_api_empty_and_invalid(spark):
-    index = ingest_markdown_dir(spark, "/root/reference/data/raw/md")
+def test_api_empty_and_invalid(spark, issue_dir):
+    index = ingest_markdown_dir(spark, issue_dir)
     qvec = HashEncoder(dim=64).encode_one("q")
     empty = search_newsletter(index, qvec, "q", min_score=999.0)
     assert empty["total_results"] == 0 and empty["results"] == []

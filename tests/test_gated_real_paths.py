@@ -48,11 +48,12 @@ def test_bs4_path_cross_checks_stdlib_converter():  # pragma: no cover - lib abs
     reference md files in test_html_md_golden.py)."""
     import pathlib
 
-    from vector_search_spark.operators.html import _convert_bs4, _convert_stdlib
+    from vector_search_spark.operators.html import _convert_bs4
+    from vector_search_spark.operators.md_convert import html_page_to_markdown
 
     html_dir = pathlib.Path("/root/reference/data/raw/html")
     if not html_dir.is_dir():
         pytest.skip("reference corpus absent")
     for f in sorted(html_dir.glob("*.html")):
         html = f.read_text(encoding="utf-8")
-        assert _convert_bs4(html) == _convert_stdlib(html), f.name
+        assert _convert_bs4(html) == html_page_to_markdown(html), f.name

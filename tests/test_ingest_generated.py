@@ -18,7 +18,6 @@ import gc
 import json
 import re
 from collections import Counter
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,22 +27,12 @@ from vector_search_spark.operators.chunker import parse_newsletter_chunks
 from vector_search_spark.plans.ingest import build_chunks, build_index, update_index
 from vector_search_spark.sources.files import read_markdown_dir
 
-GOLDEN = json.loads((Path(__file__).parent / "fixtures" / "chunker_golden.json").read_text("utf-8"))
-ISSUES = [doc for doc in GOLDEN["inputs"] if re.fullmatch(r"\d{4}-\d{2}-\d{2}\.md", doc[0])]
+from conftest import CHUNKER_GOLDEN as GOLDEN
+from conftest import GOLDEN_ISSUES as ISSUES
 
 
 def _docs(spark):
     return spark.createDataFrame(GOLDEN["inputs"], "path string, date string, content string")
-
-
-@pytest.fixture
-def issue_dir(tmp_path):
-    """The golden's generated issues as ``YYYY-MM-DD.md`` files."""
-    md = tmp_path / "md"
-    md.mkdir()
-    for name, _, content in ISSUES:
-        (md / name).write_text(content, encoding="utf-8")
-    return str(md)
 
 
 def _plan_nodes(df) -> Counter:

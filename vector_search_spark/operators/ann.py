@@ -1,23 +1,29 @@
-"""Approximate nearest neighbor: IVF-bucketed similarity search — the
-100 TB scale path for Q1/Q2 (exact brute force stays the correctness
-baseline; SURVEY.md §2.4).
+"""Approximate nearest neighbor: the batch stand-ins for the reference's
+ANN index — the 100 TB scale path for Q1/Q2 (exact brute force stays the
+correctness baseline; SURVEY.md §2.4).  Five paths, all DataFrame ops:
 
-IVF (inverted file) layout, all DataFrame ops:
-1. **Centroids**: a deterministic hash-sample of the corpus (every
-   ``n/n_centroids``-th vector by id hash) — no iterative k-means, so the
-   index build is one pass and fully reproducible.
-2. **Assign**: every vector → nearest centroid (Arrow-batched numpy argmax
-   against the broadcast centroid matrix).  At 100 TB this is the
-   partitioning key for the index table: ``write.partitionBy(cell)`` makes
-   each query touch only nprobe directories (partition pruning).
-3. **Probe**: each query scores the centroids, keeps its top-``nprobe``
-   cells, joins the (cell, query) pairs against the assigned index —
-   scoring only |corpus| × nprobe / n_centroids rows instead of |corpus|.
-4. Exact re-scoring + per-query top-k within the probed cells (same
-   narrow-exchange window pattern as operators.knn).
+- **IVF** (``ivf_build`` + ``ivf_query``): every vector is assigned to its
+  nearest hash-sampled, Lloyd-refined centroid(s) — at 100 TB the
+  ``write.partitionBy(cell)`` key — and each query scores only its
+  top-``nprobe`` cells, ranked driver-side by ``_rank_probes`` (shared
+  with ``ivf_probe_sweep_topk``).  Recall < 1 by construction; tests pin
+  recall@10 ≥ 0.9 vs. the exact oracle at nprobe=4/16.
+- **SRP-LSH** (``srp_topk``): md5-derived hyperplane signatures, banded
+  bucket candidates, exact rescore.
+- **int8-SQ** (``sq_topk``): per-dimension scalar quantization, an
+  approximate scan over the codes, exact rescore.
+- **PQ** (``pq_topk``) and **IVF-PQ** (``ivfpq_topk``, and
+  ``ivfpq_residual_topk`` over residual codes).  The three share one copy
+  of each stage: the long-form LUT (``_pq_lut_long``), the exploded codes
+  (``_pq_codes_long``), the subspace-ordered ADC fold (``_adc_fold``),
+  the top-``rescore`` → exact rescore → top-k tail (``_rescore_topk``)
+  and, for the IVF-PQ pair, the coarse probe (``_coarse_probe``).  They
+  differ only in the candidate set (all codes, or the probed cells'
+  codes) and in the fold's start value (0.0, or q·cen for residuals).
 
-Recall < 1 by construction (a true neighbor may live in an unprobed
-cell); tests pin recall@10 ≥ 0.9 vs. the exact oracle at nprobe=4/16.
+SRP, SQ and the PQ family are SQL-expressible end to end, so each has a
+bit-exact DuckDB twin in the registry; IVF's numpy-refined centroids make
+it a rows-only check.
 """
 
 from __future__ import annotations
@@ -185,6 +191,21 @@ def ivf_read_index(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _rank_probes(
+    queries: DataFrame,
+    cent_mat: np.ndarray,
+    n: int,
+    query_id_col: str,
+    query_vec_col: str,
+) -> tuple[list, np.ndarray]:
+    """(query rows, each query's top-``n`` cells by q·centroid, best
+    first).  Queries are small, so the probe list is ranked driver-side in
+    numpy, which keeps the plan free of a second UDF stage."""
+    qrows = queries.select(query_id_col, query_vec_col).collect()
+    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)
+    return qrows, np.argsort(-(qmat @ cent_mat.T), axis=1)[:, :n]
+
+
 def ivf_query(
     indexed: DataFrame,
     cent_mat: np.ndarray,
@@ -198,11 +219,9 @@ def ivf_query(
 ) -> DataFrame:
     """Query an IVF index built by ``ivf_build``: probe ``nprobe`` cells per
     query, exact scoring inside the probed cells only."""
-    # per-query probe list (queries are small: driver-side numpy is fine and
-    # keeps the plan free of a second UDF stage)
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)
-    probe_cells = np.argsort(-(qmat @ cent_mat.T), axis=1)[:, :nprobe]
+    qrows, probe_cells = _rank_probes(
+        queries, cent_mat, nprobe, query_id_col, query_vec_col
+    )
     probes = [
         (int(r[query_id_col]), list(r[query_vec_col]), int(c))
         for r, cells in zip(qrows, probe_cells)
@@ -253,9 +272,9 @@ def ivf_probe_sweep_topk(
 ) -> DataFrame:
     """All ``nprobe`` legs of an IVF probe sweep from ONE scored pass.
 
-    Each query's top-``max(sweep)`` cells are ranked once (same driver-side
-    probe model as ``ivf_query`` — shared here so the two paths cannot
-    desynchronize, ADVICE r11); every probed cell is scored once carrying
+    Each query's top-``max(sweep)`` cells are ranked once by
+    ``_rank_probes``, the driver-side probe ranking ``ivf_query`` uses too,
+    so the two paths cannot desynchronize; every probed cell is scored once carrying
     its probe rank; a candidate's ENTRY level is its minimum probe rank
     over containing cells, and leg ``n`` is the ``entry <= n`` filter.  A
     candidate enters leg n iff one of its cells is among the query's top-n
@@ -266,9 +285,9 @@ def ivf_probe_sweep_topk(
 
     Returns (nprobe, query_id, id, score, rank) for rank <= k.
     """
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)
-    order = np.argsort(-(qmat @ cent_mat.T), axis=1)[:, : max(sweep)]
+    qrows, order = _rank_probes(
+        queries, cent_mat, max(sweep), query_id_col, query_vec_col
+    )
     probes = [
         (int(r[query_id_col]), list(r[query_vec_col]), int(c), rk + 1)
         for r, cells in zip(qrows, order)
@@ -703,6 +722,103 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, id_col: str = "vec_id", vec_c
     return dists.groupBy(id_col).agg(*aggs)
 
 
+def _pq_lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(qid, s, code, l): each query's PQ_SUB×PQ_CODES ADC lookup table of
+    qsub·csub dot products, in LONG form.  One (s, code)-keyed broadcast
+    join instead of PQ_SUB chained joins — a chain of per-subspace joins
+    invites the optimizer to pair the LUT relations with each other first
+    (they only constrain through the codes row), a combinatorial blow-up
+    the long form makes impossible by construction."""
+    return (
+        qids.crossJoin(F.broadcast(codebook))
+        .select(
+            "qid",
+            "code",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(s).alias("s"),
+                            dot_product(
+                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
+                            ).alias("l"),
+                        )
+                        for s in range(PQ_SUB)
+                    ]
+                )
+            ).alias("sl"),
+        )
+        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
+    )
+
+
+def _pq_codes_long(codes: DataFrame, id_col: str) -> DataFrame:
+    """(id, s, code): the c0..c{PQ_SUB-1} code columns exploded to one row
+    per subspace, the join side of the long-form LUT."""
+    return codes.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
+                    for s in range(PQ_SUB)
+                ]
+            )
+        ).alias("sc"),
+    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
+
+
+def _adc_fold(looked_up: DataFrame, id_col: str, start: str | None = None) -> DataFrame:
+    """(id, qid[, start], a): approximate score per (vector, query) pair —
+    the pair's LUT terms folded in fixed subspace order (sort by s, then
+    add), bit-identical to the oracle's list_reduce(list_prepend(start,
+    list(l ORDER BY s))).  The fold starts from 0.0, or from the per-pair
+    ``start`` column (kept as a grouping key) when there is a base term."""
+    keys = [id_col, "qid"] + ([start] if start else [])
+    return looked_up.groupBy(*keys).agg(
+        F.aggregate(
+            F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
+            F.col(start) if start else F.lit(0.0),
+            lambda acc, x: acc + x["l"],
+        ).alias("a")
+    )
+
+
+def _rescore_topk(
+    approx: DataFrame,
+    emb: DataFrame,
+    qids: DataFrame,
+    k: int,
+    rescore: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, id, raw, rank): keep each query's top-``rescore``
+    approximate candidates (WindowGroupLimit), rescore them exactly by dot
+    product against the raw vectors and keep the top k; ties break on id."""
+    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
+    cand = (
+        approx.withColumn("rn", F.row_number().over(wq))
+        .filter(F.col("rn") <= rescore)
+        .select(id_col, "qid")
+    )
+    exact = (
+        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
+        .join(F.broadcast(qids), "qid")
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col(id_col),
+            dot_product(vec_col, "qvec").alias("raw"),
+        )
+    )
+    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
+    return (
+        exact.withColumn("rank", F.row_number().over(wr))
+        .filter(F.col("rank") <= k)
+        .select("query_id", id_col, "raw", "rank")
+    )
+
+
 def pq_topk(
     emb: DataFrame,
     codes: DataFrame,
@@ -724,77 +840,11 @@ def pq_topk(
     256 bytes/vector, the classic PQ memory story.  All joins against
     LUT/codebook/queries broadcast; candidates are narrow id rows."""
     qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    # LONG-form lookup: one (s, code)-keyed broadcast join instead of
-    # PQ_SUB chained joins — a chain of per-subspace joins invites the
-    # optimizer to pair the LUT relations with each other first (they
-    # only constrain through the codes row), a combinatorial blow-up the
-    # long form makes impossible by construction.
-    lut_long = (
-        qids.crossJoin(F.broadcast(codebook))
-        .select(
-            "qid",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
-                            ).alias("l"),
-                        )
-                        for s in range(PQ_SUB)
-                    ]
-                )
-            ).alias("sl"),
-        )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
+    looked_up = _pq_codes_long(codes, id_col).join(
+        F.broadcast(_pq_lut_long(qids, codebook)), ["s", "code"]
     )
-    codes_long = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("sc"),
-    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
-    # fixed-order fold (sort by subspace, then add) — bit-identical to the
-    # oracle's list_reduce(list_prepend(0.0, list(l ORDER BY s)))
-    approx = (
-        codes_long.join(F.broadcast(lut_long), ["s", "code"])
-        .groupBy(id_col, "qid")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
-    )
-
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
+    return _rescore_topk(
+        _adc_fold(looked_up, id_col), emb, qids, k, rescore, id_col, vec_col
     )
 
 
@@ -854,6 +904,23 @@ def coarse_assign(
     )
 
 
+def _coarse_probe(qids: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(qid, cell, qcen): each query's ``nprobe`` nearest coarse cells by
+    the same |c|² − 2q·c identity as ``coarse_assign`` (ties on cell), with
+    q·cen carried along for the residual fold; a caller that drops qcen
+    gets it pruned from the plan."""
+    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
+    qc = dot_product(F.col("qvec"), F.col("cenvec"))
+    wp = Window.partitionBy("qid").orderBy("d", "cell")
+    return (
+        qids.crossJoin(F.broadcast(cents))
+        .select("qid", "cell", (cc - 2.0 * qc).alias("d"), qc.alias("qcen"))
+        .withColumn("rn", F.row_number().over(wp))
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", "cell", "qcen")
+    )
+
+
 def ivfpq_topk(
     emb: DataFrame,
     codes: DataFrame,
@@ -878,82 +945,13 @@ def ivfpq_topk(
     centroid/LUT/query relation broadcasts, candidates stay narrow id
     rows, and both windows are WindowGroupLimit-bounded."""
     qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
-    qc = dot_product(F.col("qvec"), F.col("cenvec"))
-    wp = Window.partitionBy("qid").orderBy("d", "cell")
-    probe = (
-        qids.crossJoin(F.broadcast(cents))
-        .select("qid", "cell", (cc - 2.0 * qc).alias("d"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cell")
-    )
+    probe = _coarse_probe(qids, cents, nprobe)
     cand_ids = assign.join(F.broadcast(probe), "cell").select("qid", id_col)
-
-    lut_long = (
-        qids.crossJoin(F.broadcast(codebook))
-        .select(
-            "qid",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
-                            ).alias("l"),
-                        )
-                        for s in range(PQ_SUB)
-                    ]
-                )
-            ).alias("sl"),
-        )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
+    looked_up = cand_ids.join(_pq_codes_long(codes, id_col), id_col).join(
+        F.broadcast(_pq_lut_long(qids, codebook)), ["qid", "s", "code"]
     )
-    codes_long = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("sc"),
-    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
-    approx = (
-        cand_ids.join(codes_long, id_col)
-        .join(F.broadcast(lut_long), ["qid", "s", "code"])
-        .groupBy(id_col, "qid")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
+    return _rescore_topk(
+        _adc_fold(looked_up, id_col), emb, qids, k, rescore, id_col, vec_col
     )
 
 
@@ -1036,85 +1034,11 @@ def ivfpq_residual_topk(
     (list_prepend(q·cen, ...) in the oracle) so both engines add the
     subspace terms in the identical order."""
     qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
-    qc = dot_product(F.col("qvec"), F.col("cenvec"))
-    wp = Window.partitionBy("qid").orderBy("d", "cell")
-    probe = (
-        qids.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "cell",
-            (cc - 2.0 * qc).alias("d"),
-            qc.alias("qcen"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cell", "qcen")
-    )
+    probe = _coarse_probe(qids, cents, nprobe)
     cand_ids = assign.join(F.broadcast(probe), "cell").select(id_col, "qid", "qcen")
-
-    lut_long = (
-        qids.crossJoin(F.broadcast(codebook))
-        .select(
-            "qid",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
-                            ).alias("l"),
-                        )
-                        for s in range(PQ_SUB)
-                    ]
-                )
-            ).alias("sl"),
-        )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
+    looked_up = cand_ids.join(_pq_codes_long(codes, id_col), id_col).join(
+        F.broadcast(_pq_lut_long(qids, codebook)), ["qid", "s", "code"]
     )
-    codes_long = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("sc"),
-    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
-    approx = (
-        cand_ids.join(codes_long, id_col)
-        .join(F.broadcast(lut_long), ["qid", "s", "code"])
-        .groupBy(id_col, "qid", "qcen")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.col("qcen"),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
+    return _rescore_topk(
+        _adc_fold(looked_up, id_col, start="qcen"), emb, qids, k, rescore, id_col, vec_col
     )

@@ -3,22 +3,22 @@
 
 HTML parsing has no native Spark expression, so this is one of the
 engine's three sanctioned pandas-UDF seams (SURVEY.md §2.6).  Two
-equivalent implementations sit behind the seam:
+equivalent implementations exist:
 
 - the stdlib converter (`operators/md_convert.py`) — golden-verified
   byte-identical to the reference's bs4+markdownify output on ALL 331
   bundled pages (titles AND full markdown bodies,
   `tests/test_html_md_golden.py`); this is the default and needs no
   third-party libraries;
-- the original bs4+markdownify path, used only when those libraries are
-  installed AND ``SPARK_GRAFT_USE_BS4=1``, kept as a cross-check hook.
+- the original bs4+markdownify path (``_convert_bs4``), not used by the
+  UDF; where those libraries are installed it is the reference the stdlib
+  converter is cross-checked against (`tests/test_gated_real_paths.py`).
 
 Imports resolve once per Python worker; batches move over Arrow.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -49,7 +49,7 @@ def _convert_bs4(html: str) -> tuple[str | None, str | None]:
     """Reference semantics via the actual libraries
     (`markdown_assets.py:66-89`); only reachable when bs4/markdownify are
     installed.  Exists so environments WITH the libraries can cross-check
-    the stdlib converter against the original implementation."""
+    ``html_page_to_markdown`` against the original implementation."""
     from bs4 import BeautifulSoup
     from markdownify import markdownify as md
 
@@ -63,22 +63,13 @@ def _convert_bs4(html: str) -> tuple[str | None, str | None]:
     return title, f"# {title}\n\n{body_md}"
 
 
-def _convert_stdlib(html: str) -> tuple[str | None, str | None]:
-    """Default path: pure-stdlib reimplementation, golden-verified
-    byte-identical to `_convert_bs4` on the full reference corpus."""
-    return html_page_to_markdown(html)
-
-
 def html_to_markdown_udf():
     """pandas UDF: html string → struct(title, markdown); imports resolved
     once per worker, Arrow-batched."""
-    use_bs4 = HAVE_HTML_LIBS and os.environ.get("SPARK_GRAFT_USE_BS4") == "1"
-    convert = _convert_bs4 if use_bs4 else _convert_stdlib
-
     @F.pandas_udf(_OUT_SCHEMA)
     def conv(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for s in batches:
-            out = [convert(h if h is not None else "") for h in s]
+            out = [html_page_to_markdown(h if h is not None else "") for h in s]
             yield pd.DataFrame(out, columns=["title", "markdown"])
 
     return conv

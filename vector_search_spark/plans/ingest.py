@@ -61,14 +61,15 @@ def build_index(
     return chunks.withColumn("embedding", encoder.udf()(F.col("text")))
 
 
-def write_index(index: DataFrame, path: str, partition_by: str = "year") -> None:
-    """S5/S7: the vector-store sink is a partitioned parquet table;
-    'recreate collection' ≡ mode('overwrite') (`store_assets.py:38-77`)."""
+def write_index(index: DataFrame, path: str) -> None:
+    """S5/S7: the vector-store sink is a parquet table partitioned by year,
+    as ``update_index`` appends it; 'recreate collection' ≡
+    mode('overwrite') (`store_assets.py:38-77`)."""
     (
         index.withColumn("year", F.year(F.to_date("date")))
-        .repartition(partition_by)
+        .repartition("year")
         .write.mode("overwrite")
-        .partitionBy(partition_by)
+        .partitionBy("year")
         .parquet(path)
     )
 

@@ -726,58 +726,135 @@ def _pq_slice(expr: str, s: int) -> str:
     return f"({expr})[{s * PQ_SD + 1}:{(s + 1) * PQ_SD}]"
 
 
-def _pq_oracle() -> str:
+# The three PQ-family oracles (pq, ivfpq, ivfpq_residual) are built from
+# one copy of each stage, as their operators are (operators/ann.py).  A
+# fragment is a run of CTEs; ``_sql_with`` chains them into one query.
+# Relation arguments name a table and its alias (``"resid r"``, ``"rcb
+# rc"``) or a CTE used unaliased (``"cb"``).
+_SQL_PQ_CODEBOOK = f"""ordered AS (
+      SELECT embedding::DOUBLE[] AS cvec
+      FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {PQ_CODES}),
+    cb AS (
+      SELECT row_number() OVER () - 1 AS code, cvec
+      FROM ordered),"""
+
+_SQL_PQ_QUERIES = """q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
+          FROM embeddings WHERE vec_id < 20),"""
+
+
+def _sql_with(*ctes: str) -> str:
+    return "\n    WITH " + "\n    ".join(ctes)
+
+
+def _sql_pq_encode(rows: str, vec: str, cb: str, materialized: str = "") -> str:
+    """dist + codes: each row's nearest code per subspace (pq_encode)."""
+    r, c = rows.split()[-1], cb.split()[-1]
     d_cols = ",\n             ".join(
-        f"list_dot_product({_pq_slice('cb.cvec', s)}, {_pq_slice('cb.cvec', s)})"
-        f" - 2.0 * list_dot_product({_pq_slice('v.embedding::DOUBLE[]', s)}, {_pq_slice('cb.cvec', s)})"
+        f"list_dot_product({_pq_slice(c + '.cvec', s)}, {_pq_slice(c + '.cvec', s)})"
+        f" - 2.0 * list_dot_product({_pq_slice(vec, s)}, {_pq_slice(c + '.cvec', s)})"
         f" AS d{s}"
         for s in range(PQ_SUB)
     )
     c_aggs = ",\n             ".join(
         f"first(code ORDER BY d{s}, code) AS c{s}" for s in range(PQ_SUB)
     )
-    codes_long = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
-    )
-    lut_long = "\n      UNION ALL ".join(
-        f"SELECT q.qid, {s} AS s, cb.code, "
-        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('cb.cvec', s)}) AS l "
-        f"FROM q CROSS JOIN cb"
-        for s in range(PQ_SUB)
-    )
-    return f"""
-    WITH ordered AS (
-      SELECT embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {PQ_CODES}),
-    cb AS (
-      SELECT row_number() OVER () - 1 AS code, cvec
-      FROM ordered),
-    dist AS (
-      SELECT v.vec_id, cb.code,
+    return f"""dist AS (
+      SELECT {r}.vec_id, {c}.code,
              {d_cols}
-      FROM embeddings v CROSS JOIN cb),
-    codes AS (
+      FROM {rows} CROSS JOIN {cb}),
+    codes AS {materialized}(
       SELECT vec_id,
              {c_aggs}
-      FROM dist GROUP BY vec_id),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-          FROM embeddings WHERE vec_id < 20),
-    codes_long AS (
-      {codes_long}),
-    lut_long AS (
-      {lut_long}),
-    approx AS (
-      SELECT cl.vec_id, lu.qid,
-             list_reduce(list_prepend(0.0, list(lu.l ORDER BY lu.s)),
+      FROM dist GROUP BY vec_id),"""
+
+
+def _sql_cen_dist(vec: str) -> str:
+    """|c|² − 2x·c against coarse centroid ``co`` (coarse_assign, probe)."""
+    return f"list_dot_product(co.cvec, co.cvec) - 2.0 * list_dot_product({vec}, co.cvec)"
+
+
+def _sql_coarse(materialized: str = "") -> str:
+    """co_ordered + coarse + assign: the hash-sampled coarse cells and each
+    vector's nearest one (coarse_cells, coarse_assign)."""
+    return f"""co_ordered AS (
+      SELECT embedding::DOUBLE[] AS cvec
+      FROM embeddings ORDER BY md5('ivf:' || vec_id::VARCHAR), vec_id
+      LIMIT {IVFPQ_CELLS}),
+    coarse AS (SELECT row_number() OVER () - 1 AS cell, cvec FROM co_ordered),
+    assign AS {materialized}(
+      SELECT v.vec_id, first(co.cell ORDER BY {_sql_cen_dist('v.embedding::DOUBLE[]')}, co.cell) AS cell
+      FROM embeddings v CROSS JOIN coarse co GROUP BY v.vec_id),"""
+
+
+def _sql_coarse_probe(qcen: bool = False) -> str:
+    """probe + cand_ids: each query's IVFPQ_NPROBE nearest cells and the
+    vectors assigned to them (_coarse_probe), carrying q·cen if asked."""
+    if qcen:
+        cols = "qid, cell, qcen"
+        qcen_col = "\n               list_dot_product(q.qvec, co.cvec) AS qcen,"
+        cand = "SELECT p.qid, a.vec_id, p.qcen\n      FROM assign a"
+    else:
+        cols, qcen_col, cand = "qid, cell", "", "SELECT p.qid, a.vec_id FROM assign a"
+    return f"""probe AS (
+      SELECT {cols} FROM (
+        SELECT q.qid, co.cell,{qcen_col}
+               row_number() OVER (PARTITION BY q.qid
+                                  ORDER BY {_sql_cen_dist('q.qvec')}, co.cell) AS rn
+        FROM q CROSS JOIN coarse co)
+      WHERE rn <= {IVFPQ_NPROBE}),
+    cand_ids AS (
+      {cand} JOIN probe p ON a.cell = p.cell),"""
+
+
+def _sql_pq_lut_long(cb: str) -> str:
+    """lut_long: (qid, s, code, l) per query and codebook row (_pq_lut_long)."""
+    c = cb.split()[-1]
+    lut = "\n      UNION ALL ".join(
+        f"SELECT q.qid, {s} AS s, {c}.code, "
+        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice(c + '.cvec', s)}) AS l "
+        f"FROM q CROSS JOIN {cb}"
+        for s in range(PQ_SUB)
+    )
+    return f"lut_long AS (\n      {lut}),"
+
+
+def _sql_pq_codes_long() -> str:
+    """codes_long: (vec_id, s, code), one row per subspace (_pq_codes_long)."""
+    codes = "\n      UNION ALL ".join(
+        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
+    )
+    return f"codes_long AS (\n      {codes}),"
+
+
+def _sql_adc_fold(probed: bool, start: str = "0.0") -> str:
+    """approx: LUT terms folded in subspace order from ``start`` (_adc_fold),
+    over every code, or over the probed cells' candidates (cand_ids c)."""
+    if probed:
+        qid = "c.qid"
+        rows = """cand_ids c
+      JOIN codes_long cl ON cl.vec_id = c.vec_id
+      JOIN lut_long lu ON lu.qid = c.qid AND lu.s = cl.s AND lu.code = cl.code"""
+    else:
+        qid = "lu.qid"
+        rows = "codes_long cl JOIN lut_long lu ON lu.s = cl.s AND lu.code = cl.code"
+    keys = ", ".join(["cl.vec_id", qid] + ([start] if start != "0.0" else []))
+    return f"""approx AS (
+      SELECT cl.vec_id, {qid},
+             list_reduce(list_prepend({start}, list(lu.l ORDER BY lu.s)),
                          (a, b) -> a + b) AS a
-      FROM codes_long cl JOIN lut_long lu ON lu.s = cl.s AND lu.code = cl.code
-      GROUP BY cl.vec_id, lu.qid),
-    cand AS (
+      FROM {rows}
+      GROUP BY {keys}),"""
+
+
+def _sql_rescore_topk(rescore: int) -> str:
+    """cand + exact + top 10: each query's top-``rescore`` approximate
+    candidates rescored exactly (_rescore_topk)."""
+    return f"""cand AS (
       SELECT qid, vec_id FROM (
         SELECT qid, vec_id,
                row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
         FROM approx)
-      WHERE rn <= {PQ_RESCORE}),
+      WHERE rn <= {rescore}),
     exact AS (
       SELECT cand.qid AS query_id, cand.vec_id,
              list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
@@ -792,6 +869,18 @@ def _pq_oracle() -> str:
           FROM exact)
     WHERE rank <= 10
     """
+
+
+def _pq_oracle() -> str:
+    return _sql_with(
+        _SQL_PQ_CODEBOOK,
+        _sql_pq_encode("embeddings v", "v.embedding::DOUBLE[]", "cb"),
+        _SQL_PQ_QUERIES,
+        _sql_pq_codes_long(),
+        _sql_pq_lut_long("cb"),
+        _sql_adc_fold(probed=False),
+        _sql_rescore_topk(PQ_RESCORE),
+    )
 
 
 @artifact()
@@ -1593,78 +1682,17 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlike the Lloyd-refined ann_ivf_topk — every stage is SQL-expressible).
 # ---------------------------------------------------------------------------
 def _ivfpq_oracle() -> str:
-    base = _pq_oracle()
-    # reuse the PQ oracle's ordered/cb/dist/codes CTE block verbatim (it
-    # ends right before the "q AS" query CTE), then add the coarse stages.
-    prefix = base[: base.index("q AS (SELECT")]
-    d_cen = (
-        "list_dot_product(co.cvec, co.cvec)"
-        " - 2.0 * list_dot_product(v.embedding::DOUBLE[], co.cvec)"
+    return _sql_with(
+        _SQL_PQ_CODEBOOK,
+        _sql_pq_encode("embeddings v", "v.embedding::DOUBLE[]", "cb"),
+        _sql_coarse(),
+        _SQL_PQ_QUERIES,
+        _sql_coarse_probe(),
+        _sql_pq_codes_long(),
+        _sql_pq_lut_long("cb"),
+        _sql_adc_fold(probed=True),
+        _sql_rescore_topk(IVFPQ_RESCORE),
     )
-    d_q = (
-        "list_dot_product(co.cvec, co.cvec)"
-        " - 2.0 * list_dot_product(q.qvec, co.cvec)"
-    )
-    codes_long = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
-    )
-    lut_long = "\n      UNION ALL ".join(
-        f"SELECT q.qid, {s} AS s, cb.code, "
-        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('cb.cvec', s)}) AS l "
-        f"FROM q CROSS JOIN cb"
-        for s in range(PQ_SUB)
-    )
-    return f"""{prefix}co_ordered AS (
-      SELECT embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY md5('ivf:' || vec_id::VARCHAR), vec_id
-      LIMIT {IVFPQ_CELLS}),
-    coarse AS (SELECT row_number() OVER () - 1 AS cell, cvec FROM co_ordered),
-    assign AS (
-      SELECT v.vec_id, first(co.cell ORDER BY {d_cen}, co.cell) AS cell
-      FROM embeddings v CROSS JOIN coarse co GROUP BY v.vec_id),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-          FROM embeddings WHERE vec_id < 20),
-    probe AS (
-      SELECT qid, cell FROM (
-        SELECT q.qid, co.cell,
-               row_number() OVER (PARTITION BY q.qid
-                                  ORDER BY {d_q}, co.cell) AS rn
-        FROM q CROSS JOIN coarse co)
-      WHERE rn <= {IVFPQ_NPROBE}),
-    cand_ids AS (
-      SELECT p.qid, a.vec_id FROM assign a JOIN probe p ON a.cell = p.cell),
-    codes_long AS (
-      {codes_long}),
-    lut_long AS (
-      {lut_long}),
-    approx AS (
-      SELECT cl.vec_id, c.qid,
-             list_reduce(list_prepend(0.0, list(lu.l ORDER BY lu.s)),
-                         (a, b) -> a + b) AS a
-      FROM cand_ids c
-      JOIN codes_long cl ON cl.vec_id = c.vec_id
-      JOIN lut_long lu ON lu.qid = c.qid AND lu.s = cl.s AND lu.code = cl.code
-      GROUP BY cl.vec_id, c.qid),
-    cand AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
-        FROM approx)
-      WHERE rn <= {IVFPQ_RESCORE}),
-    exact AS (
-      SELECT cand.qid AS query_id, cand.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
-      FROM cand
-      JOIN embeddings e ON cand.vec_id = e.vec_id
-      JOIN q qq ON cand.qid = qq.qid)
-    SELECT query_id, vec_id,
-           floor(raw*10000 + 0.5)/10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM exact)
-    WHERE rank <= 10
-    """
 
 
 @artifact()
@@ -1705,42 +1733,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-PQ with residual encoding — the production FAISS layout, oracle-exact.
 # ---------------------------------------------------------------------------
 def _ivfpq_residual_oracle() -> str:
-    d_cen = (
-        "list_dot_product(co.cvec, co.cvec)"
-        " - 2.0 * list_dot_product(v.embedding::DOUBLE[], co.cvec)"
-    )
-    d_q = (
-        "list_dot_product(co.cvec, co.cvec)"
-        " - 2.0 * list_dot_product(q.qvec, co.cvec)"
-    )
-    rd_cols = ",\n             ".join(
-        f"list_dot_product({_pq_slice('rc.cvec', s)}, {_pq_slice('rc.cvec', s)})"
-        f" - 2.0 * list_dot_product({_pq_slice('r.rvec', s)}, {_pq_slice('rc.cvec', s)})"
-        f" AS d{s}"
-        for s in range(PQ_SUB)
-    )
-    c_aggs = ",\n             ".join(
-        f"first(code ORDER BY d{s}, code) AS c{s}" for s in range(PQ_SUB)
-    )
-    codes_long = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
-    )
-    lut_long = "\n      UNION ALL ".join(
-        f"SELECT q.qid, {s} AS s, rc.code, "
-        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('rc.cvec', s)}) AS l "
-        f"FROM q CROSS JOIN rcb rc"
-        for s in range(PQ_SUB)
-    )
-    return f"""
-    WITH co_ordered AS (
-      SELECT embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY md5('ivf:' || vec_id::VARCHAR), vec_id
-      LIMIT {IVFPQ_CELLS}),
-    coarse AS (SELECT row_number() OVER () - 1 AS cell, cvec FROM co_ordered),
-    assign AS MATERIALIZED (
-      SELECT v.vec_id, first(co.cell ORDER BY {d_cen}, co.cell) AS cell
-      FROM embeddings v CROSS JOIN coarse co GROUP BY v.vec_id),
-    resid AS MATERIALIZED (
+    resid = f"""resid AS MATERIALIZED (
       SELECT v.vec_id, a.cell,
              list_transform(v.embedding::DOUBLE[], (x, i) -> x - co.cvec[i])
                AS rvec
@@ -1750,60 +1743,18 @@ def _ivfpq_residual_oracle() -> str:
     rcb_ordered AS (
       SELECT rvec AS cvec FROM resid
       ORDER BY md5('pqr:' || vec_id::VARCHAR), vec_id LIMIT {PQ_CODES}),
-    rcb AS (SELECT row_number() OVER () - 1 AS code, cvec FROM rcb_ordered),
-    dist AS (
-      SELECT r.vec_id, rc.code,
-             {rd_cols}
-      FROM resid r CROSS JOIN rcb rc),
-    codes AS MATERIALIZED (
-      SELECT vec_id,
-             {c_aggs}
-      FROM dist GROUP BY vec_id),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-          FROM embeddings WHERE vec_id < 20),
-    probe AS (
-      SELECT qid, cell, qcen FROM (
-        SELECT q.qid, co.cell,
-               list_dot_product(q.qvec, co.cvec) AS qcen,
-               row_number() OVER (PARTITION BY q.qid
-                                  ORDER BY {d_q}, co.cell) AS rn
-        FROM q CROSS JOIN coarse co)
-      WHERE rn <= {IVFPQ_NPROBE}),
-    cand_ids AS (
-      SELECT p.qid, a.vec_id, p.qcen
-      FROM assign a JOIN probe p ON a.cell = p.cell),
-    codes_long AS (
-      {codes_long}),
-    lut_long AS (
-      {lut_long}),
-    approx AS (
-      SELECT cl.vec_id, c.qid,
-             list_reduce(list_prepend(c.qcen, list(lu.l ORDER BY lu.s)),
-                         (a, b) -> a + b) AS a
-      FROM cand_ids c
-      JOIN codes_long cl ON cl.vec_id = c.vec_id
-      JOIN lut_long lu ON lu.qid = c.qid AND lu.s = cl.s AND lu.code = cl.code
-      GROUP BY cl.vec_id, c.qid, c.qcen),
-    cand AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
-        FROM approx)
-      WHERE rn <= {IVFPQ_RESCORE}),
-    exact AS (
-      SELECT cand.qid AS query_id, cand.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
-      FROM cand
-      JOIN embeddings e ON cand.vec_id = e.vec_id
-      JOIN q qq ON cand.qid = qq.qid)
-    SELECT query_id, vec_id,
-           floor(raw*10000 + 0.5)/10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM exact)
-    WHERE rank <= 10
-    """
+    rcb AS (SELECT row_number() OVER () - 1 AS code, cvec FROM rcb_ordered),"""
+    return _sql_with(
+        _sql_coarse("MATERIALIZED "),
+        resid,
+        _sql_pq_encode("resid r", "r.rvec", "rcb rc", "MATERIALIZED "),
+        _SQL_PQ_QUERIES,
+        _sql_coarse_probe(qcen=True),
+        _sql_pq_codes_long(),
+        _sql_pq_lut_long("rcb rc"),
+        _sql_adc_fold(probed=True, start="c.qcen"),
+        _sql_rescore_topk(IVFPQ_RESCORE),
+    )
 
 
 @artifact(deps=("_shared_ivfpq_coarse",))
