@@ -9,6 +9,7 @@ import math
 import os
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -102,6 +103,10 @@ CHUNKER_GOLDEN = json.loads(
 GOLDEN_ISSUES = [
     doc for doc in CHUNKER_GOLDEN["inputs"] if re.fullmatch(r"\d{4}-\d{2}-\d{2}\.md", doc[0])
 ]
+# chunks the golden holds per issue file name
+_PATH = CHUNKER_GOLDEN["columns"].index("path")
+GOLDEN_ISSUE_CHUNKS = Counter({doc[0]: 0 for doc in GOLDEN_ISSUES})
+GOLDEN_ISSUE_CHUNKS.update(r[_PATH] for r in CHUNKER_GOLDEN["rows"] if r[_PATH] in GOLDEN_ISSUE_CHUNKS)
 
 
 @pytest.fixture

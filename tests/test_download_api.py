@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vector_search_spark.api import search_newsletter
-from vector_search_spark.encoders import HashEncoder
+from vector_search_spark.encoders import EMBEDDING_DIM, HashEncoder
 from vector_search_spark.operators.download import (
     fetch_throttled,
     incremental_urls,
@@ -53,7 +53,7 @@ def test_fetch_throttled_with_injected_fetcher(spark):
 
 def test_api_response_shape(spark, issue_dir):
     index = ingest_markdown_dir(spark, issue_dir)
-    qvec = HashEncoder(dim=64).encode_one("identity habits")
+    qvec = HashEncoder(dim=EMBEDDING_DIM).encode_one("identity habits")
     out = search_newsletter(index, qvec, "identity habits", min_score=-99, limit=3)
     assert set(out) == {"query", "filters", "total_results", "results"}
     assert out["total_results"] == len(out["results"]) == 3
@@ -66,7 +66,7 @@ def test_api_response_shape(spark, issue_dir):
 
 def test_api_empty_and_invalid(spark, issue_dir):
     index = ingest_markdown_dir(spark, issue_dir)
-    qvec = HashEncoder(dim=64).encode_one("q")
+    qvec = HashEncoder(dim=EMBEDDING_DIM).encode_one("q")
     empty = search_newsletter(index, qvec, "q", min_score=999.0)
     assert empty["total_results"] == 0 and empty["results"] == []
     bad = search_newsletter(index, qvec, "q", from_date="2024-13-99")

@@ -64,11 +64,23 @@ def test_passthrough_columns_keep_their_names(spark):
     assert sorted(key(list(r)[: len(GOLDEN["columns"])]) for r in got) == sorted(map(key, GOLDEN["rows"]))
 
 
-@pytest.mark.parametrize("name", ["source", "category", "_part"])
+@pytest.mark.parametrize("name", ["_part", "_source"])
 def test_reserved_input_column_names_raise(spark, name):
     docs = spark.createDataFrame([("2024-01-01", "x", "y")], f"date string, content string, `{name}` string")
     with pytest.raises(ValueError, match=name):
         parse_newsletter_chunks(docs)
+
+
+@pytest.mark.parametrize("name", ["source", "category"])
+def test_output_named_input_columns_are_replaced(spark, name):
+    """A ``(path, content, date, source)`` frame, like FIXTURES.md §1's
+    ``documents``, chunks to the golden rows: the chunker's own column
+    replaces the input's."""
+    docs = _docs(spark).selectExpr("path", "content", "date", f"'input' AS {name}")
+    chunks = build_chunks(docs)
+    assert chunks.columns == GOLDEN["columns"]
+    key = json.dumps
+    assert sorted(map(key, map(list, chunks.collect()))) == sorted(map(key, GOLDEN["rows"]))
 
 
 def test_ingest_plan_reads_each_file_once(spark, issue_dir):

@@ -83,21 +83,27 @@ def test_foreach_batch_upsert_sink_idempotent(spark, tmp_path):
     assert got == [(1, "a"), (2, "b"), (3, "c")]
 
 
-def test_incremental_index_update(spark, tmp_path):
+def test_incremental_index_update(spark, issue_dir, tmp_path):
     from vector_search_spark.plans.ingest import update_index
     from vector_search_spark.sources.files import read_markdown_dir
 
-    docs = read_markdown_dir(spark, "/root/reference/data/raw/md").cache()
-    first_half = docs.filter(F.col("date") < "2023-01-01")
+    from conftest import GOLDEN_ISSUE_CHUNKS
+
+    cut = "2019-01-11"
+    want_first = sum(n for name, n in GOLDEN_ISSUE_CHUNKS.items() if name < cut)
+
+    docs = read_markdown_dir(spark, issue_dir).cache()
+    first_half = docs.filter(F.col("date") < cut)
     out = str(tmp_path / "vidx")
     n1 = update_index(spark, out, first_half)
-    assert n1 > 0
+    assert n1 == want_first > 0
     # re-running with the same docs appends NOTHING (content-hash ids)
     assert update_index(spark, out, first_half) == 0
     # the full corpus appends exactly the remaining chunks
     n2 = update_index(spark, out, docs)
     total = spark.read.parquet(out).count()
-    assert n1 + n2 == total == 1944
+    assert n1 + n2 == total == sum(GOLDEN_ISSUE_CHUNKS.values())
+    docs.unpersist()
 
 
 def test_stream_stream_join_equals_batch_interval_join(spark):

@@ -6,66 +6,101 @@ The reference calls sentence-transformers in-process
 heavyweight, non-deterministic across platforms, and absent from this
 container — so the engine defines a pluggable seam:
 
-- ``HashEncoder``: deterministic md5-seeded projection text → unit vector.
-  The default for tests/oracles.  Same algorithm available three ways:
-  pure-Python (oracle), pandas UDF (distributed), and — for the rerank
+- ``HashEncoder``: deterministic md5-seeded projection text → unit vector,
+  stored as float32 like the reference's ``vector: float[384]``.  The
+  default for tests/oracles.  Same algorithm available three ways:
+  ``encode_one`` (driver side), Arrow UDF (distributed), and — for the rerank
   stub — a *native Catalyst expression* that DuckDB can reproduce in SQL.
 - ``SentenceTransformerEncoder``: the production path, loaded lazily inside
   the pandas-UDF iterator (one model per executor process, reused across
   Arrow batches — the canonical Spark batch-inference pattern).  Raises
   cleanly when sentence-transformers isn't installed.
 
-Scale note: both paths are ``pandas_udf`` (iterator form) — Arrow-batched,
-model loaded once per Python worker, embarrassingly parallel over a 100 TB
-corpus; no state, no shuffle.
+Both emit ``array<float>`` of ``EMBEDDING_DIM`` (384) by default: half the
+bytes of ``array<double>`` in every index write, shuffle and scan.  Scores
+stay float64: every dot-product path widens the elements exactly before
+its first multiply.
+
+Scale note: both paths are iterator UDFs — Arrow-batched, model loaded
+once per Python worker, embarrassingly parallel over a 100 TB corpus; no
+state, no shuffle.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# The paper's embedding dimension (all-MiniLM-L6-v2, ``vector: float[384]``).
+EMBEDDING_DIM = 384
 
 
 # ---------------------------------------------------------------------------
 # Deterministic hash encoder (test/oracle stub for E1/E2)
 # ---------------------------------------------------------------------------
 class HashEncoder:
-    """text → unit vector of dim ``dim``; deterministic, platform-independent.
+    """text → float32 unit vector of dim ``dim``; deterministic,
+    platform-independent.
 
-    Component i = int(md5(f"{text}|{i}")[:8 hex], 16) scaled to [-1, 1),
-    then L2-normalized.  Cheap, seedable, reproducible in any engine.
+    Component i = int(md5(f"{seed}|{text}|{i}")[:8 hex], 16) scaled to
+    [-1, 1), then L2-normalized in float64 and rounded to float32, the
+    index's element type (``vector: float[384]`` in the reference).  The
+    md5 state of the ``f"{seed}|{text}|"`` prefix is computed once per
+    text and copied for each component.
     """
 
-    def __init__(self, dim: int = 64, seed: str = "vss"):
+    def __init__(self, dim: int = EMBEDDING_DIM, seed: str = "vss"):
         self.dim = dim
         self.seed = seed
 
-    def encode_one(self, text: str) -> list[float]:
-        raw = [
-            int(hashlib.md5(f"{self.seed}|{text}|{i}".encode()).hexdigest()[:8], 16)
-            / float(1 << 31)
-            - 1.0
-            for i in range(self.dim)
-        ]
-        norm = math.sqrt(sum(x * x for x in raw)) or 1.0
-        return [x / norm for x in raw]
+    def encode_batch(self, texts: Sequence[str | None]) -> np.ndarray:
+        """``len(texts) x dim`` float32 matrix; a None text encodes as "".
+
+        The float64 steps are the per-component formula's, vectorized over
+        rows: the squares are summed in component order, left to right, so
+        each vector is bit-identical to a plain Python loop's."""
+        suffixes = [str(i).encode() for i in range(self.dim)]
+        digests = []
+        for text in texts:
+            prefix = hashlib.md5(f"{self.seed}|{'' if text is None else text}|".encode())
+            for suffix in suffixes:
+                h = prefix.copy()
+                h.update(suffix)
+                digests.append(h.digest())
+        # the first 4 bytes of each 16-byte digest, as a big-endian uint32
+        words = np.frombuffer(b"".join(digests), dtype=">u4")[::4]
+        raw = words.reshape(len(texts), self.dim) / float(1 << 31) - 1.0
+        sq = raw * raw
+        norm2 = np.zeros(len(texts))
+        for i in range(self.dim):
+            norm2 += sq[:, i]
+        norm = np.sqrt(norm2)
+        norm[norm == 0.0] = 1.0
+        return (raw / norm[:, None]).astype(np.float32)
+
+    def encode_one(self, text: str | None) -> list[float]:
+        """One vector as Python floats, each exactly a float32 value."""
+        return self.encode_batch([text])[0].tolist()
 
     def udf(self):
-        """Arrow-batched pandas UDF: Series[str] -> Series[list[float]]."""
-        dim, seed = self.dim, self.seed
+        """Arrow UDF: string column -> ``array<float>``.  Each batch is one
+        ``rows x dim`` float32 matrix, returned as one ``list<float>``
+        array over its buffer."""
 
-        @F.pandas_udf(T.ArrayType(T.DoubleType()))
-        def encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            enc = HashEncoder(dim, seed)
-            for s in batches:
-                yield pd.Series([enc.encode_one(t if t is not None else "") for t in s])
+        @F.arrow_udf(T.ArrayType(T.FloatType()))
+        def encode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+            for texts in batches:
+                mat = self.encode_batch(texts.to_pylist())
+                offsets = np.arange(0, mat.size + 1, self.dim, dtype=np.int32)
+                yield pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1)))
 
         return encode
 
@@ -77,7 +112,7 @@ class SentenceTransformerEncoder:
     lazily once per executor Python worker inside the iterator UDF.
     """
 
-    def __init__(self, model_name: str = "all-MiniLM-L6-v2", dim: int = 384):
+    def __init__(self, model_name: str = "all-MiniLM-L6-v2", dim: int = EMBEDDING_DIM):
         self.model_name = model_name
         self.dim = dim
 

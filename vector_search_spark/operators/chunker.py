@@ -82,16 +82,19 @@ def parse_newsletter_chunks(
     """Markdown documents → typed chunk rows.
 
     Input: one row per document with ``content_col`` (markdown text),
-    ``date_col`` (issue date string) and any passthrough columns not named
-    like an output column or an intermediate one (``_INTERNAL``); such a
-    name raises ``ValueError``.
+    ``date_col`` (issue date string) and any passthrough columns.  An
+    input column named like an output column (e.g. the ``source`` of
+    FIXTURES.md §1's ``documents``) is replaced by the chunker's output,
+    as ``enrich_title_url`` replaces ``title`` and ``url``.  The
+    intermediate names (``_INTERNAL``) are reserved: an input column
+    named like one raises ``ValueError``.
     Output: passthrough columns + (sec_pos, part_pos, text, category,
     index, date, source, source_name) — the reference chunk schema
     (SURVEY.md §1.2) plus the deterministic position keys.
     """
     cols = df.columns
-    keep = [c for c in cols if c not in (content_col, date_col)]
-    clash = [c for c in cols if c in _INTERNAL] + [c for c in keep if c in _OUTPUT]
+    keep = [c for c in cols if c not in (content_col, date_col, *_OUTPUT)]
+    clash = [c for c in cols if c in _INTERNAL]
     if clash:
         raise ValueError(f"parse_newsletter_chunks: reserved column names in the input: {clash}")
     header_cut = strip_sql("replace(_section, '1 QUESTION FOR YOU', '')")

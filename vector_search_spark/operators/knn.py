@@ -93,9 +93,10 @@ def knn_topk(
     )
 
 
-def _topk_scorer(query_ids: list, query_vecs: list, k: int, out_schema):
+def _topk_scorer(query_ids: list, query_vecs, k: int, out_schema):
     """mapInArrow body: per partition, the top-k ``(query_id, id, score)``
-    rows of every query row.
+    rows of every query row.  ``query_vecs`` is an Arrow list array, one
+    vector per entry of ``query_ids``.
 
     The order is the merge window's (score desc, id asc), Spark's special
     values included: NaN sorts above every number, a null score last and a
@@ -104,30 +105,44 @@ def _topk_scorer(query_ids: list, query_vecs: list, k: int, out_schema):
     k-th key — ties included, so no row of the true top-k is dropped — and
     merges them into the running top-k under the exact order.
 
+    The query matrices are built here, on the driver, once: the closure
+    ships float64 numpy arrays, and no task re-reads the query vectors.
+
     Every function the workers run is nested in here, so cloudpickle ships
     it by value: the scoring needs numpy and pyarrow, not this package.
     The workers still import the package itself, because a session from
     ``session.get_spark`` runs them under ``worker_daemon`` (and puts the
     package on their path)."""
-    nq = len(query_vecs)
+    import numpy as np
+
+    nq = len(query_ids)
     block_rows = max(1, _BLOCK_BYTES // (8 * max(1, nq)))
 
-    def query_groups():
-        """Queries grouped by vector length: (query positions, d x |group|
-        float64 matrix).  A null vector, or one with a null element,
-        scores null against every row (as the fold does): it joins no
-        group."""
+    def layout(vectors):
+        """``(lengths, starts, values)`` of an Arrow list array: each
+        entry's length, -1 for a null vector or one with a null element
+        (the fold scores those null), its first element's offset in
+        ``values``, and the non-null entries' elements as float64."""
         import numpy as np
+        import pyarrow.compute as pc
 
-        by_len: dict[int, list[int]] = {}
-        for j, v in enumerate(query_vecs):
-            if v is not None and all(x is not None for x in v):
-                by_len.setdefault(len(v), []).append(j)
-        groups = []
-        for d, js in by_len.items():
-            qmat = np.array([query_vecs[j] for j in js], dtype=np.float64).reshape(len(js), d)
-            groups.append((np.array(js), qmat.T.copy()))
-        return groups
+        flat = vectors.flatten()  # the non-null vectors' elements, in row order
+        raw = pc.list_value_length(vectors).fill_null(0).to_numpy().astype(np.int64)
+        lengths = np.where(vectors.is_null().to_numpy(zero_copy_only=False), -1, raw)
+        if flat.null_count:
+            parent = np.repeat(np.arange(len(vectors)), raw)
+            lengths[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
+        values = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        return lengths, np.cumsum(raw) - raw, values
+
+    # Queries grouped by vector length: (query positions, d x |group|
+    # float64 matrix).  A query of length -1 scores null against every
+    # row: it joins no group.
+    q_lengths, q_starts, q_values = layout(query_vecs)
+    groups = []
+    for d in np.unique(q_lengths[q_lengths >= 0]):
+        js = np.flatnonzero(q_lengths == d)
+        groups.append((js, q_values[q_starts[js][None, :] + np.arange(d)[:, None]]))
 
     def fold_scores(vt, qt):
         """(rows, queries) dot products summed exactly like
@@ -144,24 +159,15 @@ def _topk_scorer(query_ids: list, query_vecs: list, k: int, out_schema):
             acc += prod
         return acc
 
-    def score_block(vectors, groups):
+    def score_block(vectors):
         """Scores of one block of vectors against every query, as
         ``(scores, null)``.  ``null`` marks the pairs the fold scores null
         — a null vector, a null element, or a length other than the
         query's — and is None when every pair has a score."""
         import numpy as np
-        import pyarrow.compute as pc
 
         n = len(vectors)
-        flat = vectors.flatten()  # the non-null vectors' elements, in row order
-        raw = pc.list_value_length(vectors).fill_null(0).to_numpy().astype(np.int64)
-        lengths = np.where(vectors.is_null().to_numpy(zero_copy_only=False), -1, raw)
-        if flat.null_count:
-            parent = np.repeat(np.arange(n), raw)
-            lengths[parent[flat.is_null().to_numpy(zero_copy_only=False)]] = -1
-        values = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-        starts = np.cumsum(raw) - raw
-
+        lengths, starts, values = layout(vectors)
         scores, null = np.zeros((n, nq)), np.ones((n, nq), dtype=bool)
         for qpos, qt in groups:
             d = qt.shape[0]
@@ -186,13 +192,12 @@ def _topk_scorer(query_ids: list, query_vecs: list, k: int, out_schema):
 
         if nq == 0 or k < 1:
             return
-        groups = query_groups()
         top: list[list[tuple]] = [[] for _ in range(nq)]
         bound = np.full(nq, np.inf)  # k-th kept key per query; inf until k kept
         for batch in batches:
             for off in range(0, batch.num_rows, block_rows):
                 block = batch.slice(off, block_rows)
-                scores, null = score_block(block.column(1), groups)
+                scores, null = score_block(block.column(1))
                 # a float key, smaller ranks first, never out of the order
                 key = -scores
                 key[np.isnan(scores)] = -np.inf
@@ -239,7 +244,7 @@ def similarity_join(
     entry points (SURVEY.md §2.4 Q2): score the index against every query
     by dot product, rank per query.
 
-    EAGER-ACTION contract: this runs ``queries.collect()`` AT PLAN-BUILD
+    EAGER-ACTION contract: this runs ``queries.toArrow()`` AT PLAN-BUILD
     TIME into a ``|Q| x d`` float64 matrix — a Spark job fires even if the
     returned plan is never collected, and on a non-checkpointed query
     frame that job recomputes its lineage.  Size bound: the matrix ships
@@ -258,7 +263,7 @@ def similarity_join(
 
     from ..partitioning import fan_out
 
-    qrows = queries.select(query_id_col, query_vec_col).collect()
+    qtable = queries.select(query_id_col, query_vec_col).toArrow()
     narrow_schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[query_id_col].dataType),
@@ -274,7 +279,9 @@ def similarity_join(
     # small-input repartition moves no payload text.
     scan = fan_out(emb.select(id_col, vec_col), id_col)
     narrow = scan.mapInArrow(
-        _topk_scorer([r[0] for r in qrows], [r[1] for r in qrows], k, arrow_schema),
+        _topk_scorer(
+            qtable.column(0).to_pylist(), qtable.column(1).combine_chunks(), k, arrow_schema
+        ),
         narrow_schema,
     )
 

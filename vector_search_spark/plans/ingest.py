@@ -1,7 +1,10 @@
 """Ingestion pipeline (reference SURVEY.md §3.4) as ONE lazy DataFrame chain:
 
 read markdown → chunk (T7) → enrich title/url (T8) → embed (E1) → write the
-partitioned parquet index table (S5/S7).
+partitioned parquet index table (S5/S7).  The index stores ``embedding`` as
+``array<float>``, 384-d by default (``encoders.EMBEDDING_DIM``): the
+reference's ``vector: float[384]``, at half the bytes of doubles in the
+write, its shuffle and every scan.
 
 The reference materializes every stage to disk and re-reads it
 (`embeddings_assets.py:46-51`, `encode_assets.py:20`, `store_assets.py:23`);
@@ -50,13 +53,14 @@ def build_index(
     docs: DataFrame,
     encoder: HashEncoder | None = None,
 ) -> DataFrame:
-    """Full ingest: chunks + unit-norm embedding column (E1).
+    """Full ingest: chunks + unit-norm ``array<float>`` embedding column
+    (E1), ``HashEncoder()`` (384-d) when ``encoder`` is None.
 
     The encoder UDF is Arrow-batched, stateless and embarrassingly
     parallel; swap ``HashEncoder`` for ``SentenceTransformerEncoder`` in
     production (same seam, SURVEY.md §2.3 E1).
     """
-    encoder = encoder or HashEncoder(dim=64)
+    encoder = encoder or HashEncoder()
     chunks = build_chunks(docs)
     return chunks.withColumn("embedding", encoder.udf()(F.col("text")))
 
