@@ -28,9 +28,8 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # pipelines that are nearly SIZE-INDEPENDENT (the iterative dup-graph
 # oracles re-run the whole shingle/LSH/verify/CC pipeline in SQL: 30-50 s
 # each at ANY fixture size, so no cheap smoke variant exists) are gated
-# behind SP_SLOW_TESTS=1.  They still run in the builder's per-round
-# full pass (recorded in OPTIMIZATION_r12.md) and their queries stay
-# covered by the fresh-process sf0.01 oracle drive committed in-tree.
+# behind SP_SLOW_TESTS=1.  The default run value-checks those queries
+# against their committed DuckDB rows instead (test_registry).
 SP_SLOW_TESTS = os.environ.get("SP_SLOW_TESTS", "") == "1"
 
 
@@ -80,17 +79,6 @@ def sweep_sample(names, always=RECENTLY_TOUCHED):
     return [n for i, n in enumerate(names) if i % 3 == 0 or n in always]
 
 
-def stream_sf(default: str) -> str:
-    """Fixture dir for the STREAMING drain-equals-batch twins.
-
-    SPARK_GRAFT_STREAM_SF redirects the whole streaming family to another
-    FK-consistent instance — used by the scale campaign to run the twins
-    against the 1000x fixture's replica slice (VERDICT r8 missing #4);
-    unset, each test keeps its default gate fixture.
-    """
-    import os
-
-    return os.environ.get("SPARK_GRAFT_STREAM_SF", default)
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -109,14 +97,20 @@ GOLDEN_ISSUE_CHUNKS = Counter({doc[0]: 0 for doc in GOLDEN_ISSUES})
 GOLDEN_ISSUE_CHUNKS.update(r[_PATH] for r in CHUNKER_GOLDEN["rows"] if r[_PATH] in GOLDEN_ISSUE_CHUNKS)
 
 
+def write_golden_issues(md: Path) -> str:
+    """Write the chunker golden's generated issues into the existing
+    directory ``md`` as ``YYYY-MM-DD.md`` files; returns its path."""
+    for name, _, content in GOLDEN_ISSUES:
+        (md / name).write_text(content, encoding="utf-8")
+    return str(md)
+
+
 @pytest.fixture
 def issue_dir(tmp_path):
     """The chunker golden's generated issues as ``YYYY-MM-DD.md`` files."""
     md = tmp_path / "md"
     md.mkdir()
-    for name, _, content in GOLDEN_ISSUES:
-        (md / name).write_text(content, encoding="utf-8")
-    return str(md)
+    return write_golden_issues(md)
 
 
 @pytest.fixture(scope="session")
@@ -160,27 +154,34 @@ def _norm_cell(v):
     return v
 
 
-def compare_with_oracle(spark_df, oracle_sql: str, sf_dir: str):
-    """Assert the Spark result and the DuckDB oracle match, order-insensitively,
-    with columns aligned by (sorted) name — the driver's comparison model."""
-    con = duck_con(sf_dir)
-    oracle = con.execute(oracle_sql)
-    o_cols = [d[0] for d in oracle.description]
-    o_rows = oracle.fetchall()
+def canonical_rows(cols, rows):
+    """Rows in the driver's comparison model: cells normalized by
+    `_norm_cell`, columns in sorted-name order, rows in a None-safe total
+    order (rollup rows contain NULLs)."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
 
+    def _key(row):
+        return tuple((v is None, str(v)) for v in row)
+
+    return sorted((tuple(_norm_cell(r[i]) for i in order) for r in rows), key=_key)
+
+
+def compare_rows(spark_df, o_cols, o_rows):
+    """Assert the Spark result equals the rows ``o_rows`` (columns
+    ``o_cols``), order-insensitively, with columns aligned by name."""
     s_cols = spark_df.columns
     s_rows = [tuple(r) for r in spark_df.collect()]
 
     assert sorted(s_cols) == sorted(o_cols), f"schema mismatch: {s_cols} vs {o_cols}"
     assert len(s_rows) == len(o_rows), f"row count {len(s_rows)} vs oracle {len(o_rows)}"
 
-    s_order = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-    o_order = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-
-    def _key(row):  # None-safe total ordering (rollup rows contain NULLs)
-        return tuple((v is None, str(v)) for v in row)
-
-    s_set = sorted((tuple(_norm_cell(r[i]) for i in s_order) for r in s_rows), key=_key)
-    o_set = sorted((tuple(_norm_cell(r[i]) for i in o_order) for r in o_rows), key=_key)
-    mismatches = [(a, b) for a, b in zip(s_set, o_set) if a != b]
+    pairs = zip(canonical_rows(s_cols, s_rows), canonical_rows(o_cols, o_rows))
+    mismatches = [(a, b) for a, b in pairs if a != b]
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[:3]}"
+
+
+def compare_with_oracle(spark_df, oracle_sql: str, sf_dir: str):
+    """Assert the Spark result and the DuckDB oracle match, order-insensitively,
+    with columns aligned by (sorted) name — the driver's comparison model."""
+    oracle = duck_con(sf_dir).execute(oracle_sql)
+    compare_rows(spark_df, [d[0] for d in oracle.description], oracle.fetchall())

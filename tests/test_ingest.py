@@ -26,7 +26,6 @@ from vector_search_spark.sources.files import (
 )
 
 MD_DIR = "/root/reference/data/raw/md"
-HTML_DIR = "/root/reference/data/raw/html"
 
 ISSUE_CHUNKS = sum(GOLDEN_ISSUE_CHUNKS.values())  # chunks of ``issue_dir``
 
@@ -42,25 +41,44 @@ def test_url_table_parse_and_sort(spark):
     assert [r["date"] for r in rows] == [dt.date(2020, 1, 30), dt.date(2020, 3, 5)]
 
 
-def test_html_dir_scan(spark):
-    df = read_html_dir(spark, HTML_DIR)
-    assert df.count() == 331
+def _page(title: str, body: str | None) -> str:
+    content = f'<div class="page__content"><p>{body}</p></div>' if body else ""
+    return (
+        '<html><body><header class="page__header">'
+        f"<h1>{title}</h1></header>{content}</body></html>"
+    )
+
+
+@pytest.fixture
+def html_dir(tmp_path):
+    """Three newsletter-shaped pages (one nested, one without a content
+    div) and a non-HTML file the reader must skip."""
+    root = tmp_path / "html"
+    (root / "2019").mkdir(parents=True)
+    (root / "a.html").write_text(_page("Issue A", "First idea."), encoding="utf-8")
+    (root / "2019" / "b.html").write_text(_page("Issue B", "Second idea."), encoding="utf-8")
+    (root / "c.html").write_text(_page("Issue C", None), encoding="utf-8")
+    (root / "notes.txt").write_text("not a page", encoding="utf-8")
+    return str(root)
+
+
+def test_html_dir_scan(spark, html_dir):
+    df = read_html_dir(spark, html_dir)
+    assert df.count() == 3
     assert set(df.columns) == {"path", "length", "content"}
 
 
-def test_html_to_markdown_plumbing(spark):
-    """Exercises the pandas-UDF seam on real corpus HTML (fallback parser
-    in this container — schema/distribution are under test, not fidelity)."""
-    html = (
-        read_html_dir(spark, HTML_DIR)
-        .limit(8)
-        .select("path", F.decode("content", "utf-8").alias("html"))
+def test_html_to_markdown_plumbing(spark, html_dir):
+    """Exercises the pandas-UDF seam: schema and row flow are under test,
+    not conversion fidelity (the HTML goldens check that)."""
+    html = read_html_dir(spark, html_dir).select(
+        "path", F.decode("content", "utf-8").alias("html")
     )
     out = html_docs_to_markdown(html).collect()
-    assert 0 < len(out) <= 8
+    # the page without a content div is dropped
+    assert sorted(r["title"] for r in out) == ["Issue A", "Issue B"]
     for r in out:
-        assert r["markdown"].startswith("# ")
-        assert r["title"]
+        assert r["markdown"].startswith(f"# {r['title']}\n\n")
 
 
 def test_index_build_and_write(spark, issue_dir, tmp_path):

@@ -81,7 +81,7 @@ def test_zorder_rewrite_bounds_both_dims(spark, tmp_path):
     assert avg_area < 256 / 3, spreads
 
 
-def test_zorder_morton_twins_agree():
+def test_zorder_morton_twins_agree(spark):
     """The Spark and DuckDB morton generators are the same bit math."""
     import duckdb
 
@@ -92,6 +92,9 @@ def test_zorder_morton_twins_agree():
         f"SELECT x, y, {morton_sql_duckdb('x', 'y', 4)} AS m"
         " FROM (SELECT unnest(range(16)) x), (SELECT unnest(range(16)) y)"
     ).fetchall()
+    grid = spark.range(16).toDF("x").crossJoin(spark.range(16).toDF("y"))
+    spark_rows = grid.selectExpr("x", "y", f"{morton_sql('x', 'y', 4)} AS m").collect()
+    assert sorted(map(tuple, spark_rows)) == sorted(rows)
 
     def py_morton(x, y, bits=4):
         m = 0

@@ -12,7 +12,7 @@ import pytest
 from conftest import SF_SMOKE, SF_TEST
 from vector_search_spark import registry
 from vector_search_spark.registry_analytics import _BLOOM_K, _BLOOM_M, _DP_M, _KMV_K, _dp_rungs
-from vector_search_spark.registry_dedup import _RUN_BLOCK
+from vector_search_spark.registry_dedup import BLOCK_TOKENS
 from vector_search_spark.registry_graph import _KCORE_K
 
 
@@ -132,10 +132,10 @@ def test_substring_runs_match_python_reconstruction(spark):
     per_doc = {}
     for doc_id, text in texts.items():
         toks = text.strip().lower().split()
-        n = len(toks) // _RUN_BLOCK + (1 if len(toks) % _RUN_BLOCK else 0)
+        n = len(toks) // BLOCK_TOKENS + (1 if len(toks) % BLOCK_TOKENS else 0)
         per_doc[doc_id] = n
         for b in range(n):
-            chunk = " ".join(toks[b * _RUN_BLOCK : (b + 1) * _RUN_BLOCK])
+            chunk = " ".join(toks[b * BLOCK_TOKENS : (b + 1) * BLOCK_TOKENS])
             h = hashlib.md5(chunk.encode()).hexdigest()
             blocks[h].append((doc_id, b))
     hits = defaultdict(set)  # (a,b) -> {(pa,pb)}

@@ -12,9 +12,7 @@ from vector_search_spark.streaming.events import (
     streaming_tumbling_counts,
 )
 
-from conftest import stream_sf
-
-SF = stream_sf("/root/testdata/sf0.001")
+from conftest import SF_SMOKE as SF
 
 
 def test_streaming_tumbling_equals_batch(spark):

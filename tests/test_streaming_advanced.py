@@ -117,9 +117,8 @@ def test_stream_stream_join_equals_batch_interval_join(spark):
         stream_stream_attribution_join,
     )
 
-    from conftest import stream_sf
+    from conftest import SF_SMOKE as SF
 
-    SF = stream_sf("/root/testdata/sf0.001")
     stream = stream_events_from_parquet(spark, SF)
     joined = stream_stream_attribution_join(stream)
     run_stream_to_memory(joined, "ssjoin_test", mode="append")
@@ -164,9 +163,8 @@ def test_streaming_hll_equals_batch_sketch(spark):
     )
     from vector_search_spark.streaming.stateful import streaming_hll_distinct
 
-    from conftest import stream_sf
+    from conftest import SF_SMOKE as SF
 
-    SF = stream_sf("/root/testdata/sf0.001")
     stream = stream_events_from_parquet(spark, SF)
     run_stream_to_memory(streaming_hll_distinct(stream), "hll_test", mode="update")
     # update mode: last emission per key is the drained state
@@ -200,8 +198,7 @@ def test_streaming_hdr_quantiles_equal_batch_sketch(spark):
     estimates exactly — bucket counts are additive and extraction is a
     pure fold, so micro-batching cannot change the result."""
     import pyspark.sql.functions as F
-    from conftest import SF_TEST as _sfd, stream_sf
-    SF_TEST = stream_sf(_sfd)
+    from conftest import SF_TEST
     from vector_search_spark.operators.sketches import hdr_quantile_sketch
     from vector_search_spark.sources.tables import load_table
     from vector_search_spark.streaming.events import (
@@ -240,8 +237,7 @@ def test_streaming_cms_no_undercount(spark):
     micro-batches) and its top-user estimate can never undercount the
     true per-user count (the CMS guarantee)."""
     import pyspark.sql.functions as F
-    from conftest import SF_TEST as _sfd, stream_sf
-    SF_TEST = stream_sf(_sfd)
+    from conftest import SF_TEST
     from vector_search_spark.operators.sketches import cms_counters
     from vector_search_spark.sources.tables import load_table
     from vector_search_spark.streaming.events import (
@@ -273,8 +269,7 @@ def test_streaming_session_funnel_equals_batch(spark):
     per-(user, sid) final stage times are the per-column max."""
     import pandas as pd
 
-    from conftest import SF_TEST as _sfd, stream_sf
-    SF_TEST = stream_sf(_sfd)
+    from conftest import SF_TEST
     from vector_search_spark import registry
     from vector_search_spark.streaming.events import stream_events_from_parquet
     from vector_search_spark.streaming.stateful import streaming_session_funnel
@@ -308,9 +303,8 @@ def test_streaming_exp_decay_equals_batch(spark):
     )
     from vector_search_spark.streaming.stateful import streaming_exp_decay
 
-    from conftest import stream_sf
+    from conftest import SF_SMOKE as SF
 
-    SF = stream_sf("/root/testdata/sf0.001")
     stream = stream_events_from_parquet(spark, SF)
     run_stream_to_memory(streaming_exp_decay(stream), "expdecay_test", mode="update")
     got = {

@@ -8,9 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from conftest import SF_TEST as _SF_DEFAULT, stream_sf
-
-SF_TEST = stream_sf(_SF_DEFAULT)
+from conftest import SF_TEST
 from vector_search_spark import registry
 from vector_search_spark.sources.tables import load_table
 from vector_search_spark.streaming.dedup import (

@@ -4,8 +4,9 @@
 - relevance label: `query.py:21-27` (logit ≥3 high / ≥0 medium / else low)
 
 Both are pure Catalyst expressions (SURVEY.md §2.3) — no UDF.  The
-SQL-text helpers below (``_CENTS``, ``_fdiv``) are shared by the query
-registry's modules for their DuckDB oracles and shared expression text.
+SQL-text helpers below (``_CENTS``, ``_fdiv``, ``_SQL_SPLIT_BUCKET``) are
+shared by the query registry's modules for their DuckDB oracles and
+shared expression text.
 """
 
 from __future__ import annotations
@@ -43,6 +44,21 @@ def _fdiv(a: str, b: str) -> str:
     return (
         f"CAST((({a}) - (((({a}) % ({b})) + ({b})) % ({b}))) / ({b}) AS BIGINT)"
     )
+
+
+def split_bucket(id_col: str) -> Column:
+    """Train/eval bucket of an id in [0, 100): the first 8 hex digits of
+    the md5 of the salted id, mod 100.  A bucket below 90 is train, the
+    rest eval.  SQL twin (over ``doc_id``): ``_SQL_SPLIT_BUCKET``."""
+    return (
+        F.conv(
+            F.substring(F.md5(F.concat(F.lit("split:"), F.col(id_col).cast("string"))), 1, 8),
+            16, 10,
+        ).cast("long") % 100
+    )
+
+
+_SQL_SPLIT_BUCKET = "('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 8))::BIGINT % 100"
 
 
 def sigmoid(x: Column | str) -> Column:

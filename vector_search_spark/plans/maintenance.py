@@ -57,29 +57,31 @@ def clustered_rewrite(
     )
 
 
-def morton_sql(x_expr: str, y_expr: str, bits: int, shl: str = "shiftleft", shr: str = "shiftright") -> str:
-    """Morton (Z-order) interleave of two ``bits``-bit bucket expressions as
-    a SQL string: bit i of x lands at position 2i, bit i of y at 2i+1.
-    Generated from one loop so the Spark and DuckDB forms cannot drift —
-    DuckDB callers pass ``shl``/``shr`` as operators via
-    ``morton_sql_duckdb``.  Pure integer bit math: deterministic on any
-    engine, and the code ORDER is what matters — points close in (x, y)
-    get close morton codes, so range-clustering on the code gives 2-D
-    locality single-column clustering can't."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"{shl}(({shr}({x_expr}, {i}) & 1), {2 * i})")
-        terms.append(f"{shl}(({shr}({y_expr}, {i}) & 1), {2 * i + 1})")
+def _interleave(x_expr: str, y_expr: str, bits: int, bit: str) -> str:
+    """OR of one ``bit`` term per input bit, x's bit i at 2i and y's at
+    2i+1; ``bit`` formats ``{e}``'s bit ``{i}`` moved to position ``{p}``."""
+    terms = (
+        bit.format(e=e, i=i, p=2 * i + k)
+        for i in range(bits)
+        for k, e in enumerate((x_expr, y_expr))
+    )
     return "(" + " | ".join(terms) + ")"
+
+
+def morton_sql(x_expr: str, y_expr: str, bits: int) -> str:
+    """Morton (Z-order) interleave of two ``bits``-bit bucket expressions as
+    a Spark SQL string: bit i of x lands at position 2i, bit i of y at 2i+1.
+    ``morton_sql_duckdb`` is generated by the same loop (``_interleave``),
+    so the Spark and DuckDB forms cannot drift.  Pure integer bit math:
+    deterministic on any engine, and the code ORDER is what matters —
+    points close in (x, y) get close morton codes, so range-clustering on
+    the code gives 2-D locality single-column clustering can't."""
+    return _interleave(x_expr, y_expr, bits, "shiftleft((shiftright({e}, {i}) & 1), {p})")
 
 
 def morton_sql_duckdb(x_expr: str, y_expr: str, bits: int) -> str:
     """DuckDB twin of ``morton_sql`` using infix shift operators."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(((({x_expr}) >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((({y_expr}) >> {i}) & 1) << {2 * i + 1})")
-    return "(" + " | ".join(terms) + ")"
+    return _interleave(x_expr, y_expr, bits, "(((({e}) >> {i}) & 1) << {p})")
 
 
 def zorder_rewrite(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import artifact, register
-from .functions.scalar import round4
+from .functions.scalar import _SQL_SPLIT_BUCKET, round4, split_bucket
 from .operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup_groups,
@@ -126,13 +126,20 @@ def _shared_simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- shared SQL fragments ---------------------------------------------------
-# Distinct word 3-gram shingles per doc (tokens = lower/trim/split on \s+).
-_SQL_SHINGLES = """
-toks AS (
+# Each fragment is the DuckDB twin of one shared stage; an oracle that needs
+# the stage splices the fragment in, so every stage's SQL exists once.
+
+# Twin of the tokenizer under `_shared_shingles` and `_shared_token_blocks`:
+# one row per token of trim(lower(text)) split on \s+, with its 1-based ordinal.
+_SQL_TOKS = """toks AS (
   SELECT doc_id,
          unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
          generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-  FROM documents),
+  FROM documents)"""
+
+# Twin of `_shared_shingles`: distinct word 3-gram shingles per doc.
+_SQL_SHINGLES = f"""
+{_SQL_TOKS},
 sh AS (
   SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
   FROM toks a
@@ -143,6 +150,7 @@ sh AS (
 
 MINHASH_PRIME = 4294967311  # twin of operators.dedup.MINHASH_PRIME
 
+# Twin of `_shared_signatures`: NUM_HASHES minhash components per doc.
 _SQL_MINHASH_AGGS = ",\n           ".join(
     f"min((hh.h1 + {h} * hh.h2) % {MINHASH_PRIME}) AS h{h}" for h in range(NUM_HASHES)
 )
@@ -169,6 +177,47 @@ _SQL_CAND = " UNION ".join(
 _SQL_AGREE = " + ".join(
     f"CASE WHEN s1.h{h} = s2.h{h} THEN 1 ELSE 0 END" for h in range(NUM_HASHES)
 )
+
+# Twin of `_shared_lsh_candidates` without its est_jaccard: the band-key
+# self-joins of the signatures (a pair appears once per band it shares).
+_SQL_LSH_CAND = f"""{_SQL_SHINGLES},
+    {_SQL_SIG},
+    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
+    cand AS ({_SQL_CAND})"""
+
+# Twin of `_shared_verified_pairs`: candidates whose signatures agree on
+# >= 0.5 of their components and whose exact shingle Jaccard is >= 0.8.
+_SQL_VERIFIED = f"""{_SQL_LSH_CAND},
+    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    shared AS (
+      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
+      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
+      GROUP BY 1, 2),
+    verified AS (
+      SELECT s.id_1, s.id_2
+      FROM shared s
+      JOIN sizes n1 ON s.id_1 = n1.doc_id
+      JOIN sizes n2 ON s.id_2 = n2.doc_id
+      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
+        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
+      JOIN sig s1 ON c.id_1 = s1.doc_id
+      JOIN sig s2 ON c.id_2 = s2.doc_id
+      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
+        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8)"""
+
+# Twin of `_shared_sym_edges`: each verified pair in both directions.
+_SQL_SYM_EDGES = f"""{_SQL_VERIFIED},
+    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
+              UNION SELECT id_2, id_1 FROM verified)"""
+
+# Twin of `_shared_components` (needs WITH RECURSIVE): one (doc_id, root)
+# row per node root that reaches doc_id, so min(root) is the component label.
+_SQL_REACH = f"""{_SQL_SYM_EDGES},
+    nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
+    reach(doc_id, root) AS (
+      SELECT doc_id, doc_id FROM nodes
+      UNION
+      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id)"""
 
 
 # ---------------------------------------------------------------------------
@@ -368,26 +417,7 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cascade_keep",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8)
+    WITH {_SQL_VERIFIED}
     SELECT doc_id FROM documents
     WHERE doc_id NOT IN (SELECT id_2 FROM verified)
     ORDER BY doc_id
@@ -405,12 +435,10 @@ def q_dedup_cascade_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Train/eval contamination: near-duplicate pairs that CROSS the split.
 # ---------------------------------------------------------------------------
-_SQL_SPLIT = """
+_SQL_SPLIT = f"""
     split AS (
       SELECT doc_id,
-             CASE WHEN ('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 8))::BIGINT
-                       % 100 < 90
-                  THEN 'train' ELSE 'eval' END AS split
+             CASE WHEN {_SQL_SPLIT_BUCKET} < 90 THEN 'train' ELSE 'eval' END AS split
       FROM documents)
 """
 
@@ -454,13 +482,7 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(salt:id) bucket as `train_eval_split`, so the contamination report
     is consistent with the split the pipeline actually ships.
     """
-    bucket_of = lambda c: (  # noqa: E731 — twin of registry_text split
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col(c).cast("string"))), 1, 8),
-            16, 10,
-        ).cast("long") % 100
-    )
-    split_of = lambda c: F.when(bucket_of(c) < 90, F.lit("train")).otherwise(  # noqa: E731
+    split_of = lambda c: F.when(split_bucket(c) < 90, F.lit("train")).otherwise(  # noqa: E731
         F.lit("eval")
     )
     pairs = _shared_lsh_candidates(spark, sf_dir).filter(F.col("est_jaccard") >= 0.5)
@@ -481,33 +503,7 @@ def q_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
-    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
-              UNION SELECT id_2, id_1 FROM verified),
-    nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-    reach(doc_id, root) AS (
-      SELECT doc_id, doc_id FROM nodes
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id),
+    WITH RECURSIVE {_SQL_REACH},
     clusters AS (SELECT doc_id, min(root) AS cluster_id FROM reach GROUP BY doc_id),
     csize AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size
               FROM clusters GROUP BY 1)
@@ -646,15 +642,9 @@ def q_eval_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     for free), which changes nothing semantically.  All counts are exact
     BIGINTs; the one float ratio is computed once per output row.
     """
-    bucket_of = lambda c: (  # noqa: E731 — twin of registry_text split
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col(c).cast("string"))), 1, 8),
-            16, 10,
-        ).cast("long") % 100
-    )
     sh = _shared_shingles(spark, sf_dir).withColumn(
         "__split",
-        F.when(bucket_of("doc_id") < 90, F.lit("train")).otherwise(F.lit("eval")),
+        F.when(split_bucket("doc_id") < 90, F.lit("train")).otherwise(F.lit("eval")),
     )
     train_sh = sh.filter(F.col("__split") == "train").select("shingle").distinct()
     ev = sh.filter(F.col("__split") == "eval").select("doc_id", "shingle")
@@ -684,33 +674,7 @@ def q_eval_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_sampling_weights",
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
-    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
-              UNION SELECT id_2, id_1 FROM verified),
-    nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-    reach(doc_id, root) AS (
-      SELECT doc_id, doc_id FROM nodes
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id),
+    WITH RECURSIVE {_SQL_REACH},
     clusters AS (SELECT doc_id, min(root) AS cluster_id FROM reach GROUP BY doc_id),
     csize AS (SELECT cluster_id, count(*)::BIGINT AS cluster_size
               FROM clusters GROUP BY 1),
@@ -779,10 +743,7 @@ def q_dup_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "incremental_ingest_dedup",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
+    WITH {_SQL_LSH_CAND},
     {_SQL_SPLIT},
     cross_cut AS (
       SELECT DISTINCT c.id_1, c.id_2
@@ -843,13 +804,7 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax by jaccard with id tie-break) is one narrow aggregate.
     NULL-free sentinels (-1) keep the driver comparator int-typed.
     """
-    bucket_of = lambda c: (  # noqa: E731 — twin of _SQL_SPLIT
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col(c).cast("string"))), 1, 8),
-            16, 10,
-        ).cast("long") % 100
-    )
-    is_new = lambda c: bucket_of(c) >= 90  # noqa: E731
+    is_new = lambda c: split_bucket(c) >= 90  # noqa: E731
     cand = (
         _shared_lsh_candidates(spark, sf_dir)
         .filter(F.col("est_jaccard") >= 0.5)
@@ -867,8 +822,6 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(is_new("id_1"), F.col("id_2")).otherwise(F.col("id_1")).alias("old_id"),
         F.col("jaccard").alias("jac"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("new_id").orderBy(F.desc("jac"), F.asc("old_id"))
     best = (
         oriented.withColumn("__rn", F.row_number().over(w))
@@ -901,26 +854,7 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_overlap_matrix",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8)
+    WITH {_SQL_VERIFIED}
     SELECT least(d1.source, d2.source) AS source_a,
            greatest(d1.source, d2.source) AS source_b,
            count(*)::BIGINT AS n_dup_pairs
@@ -968,26 +902,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_degree_distribution",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
+    WITH {_SQL_VERIFIED},
     deg AS (
       SELECT doc_id, count(*)::BIGINT AS degree
       FROM (SELECT id_1 AS doc_id FROM verified
@@ -1034,28 +949,7 @@ PAGERANK_ITER = 5
 @register(
     "dup_graph_pagerank",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
-    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
-              UNION SELECT id_2, id_1 FROM verified),
+    WITH {_SQL_SYM_EDGES},
     deg AS (SELECT a AS doc_id, count(*)::BIGINT AS deg FROM edges GROUP BY a),
     r0 AS (SELECT DISTINCT a AS doc_id, 1000000::BIGINT AS r FROM edges),
     r1 AS (
@@ -1209,26 +1103,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dup_graph_triangles",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
+    WITH {_SQL_VERIFIED},
     tri AS (
       SELECT x.id_1 AS a, x.id_2 AS b, y.id_2 AS c
       FROM verified x
@@ -1351,11 +1226,7 @@ def _shared_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "subdoc_block_dedup",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents),
+    WITH {_SQL_TOKS},
     blocks AS (
       SELECT doc_id, (ord - 1) // {BLOCK_TOKENS} AS block_id,
              md5(string_agg(tok, ' ' ORDER BY ord)) AS block_hash
@@ -1426,10 +1297,7 @@ CONTAINMENT_THRESHOLD = 0.9
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
+    WITH {_SQL_LSH_CAND},
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     shared AS (
       SELECT c.id_1, c.id_2, count(*) AS shared
@@ -1700,10 +1568,7 @@ EDIT_CMP_CHARS = 1000  # compare at most this many leading chars per side
 @register(
     "dedup_edit_distance",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
+    WITH {_SQL_LSH_CAND},
     {_SQL_CAND05_PAIRS},
     t AS (SELECT doc_id, substr(text, 1, {EDIT_CMP_CHARS}) AS t FROM documents),
     scored AS (
@@ -1768,34 +1633,10 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Link prediction on the dup graph: neighborhood Jaccard similarity.
 # ---------------------------------------------------------------------------
-_SQL_VERIFIED_BLOCK = f"""
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8)
-"""
-
-
 @register(
     "dup_neighbor_jaccard",
     oracle=f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    {_SQL_VERIFIED_BLOCK},
+    WITH {_SQL_VERIFIED},
     edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
               UNION ALL SELECT id_2, id_1 FROM verified),
     deg AS (SELECT a AS n, count(*)::BIGINT AS degree FROM edges GROUP BY 1),
@@ -1871,11 +1712,7 @@ def q_dup_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "subdoc_dedup_rewrite",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents),
+    WITH {_SQL_TOKS},
     blocks AS (
       SELECT doc_id, (ord - 1) // {BLOCK_TOKENS} AS block_id,
              md5(string_agg(tok, ' ' ORDER BY ord)) AS block_hash,
@@ -1953,33 +1790,7 @@ def q_subdoc_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_cluster_keep_best",
     oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-      SELECT x.doc_id AS id_1, y.doc_id AS id_2, count(*) AS shared
-      FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY 1, 2),
-    verified AS (
-      SELECT s.id_1, s.id_2
-      FROM shared s
-      JOIN sizes n1 ON s.id_1 = n1.doc_id
-      JOIN sizes n2 ON s.id_2 = n2.doc_id
-      JOIN (SELECT DISTINCT id_1, id_2 FROM cand) c
-        ON c.id_1 = s.id_1 AND c.id_2 = s.id_2
-      JOIN sig s1 ON c.id_1 = s1.doc_id
-      JOIN sig s2 ON c.id_2 = s2.doc_id
-      WHERE ({_SQL_AGREE}) / {NUM_HASHES}.0 >= 0.5
-        AND s.shared * CAST(1.0 AS DOUBLE) / (n1.n_sh + n2.n_sh - s.shared) >= 0.8),
-    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
-              UNION SELECT id_2, id_1 FROM verified),
-    nodes AS (SELECT DISTINCT a AS doc_id FROM edges),
-    reach(doc_id, root) AS (
-      SELECT doc_id, doc_id FROM nodes
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id),
+    WITH RECURSIVE {_SQL_REACH},
     clusters AS (SELECT doc_id, min(root) AS cluster_id FROM reach
                  GROUP BY doc_id),
     best AS (
@@ -2204,20 +2015,15 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Maximal duplicated-substring runs between near-dup documents
 # (gaps-and-islands over shared token-block positions).
 # ---------------------------------------------------------------------------
-_RUN_BLOCK = 16
 _RUN_MAXDOCS = 50
 
 
 @register(
     "dup_substring_runs",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents),
+    WITH {_SQL_TOKS},
     blocks AS (
-      SELECT doc_id, (ord - 1) // {_RUN_BLOCK} AS block_id,
+      SELECT doc_id, (ord - 1) // {BLOCK_TOKENS} AS block_id,
              md5(string_agg(tok, ' ' ORDER BY ord)) AS block_hash
       FROM toks GROUP BY 1, 2),
     freq AS (

@@ -1,7 +1,7 @@
 """Registry entries: dup-graph / random-walk algorithms (label-propagation communities, eigenvector centrality, k-core, BFS hops, modularity, double-sweep diameter, personalized PageRank, Markov hitting times, TextRank).
 
-Query names and oracle texts are the stable contract; module moves keep
-them byte-identical.
+Query names and oracle texts are the stable contract: a refactor keeps
+each oracle text identical apart from whitespace.
 """
 
 from __future__ import annotations
@@ -12,11 +12,9 @@ from pyspark.sql import functions as F
 from .catalog import artifact, register
 from .functions.scalar import _fdiv
 from .registry_dedup import (
-    _SQL_BAND_KEYS,
-    _SQL_CAND,
-    _SQL_SHINGLES,
-    _SQL_SIG,
-    _SQL_VERIFIED_BLOCK,
+    _SQL_REACH,
+    _SQL_SYM_EDGES,
+    _SQL_VERIFIED,
     _shared_components,
     _shared_sym_edges,
 )
@@ -25,15 +23,14 @@ from .sources.tables import load_table as _t
 
 
 # Shared oracle prefix: the verified near-dup graph as symmetric edges.
-_SQL_DUP_EDGES = f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    {_SQL_VERIFIED_BLOCK},
-    edges AS (SELECT id_1 AS a, id_2 AS b FROM verified
-              UNION SELECT id_2, id_1 FROM verified)
-"""
+_SQL_DUP_EDGES = f"WITH {_SQL_SYM_EDGES}"
+# The same graph and its component walk, with `edges` and `nodes` as
+# MATERIALIZED CTEs.
+_SQL_DUP_REACH = (
+    f"WITH RECURSIVE {_SQL_REACH}"
+    .replace("edges AS (SELECT", "edges AS MATERIALIZED (SELECT")
+    .replace("nodes AS (", "nodes AS MATERIALIZED (")
+)
 
 
 # ---------------------------------------------------------------------------
@@ -333,15 +330,8 @@ _SQL_MOD_TAIL = f"""
 
 @register(
     "dup_community_modularity",
-    oracle=_SQL_DUP_EDGES.replace("WITH ", "WITH RECURSIVE ", 1).replace(
-        "edges AS (SELECT", "edges AS MATERIALIZED (SELECT"
-    )
+    oracle=_SQL_DUP_REACH
     + """,
-    nodes AS MATERIALIZED (SELECT DISTINCT a AS doc_id FROM edges),
-    reach(doc_id, root) AS (
-      SELECT doc_id, doc_id FROM nodes
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id),
     lab_cc AS (SELECT 'components' AS scheme, doc_id,
                       min(root)::BIGINT AS community
                FROM reach GROUP BY doc_id),
@@ -622,15 +612,8 @@ def _sweep_sql(tag: str, start: str, rounds: int) -> str:
 
 @register(
     "graph_double_sweep_diameter",
-    oracle=_SQL_DUP_EDGES.replace("WITH ", "WITH RECURSIVE ", 1).replace(
-        "edges AS (SELECT", "edges AS MATERIALIZED (SELECT"
-    )
+    oracle=_SQL_DUP_REACH
     + f""",
-    nodes AS MATERIALIZED (SELECT DISTINCT a AS doc_id FROM edges),
-    reach(doc_id, root) AS (
-      SELECT doc_id, doc_id FROM nodes
-      UNION
-      SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.doc_id),
     cc AS MATERIALIZED (SELECT doc_id, min(root)::BIGINT AS comp
                         FROM reach GROUP BY doc_id),
     s0 AS (SELECT comp, comp AS doc_id, 0::BIGINT AS dist FROM cc GROUP BY comp),
@@ -1018,11 +1001,7 @@ def _kcore_oracle() -> str:
         )
     last = _KCORE_ROUNDS
     return f"""
-    WITH {_SQL_SHINGLES},
-    {_SQL_SIG},
-    banded AS (SELECT doc_id, {_SQL_BAND_KEYS} FROM sig),
-    cand AS ({_SQL_CAND}),
-    {_SQL_VERIFIED_BLOCK},
+    WITH {_SQL_VERIFIED},
     e0 AS MATERIALIZED (SELECT id_1 AS a, id_2 AS b FROM verified
            UNION ALL SELECT id_2, id_1 FROM verified),
     {",".join(rounds)}

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import artifact, register
-from .functions.scalar import round4
+from .functions.scalar import _SQL_SPLIT_BUCKET, round4, split_bucket
 from .functions.text import BPE_TOKEN_PATTERN, PUNCT_PATTERN, STOPWORDS
 from .sources.tables import load_table as __load
 
@@ -396,12 +396,10 @@ def q_bigram_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "train_eval_split",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT lang,
-             CASE WHEN ('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 8))::BIGINT
-                       % 100 < 90
-                  THEN 'train' ELSE 'eval' END AS split,
+             CASE WHEN {_SQL_SPLIT_BUCKET} < 90 THEN 'train' ELSE 'eval' END AS split,
              length(text) AS n_chars
       FROM documents)
     SELECT lang, split, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS total_chars
@@ -415,16 +413,12 @@ def q_train_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, and cluster sizes — never `rand()`.  Aggregated per (lang,
     split) for a stable, comparable result."""
     docs = __load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("long") % 100
-    )
     return (
         docs.select(
             "lang",
-            F.when(bucket < 90, F.lit("train")).otherwise(F.lit("eval")).alias("split"),
+            F.when(split_bucket("doc_id") < 90, F.lit("train"))
+            .otherwise(F.lit("eval"))
+            .alias("split"),
             F.length("text").alias("n_chars"),
         )
         .groupBy("lang", "split")
