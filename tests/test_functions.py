@@ -4,10 +4,18 @@ from __future__ import annotations
 
 import hashlib
 import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from vector_search_spark.functions.scalar import relevance_label, round4, sigmoid
+from vector_search_spark.functions.scalar import (
+    relevance_label,
+    round4,
+    salted_hash,
+    salted_hash_sql,
+    sigmoid,
+    split_bucket,
+)
 from vector_search_spark.functions.text import (
     BPE_TOKEN_PATTERN,
     rolling_hash,
@@ -77,3 +85,81 @@ def test_word_shingles_short_doc_fallback(spark):
     rows = [r[0] for r in df.select(word_shingles("t", 3).alias("s")).collect()]
     assert rows[0] == ["a b"]  # shorter than n -> whole-text shingle
     assert rows[1] == ["one two three", "two three four"]
+
+
+def test_salted_hash_twins_agree(spark):
+    """The Spark and DuckDB salted hashes give the same BIGINT (NULL for a
+    NULL id), and it is the leading hex digits of md5(salt || ids)."""
+    import duckdb
+
+    rows = [
+        (0, 0, "a|b:c"),
+        (1, -1, "ünï|cödé:✓"),
+        (2, 2**62, None),
+        (3, None, ""),
+    ]
+    cols = {
+        "h8": (salted_hash("t:", "i"), salted_hash_sql("t:", "i")),
+        "h15": (salted_hash("t:", "i", digits=15), salted_hash_sql("t:", "i", digits=15)),
+        "hs": (salted_hash("t:", "s", digits=15), salted_hash_sql("t:", "s", digits=15)),
+        "h2": (
+            salted_hash("t:", "i", "s", sep="-"),
+            salted_hash_sql("t:", "i", "s", sep="-"),
+        ),
+        "bucket": (split_bucket("i"), f"{salted_hash_sql('split:', 'i')} % 100"),
+    }
+    df = spark.createDataFrame(rows, "k int, i long, s string")
+    got = [
+        tuple(r)
+        for r in df.select("k", *[c.alias(n) for n, (c, _) in cols.items()]).orderBy("k").collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k INTEGER, i BIGINT, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    sql = ", ".join(f"{text} AS {n}" for n, (_, text) in cols.items())
+    want = con.execute(f"SELECT k, {sql} FROM t ORDER BY k").fetchall()
+    assert got == want
+
+    def py(salt, *ids, sep="", digits=8):
+        if any(x is None for x in ids):
+            return None
+        return int(hashlib.md5((salt + sep.join(map(str, ids))).encode()).hexdigest()[:digits], 16)
+
+    for (k, i, s), row in zip(rows, got):
+        assert row == (
+            k,
+            py("t:", i),
+            py("t:", i, digits=15),
+            py("t:", s, digits=15),
+            py("t:", i, s, sep="-"),
+            None if i is None else py("split:", i) % 100,
+        )
+
+
+# Spellings of the md5 -> BIGINT idiom that hash something other than a
+# salted id, keyed by file; each entry is the md5 argument, whitespace removed.
+_HASH_IDIOM_ALLOWED = {
+    # simhash feature hash: twin of operators.dedup._md5_hash64's concat_ws(':', '0', shingle)
+    "registry_dedup.py": ["'0'||':'||shingle"],
+    # multimodal stub feature bytes: 2-hex-digit slices of md5('ph2|' || text)
+    "registry_extensions.py": ["'ph2|'||text"],
+    # twin of encoders.hash_rerank_score's concat_ws('|', query, text)
+    "registry_search.py": ["'whatisspark'||'|'||text"],
+}
+
+
+def test_salted_hash_is_spelled_once():
+    """Outside functions/scalar.py the package builds every salted md5 hash
+    with salted_hash / salted_hash_sql, not by spelling the idiom out."""
+    pkg = Path(__file__).resolve().parents[1] / "vector_search_spark"
+    spark_form = "F.conv(F.substring(F.md5(F.concat(F.lit("
+    sql_form = re.compile(r"\('0x'\|\|substr\(md5\(('[^)]*)\)")
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "functions/scalar.py":
+            continue
+        text = "".join(path.read_text(encoding="utf-8").split())
+        hits = sql_form.findall(text) + [spark_form] * text.count(spark_form)
+        if hits:
+            found[path.name] = hits
+    assert found == _HASH_IDIOM_ALLOWED

@@ -2,11 +2,15 @@
 
 - sigmoid: `query.py:16-18` of the reference (logit → probability)
 - relevance label: `query.py:21-27` (logit ≥3 high / ≥0 medium / else low)
+- salted_hash: the engine's one deterministic hash, the leading hex digits
+  of md5(salt || id) as a BIGINT.  Every seeded draw (train/eval split,
+  A/B arm, CV fold, shard, negative sample, HLL/CMS/Bloom register) is
+  built from it; ``split_bucket`` is its train/eval instance.
 
-Both are pure Catalyst expressions (SURVEY.md §2.3) — no UDF.  The
-SQL-text helpers below (``_CENTS``, ``_fdiv``, ``_SQL_SPLIT_BUCKET``) are
-shared by the query registry's modules for their DuckDB oracles and
-shared expression text.
+All are pure Catalyst expressions (SURVEY.md §2.3) — no UDF.  The
+SQL-text helpers below (``_CENTS``, ``_fdiv``, ``salted_hash_sql``,
+``_SQL_SPLIT_BUCKET``) are shared by the query registry's modules for
+their DuckDB oracles and shared expression text.
 """
 
 from __future__ import annotations
@@ -46,19 +50,44 @@ def _fdiv(a: str, b: str) -> str:
     )
 
 
+def salted_hash(
+    salt: str,
+    col: Column | str,
+    col2: Column | str | None = None,
+    *,
+    sep: str = ":",
+    digits: int = 8,
+) -> Column:
+    """Non-negative BIGINT from the first ``digits`` (8 or 15) hex digits
+    of ``md5(salt || col [|| sep || col2])``, ids cast to string.  NULL in,
+    NULL out.  Callers apply their own ``% n``, shift or threshold.  SQL
+    twin: ``salted_hash_sql``."""
+    parts = [F.lit(salt), (F.col(col) if isinstance(col, str) else col).cast("string")]
+    if col2 is not None:
+        parts += [F.lit(sep), (F.col(col2) if isinstance(col2, str) else col2).cast("string")]
+    return F.conv(F.substring(F.md5(F.concat(*parts)), 1, digits), 16, 10).cast("long")
+
+
+def salted_hash_sql(
+    salt: str, col: str, col2: str | None = None, *, sep: str = ":", digits: int = 8
+) -> str:
+    """DuckDB text of ``salted_hash``: ``col``/``col2`` are SQL terms (wrap
+    a compound expression in parentheses) and ``salt``/``sep`` are quoted
+    as literals."""
+    text = f"'{salt}' || {col}::VARCHAR"
+    if col2 is not None:
+        text += f" || '{sep}' || {col2}::VARCHAR"
+    return f"('0x' || substr(md5({text}), 1, {digits}))::BIGINT"
+
+
 def split_bucket(id_col: str) -> Column:
-    """Train/eval bucket of an id in [0, 100): the first 8 hex digits of
-    the md5 of the salted id, mod 100.  A bucket below 90 is train, the
-    rest eval.  SQL twin (over ``doc_id``): ``_SQL_SPLIT_BUCKET``."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col(id_col).cast("string"))), 1, 8),
-            16, 10,
-        ).cast("long") % 100
-    )
+    """Train/eval bucket of an id in [0, 100): the salted hash of the id
+    mod 100.  A bucket below 90 is train, the rest eval.  SQL twin (over
+    ``doc_id``): ``_SQL_SPLIT_BUCKET``."""
+    return salted_hash("split:", id_col) % 100
 
 
-_SQL_SPLIT_BUCKET = "('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 8))::BIGINT % 100"
+_SQL_SPLIT_BUCKET = salted_hash_sql("split:", "doc_id") + " % 100"
 
 
 def sigmoid(x: Column | str) -> Column:

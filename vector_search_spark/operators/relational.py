@@ -162,6 +162,27 @@ def user_running_value(events: DataFrame, mov_n: int = 3) -> DataFrame:
     )
 
 
+def daily_purchase_cents(events: DataFrame) -> DataFrame:
+    """Daily purchase revenue: one row per UTC day with ``cents`` = the
+    BIGINT sum of per-purchase cents.  Lazy — each caller decides whether
+    to checkpoint it.  DuckDB twin: ``WITH {DAILY_PURCHASE_CENTS_SQL}``."""
+    return (
+        events.filter(F.col("event_type") == "purchase")
+        .groupBy(F.col("ts").cast("date").alias("day"))
+        .agg(
+            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
+            .cast("long")
+            .alias("cents")
+        )
+    )
+
+
+DAILY_PURCHASE_CENTS_SQL = """daily AS (
+      SELECT CAST(ts AS DATE) AS day,
+             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
+      FROM events WHERE event_type = 'purchase' GROUP BY 1)"""
+
+
 def customers_without_recent_orders(
     customer: DataFrame, orders: DataFrame, since: str = "2001-01-01"
 ) -> DataFrame:

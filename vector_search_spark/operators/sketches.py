@@ -1,9 +1,10 @@
 """Sketch-based approximate aggregation (north-star: 100 TB cardinality).
 
-HyperLogLog distinct-count built from pure Catalyst expressions and an
-md5-derived hash, so the whole sketch is (a) deterministic across engines,
-runs and cluster sizes, and (b) bit-reproducible by an ANSI-SQL oracle —
-unlike ``approx_count_distinct`` whose HLL++ registers are opaque.
+HyperLogLog distinct-count built from pure Catalyst expressions and the
+engine's salted md5 hash (``functions.scalar.salted_hash``), so the whole
+sketch is (a) deterministic across engines, runs and cluster sizes, and
+(b) bit-reproducible by an ANSI-SQL oracle (``salted_hash_sql``) — unlike
+``approx_count_distinct`` whose HLL++ registers are opaque.
 
 Scale shape: one scan → partial ``max`` per (group, bucket) register
 (map-side combined, at most ``groups × m`` rows ever shuffled — for
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.scalar import salted_hash, salted_hash_sql
 
 # p = 9 → m = 512 registers; relative error ≈ 1.04/sqrt(512) ≈ 4.6 %.
 HLL_P = 9
@@ -48,11 +51,7 @@ def hll_registers(
     """
     groups = [group] if isinstance(group, str) else list(group)
     value = F.col(value) if isinstance(value, str) else value
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll:"), value.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = salted_hash("hll:", value, digits=15)
     bucket = F.shiftright(h, _REST_BITS)
     rest = h.bitwiseAND(F.lit((1 << _REST_BITS) - 1))
     # leading zeros of a REST_BITS-wide field + 1; length(bin(x)) is exact
@@ -109,7 +108,7 @@ def hll_oracle_sql(source_sql: str, group: str, value_expr: str) -> str:
     return f"""
     WITH hashed AS (
       SELECT {group},
-             ('0x' || substr(md5('hll:' || ({value_expr})::VARCHAR), 1, 15))::BIGINT AS h
+             {salted_hash_sql("hll:", f"({value_expr})", digits=15)} AS h
       FROM ({source_sql})),
     regs AS (
       SELECT {group}, h >> {_REST_BITS} AS bucket,
@@ -145,19 +144,9 @@ CMS_WIDTH = 256
 
 
 def _cms_bucket(j: int, value: Column) -> Column:
-    """Row-j bucket for a value: md5('cms{j}:' || v) taken as a 32-bit int
-    mod width — the 2-universal-enough family the whole repo's hashing
-    uses (one md5 per (row, value); substring keeps it in BIGINT range)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"cms{j}:"), value.cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % CMS_WIDTH
-    )
+    """Row-j bucket for a value: ``salted_hash`` with salt ``cms{j}:``
+    (8 hex digits) mod width — one md5 per (row, value)."""
+    return salted_hash(f"cms{j}:", value) % CMS_WIDTH
 
 
 def cms_counters(df: DataFrame, value: Column | str) -> DataFrame:
@@ -219,13 +208,13 @@ def cms_oracle_sql(source_sql: str, value_expr: str) -> str:
     Produces (value, cms_est) for every distinct value in the source."""
     probes = " UNION ALL ".join(
         f"""SELECT v, {j} AS j,
-             ('0x' || substr(md5('cms{j}:' || v::VARCHAR), 1, 8))::BIGINT % {CMS_WIDTH} AS bucket
+             {salted_hash_sql(f"cms{j}:", "v")} % {CMS_WIDTH} AS bucket
             FROM vals"""
         for j in range(CMS_DEPTH)
     )
     incs = " UNION ALL ".join(
         f"""SELECT {j} AS j,
-             ('0x' || substr(md5('cms{j}:' || ({value_expr})::VARCHAR), 1, 8))::BIGINT % {CMS_WIDTH} AS bucket
+             {salted_hash_sql(f"cms{j}:", f"({value_expr})")} % {CMS_WIDTH} AS bucket
             FROM src"""
         for j in range(CMS_DEPTH)
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
-from .functions.scalar import _CENTS, round4
+from .functions.scalar import _CENTS, round4, salted_hash, salted_hash_sql
 from .functions.vector import dot_product
 from .operators import relational as R
 from .operators.sketches import (
@@ -40,16 +40,6 @@ from .sources.tables import load_table as _t
 
 _HLL_MASK = (1 << _HLL_REST) - 1
 _HLL_EMPTY = 1 << (_HLL_REST + 1)
-
-
-def _h64(prefix: str, col):
-    """60-bit positive integer from md5(prefix || col) — the house
-    cross-engine hash (DuckDB: ('0x' || substr(md5(...), 1, 15))::BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -99,7 +89,7 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH hashed AS (
       SELECT event_type,
-             ('0x' || substr(md5('hll:' || user_id::VARCHAR), 1, 15))::BIGINT AS h
+             {salted_hash_sql("hll:", "user_id", digits=15)} AS h
       FROM events),
     regs AS (
       SELECT event_type, h >> {_HLL_REST} AS bucket,
@@ -190,7 +180,7 @@ def q_hll_rollup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH hashed AS (
       SELECT CAST(ts AS DATE)::VARCHAR AS day, event_type,
-             ('0x' || substr(md5('hll:' || user_id::VARCHAR), 1, 15))::BIGINT AS h
+             {salted_hash_sql("hll:", "user_id", digits=15)} AS h
       FROM events),
     cellregs AS MATERIALIZED (
       SELECT day, event_type, h >> {_HLL_REST} AS bucket,
@@ -1471,7 +1461,7 @@ _Z_EXPR = (
     oracle=f"""
     WITH per_user AS (
       SELECT user_id,
-             ('0x' || substr(md5('ab:' || user_id::VARCHAR), 1, 8))::BIGINT % 2
+             {salted_hash_sql("ab:", "user_id")} % 2
                AS variant,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       FROM events GROUP BY user_id),
@@ -1512,15 +1502,7 @@ def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("conv")
         )
         .select(
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
-                        1, 8,
-                    ),
-                    16, 10,
-                ).cast("long") % 2
-            ).alias("variant"),
+            (salted_hash("ab:", "user_id") % 2).alias("variant"),
             "conv",
         )
     )
@@ -2131,7 +2113,7 @@ SYNTH_N = 1000
     tot AS (SELECT sum(cnt)::BIGINT AS n FROM hist),
     draws AS (
       SELECT i,
-             ('0x' || substr(md5('syn:' || i::VARCHAR), 1, 15))::BIGINT
+             {salted_hash_sql("syn:", "i", digits=15)}
                % (SELECT n FROM tot) AS target
       FROM (SELECT unnest(range({SYNTH_N})) AS i)),
     assigned AS (
@@ -2196,16 +2178,7 @@ def q_synthetic_value_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select(
             "i",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("syn:"), F.col("i").cast("string"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("n")
-            ).alias("target"),
+            (salted_hash("syn:", "i", digits=15) % F.col("n")).alias("target"),
         )
     )
     assigned = draws.join(
@@ -2588,7 +2561,7 @@ _KMV_H = 16**15  # hash domain size: 60-bit md5 prefix
     oracle=f"""
     WITH uh AS (
       SELECT DISTINCT event_type,
-             ('0x' || substr(md5('kmv:' || user_id::VARCHAR), 1, 15))::BIGINT AS h
+             {salted_hash_sql("kmv:", "user_id", digits=15)} AS h
       FROM events),
     ranked AS (
       SELECT event_type, h,
@@ -2662,7 +2635,7 @@ def q_kmv_distinct_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = _t(spark, sf_dir, "events")
     uh = ev.select(
-        "event_type", _h64("kmv:", F.col("user_id")).alias("h")
+        "event_type", salted_hash("kmv:", "user_id", digits=15).alias("h")
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     sk = uh.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _KMV_K)
@@ -2754,8 +2727,8 @@ _BLOOM_K = 3
 
 def _bloom_pos_sql(expr: str) -> str:
     return " UNION ALL ".join(
-        f"SELECT uid, ('0x' || substr(md5('bf{j}:' || uid::VARCHAR), 1, 15))::BIGINT"
-        f" % {_BLOOM_M} AS pos FROM {expr}"
+        f"SELECT uid, {salted_hash_sql(f'bf{j}:', 'uid', digits=15)} % {_BLOOM_M} AS pos"
+        f" FROM {expr}"
         for j in range(_BLOOM_K)
     )
 
@@ -2835,7 +2808,7 @@ def q_bloom_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def positions(df: DataFrame) -> DataFrame:
         pos = [
-            (_h64(f"bf{j}:", F.col("uid")) % _BLOOM_M).alias("pos")
+            (salted_hash(f"bf{j}:", "uid", digits=15) % _BLOOM_M).alias("pos")
             for j in range(_BLOOM_K)
         ]
         return df.select("uid", F.explode(F.array(*pos)).alias("pos"))
@@ -2940,7 +2913,7 @@ def _dp_noise_col(u):
       SELECT source, count(*)::BIGINT AS true_count FROM documents GROUP BY 1),
     noised AS (
       SELECT source, true_count,
-             {_dp_noise_sql(f"(('0x' || substr(md5('dp:' || source), 1, 15))::BIGINT % {_DP_M})")}
+             {_dp_noise_sql(f"({salted_hash_sql('dp:', 'source', digits=15)} % {_DP_M})")}
                AS noise
       FROM g)
     SELECT source, true_count, noise::BIGINT AS noise,
@@ -2971,7 +2944,7 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir, "documents")
     g = docs.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("true_count"))
-    u = _h64("dp:", F.col("source")) % _DP_M
+    u = salted_hash("dp:", "source", digits=15) % _DP_M
     noised = g.withColumn("noise", _dp_noise_col(u).cast("long"))
     return noised.select(
         "source",

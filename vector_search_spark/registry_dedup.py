@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import artifact, register
-from .functions.scalar import _SQL_SPLIT_BUCKET, round4, split_bucket
+from .functions.scalar import _SQL_SPLIT_BUCKET, round4, salted_hash, salted_hash_sql, split_bucket
 from .operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup_groups,
@@ -136,6 +136,8 @@ _SQL_TOKS = """toks AS (
          unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
          generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
   FROM documents)"""
+# The same tokenizer over non-blank documents only.
+_SQL_TOKS_NONBLANK = _SQL_TOKS.replace("FROM documents)", "FROM documents WHERE trim(text) != '')")
 
 # Twin of `_shared_shingles`: distinct word 3-gram shingles per doc.
 _SQL_SHINGLES = f"""
@@ -1871,7 +1873,7 @@ BLOCKEVAL_J2 = "3 * shared >= n1 + n2"  # jaccard >= 1/2, exact integers:
     oracle=f"""
     WITH samp AS MATERIALIZED (
       SELECT doc_id, text FROM documents
-      WHERE ('0x' || substr(md5('blockeval' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+      WHERE {salted_hash_sql("blockeval", "doc_id")}
             % {BLOCKEVAL_MOD} = 0
       ORDER BY doc_id LIMIT {BLOCKEVAL_CAP}),
     {_SQL_SHINGLES.replace("FROM documents", "FROM samp")},
@@ -1933,21 +1935,7 @@ def q_lsh_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = __load(spark, sf_dir, "documents")
     samp = (
-        docs.filter(
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("blockeval"), F.col("doc_id").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % BLOCKEVAL_MOD
-            )
-            == 0
-        )
+        docs.filter(salted_hash("blockeval", "doc_id") % BLOCKEVAL_MOD == 0)
         .select("doc_id", "text")
         .orderBy("doc_id")
         .limit(BLOCKEVAL_CAP)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import artifact, register
-from .functions.scalar import round4
+from .functions.scalar import round4, salted_hash, salted_hash_sql
 from .operators.ann import (
     IVFPQ_CELLS,
     IVFPQ_NPROBE,
@@ -1226,9 +1226,9 @@ def _mmd_oracle() -> str:
     WITH e AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
              list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) AS na,
-             ('0x' || substr(md5('mmdarm' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("mmdarm", "vec_id")}
                % 2 AS arm,
-             ('0x' || substr(md5('mmdblk' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("mmdblk", "vec_id")}
                % {_SQL_MMD_BUCKETS} AS b
       FROM embeddings),
     xx AS (
@@ -1301,34 +1301,8 @@ def q_embedding_drift_mmd(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.select(
         "vec_id",
         F.col("embedding").alias("v"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("mmdarm"), F.col("vec_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("mmdblk"), F.col("vec_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % mmd_b
-        ).alias("b"),
+        (salted_hash("mmdarm", "vec_id") % 2).alias("arm"),
+        (salted_hash("mmdblk", "vec_id") % mmd_b).alias("b"),
     )
     from .functions.vector import dot_product
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
-from .functions.scalar import round4
+from .functions.scalar import round4, salted_hash, salted_hash_sql
 from .registry_dedup import (
     NUM_HASHES,
     _SQL_AGREE,
@@ -47,6 +47,7 @@ from .registry_ml import (
     _plan_cached,
 )
 from .registry_text import _SQL_ND, _SQL_NT, _SQL_QUALITY, _SQL_SR, _shared_doc_features
+from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
 from .sources.tables import load_table as _t
 
 
@@ -404,11 +405,10 @@ def q_feature_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "target_encoding_oof",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT o_orderpriority AS category,
-             ('0x' || substr(md5('fold' || CAST(o_orderkey AS VARCHAR)), 1, 8))
-               ::BIGINT % 5 AS fold,
+             {salted_hash_sql("fold", "o_orderkey")} % 5 AS fold,
              floor(o_totalprice*100 + 0.5)::BIGINT AS cents
       FROM orders),
     cf AS (
@@ -432,7 +432,7 @@ def q_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: the OOF mean is the exact integer rational
     ``(s_c − s_cf)/(n_c − n_cf)`` — complement sums by subtraction, no
-    second pass — floated once.  Folds are the house md5 bucketing.
+    second pass — floated once.  Folds are ``salted_hash`` buckets.
 
     Scale: ONE partial-agg'd scan to |categories|×5 cells; category totals
     come from re-aggregating the cells, so the encoder costs one shuffle
@@ -442,20 +442,7 @@ def q_target_encoding_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = _t(spark, sf_dir, "orders")
     base = od.select(
         F.col("o_orderpriority").alias("category"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("fold"), F.col("o_orderkey").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 5
-        ).alias("fold"),
+        (salted_hash("fold", "o_orderkey") % 5).alias("fold"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
     )
     cf = base.groupBy("category", "fold").agg(
@@ -1929,11 +1916,8 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "runs_test_daily",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    oracle=f"""
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     med AS (
       SELECT cents AS med FROM (
         SELECT cents, row_number() OVER (ORDER BY cents, day) AS rk,
@@ -1990,15 +1974,8 @@ def q_runs_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .partitioning import global_order_stats
 
-    ev = _t(spark, sf_dir, "events")
     daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        daily_purchase_cents(_t(spark, sf_dir, "events"))
         # the day table fans out to the rank pass (which consumes its
         # input twice), the count, the median probe and the labeling —
         # checkpoint it or each consumer replays the events scan (plan

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from .catalog import register
 from .functions.scalar import _fdiv
+from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
 from .sources.tables import load_table as _t
 
 HW_MAX_E = 40  # same truncation as SES/Brown: weight < 2^-40 is defined out
@@ -86,10 +87,7 @@ _HW_4DP = "floor(((CAST({v} AS DOUBLE)/1000000.0)/100.0)*10000 + 0.5)/10000.0"
 @register(
     "holt_winters_dow_forecast",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     idx AS (
       SELECT day, cents,
              (day - (SELECT min(day) FROM daily))::BIGINT AS t,
@@ -174,15 +172,8 @@ def q_holt_winters_dow_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-row seasonal aggregate, 1-row forecast) is day-table-sized.  Same
     rebuild-after-every-load cost as SES/Brown — the scan.
     """
-    ev = _t(spark, sf_dir, "events")
     daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        daily_purchase_cents(_t(spark, sf_dir, "events"))
         # the day table fans out to the min-day probe, the OLS stats fold
         # and the residual join — checkpoint it (house rule) so the
         # events scan runs exactly once
@@ -296,10 +287,7 @@ _ACF = "CAST(num AS DOUBLE) / CAST(den AS DOUBLE)"
 @register(
     "acf_daily_revenue",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     idx AS (
       SELECT (day - (SELECT min(day) FROM daily))::BIGINT AS i, cents
       FROM daily),
@@ -343,16 +331,7 @@ def q_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     day — decades fit in ~10⁴ rows, broadcastable), never on events;
     upstream is one partial-agg'd groupBy(day) over the purchase slice.
     """
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = daily_purchase_cents(_t(spark, sf_dir, "events"))
     # the day aggregate fans out to min-day, totals, the deviation table,
     # the denominator and 7 lag joins — checkpoint the tiny frames so the
     # corpus scan runs ONCE (plan_audit measured 24 lineage replays)
@@ -410,10 +389,7 @@ _SEAS_MEAN = "(CAST(seas AS DOUBLE) / 100.0)"
 @register(
     "seasonal_decomposition_dow",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     keyed AS (
       SELECT day, cents,
              CAST(dayofweek(day) AS BIGINT) % 7 AS dow
@@ -460,16 +436,7 @@ def q_seasonal_decomposition_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate broadcast back over the day table, and one more fold over
     the ≈10⁴-row day aggregate.  The scan is the whole cost.
     """
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = daily_purchase_cents(_t(spark, sf_dir, "events"))
     # the day table fans out to the seasonal means, the residual join and
     # (via resid) the two variance folds — checkpoint it or each consumer
     # replays the events scan (plan audit showed x5); downstream frames
@@ -533,10 +500,7 @@ SES_MAX_E = 40  # drop terms with weight < 2^-40 (sub-micro of any signal)
 @register(
     "ses_revenue_forecast",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     idx AS (
       SELECT (day - (SELECT min(day) FROM daily))::BIGINT AS t, cents
       FROM daily),
@@ -586,15 +550,8 @@ def q_ses_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of T, a bounded ≤ {SES_MAX_E + 1}-term fold — re-runnable
     after every daily load for the cost of the scan, at any corpus size.
     """
-    ev = _t(spark, sf_dir, "events")
     daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        daily_purchase_cents(_t(spark, sf_dir, "events"))
         # the day aggregate fans out to five consumers (d0, T, terms, last
         # day); checkpointing the ≤|days|-row collapse keeps the corpus
         # scan at exactly ONE instead of lineage-replaying it per consumer
@@ -652,10 +609,7 @@ def q_ses_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "brown_trend_forecast",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     idx AS (
       SELECT (day - (SELECT min(day) FROM daily))::BIGINT AS t, cents
       FROM daily),
@@ -711,15 +665,8 @@ def q_brown_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, a bounded fold.  Rebuilding BOTH smoothers after every
     daily load costs the same single scan SES costs.
     """
-    ev = _t(spark, sf_dir, "events")
     daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        daily_purchase_cents(_t(spark, sf_dir, "events"))
         .localCheckpoint(eager=True)
     )
     d0 = daily.agg(F.min("day").alias("d0"))

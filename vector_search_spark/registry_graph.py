@@ -14,6 +14,7 @@ from .functions.scalar import _fdiv
 from .registry_dedup import (
     _SQL_REACH,
     _SQL_SYM_EDGES,
+    _SQL_TOKS_NONBLANK,
     _SQL_VERIFIED,
     _shared_components,
     _shared_sym_edges,
@@ -464,11 +465,7 @@ def _textrank_round_sql(prev: str, cur: str) -> str:
 @register(
     "textrank_keywords",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents WHERE trim(text) != ''),
+    WITH {_SQL_TOKS_NONBLANK},
     dfq AS (
       SELECT tok FROM (SELECT DISTINCT doc_id, tok FROM toks)
       GROUP BY tok HAVING count(*) >= {TEXTRANK_MIN_DF}),

@@ -43,24 +43,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
-from .functions.scalar import round4
+from .functions.scalar import round4, salted_hash, salted_hash_sql
+from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
 from .sources.tables import load_table as _t
 
 
 def _r4(expr: str) -> str:
     """SQL twin of :func:`round4` — portable 4-dp rounding text."""
     return f"floor(({expr})*10000 + 0.5)/10000.0"
-
-
-def _h32(prefix: str, col):
-    """32-bit positive integer from md5(prefix || col) for mod-bucket
-    draws — the house cross-engine hash (DuckDB: ('0x' ||
-    substr(md5(...), 1, 8))::BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(prefix), col.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -528,10 +518,10 @@ def _markov_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multinomial naive Bayes: train on an md5 80% split, classify the holdout,
 # emit the confusion matrix.  Micro-nat integer log-likelihoods throughout.
 # ---------------------------------------------------------------------------
-_NB_ORACLE = """
+_NB_ORACLE = f"""
 WITH docs AS (
   SELECT doc_id, lang, text,
-         ('0x' || substr(md5('nbsplit' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 5
+         {salted_hash_sql("nbsplit", "doc_id")} % 5
            AS bucket
   FROM documents WHERE trim(text) != ''),
 train_tok AS (
@@ -613,18 +603,7 @@ def q_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             "text",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("nbsplit"), F.col("doc_id").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 5
-            ).alias("bucket"),
+            (salted_hash("nbsplit", "doc_id") % 5).alias("bucket"),
         )
     )
     tok_expr = F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
@@ -1249,11 +1228,8 @@ def q_pr_best_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "value_cusum_changepoint",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    oracle=f"""
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     tot AS (SELECT count(*)::BIGINT AS nd, sum(cents)::BIGINT AS t FROM daily),
     cum AS (
       SELECT day, cents,
@@ -1300,16 +1276,7 @@ def q_value_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .partitioning import global_order_stats
 
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = daily_purchase_cents(_t(spark, sf_dir, "events"))
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("nd"),
         F.sum("cents").cast("long").alias("t"),
@@ -1471,11 +1438,8 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "theil_sen_daily_trend",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    oracle=f"""
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     idx AS (
       SELECT day, cents, (row_number() OVER (ORDER BY day))::BIGINT AS i
       FROM daily),
@@ -1528,16 +1492,7 @@ def q_theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .partitioning import global_order_stats
 
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-    )
+    daily = daily_purchase_cents(_t(spark, sf_dir, "events"))
     # the day aggregate and its ranked form fan out to the pair join, the
     # pair count, and the OLS moments — eager checkpoints keep the corpus
     # scan at ONE instead of lineage-replaying it per consumer (plan_audit
@@ -2031,8 +1986,7 @@ def _abb_oracle() -> str:
     diffs = ", ".join(_abb_diff(b) for b in range(_BOOT_B))
     return f"""
     WITH h AS (
-      SELECT CASE WHEN ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)),
-                        1, 8))::BIGINT % 2 = 0 THEN 't' ELSE 'c' END AS grp,
+      SELECT CASE WHEN {salted_hash_sql("ab:", "user_id")} % 2 = 0 THEN 't' ELSE 'c' END AS grp,
              floor(value*100 + 0.5)::BIGINT AS cents, {h_cols}
       FROM events WHERE event_type = 'purchase'),
     base AS (SELECT grp, cents, {u_cols} FROM h),
@@ -2094,18 +2048,7 @@ def _abb_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "value"),
         "event_id",
     )
-    grp = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        F.lit("t"),
-    ).otherwise(F.lit("c"))
+    grp = F.when(salted_hash("ab:", "user_id") % 2 == 0, F.lit("t")).otherwise(F.lit("c"))
     h_cols = [
         F.md5(
             F.concat(F.lit(f"abboot{g}:"), F.col("event_id").cast("string"))
@@ -2328,10 +2271,10 @@ def q_ips_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "calibration_bins",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
       SELECT doc_id,
-             (('0x' || substr(md5('cal:' || doc_id::VARCHAR), 1, 8))::BIGINT
+             ({salted_hash_sql("cal:", "doc_id")}
               % 10000) AS p_tenk,
              CASE WHEN n_chars >= 400 THEN 1 ELSE 0 END AS label
       FROM documents),
@@ -2366,7 +2309,7 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _t(spark, sf_dir, "documents")
     scored = docs.select(
-        (_h32("cal:", F.col("doc_id")) % 10000).alias("p_tenk"),
+        (salted_hash("cal:", "doc_id") % 10000).alias("p_tenk"),
         F.when(F.col("n_chars") >= 400, F.lit(1)).otherwise(F.lit(0)).alias("label"),
     )
     binned = scored.withColumn(
@@ -2396,15 +2339,15 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "annotator_agreement",
-    oracle="""
+    oracle=f"""
     WITH ann AS (
       SELECT doc_id,
-             (('0x' || substr(md5('an1:' || doc_id::VARCHAR), 1, 8))::BIGINT % 3)
+             ({salted_hash_sql("an1:", "doc_id")} % 3)
                AS a1,
-             CASE WHEN (('0x' || substr(md5('an2:' || doc_id::VARCHAR), 1, 8))::BIGINT
+             CASE WHEN ({salted_hash_sql("an2:", "doc_id")}
                         % 10) < 7
-                  THEN (('0x' || substr(md5('an1:' || doc_id::VARCHAR), 1, 8))::BIGINT % 3)
-                  ELSE (('0x' || substr(md5('an3:' || doc_id::VARCHAR), 1, 8))::BIGINT % 3)
+                  THEN ({salted_hash_sql("an1:", "doc_id")} % 3)
+                  ELSE ({salted_hash_sql("an3:", "doc_id")} % 3)
              END AS a2
       FROM documents),
     marg AS (
@@ -2440,9 +2383,9 @@ def q_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge via a tiny unioned groupBy — nothing wide anywhere.
     """
     docs = _t(spark, sf_dir, "documents")
-    a1 = _h32("an1:", F.col("doc_id")) % 3
-    a2 = F.when(_h32("an2:", F.col("doc_id")) % 10 < 7, a1).otherwise(
-        _h32("an3:", F.col("doc_id")) % 3
+    a1 = salted_hash("an1:", "doc_id") % 3
+    a2 = F.when(salted_hash("an2:", "doc_id") % 10 < 7, a1).otherwise(
+        salted_hash("an3:", "doc_id") % 3
     )
     ann = docs.select(a1.alias("a1"), a2.alias("a2"))
     marg = ann.agg(

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
-from .functions.scalar import _fdiv
+from .functions.scalar import _fdiv, salted_hash, salted_hash_sql
 from .registry_ml import _STUMP_FEATURES, _STUMP_LABEL, _gini_gain, _pois_w
 from .sources.tables import load_table as _t
 
@@ -192,7 +192,7 @@ LOO_CAP = 4000
     oracle=f"""
     WITH samp AS MATERIALIZED (
       SELECT vec_id, label, embedding FROM embeddings
-      WHERE ('0x' || substr(md5('looeval' || CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+      WHERE {salted_hash_sql("looeval", "vec_id")}
             % {LOO_MOD} = 0
       ORDER BY vec_id LIMIT {LOO_CAP}),
     nn AS (
@@ -244,21 +244,7 @@ def q_knn_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.vector import dot_product
 
     emb = _t(spark, sf_dir, "embeddings")
-    samp = emb.filter(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("looeval"), F.col("vec_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % LOO_MOD
-        )
-        == 0
-    )
+    samp = emb.filter(salted_hash("looeval", "vec_id") % LOO_MOD == 0)
     # the cap (TakeOrderedAndProject) collapses to ONE partition — fan the
     # slice back out before materializing or the whole LOO scoring pass
     # runs as a single task (measured 0.04 s → 2.0 s at sf0.1 when the cap
@@ -317,10 +303,7 @@ def q_knn_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 CONF_ALPHA_NUM = 9  # nominal coverage 9/10
 _CONF_Y = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-_CONF_BUCKET = (
-    "('0x' || substr(md5('conf' || CAST(l_orderkey AS VARCHAR) || '-' "
-    "|| CAST(l_linenumber AS VARCHAR)), 1, 8))::BIGINT % 5"
-)
+_CONF_BUCKET = salted_hash_sql("conf", "l_orderkey", "l_linenumber", sep="-") + " % 5"
 
 
 @register(
@@ -390,25 +373,7 @@ def q_conformal_price_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("rf"),
         F.col("l_linestatus").alias("ls"),
         F.expr(_CONF_Y).alias("y"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("conf"),
-                            F.col("l_orderkey").cast("string"),
-                            F.lit("-"),
-                            F.col("l_linenumber").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 5
-        ).alias("bucket"),
+        (salted_hash("conf", "l_orderkey", "l_linenumber", sep="-") % 5).alias("bucket"),
     )
     # checkpoint the tiny per-group model and the calibration residuals:
     # both fan out to multiple consumers and would lineage-replay the
@@ -1236,25 +1201,7 @@ def q_conformal_group_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("rf"),
         F.col("l_linestatus").alias("ls"),
         F.expr(_CONF_Y).alias("y"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("conf"),
-                            F.col("l_orderkey").cast("string"),
-                            F.lit("-"),
-                            F.col("l_linenumber").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 5
-        ).alias("bucket"),
+        (salted_hash("conf", "l_orderkey", "l_linenumber", sep="-") % 5).alias("bucket"),
     )
     model = (
         li.filter(F.col("bucket") <= 2)

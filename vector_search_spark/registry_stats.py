@@ -10,6 +10,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
+from .functions.scalar import salted_hash, salted_hash_sql
+from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
 from .sources.tables import load_table as _t
 
 
@@ -317,7 +319,7 @@ _UPLIFT_Z = (
       SELECT user_id, conv,
              CASE WHEN n_ev < 62 THEN 'low'
                   WHEN n_ev < 72 THEN 'mid' ELSE 'high' END AS segment,
-             ('0x' || substr(md5('uplift' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("uplift", "user_id")}
                % 2 AS arm
       FROM usr),
     cells AS (
@@ -371,18 +373,7 @@ def q_uplift_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("n_ev") < 72, "mid")
         .otherwise("high")
         .alias("segment"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("uplift"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("uplift", "user_id") % 2).alias("arm"),
     )
     cells = seg.groupBy("segment").agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("n_t"),
@@ -501,7 +492,7 @@ _SPRT_LLR = (
     WITH ud AS (
       SELECT user_id, CAST(ts AS DATE) AS day,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-             ('0x' || substr(md5('sprt' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("sprt", "user_id")}
                % 2 AS arm
       FROM events GROUP BY user_id, CAST(ts AS DATE)),
     ctl AS (
@@ -567,14 +558,7 @@ def q_ab_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("conv")
     ).withColumn(
         "arm",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sprt"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2,
+        salted_hash("sprt", "user_id") % 2,
     )
     ctl = ud.filter(F.col("arm") == 0).agg(
         F.count(F.lit(1)).cast("long").alias("cn"),
@@ -809,7 +793,7 @@ _GS_ZT = f"CAST(floor(abs({_GS_Z}) * 10000 + 0.5) AS BIGINT)"
     WITH ud AS (
       SELECT user_id, CAST(ts AS DATE) AS day,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv,
-             ('0x' || substr(md5('sprt' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("sprt", "user_id")}
                % 2 AS arm
       FROM events GROUP BY user_id, CAST(ts AS DATE)),
     mind AS (SELECT min(day) AS d0 FROM ud),
@@ -890,18 +874,7 @@ def q_ab_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "arm",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("sprt"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2,
+            salted_hash("sprt", "user_id") % 2,
         )
     )
     # collapse once more to (day, arm) cells and checkpoint: the tiny
@@ -1110,7 +1083,7 @@ _MW_Z = (
     oracle=f"""
     WITH pv AS (
       SELECT floor(value*100 + 0.5)::BIGINT AS c,
-             ('0x' || substr(md5('mwu' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("mwu", "event_id")}
                % 2 AS arm
       FROM events WHERE event_type = 'purchase'),
     hist AS (
@@ -1157,18 +1130,7 @@ def q_mannwhitney_value_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     pv = ev.filter(F.col("event_type") == "purchase").select(
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("mwu"), F.col("event_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("mwu", "event_id") % 2).alias("arm"),
     )
     hist = pv.groupBy("c").agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("t1"),
@@ -1235,7 +1197,7 @@ _CVM_T = (
     oracle=f"""
     WITH pv AS (
       SELECT floor(value*100 + 0.5)::BIGINT AS c,
-             ('0x' || substr(md5('cvm' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("cvm", "event_id")}
                % 2 AS arm
       FROM events WHERE event_type = 'purchase'),
     hist AS (
@@ -1282,18 +1244,7 @@ def q_cramer_von_mises_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     pv = ev.filter(F.col("event_type") == "purchase").select(
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cvm"), F.col("event_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("cvm", "event_id") % 2).alias("arm"),
     )
     hist = pv.groupBy("c").agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("t1"),
@@ -1361,7 +1312,7 @@ _WT_DF = (
     oracle=f"""
     WITH pv AS (
       SELECT floor(value*100 + 0.5)::BIGINT AS c,
-             ('0x' || substr(md5('welch' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("welch", "event_id")}
                % 2 AS arm
       FROM events WHERE event_type = 'purchase'),
     s AS (
@@ -1398,20 +1349,7 @@ def q_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     pv = ev.filter(F.col("event_type") == "purchase").select(
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("welch"), F.col("event_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("welch", "event_id") % 2).alias("arm"),
     )
     s = pv.agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("long").alias("n1"),
@@ -1473,7 +1411,7 @@ _BF_F = f"((CAST(n1 + n0 - 2 AS DOUBLE) * {_BF_SSB}) / {_BF_SSW})"
     oracle=f"""
     WITH pv AS (
       SELECT floor(value*100 + 0.5)::BIGINT AS c,
-             ('0x' || substr(md5('bf' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("bf", "event_id")}
                % 2 AS arm
       FROM events WHERE event_type = 'purchase'),
     hist AS (
@@ -1532,18 +1470,7 @@ def q_brown_forsythe_variance_test(spark: SparkSession, sf_dir: str) -> DataFram
     ev = _t(spark, sf_dir, "events")
     pv = ev.filter(F.col("event_type") == "purchase").select(
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("bf"), F.col("event_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("bf", "event_id") % 2).alias("arm"),
     )
     hist = pv.groupBy("arm", "c").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
@@ -1653,7 +1580,7 @@ _CUPED_ADJ = (
     WITH mind AS (SELECT min(CAST(ts AS DATE)) AS d0 FROM events),
     ud AS (
       SELECT user_id,
-             ('0x' || substr(md5('cuped' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("cuped", "user_id")}
                % 2 AS arm,
              sum(CASE WHEN event_type = 'purchase'
                        AND CAST(ts AS DATE) < (SELECT d0 FROM mind)
@@ -1757,18 +1684,7 @@ def q_ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "arm",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("cuped"), F.col("user_id").cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2,
+            salted_hash("cuped", "user_id") % 2,
         )
     )
     # ONE scan: the per-arm aggregate carries the product sums too, and
@@ -1860,7 +1776,7 @@ _LR_Z = "(CAST(o1 * 1000000 - e1_micro AS DOUBLE) / 1000000.0) / sqrt(CAST(v_mic
       GROUP BY t0.user_id, t0.s_us),
     dur AS (
       SELECT user_id,
-             ('0x' || substr(md5('logrank' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             {salted_hash_sql("logrank", "user_id")}
                % 2 AS arm,
              CASE WHEN p_us IS NOT NULL THEN (p_us - s_us) // 86400000000
                   ELSE ((SELECT h FROM horizon) - s_us) // 86400000000
@@ -1942,18 +1858,7 @@ def q_logrank_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dur = conv.crossJoin(F.broadcast(horizon)).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("logrank"), F.col("user_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 2
-        ).alias("arm"),
+        (salted_hash("logrank", "user_id") % 2).alias("arm"),
         F.when(F.col("p_us").isNotNull(), F.expr("(p_us - s_us) DIV 86400000000"))
         .otherwise(F.expr("(h - s_us) DIV 86400000000"))
         .alias("d"),
@@ -2668,10 +2573,7 @@ _MK_TREND = (
 @register(
     "mann_kendall_daily",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             sum(floor(value*100 + 0.5)::BIGINT)::BIGINT AS cents
-      FROM events WHERE event_type = 'purchase' GROUP BY 1),
+    WITH {DAILY_PURCHASE_CENTS_SQL},
     sp AS (
       SELECT sum(CASE WHEN b.cents > a.cents THEN 1
                       WHEN b.cents < a.cents THEN -1 ELSE 0 END)::BIGINT AS s
@@ -2704,15 +2606,8 @@ def q_mann_kendall_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per day — decades fit in ~10⁴ rows), not on events; everything
     upstream is one partial-agg'd groupBy(day) over the purchase slice.
     """
-    ev = _t(spark, sf_dir, "events")
     daily = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
+        daily_purchase_cents(_t(spark, sf_dir, "events"))
         # the day table fans out to the sign-join's two sides, the tie
         # fold and the day count — checkpoint it or each consumer
         # replays the events scan (plan audit showed x4)

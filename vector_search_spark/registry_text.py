@@ -9,8 +9,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import artifact, register
-from .functions.scalar import _SQL_SPLIT_BUCKET, round4, split_bucket
+from .functions.scalar import _SQL_SPLIT_BUCKET, round4, salted_hash, salted_hash_sql, split_bucket
 from .functions.text import BPE_TOKEN_PATTERN, PUNCT_PATTERN, STOPWORDS
+from .registry_dedup import _SQL_TOKS_NONBLANK
 from .sources.tables import load_table as __load
 
 # ---------------------------------------------------------------------------
@@ -1484,7 +1485,7 @@ PACK_SHARDS = 16
     WITH t AS (
       SELECT doc_id,
              len(regexp_extract_all(text, '{BPE_TOKEN_PATTERN}'))::BIGINT AS n_tok,
-             ('0x' || substr(md5('shard:' || doc_id::VARCHAR), 1, 8))::BIGINT
+             {salted_hash_sql("shard:", "doc_id")}
                % {PACK_SHARDS} AS shard
       FROM documents),
     c AS (
@@ -1513,16 +1514,7 @@ def q_packing_plan_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _shared_doc_features(spark, sf_dir)
     from pyspark.sql import Window
 
-    shard = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % PACK_SHARDS
-    )
+    shard = salted_hash("shard:", "doc_id") % PACK_SHARDS
     w = (
         Window.partitionBy("shard")
         .orderBy("doc_id")
@@ -1555,11 +1547,7 @@ LM_LAMBDA = 0.75  # bigram weight; (1 - LM_LAMBDA) backs off to the unigram
 @register(
     "bigram_lm_logprob",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents WHERE trim(text) != ''),
+    WITH {_SQL_TOKS_NONBLANK},
     big AS (
       SELECT a.doc_id, a.tok AS a, b.tok AS b
       FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1),
@@ -1636,12 +1624,8 @@ def q_bigram_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "phrase_search",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id,
-             unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-             generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS ord
-      FROM documents WHERE trim(text) != ''),
+    oracle=f"""
+    WITH {_SQL_TOKS_NONBLANK},
     tri AS (
       SELECT a.doc_id, a.ord AS pos,
              a.tok || ' ' || b.tok || ' ' || c.tok AS phrase
@@ -1710,7 +1694,7 @@ WS_SAMPLE_K = 20
     oracle=f"""
     WITH keyed AS (
       SELECT doc_id, n_chars,
-             ln((('0x' || substr(md5('es:' || doc_id::VARCHAR), 1, 15))::BIGINT + 1)
+             ln(({salted_hash_sql("es:", "doc_id", digits=15)} + 1)
                 / 1152921504606846976.0) / n_chars AS raw_key
       FROM documents WHERE n_chars > 0)
     SELECT doc_id, n_chars AS weight,
@@ -1739,13 +1723,7 @@ def q_weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = __load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u60 = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("es:"), F.col("doc_id").cast("string"))), 1, 15),
-            16, 10,
-        ).cast("long")
-        + 1
-    )
+    u60 = salted_hash("es:", "doc_id", digits=15) + 1
     keyed = docs.select(
         "doc_id",
         F.col("n_chars").alias("weight"),
@@ -1860,8 +1838,7 @@ SPAN_TOKENS_PER_SPAN = 20  # 1 span per 20 tokens ≈ 15% mask at len 3
       FROM base WHERE n_tok >= {SPAN_TOKENS_PER_SPAN})
     SELECT doc_id, n_tok, s::INTEGER AS span_idx,
            (s * stride
-            + (('0x' || substr(md5('span:' || doc_id::VARCHAR || ':' || s::VARCHAR), 1, 15))::BIGINT
-               % (stride - {SPAN_LEN - 1}))
+            + ({salted_hash_sql("span:", "doc_id", "s", digits=15)} % (stride - {SPAN_LEN - 1}))
             + 1)::BIGINT AS start_tok,
            {SPAN_LEN}::BIGINT AS span_len
     FROM spans
@@ -1900,25 +1877,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stride",
         F.explode(F.expr("sequence(0, n_spans - 1)")).alias("s"),
     )
-    off = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("span:"),
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("s").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % (F.col("stride") - (SPAN_LEN - 1))
-    )
+    off = salted_hash("span:", "doc_id", "s", digits=15) % (F.col("stride") - (SPAN_LEN - 1))
     return spans.select(
         "doc_id",
         "n_tok",
@@ -2282,7 +2241,7 @@ NEG_DRAWS = 10_000
              sum(w_micro) OVER ()::BIGINT AS w_total
       FROM top),
     draws AS (
-      SELECT ('0x' || substr(md5('negdraw|' || CAST(i AS VARCHAR)), 1, 15))::BIGINT
+      SELECT {salted_hash_sql("negdraw|", "i", digits=15)}
                % (SELECT any_value(w_total) FROM cum) AS u
       FROM generate_series(0, {NEG_DRAWS - 1}) AS t(i)),
     hit AS (
@@ -2346,18 +2305,7 @@ def q_negative_sampling_draws(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(0, NEG_DRAWS)
         .crossJoin(F.broadcast(wtot))
         .select(
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("negdraw|"), F.col("id").cast("string"))),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("w_total")
-            ).alias("u")
+            (salted_hash("negdraw|", "id", digits=15) % F.col("w_total")).alias("u")
         )
     )
     hit = (

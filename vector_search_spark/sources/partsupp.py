@@ -2,8 +2,9 @@
 
 The driver's fixture set has no partsupp table, which blocked the TPC-H
 Q2/Q11/Q20 query shapes.  This module derives one deterministically from
-`part` × a fixed replica fan-out, with every attribute an md5 fold of the
-(partkey, suppkey) pair — so the Spark side and the DuckDB oracle (the
+`part` × a fixed replica fan-out, with every attribute a salted md5 hash
+of the (partkey, suppkey) pair (``functions.scalar.salted_hash`` and its
+SQL twin) — so the Spark side and the DuckDB oracle (the
 `PARTSUPP_SQL` CTE below, generated from the SAME constants) materialize
 bit-identical tables from the same parquet inputs, and the three classic
 shapes get full value-level oracles.  If the driver ever ships a real
@@ -27,22 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import salted_hash, salted_hash_sql
+
 PS_REPLICAS = 4
 PS_MAX_QTY = 9999
 PS_COST_SPAN = 99901  # cents: 100 .. 100000  ->  $1.00 .. $1000.00
 PS_COST_MIN = 100
-
-
-def _h(prefix: str, *cols) -> F.Column:
-    """First 8 hex chars of md5('{prefix}:a:b') as a non-negative BIGINT —
-    the repo-standard cross-engine hash fold (twin of the '0x'||substr
-    DuckDB idiom in PARTSUPP_SQL)."""
-    parts = [F.lit(f"{prefix}:")]
-    for i, c in enumerate(cols):
-        if i:
-            parts.append(F.lit(":"))
-        parts.append(F.col(c).cast("string"))
-    return F.conv(F.substring(F.md5(F.concat(*parts)), 1, 8), 16, 10).cast("long")
 
 
 def synth_partsupp(part: DataFrame, supplier: DataFrame) -> DataFrame:
@@ -58,15 +49,15 @@ def synth_partsupp(part: DataFrame, supplier: DataFrame) -> DataFrame:
         )
         .select(
             "p_partkey",
-            (_h("ps", "p_partkey", "i") % F.col("__ns")).alias("ps_suppkey"),
+            (salted_hash("ps:", "p_partkey", "i") % F.col("__ns")).alias("ps_suppkey"),
         )
     )
     return (
         base.select(
             F.col("p_partkey").alias("ps_partkey"),
             "ps_suppkey",
-            (_h("psq", "p_partkey", "ps_suppkey") % PS_MAX_QTY + 1).alias("ps_availqty"),
-            (_h("psc", "p_partkey", "ps_suppkey") % PS_COST_SPAN + PS_COST_MIN).alias(
+            (salted_hash("psq:", "p_partkey", "ps_suppkey") % PS_MAX_QTY + 1).alias("ps_availqty"),
+            (salted_hash("psc:", "p_partkey", "ps_suppkey") % PS_COST_SPAN + PS_COST_MIN).alias(
                 "ps_supplycost_cents"
             ),
         )
@@ -74,22 +65,16 @@ def synth_partsupp(part: DataFrame, supplier: DataFrame) -> DataFrame:
     )
 
 
-def _sql_h(prefix: str, a: str, b: str) -> str:
-    return (
-        f"('0x' || substr(md5('{prefix}:' || {a}::VARCHAR || ':' || {b}::VARCHAR), 1, 8))::BIGINT"
-    )
-
-
 # DuckDB CTE body: `WITH {PARTSUPP_SQL}, ...` — byte-for-byte the same
 # derivation as synth_partsupp, from the same registered part/supplier views.
 PARTSUPP_SQL = f"""ps_base AS (
       SELECT p_partkey,
-             {_sql_h("ps", "p_partkey", "r.i")} % (SELECT count(*) FROM supplier)
+             {salted_hash_sql("ps:", "p_partkey", "r.i")} % (SELECT count(*) FROM supplier)
                AS ps_suppkey
       FROM part CROSS JOIN (VALUES {", ".join(f"({i})" for i in range(PS_REPLICAS))}) AS r(i)),
     partsupp AS (
       SELECT DISTINCT p_partkey AS ps_partkey, ps_suppkey,
-             {_sql_h("psq", "p_partkey", "ps_suppkey")} % {PS_MAX_QTY} + 1 AS ps_availqty,
-             {_sql_h("psc", "p_partkey", "ps_suppkey")} % {PS_COST_SPAN} + {PS_COST_MIN}
+             {salted_hash_sql("psq:", "p_partkey", "ps_suppkey")} % {PS_MAX_QTY} + 1 AS ps_availqty,
+             {salted_hash_sql("psc:", "p_partkey", "ps_suppkey")} % {PS_COST_SPAN} + {PS_COST_MIN}
                AS ps_supplycost_cents
       FROM ps_base)"""
