@@ -58,6 +58,17 @@ RECENTLY_TOUCHED = frozenset(
         "knn_multi_query", "ann_srp_recall_eval",
         # the PQ family (one copy of each search stage, shared)
         "ann_pq_topk", "ann_ivfpq_topk", "ann_ivfpq_residual_topk",
+        # one copy of the Gini split finder, the sessionizers, the
+        # survival durations, the rate estimators, the trim histogram and
+        # the SQ oracle
+        "decision_stump_returns", "decision_tree_depth2",
+        "decision_tree_depth3", "event_funnel", "top_event_paths",
+        "conversion_latency_percentiles", "user_sessions",
+        "attribution_models_compare", "kaplan_meier_conversion",
+        "logrank_test_conversion", "eb_shrunk_hour_rates",
+        "eb_shrunk_segment_rates", "wilson_lcb_hour_ranking",
+        "wilson_lcb_source_ranking", "trimmed_mean_value",
+        "winsorized_mean_value", "ann_sq_topk", "ann_filtered_topk",
     }
 )
 

@@ -163,3 +163,33 @@ def test_salted_hash_is_spelled_once():
         if hits:
             found[path.name] = hits
     assert found == _HASH_IDIOM_ALLOWED
+
+
+# Stages written once per engine, with the idiom that marks a spelled-out
+# copy (whitespace removed): the Gini split finder's cumulative window
+# (its cum_pos column; the boosting stumps' least-squares window has no
+# class counts) and the session-break flag (a lag of the microsecond time
+# column).  Each maps to the module holding the helpers and their count.
+_STAGE_IDIOMS = {
+    "gini split window": re.compile(r'alias\("cum_pos"\)|AScum_pos', re.I),
+    "session break flag": re.compile(r'lag\("?(?:ts_)?us"?\)', re.I),
+}
+_STAGE_HELPERS = {
+    # gini_split_scores, gini_split_scores_sql
+    "registry_ml.py": {"gini split window": 2},
+    # sessions_gap_at_least (one lag) and sessions_gap_over (two), both engines
+    "operators/relational.py": {"session break flag": 6},
+}
+
+
+def test_shared_stages_are_spelled_once():
+    """The Gini split finder and the two sessionizers are spelled only in
+    their helpers; every other query calls them."""
+    pkg = Path(__file__).resolve().parents[1] / "vector_search_spark"
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        text = "".join(path.read_text(encoding="utf-8").split())
+        counts = {k: len(p.findall(text)) for k, p in _STAGE_IDIOMS.items()}
+        if any(counts.values()):
+            found[path.relative_to(pkg).as_posix()] = {k: n for k, n in counts.items() if n}
+    assert found == _STAGE_HELPERS

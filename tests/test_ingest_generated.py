@@ -24,7 +24,12 @@ from pyspark.sql import functions as F
 
 from vector_search_spark.encoders import HashEncoder
 from vector_search_spark.operators.chunker import parse_newsletter_chunks
-from vector_search_spark.plans.ingest import build_chunks, build_index, update_index
+from vector_search_spark.plans.ingest import (
+    build_chunks,
+    build_index,
+    update_index,
+    write_index,
+)
 from vector_search_spark.sources.files import read_markdown_dir
 
 from conftest import CHUNKER_GOLDEN as GOLDEN
@@ -129,3 +134,19 @@ def test_update_index_keeps_the_callers_encoder(spark, issue_dir, tmp_path):
     assert [r["n"] for r in sizes] == [384]
     assert update_index(spark, out, docs, encoder=HashEncoder(dim=384)) == 0
     assert spark.read.parquet(out).count() == len(ISSUES) * 6
+
+
+@pytest.mark.parametrize("stored_type", ["array<float>", "array<double>"])
+def test_update_index_refuses_a_mismatched_index(spark, issue_dir, tmp_path, stored_type):
+    """With no encoder, update_index embeds 384-d floats; it raises, naming
+    both sides, rather than append them to a 64-d index, of floats or of
+    doubles."""
+    out = str(tmp_path / "index")
+    docs = read_markdown_dir(spark, issue_dir)
+    index = build_index(docs.limit(2), HashEncoder(dim=64))
+    write_index(index.withColumn("embedding", F.col("embedding").cast(stored_type)), out)
+    before = spark.read.parquet(out).count()
+    want = f"{stored_type} of length 64; .* array<float> of length 384"
+    with pytest.raises(ValueError, match=want):
+        update_index(spark, out, docs)
+    assert spark.read.parquet(out).count() == before > 0

@@ -12,6 +12,8 @@ per row, then BIGINT sums — integer addition is order-independent, so a
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -435,6 +437,72 @@ def user_sessions(events: DataFrame, gap_minutes: int = 10) -> DataFrame:
             "value_cents",
         )
     )
+
+
+# Gaps-and-islands sessions per user_id.  The engine has two gap rules and
+# keeps both; each is one Spark function and one DuckDB twin.
+SESSION_GAP_US = 600_000_000  # 10 minutes
+
+
+def sessions_gap_at_least(events: DataFrame, order: Sequence[str]) -> DataFrame:
+    """Add ``new_s`` and ``sid`` to ``events`` (``user_id``, ``us`` in
+    epoch micros, the ``order`` columns).  Rule: in ``order`` per user, a
+    gap to the previous event of AT LEAST 10 minutes starts a new session
+    (``new_s`` = 1; a user's first event has ``new_s`` = 0), and ``sid`` is
+    the running sum of ``new_s``, so sessions number from 0.  The rule of
+    ``user_sessions``' ``session_window`` (window end exclusive).  DuckDB
+    twin: `sessions_gap_at_least_sql`."""
+    wo = Window.partitionBy("user_id").orderBy(*order)
+    new_s = F.when(
+        (F.col("us") - F.lag("us").over(wo)) >= SESSION_GAP_US, F.lit(1)
+    ).otherwise(F.lit(0))
+    return events.withColumn("new_s", new_s).withColumn(
+        "sid", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
+def sessions_gap_at_least_sql(src: str, order: Sequence[str]) -> str:
+    """SELECT over the relation ``src`` with `sessions_gap_at_least`'s
+    columns and rows."""
+    o = ", ".join(order)
+    return f"""SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY {o}
+                                 ROWS UNBOUNDED PRECEDING) AS sid
+      FROM (
+        SELECT *, CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY {o})
+                            >= {SESSION_GAP_US} THEN 1 ELSE 0 END AS new_s
+        FROM {src}) m"""
+
+
+def sessions_gap_over(events: DataFrame, order: Sequence[str]) -> DataFrame:
+    """Add ``brk`` and ``sess`` to ``events`` (``user_id``, ``ts_us`` in
+    epoch micros, the ``order`` columns).  Rule: in ``order`` per user, a
+    user's first event and any event MORE than 10 minutes after the
+    previous one start a session (``brk`` = 1), and ``sess`` is the running
+    sum of ``brk``, so sessions number from 1 and an exactly-10-minute gap
+    stays in the session.  DuckDB twin: `sessions_gap_over_sql`."""
+    w = Window.partitionBy("user_id").orderBy(*order)
+    brk = F.when(
+        F.lag("ts_us").over(w).isNull()
+        | ((F.col("ts_us") - F.lag("ts_us").over(w)) > SESSION_GAP_US),
+        F.lit(1),
+    ).otherwise(F.lit(0))
+    return events.withColumn("brk", brk).withColumn(
+        "sess", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
+def sessions_gap_over_sql(src: str, order: Sequence[str]) -> str:
+    """SELECT over the relation ``src`` with `sessions_gap_over`'s columns
+    and rows."""
+    o = ", ".join(order)
+    return f"""SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY {o}
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                  AS sess
+      FROM (
+        SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
+                            OR ts_us - lag(ts_us) OVER w > {SESSION_GAP_US}
+                       THEN 1 ELSE 0 END AS brk
+        FROM {src} WINDOW w AS (PARTITION BY user_id ORDER BY {o})) l"""
 
 
 def purchase_and_click_days(events: DataFrame) -> DataFrame:

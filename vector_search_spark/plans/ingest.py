@@ -86,15 +86,30 @@ def update_index(
 ) -> int:
     """Incremental index maintenance (reference S2 'skip existing'):
     chunk+embed ``new_docs`` with ``encoder`` (``build_index``'s default
-    when None; pass the index's own encoder, or the appended rows get a
-    different dimension) and append only chunks whose content-hash id
-    isn't already in the index.  Returns the number of appended rows."""
+    when None) and append only chunks whose content-hash id isn't already
+    in the index.  Returns the number of appended rows.
+
+    Raises ``ValueError``, appending nothing, when the index stores a
+    different ``embedding`` type or vector length than ``encoder`` makes
+    (an index written with another encoder, or with ``array<double>``):
+    the scorers would score the mixed rows null."""
     import os
 
+    encoder = encoder or HashEncoder()
     new_index = build_index(new_docs, encoder).withColumn("year", F.year(F.to_date("date")))
     if os.path.exists(index_path):
-        existing = spark.read.parquet(index_path).select("chunk_id")
-        new_index = new_index.join(existing, "chunk_id", "left_anti")
+        stored = spark.read.parquet(index_path)
+        stored_type = stored.schema["embedding"].dataType
+        new_type = new_index.schema["embedding"].dataType
+        first = stored.select(F.size("embedding").alias("n")).first()
+        stored_dim = first["n"] if first else encoder.dim
+        if stored_type != new_type or stored_dim != encoder.dim:
+            raise ValueError(
+                f"index at {index_path} stores embedding {stored_type.simpleString()}"
+                f" of length {stored_dim}; the new rows would be"
+                f" {new_type.simpleString()} of length {encoder.dim}"
+            )
+        new_index = new_index.join(stored.select("chunk_id"), "chunk_id", "left_anti")
     new_index = new_index.cache()
     try:
         n = new_index.count()

@@ -23,6 +23,7 @@ from .catalog import register
 from .functions.scalar import _CENTS, round4, salted_hash, salted_hash_sql
 from .functions.vector import dot_product
 from .operators import relational as R
+from .operators.relational import sessions_gap_at_least, sessions_gap_at_least_sql
 from .operators.sketches import (
     _ALPHA_EXPR as _HLL_ALPHA,
     _REST_BITS as _HLL_REST,
@@ -305,17 +306,11 @@ def q_hll_cube_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "event_funnel",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us, event_type
       FROM events),
-    m AS (
-      SELECT *, CASE WHEN us - lag(us) OVER (PARTITION BY user_id
-                                             ORDER BY us, event_id)
-                          >= 600000000 THEN 1 ELSE 0 END AS new_s
-      FROM e),
-    s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+    s AS ({sessions_gap_at_least_sql("e", ["us", "event_id"])}),
     v1 AS (
       SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
                   OVER (PARTITION BY user_id, sid) AS v_us
@@ -343,22 +338,16 @@ def q_hll_cube_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict-order session funnel.  Gaps-and-islands sessionization (same
-    10-min rule as ``user_sessions``) and the three stage timestamps are all
-    windows over the SAME (user_id[, sid]) partitioning — Catalyst plans one
+    """Strict-order session funnel.  Gaps-and-islands sessionization
+    (`operators.relational.sessions_gap_at_least`, the 10-min rule of
+    ``user_sessions``) and the three stage timestamps are all windows over
+    the SAME (user_id[, sid]) partitioning — Catalyst plans one
     Exchange + one sort, then chained Window operators; the final global
     fold aggregates ~sessions rows.  No joins, no second scan."""
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", F.expr("ts_ns DIV 1000").alias("us"), "event_type"
     )
-    wo = Window.partitionBy("user_id").orderBy("us", "event_id")
-    gap_us = 600_000_000
-    new_s = F.when(
-        (F.col("us") - F.lag("us").over(wo)) >= gap_us, F.lit(1)
-    ).otherwise(F.lit(0))
-    sess = ev.withColumn("new_s", new_s).withColumn(
-        "sid", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    sess = sessions_gap_at_least(ev, ["us", "event_id"])
     ws = Window.partitionBy("user_id", "sid")
     staged = (
         sess.withColumn(
@@ -1848,17 +1837,11 @@ def q_exp_decay_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "top_event_paths",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us, event_type
       FROM events),
-    m AS (
-      SELECT *, CASE WHEN us - lag(us) OVER (PARTITION BY user_id
-                                             ORDER BY us, event_id)
-                          >= 600000000 THEN 1 ELSE 0 END AS new_s
-      FROM e),
-    s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+    s AS ({sessions_gap_at_least_sql("e", ["us", "event_id"])}),
     tri AS (
       SELECT event_type || '>' ||
              lead(event_type, 1) OVER w || '>' ||
@@ -1872,8 +1855,8 @@ def q_exp_decay_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 three-step event-type paths WITHIN sessions (same 10-minute
-    gaps-and-islands sessionization as the funnel family) — the
+    """Top-10 three-step event-type paths WITHIN sessions (the funnel
+    family's sessions, `operators.relational.sessions_gap_at_least`) — the
     clickstream-mining query behind "what do users actually do", with
     paths never crossing a session boundary.
 
@@ -1884,13 +1867,7 @@ def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", F.expr("ts_ns DIV 1000").alias("us"), "event_type"
     )
-    wo = Window.partitionBy("user_id").orderBy("us", "event_id")
-    new_s = F.when(
-        (F.col("us") - F.lag("us").over(wo)) >= 600_000_000, F.lit(1)
-    ).otherwise(F.lit(0))
-    sess = ev.withColumn("new_s", new_s).withColumn(
-        "sid", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    sess = sessions_gap_at_least(ev, ["us", "event_id"])
     ws = Window.partitionBy("user_id", "sid").orderBy("us", "event_id")
     tri = sess.select(
         F.concat_ws(
@@ -2304,17 +2281,11 @@ def q_quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "conversion_latency_percentiles",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us, event_type
       FROM events),
-    m AS (
-      SELECT *, CASE WHEN us - lag(us) OVER (PARTITION BY user_id
-                                             ORDER BY us, event_id)
-                          >= 600000000 THEN 1 ELSE 0 END AS new_s
-      FROM e),
-    s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                                     ROWS UNBOUNDED PRECEDING) AS sid FROM m),
+    s AS ({sessions_gap_at_least_sql("e", ["us", "event_id"])}),
     v1 AS (
       SELECT *, min(CASE WHEN event_type = 'view' THEN us END)
                   OVER (PARTITION BY user_id, sid) AS v_us
@@ -2342,8 +2313,8 @@ def q_quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_conversion_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT p50/p90/p99 of view→purchase conversion latency per session
-    (same 10-minute sessionization and strict-order stage times as the
-    funnel) — the latency-distribution readout product teams watch, with
+    (the funnel's `sessions_gap_at_least` sessions and strict-order stage
+    times) — the latency-distribution readout product teams watch, with
     exact order statistics instead of an approx sketch (the HDR family
     covers the mergeable/approximate path; this is the exact one).
 
@@ -2357,11 +2328,7 @@ def q_conversion_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFr
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", F.expr("ts_ns DIV 1000").alias("us"), "event_type"
     )
-    wo = Window.partitionBy("user_id").orderBy("us", "event_id")
-    sess = ev.withColumn(
-        "new_s",
-        F.when((F.col("us") - F.lag("us").over(wo)) >= 600_000_000, 1).otherwise(0),
-    ).withColumn("sid", F.sum("new_s").over(wo.rowsBetween(Window.unboundedPreceding, 0)))
+    sess = sessions_gap_at_least(ev, ["us", "event_id"])
     ws = Window.partitionBy("user_id", "sid")
     staged = sess.withColumn(
         "v_us", F.min(F.when(F.col("event_type") == "view", F.col("us"))).over(ws)

@@ -354,20 +354,27 @@ def _shared_sq_index(spark: SparkSession, sf_dir: str):
     return mins, scales, codes
 
 
-_SQ_ORACLE = """
+def _sq_oracle(n_queries: int, where: str = "") -> str:
+    """DuckDB twin of `sq_topk` over the embeddings that pass ``where``
+    (all of them when empty), for the queries ``vec_id < n_queries``: int8
+    codes from corpus-level (min, scale) constants, the dequantized
+    approximate scan, the top-40 candidates and the exact top-10 rescore."""
+    where = f" WHERE {where}" if where else ""
+    return f"""
     WITH dims AS (SELECT unnest(range(1, 65)) AS j),
     st AS (
       SELECT j, min(embedding[j]::DOUBLE) AS mn, max(embedding[j]::DOUBLE) AS mx
       FROM embeddings, dims GROUP BY j),
     sc AS (SELECT j, mn, (mx - mn) / 255.0 AS s FROM st),
+    filt AS (SELECT vec_id FROM embeddings{where}),
     cd AS (
-      SELECT vec_id, j, mn, s,
-             CASE WHEN s = 0.0 THEN 0.0
+      SELECT e.vec_id, sc.j, sc.mn, sc.s,
+             CASE WHEN sc.s = 0.0 THEN 0.0
                   ELSE least(255, greatest(0,
-                         floor((embedding[j]::DOUBLE - mn) / s + 0.5))) END AS c
-      FROM embeddings, sc),
+                         floor((e.embedding[sc.j]::DOUBLE - sc.mn) / sc.s + 0.5))) END AS c
+      FROM embeddings e JOIN filt f ON e.vec_id = f.vec_id, sc),
     dql AS (SELECT vec_id, list(mn + c * s ORDER BY j) AS dq FROM cd GROUP BY vec_id),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 20),
+    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < {n_queries}),
     ap AS (
       SELECT q.query_id, d.vec_id,
              list_dot_product(d.dq, q.embedding::DOUBLE[]) AS approx_score
@@ -394,7 +401,7 @@ _SQ_ORACLE = """
     """
 
 
-@register("ann_sq_topk", oracle=_SQ_ORACLE)
+@register("ann_sq_topk", oracle=_sq_oracle(20))
 def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8 scalar-quantization ANN top-10 for 20 queries: per-dimension
     (min, scale) constants → int8 codes → dequantized approximate scan →
@@ -915,48 +922,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Filtered ANN: metadata predicate applied BEFORE the approximate scan.
 # ---------------------------------------------------------------------------
-@register(
-    "ann_filtered_topk",
-    oracle="""
-    WITH dims AS (SELECT unnest(range(1, 65)) AS j),
-    st AS (
-      SELECT j, min(embedding[j]::DOUBLE) AS mn, max(embedding[j]::DOUBLE) AS mx
-      FROM embeddings, dims GROUP BY j),
-    sc AS (SELECT j, mn, (mx - mn) / 255.0 AS s FROM st),
-    filt AS (SELECT vec_id FROM embeddings WHERE label BETWEEN 2 AND 5),
-    cd AS (
-      SELECT e.vec_id, sc.j, sc.mn, sc.s,
-             CASE WHEN sc.s = 0.0 THEN 0.0
-                  ELSE least(255, greatest(0,
-                         floor((e.embedding[sc.j]::DOUBLE - sc.mn) / sc.s + 0.5))) END AS c
-      FROM embeddings e JOIN filt f ON e.vec_id = f.vec_id, sc),
-    dql AS (SELECT vec_id, list(mn + c * s ORDER BY j) AS dq FROM cd GROUP BY vec_id),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 10),
-    ap AS (
-      SELECT q.query_id, d.vec_id,
-             list_dot_product(d.dq, q.embedding::DOUBLE[]) AS approx_score
-      FROM dql d CROSS JOIN q),
-    cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY approx_score DESC, vec_id) AS cr
-        FROM ap)
-      WHERE cr <= 40),
-    ex AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q2.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q2 ON c.query_id = q2.vec_id)
-    SELECT query_id, vec_id,
-           floor(raw * 10000 + 0.5) / 10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM ex)
-    WHERE rank <= 10
-    """,
-)
+@register("ann_filtered_topk", oracle=_sq_oracle(10, "label BETWEEN 2 AND 5"))
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search (the production ANN shape: "nearest docs
     WHERE label ∈ [2,5]") on the int8-SQ path, done the correct way —
@@ -971,7 +937,8 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the index parquet and the filter pushes down to the scan; the
     approximate pass then touches only surviving codes (broadcast queries,
     WindowGroupLimit top-40), and the exact rescore touches O(queries ×
-    40) float vectors.  Bit-exact DuckDB twin for the whole pipeline."""
+    40) float vectors.  Bit-exact DuckDB twin for the whole pipeline:
+    `_sq_oracle`, the `ann_sq_topk` oracle with the label filter."""
     from .operators.ann import sq_topk
 
     emb = __load(spark, sf_dir, "embeddings")

@@ -47,11 +47,15 @@ from .registry_ml import (
     _plan_cached,
 )
 from .registry_text import _SQL_ND, _SQL_NT, _SQL_QUALITY, _SQL_SR, _shared_doc_features
-from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
+from .operators.relational import (
+    DAILY_PURCHASE_CENTS_SQL,
+    daily_purchase_cents,
+    sessions_gap_over,
+    sessions_gap_over_sql,
+)
 from .sources.tables import load_table as _t
 
 
-_GAP_US = 600_000_000        # 10-minute session gap (the house rule)
 _GRID_US = 3_600_000_000     # 1-hour overlap-join bucket
 
 
@@ -60,18 +64,7 @@ _GRID_US = 3_600_000_000     # 1-hour overlap-join bucket
     oracle=f"""
     WITH e AS (
       SELECT user_id, epoch_ns(ts) // 1000 AS ts_us FROM events),
-    l AS (
-      SELECT user_id, ts_us,
-             CASE WHEN lag(ts_us) OVER w IS NULL
-                       OR ts_us - lag(ts_us) OVER w > {_GAP_US}
-                  THEN 1 ELSE 0 END AS brk
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)),
-    s AS (
-      SELECT user_id, ts_us,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS sess
-      FROM l),
+    s AS ({sessions_gap_over_sql("e", ["ts_us"])}),
     sess AS (
       SELECT user_id, sess::BIGINT AS sess_idx,
              min(ts_us)::BIGINT AS s_us, max(ts_us)::BIGINT AS e_us
@@ -99,10 +92,11 @@ def q_session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (co-browsing detection, load attribution, contention analysis).  The
     sibling of the point-in-interval range join: both ends are intervals.
 
-    Plan: sessions from the house 10-minute gaps-and-islands rule, then
-    each surviving session explodes to the 1-hour grid cells it touches
-    and pairs form by EQUI-join on the cell (+ user_a < user_b to
-    orient) — never a cartesian, never an inequality-only join.
+    Plan: sessions from the 10-minute gaps-and-islands rule of
+    `operators.relational.sessions_gap_over`, then each surviving session
+    explodes to the 1-hour grid cells it touches and pairs form by
+    EQUI-join on the cell (+ user_a < user_b to orient) — never a
+    cartesian, never an inequality-only join.
 
     Round 11 (VERDICT r10 "what's wrong" #1 — density robustness).  Two
     result-preserving prunes bound pair work by what the TOP-20 can
@@ -149,20 +143,8 @@ def q_session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns DIV 1000").alias("ts_us")
     )
-    w = Window.partitionBy("user_id").orderBy("ts_us")
-    brk = ev.withColumn(
-        "brk",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | ((F.col("ts_us") - F.lag("ts_us").over(w)) > _GAP_US),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
     sess = (
-        brk.withColumn(
-            "sess",
-            F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
+        sessions_gap_over(ev, ["ts_us"])
         .groupBy("user_id", F.col("sess").cast("long").alias("sess_idx"))
         .agg(
             F.min("ts_us").cast("long").alias("s_us"),
@@ -560,16 +542,7 @@ def _ma_oracle() -> str:
         """e AS MATERIALIZED (
       SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type
       FROM events)""",
-        f"""l AS (
-      SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                          OR ts_us - lag(ts_us) OVER w > {_GAP_US}
-                     THEN 1 ELSE 0 END AS brk
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id))""",
-        """s AS MATERIALIZED (
-      SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS sess
-      FROM l)""",
+        f"""s AS MATERIALIZED ({sessions_gap_over_sql("e", ["ts_us", "event_id"])})""",
         """k AS MATERIALIZED (
       SELECT * FROM (
         SELECT user_id, sess, ts_us, event_id, event_type,
@@ -661,10 +634,10 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines run the same generated text).  Removal = the channel's state
     becomes unreachable and inbound mass leaks to NULL.
 
-    Scale: one sessionization window (the engine's standard exchange) +
-    a partial-agg'd fold to a 30-cell count frame; all five chain
-    variants (full + 4 removals) iterate on that 1-row frame — corpus-
-    size-free.  The plan compiles ~300 generated columns, so it is served
+    Scale: one sessionization window (`sessions_gap_over`, the engine's
+    standard exchange) + a partial-agg'd fold to a 30-cell count frame;
+    all five chain variants (full + 4 removals) iterate on that 1-row
+    frame — corpus-size-free.  The plan compiles ~300 generated columns, so it is served
     from the prepared-statement cache like the other unrolled iterations.
     """
     return _plan_cached(
@@ -676,18 +649,7 @@ def _ma_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns DIV 1000").alias("ts_us"), "event_id", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    brk = ev.withColumn(
-        "brk",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | ((F.col("ts_us") - F.lag("ts_us").over(w)) > _GAP_US),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sess = brk.withColumn(
-        "sess", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    sess = sessions_gap_over(ev, ["ts_us", "event_id"])
     ws = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
     kept = (
         sess.withColumn(
@@ -1340,16 +1302,7 @@ def _me_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type
       FROM events),
-    l AS (
-      SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                          OR ts_us - lag(ts_us) OVER w > {_GAP_US}
-                     THEN 1 ELSE 0 END AS brk
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-    s AS (
-      SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS sess
-      FROM l),
+    s AS ({sessions_gap_over_sql("e", ["ts_us", "event_id"])}),
     k AS (
       SELECT * FROM (
         SELECT user_id, sess, ts_us, event_id, event_type,
@@ -1412,25 +1365,14 @@ def q_attribution_models_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     credit is per-conversion micro-quantized (floor(1e6·k/n)) BEFORE the
     channel sum, so the fold is an exact BIGINT; NULL-free via COALESCE.
 
-    Scale: the same sessionization exchange as every journey query, then
+    Scale: the `sessions_gap_over` exchange `markov_attribution` uses, then
     session-level aggregates (conversion sessions only — a semi-join
     prefilter) and channel-level folds.  No new shuffle shape.
     """
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns DIV 1000").alias("ts_us"), "event_id", "event_type"
     )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    brk = ev.withColumn(
-        "brk",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | ((F.col("ts_us") - F.lag("ts_us").over(w)) > _GAP_US),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sess = brk.withColumn(
-        "sess", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    sess = sessions_gap_over(ev, ["ts_us", "event_id"])
     ws = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
     kept = (
         sess.withColumn(

@@ -39,7 +39,9 @@ training-data-pipeline north star.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
@@ -196,7 +198,66 @@ def _gini_gain(nl: str, pl: str, n: str, p: str) -> str:
     return f"({parent} - (({nld}/{nd})*{left} + ({nrd}/{nd})*{right}))"
 
 
-_STUMP_GAIN = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
+_GAIN_NANO = (
+    f"floor(({_gini_gain('cum_n', 'cum_pos', 'n_tot', 'pos_tot')})*1000000000 + 0.5)"
+)
+
+
+def gini_split_scores(
+    agg: DataFrame, keys: Sequence[str] = (), extra: Column | None = None
+) -> DataFrame:
+    """Every candidate split of a class histogram, scored by Gini gain.
+
+    ``agg`` holds one row per (keys…, feature, val) cell with its row
+    count ``cnt`` and positive count ``pos``.  Returns (keys…, feature,
+    val, cum_n, cum_pos, n_tot, pos_tot, gain_nano): the left branch of
+    the split ``<= val`` as running sums in val order per (keys…,
+    feature), the node totals, and the gain nano-quantized to a BIGINT so
+    no argmax compares floats.  The last cell of each run (empty right
+    branch) is dropped, and so is any row failing ``extra``.  Each caller
+    picks its own best rows.  `gini_split_scores_sql` is the DuckDB twin.
+    """
+    w = (
+        Window.partitionBy(*keys, "feature")
+        .orderBy("val")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wt = Window.partitionBy(*keys, "feature")
+    keep = F.col("cum_n") < F.col("n_tot")
+    if extra is not None:
+        keep = keep & extra
+    cum = agg.select(
+        *keys,
+        "feature",
+        "val",
+        F.sum("cnt").over(w).cast("long").alias("cum_n"),
+        F.sum("pos").over(w).cast("long").alias("cum_pos"),
+        F.sum("cnt").over(wt).cast("long").alias("n_tot"),
+        F.sum("pos").over(wt).cast("long").alias("pos_tot"),
+    )
+    return cum.filter(keep).withColumn("gain_nano", F.expr(f"CAST({_GAIN_NANO} AS BIGINT)"))
+
+
+def gini_split_scores_sql(src: str, keys: Sequence[str] = (), extra: str = "") -> str:
+    """DuckDB twin of `gini_split_scores`: a SELECT over the histogram
+    relation ``src`` (a CTE name) with the same columns and rows."""
+    k = "".join(f"{key}, " for key in keys)
+    part = f"PARTITION BY {k}feature"
+    keep = f"cum_n < n_tot AND {extra}" if extra else "cum_n < n_tot"
+    return f"""SELECT {k}feature, val, cum_n, cum_pos, n_tot, pos_tot,
+             {_GAIN_NANO}::BIGINT AS gain_nano
+      FROM (
+        SELECT {k}feature, val,
+               (sum(cnt) OVER w)::BIGINT AS cum_n,
+               (sum(pos) OVER w)::BIGINT AS cum_pos,
+               (sum(cnt) OVER ({part}))::BIGINT AS n_tot,
+               (sum(pos) OVER ({part}))::BIGINT AS pos_tot
+        FROM {src}
+        WINDOW w AS ({part} ORDER BY val
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) c
+      WHERE {keep}"""
+
+
 _STUMP_FEATURES = [
     ("quantity", "CAST(floor(l_quantity + 0.5) AS BIGINT)"),
     ("discount_pct", "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"),
@@ -216,19 +277,7 @@ def _stump_oracle() -> str:
     agg AS (
       SELECT feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM base GROUP BY 1, 2),
-    cum AS (
-      SELECT feature, val, cnt, pos,
-             (sum(cnt) OVER w)::BIGINT AS cum_n,
-             (sum(pos) OVER w)::BIGINT AS cum_pos,
-             (sum(cnt) OVER (PARTITION BY feature))::BIGINT AS n_tot,
-             (sum(pos) OVER (PARTITION BY feature))::BIGINT AS pos_tot
-      FROM agg
-      WINDOW w AS (PARTITION BY feature ORDER BY val
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    scored AS (
-      SELECT feature, val, cum_n, cum_pos, n_tot, pos_tot,
-             floor(({_STUMP_GAIN})*1000000000 + 0.5)::BIGINT AS gain_nano
-      FROM cum WHERE cum_n < n_tot),
+    scored AS ({gini_split_scores_sql("agg")}),
     best AS (
       SELECT *, row_number() OVER (PARTITION BY feature
                                    ORDER BY gain_nano DESC, val) AS rn
@@ -251,9 +300,9 @@ def q_decision_stump_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     value) class counts, never the raw rows.
 
     Exactness: class counts are exact integers; the gain is ONE generated
-    DOUBLE expression over four BIGINT columns (shared text both engines),
-    ranked on its nano-quantized integer so the argmax (tie-break: lowest
-    threshold) never compares floats.
+    DOUBLE expression over four BIGINT columns (`gini_split_scores` and
+    its SQL twin), ranked on its nano-quantized integer so the argmax
+    (tie-break: lowest threshold) never compares floats.
 
     Scale: ONE scan explodes each row to 3 (feature, value) pairs, then a
     partial-agg'd groupBy over at most Σ|domain| ≈ 160 cells; windows and
@@ -281,23 +330,7 @@ def q_decision_stump_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum("pos").cast("long").alias("pos"),
     )
-    w_cum = (
-        Window.partitionBy("feature")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("feature")
-    cum = agg.select(
-        "feature",
-        "val",
-        F.sum("cnt").over(w_cum).cast("long").alias("cum_n"),
-        F.sum("pos").over(w_cum).cast("long").alias("cum_pos"),
-        F.sum("cnt").over(w_tot).cast("long").alias("n_tot"),
-        F.sum("pos").over(w_tot).cast("long").alias("pos_tot"),
-    )
-    scored = cum.filter(F.col("cum_n") < F.col("n_tot")).withColumn(
-        "gain_nano", F.expr(f"CAST(floor(({_STUMP_GAIN})*1000000000 + 0.5) AS BIGINT)")
-    )
+    scored = gini_split_scores(agg)
     w_best = Window.partitionBy("feature").orderBy(
         F.desc("gain_nano"), F.asc("val")
     )

@@ -11,7 +11,13 @@ from pyspark.sql import functions as F
 
 from .catalog import register
 from .functions.scalar import _fdiv, salted_hash, salted_hash_sql
-from .registry_ml import _STUMP_FEATURES, _STUMP_LABEL, _gini_gain, _pois_w
+from .registry_ml import (
+    _STUMP_FEATURES,
+    _STUMP_LABEL,
+    _pois_w,
+    gini_split_scores,
+    gini_split_scores_sql,
+)
 from .sources.tables import load_table as _t
 
 
@@ -437,6 +443,41 @@ def q_conformal_price_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Decision trees: one level = a (node, feature, val) histogram and its best
+# Gini split per node; the root level has no node key and one best split.
+# ---------------------------------------------------------------------------
+def _tree_best(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """Best split of each node of (keys…, feature, val, pos) rows, ties
+    broken on (feature, val): a row_number per ``keys``, or a global
+    top-1 when ``keys`` is empty.  `_tree_best_sql` is the DuckDB twin."""
+    agg = rows.groupBy(*keys, "feature", "val").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt"),
+        F.sum("pos").cast("long").alias("pos"),
+    )
+    scored = gini_split_scores(agg, keys)
+    if not keys:
+        return scored.orderBy(F.desc("gain_nano"), F.asc("feature"), F.asc("val")).limit(1)
+    wr = Window.partitionBy(*keys).orderBy(F.desc("gain_nano"), F.asc("feature"), F.asc("val"))
+    return scored.withColumn("rn", F.row_number().over(wr)).filter(F.col("rn") == 1).drop("rn")
+
+
+def _tree_best_sql(agg: str, keys: list[str]) -> str:
+    """Body of the CTE holding `_tree_best`'s rows, from the histogram
+    CTE ``agg`` (keys…, feature, val, cnt, pos)."""
+    scored = gini_split_scores_sql(agg, keys)
+    if not keys:
+        return f"""
+      SELECT * FROM ({scored}) s
+      ORDER BY gain_nano DESC, feature, val LIMIT 1"""
+    return f"""
+      SELECT * EXCLUDE (rn) FROM (
+        SELECT *, row_number() OVER (PARTITION BY {", ".join(keys)}
+                                     ORDER BY gain_nano DESC, feature, val) AS rn
+        FROM ({scored}) s) x
+      WHERE rn = 1"""
+
+
+# ---------------------------------------------------------------------------
 # Depth-2 decision tree (level-wise histogram growth) on the returns label.
 # ---------------------------------------------------------------------------
 def _tree_oracle() -> str:
@@ -454,25 +495,12 @@ def _tree_oracle() -> str:
         + " ".join(f"WHEN '{name}' THEN {expr}" for name, expr in _STUMP_FEATURES)
         + " END"
     )
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
     return f"""
     WITH base AS MATERIALIZED ({val_branches}),
     agg0 AS (
       SELECT feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM base GROUP BY 1, 2),
-    cum0 AS (
-      SELECT feature, val, (sum(cnt) OVER w)::BIGINT AS cum_n,
-             (sum(pos) OVER w)::BIGINT AS cum_pos,
-             (sum(cnt) OVER (PARTITION BY feature))::BIGINT AS n_tot,
-             (sum(pos) OVER (PARTITION BY feature))::BIGINT AS pos_tot
-      FROM agg0
-      WINDOW w AS (PARTITION BY feature ORDER BY val
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    root AS MATERIALIZED (
-      SELECT feature, val, cum_n, cum_pos, n_tot, pos_tot,
-             floor(({gain})*1000000000 + 0.5)::BIGINT AS gain_nano
-      FROM cum0 WHERE cum_n < n_tot
-      ORDER BY floor(({gain})*1000000000 + 0.5) DESC, feature, val LIMIT 1),
+    root AS MATERIALIZED ({_tree_best_sql("agg0", [])}),
     tag_li AS MATERIALIZED (
       SELECT lineitem.*, {_STUMP_LABEL} AS pos,
              CASE WHEN ({chosen_val}) <= r.val
@@ -482,23 +510,7 @@ def _tree_oracle() -> str:
     agg1 AS (
       SELECT node, feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM tagged GROUP BY 1, 2, 3),
-    cum1 AS (
-      SELECT node, feature, val, (sum(cnt) OVER w)::BIGINT AS cum_n,
-             (sum(pos) OVER w)::BIGINT AS cum_pos,
-             (sum(cnt) OVER (PARTITION BY node, feature))::BIGINT AS n_tot,
-             (sum(pos) OVER (PARTITION BY node, feature))::BIGINT AS pos_tot
-      FROM agg1
-      WINDOW w AS (PARTITION BY node, feature ORDER BY val
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    childbest AS (
-      SELECT node, feature, val, cum_n, cum_pos, n_tot, pos_tot, gain_nano
-      FROM (
-        SELECT *, floor(({gain})*1000000000 + 0.5)::BIGINT AS gain_nano,
-               row_number() OVER (PARTITION BY node
-                                  ORDER BY floor(({gain})*1000000000 + 0.5) DESC,
-                                           feature, val) AS rn
-        FROM cum1 WHERE cum_n < n_tot)
-      WHERE rn = 1),
+    childbest AS ({_tree_best_sql("agg1", ["node"])}),
     allnodes AS (
       SELECT 'root' AS node, feature, val, cum_n, cum_pos, n_tot, pos_tot, gain_nano
       FROM root
@@ -529,10 +541,11 @@ def q_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: histogram counts are exact integers; the Gini gain is
     ONE shared DOUBLE text (fixed operand order) nano-quantized before
-    every argmax; argmax ties break (feature, val); the left/right tag
-    compares the chosen feature's INTEGER value to the integer
-    threshold.  Child nodes whose slice cannot split (single distinct
-    value) would simply emit no row.
+    every argmax (`_tree_best` over `gini_split_scores`, both engines);
+    argmax ties break (feature, val); the left/right tag compares the
+    chosen feature's INTEGER value to the integer threshold.  Child nodes
+    whose slice cannot split (single distinct value) would simply emit no
+    row.
 
     Scale: two scans — one per tree level, NOT one per candidate split:
     each level is a partial-agg'd (node, feature, bin) histogram
@@ -557,41 +570,7 @@ def q_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.select(fv, F.expr(_STUMP_LABEL).alias("pos")).select(
         "fv.feature", "fv.val", "pos"
     )
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
-
-    def _best(df: DataFrame, keys: list[str]) -> DataFrame:
-        agg = df.groupBy(*keys, "feature", "val").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("pos").cast("long").alias("pos"),
-        )
-        w = (
-            Window.partitionBy(*keys, "feature")
-            .orderBy("val")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wt = Window.partitionBy(*keys, "feature")
-        cum = agg.select(
-            *keys,
-            "feature",
-            "val",
-            F.sum("cnt").over(w).cast("long").alias("cum_n"),
-            F.sum("pos").over(w).cast("long").alias("cum_pos"),
-            F.sum("cnt").over(wt).cast("long").alias("n_tot"),
-            F.sum("pos").over(wt).cast("long").alias("pos_tot"),
-        ).filter(F.col("cum_n") < F.col("n_tot"))
-        scored = cum.withColumn(
-            "gain_nano", F.expr(f"CAST(floor(({gain})*1000000000 + 0.5) AS BIGINT)")
-        )
-        if keys:
-            wr = Window.partitionBy(*keys).orderBy(
-                F.desc("gain_nano"), F.asc("feature"), F.asc("val")
-            )
-            return scored.withColumn("rn", F.row_number().over(wr)).filter(
-                F.col("rn") == 1
-            ).drop("rn")
-        return scored.orderBy(F.desc("gain_nano"), F.asc("feature"), F.asc("val")).limit(1)
-
-    root = _best(base, []).localCheckpoint(eager=True)
+    root = _tree_best(base, []).localCheckpoint(eager=True)
     chosen_val = (
         "CASE r_feature "
         + " ".join(f"WHEN '{name}' THEN {expr}" for name, expr in _STUMP_FEATURES)
@@ -614,7 +593,7 @@ def q_decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", fv, F.expr(_STUMP_LABEL).alias("pos"))
         .select("node", "fv.feature", "fv.val", "pos")
     )
-    childbest = _best(tagged, ["node"])
+    childbest = _tree_best(tagged, ["node"])
     allnodes = root.withColumn("node", F.lit("root")).select(
         "node", "feature", "val", "cum_n", "cum_pos", "n_tot", "pos_tot", "gain_nano"
     ).unionByName(
@@ -666,52 +645,12 @@ def _tree3_oracle() -> str:
         + " ".join(f"WHEN '{name}' THEN {expr}" for name, expr in _STUMP_FEATURES)
         + " END"
     )
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
-
-    def best_over(src: str, out: str, keyed: bool) -> str:
-        part = "PARTITION BY node, feature" if keyed else "PARTITION BY feature"
-        npart = "PARTITION BY node" if keyed else ""
-        node_sel = "node, " if keyed else "'root' AS node, "
-        if keyed:
-            return f"""{out} AS MATERIALIZED (
-      SELECT node, feature, val, cum_n, cum_pos, n_tot, pos_tot, gain_nano
-      FROM (
-        SELECT *, floor(({gain})*1000000000 + 0.5)::BIGINT AS gain_nano,
-               row_number() OVER ({npart}
-                                  ORDER BY floor(({gain})*1000000000 + 0.5) DESC,
-                                           feature, val) AS rn
-        FROM (
-          SELECT {node_sel}feature, val,
-                 (sum(cnt) OVER w)::BIGINT AS cum_n,
-                 (sum(pos) OVER w)::BIGINT AS cum_pos,
-                 (sum(cnt) OVER ({part}))::BIGINT AS n_tot,
-                 (sum(pos) OVER ({part}))::BIGINT AS pos_tot
-          FROM {src}
-          WINDOW w AS ({part} ORDER BY val
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) c
-        WHERE cum_n < n_tot) x
-      WHERE rn = 1)"""
-        return f"""{out} AS MATERIALIZED (
-      SELECT feature, val, cum_n, cum_pos, n_tot, pos_tot,
-             floor(({gain})*1000000000 + 0.5)::BIGINT AS gain_nano
-      FROM (
-          SELECT feature, val,
-                 (sum(cnt) OVER w)::BIGINT AS cum_n,
-                 (sum(pos) OVER w)::BIGINT AS cum_pos,
-                 (sum(cnt) OVER ({part}))::BIGINT AS n_tot,
-                 (sum(pos) OVER ({part}))::BIGINT AS pos_tot
-          FROM {src}
-          WINDOW w AS ({part} ORDER BY val
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) c
-      WHERE cum_n < n_tot
-      ORDER BY gain_nano DESC, feature, val LIMIT 1)"""
-
     return f"""
     WITH base AS MATERIALIZED ({val_branches}),
     agg0 AS (
       SELECT feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM base GROUP BY 1, 2),
-    {best_over("agg0", "root", False)},
+    root AS MATERIALIZED ({_tree_best_sql("agg0", [])}),
     tag1 AS MATERIALIZED (
       SELECT lineitem.*, {_STUMP_LABEL} AS pos,
              CASE WHEN ({chosen_root}) <= r.val
@@ -721,7 +660,7 @@ def _tree3_oracle() -> str:
     agg1 AS (
       SELECT node, feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM t1 GROUP BY 1, 2, 3),
-    {best_over("agg1", "lvl1", True)},
+    lvl1 AS MATERIALIZED ({_tree_best_sql("agg1", ["node"])}),
     tag2 AS MATERIALIZED (
       SELECT tag1.*,
              tag1.node || '.' ||
@@ -732,7 +671,7 @@ def _tree3_oracle() -> str:
     agg2 AS (
       SELECT node, feature, val, count(*)::BIGINT AS cnt, sum(pos)::BIGINT AS pos
       FROM t2 GROUP BY 1, 2, 3),
-    {best_over("agg2", "lvl2", True)},
+    lvl2 AS MATERIALIZED ({_tree_best_sql("agg2", ["node"])}),
     allnodes AS (
       SELECT 'root' AS node, feature, val, cum_n, cum_pos, n_tot, pos_tot, gain_nano
       FROM root
@@ -764,7 +703,7 @@ def q_decision_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stump/bagging family already established.
 
     Determinism: identical to depth-2 — exact integer histograms, the
-    shared nano-quantized Gini text for every argmax, (feature, val)
+    same `_tree_best` for every level's argmax, (feature, val)
     tie-breaks, integer threshold routing; level-2 node names are path
     strings ('left.right' = root-left then child-right).
 
@@ -787,49 +726,10 @@ def q_decision_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     ).alias("fv")
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
-
-    def _best(df: DataFrame, keyed: bool) -> DataFrame:
-        keys = ["node"] if keyed else []
-        agg = df.groupBy(*keys, "feature", "val").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum("pos").cast("long").alias("pos"),
-        )
-        w = (
-            Window.partitionBy(*keys, "feature")
-            .orderBy("val")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wt = Window.partitionBy(*keys, "feature")
-        cum = agg.select(
-            *keys,
-            "feature",
-            "val",
-            F.sum("cnt").over(w).cast("long").alias("cum_n"),
-            F.sum("pos").over(w).cast("long").alias("cum_pos"),
-            F.sum("cnt").over(wt).cast("long").alias("n_tot"),
-            F.sum("pos").over(wt).cast("long").alias("pos_tot"),
-        ).filter(F.col("cum_n") < F.col("n_tot"))
-        scored = cum.withColumn(
-            "gain_nano", F.expr(f"CAST(floor(({gain})*1000000000 + 0.5) AS BIGINT)")
-        )
-        if keyed:
-            wr = Window.partitionBy("node").orderBy(
-                F.desc("gain_nano"), F.asc("feature"), F.asc("val")
-            )
-            return (
-                scored.withColumn("rn", F.row_number().over(wr))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-        return scored.orderBy(
-            F.desc("gain_nano"), F.asc("feature"), F.asc("val")
-        ).limit(1)
-
     base = li.select(fv, F.expr(_STUMP_LABEL).alias("pos")).select(
         "fv.feature", "fv.val", "pos"
     )
-    root = _best(base, False).localCheckpoint(eager=True)
+    root = _tree_best(base, []).localCheckpoint(eager=True)
     chosen_root = (
         "CASE r_feature "
         + " ".join(f"WHEN '{name}' THEN {expr}" for name, expr in _STUMP_FEATURES)
@@ -851,11 +751,11 @@ def q_decision_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("r_feature", "r_val")
     )
-    lvl1 = _best(
+    lvl1 = _tree_best(
         tag1.select("node", fv, F.expr(_STUMP_LABEL).alias("pos")).select(
             "node", "fv.feature", "fv.val", "pos"
         ),
-        True,
+        ["node"],
     ).localCheckpoint(eager=True)
     chosen_child = (
         "CASE c_feature "
@@ -885,11 +785,11 @@ def q_decision_tree_depth3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("c_feature", "c_val")
     )
-    lvl2 = _best(
+    lvl2 = _tree_best(
         tag2.select(
             F.col("node2").alias("node"), fv, F.expr(_STUMP_LABEL).alias("pos")
         ).select("node", "fv.feature", "fv.val", "pos"),
-        True,
+        ["node"],
     )
     cols = ["node", "feature", "val", "cum_n", "cum_pos", "n_tot", "pos_tot", "gain_nano"]
     allnodes = (
@@ -936,7 +836,6 @@ def _bag_oracle() -> str:
         f"'{name}' AS feature, {expr} AS val, {_STUMP_LABEL} AS pos FROM sig"
         for name, expr in _STUMP_FEATURES
     )
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
     return f"""
     WITH sig AS MATERIALIZED (
       SELECT *, CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
@@ -953,22 +852,11 @@ def _bag_oracle() -> str:
       SELECT b, feature, val, sum(w)::BIGINT AS cnt,
              sum(w * pos)::BIGINT AS pos
       FROM rep GROUP BY 1, 2, 3),
-    cum AS (
-      SELECT b, feature, val,
-             (sum(cnt) OVER w)::BIGINT AS cum_n,
-             (sum(pos) OVER w)::BIGINT AS cum_pos,
-             (sum(cnt) OVER (PARTITION BY b, feature))::BIGINT AS n_tot,
-             (sum(pos) OVER (PARTITION BY b, feature))::BIGINT AS pos_tot
-      FROM agg
-      WINDOW w AS (PARTITION BY b, feature ORDER BY val
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
     winners AS (
       SELECT b, feature, val FROM (
-        SELECT *, floor(({gain})*1000000000 + 0.5)::BIGINT AS gain_nano,
-               row_number() OVER (PARTITION BY b
-                                  ORDER BY floor(({gain})*1000000000 + 0.5) DESC,
-                                           feature, val) AS rn
-        FROM cum WHERE cum_n < n_tot AND n_tot > 0) x
+        SELECT *, row_number() OVER (PARTITION BY b
+                                     ORDER BY gain_nano DESC, feature, val) AS rn
+        FROM ({gini_split_scores_sql("agg", ["b"], "n_tot > 0")}) s) x
       WHERE rn = 1)
     SELECT feature, val AS threshold, count(*)::BIGINT AS wins,
            {BAG_B}::BIGINT AS n_replicas
@@ -991,8 +879,8 @@ def q_bagging_split_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: replica weights are integer Poisson ladder values from
     md5 uniforms (4 lanes per digest); weighted histogram counts are
-    exact integer sums; the gain is the shared nano-quantized text with
-    (feature, val) tie-breaks per replica.
+    exact integer sums; the gains come from `gini_split_scores` (kept
+    where n_tot > 0), argmax with (feature, val) tie-breaks per replica.
 
     Scale: the scan collapses straight onto the JOINT feature-value key
     ((q, d, t, label) packed into one long — ≤ 50·64·64·2 cells), with
@@ -1088,29 +976,11 @@ def q_bagging_split_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w").cast("long").alias("cnt"),
         F.sum(F.col("w") * F.col("pos")).cast("long").alias("pos"),
     )
-    wcum = (
-        Window.partitionBy("b", "feature")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wtot = Window.partitionBy("b", "feature")
-    gain = _gini_gain("cum_n", "cum_pos", "n_tot", "pos_tot")
-    cum = agg.select(
-        "b",
-        "feature",
-        "val",
-        F.sum("cnt").over(wcum).cast("long").alias("cum_n"),
-        F.sum("pos").over(wcum).cast("long").alias("cum_pos"),
-        F.sum("cnt").over(wtot).cast("long").alias("n_tot"),
-        F.sum("pos").over(wtot).cast("long").alias("pos_tot"),
-    ).filter((F.col("cum_n") < F.col("n_tot")) & (F.col("n_tot") > 0))
     wr = Window.partitionBy("b").orderBy(
         F.desc("gain_nano"), F.asc("feature"), F.asc("val")
     )
     winners = (
-        cum.withColumn(
-            "gain_nano", F.expr(f"CAST(floor(({gain})*1000000000 + 0.5) AS BIGINT)")
-        )
+        gini_split_scores(agg, ["b"], F.col("n_tot") > 0)
         .withColumn("rn", F.row_number().over(wr))
         .filter(F.col("rn") == 1)
     )

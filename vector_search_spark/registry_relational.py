@@ -225,13 +225,7 @@ def q_latest_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       SELECT user_id, epoch_ns(ts) // 1000 AS us, {_cents('value')} AS vc
       FROM events),
-    m AS (
-      SELECT user_id, us, vc,
-             CASE WHEN us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                       >= 600000000 THEN 1 ELSE 0 END AS new_s
-      FROM e),
-    s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY us
-                                     ROWS UNBOUNDED PRECEDING) AS sid FROM m)
+    s AS ({R.sessions_gap_at_least_sql("e", ["us"])})
     SELECT user_id, min(us) AS session_start_us,
            count(*)::BIGINT AS n_events, sum(vc)::BIGINT AS value_cents
     FROM s GROUP BY user_id, sid
@@ -239,8 +233,8 @@ def q_latest_event_per_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window sessionization; oracle = gaps-and-islands SQL (lag +
-    running sum).  A gap exactly == 10 min starts a new session on both
-    sides (Spark session end is exclusive)."""
+    running sum, `sessions_gap_at_least_sql`).  A gap exactly == 10 min
+    starts a new session on both sides (Spark session end is exclusive)."""
     return R.user_sessions(_t(spark, sf_dir, "events"), gap_minutes=10)
 
 

@@ -6,13 +6,83 @@ them byte-identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import register
 from .functions.scalar import salted_hash, salted_hash_sql
 from .operators.relational import DAILY_PURCHASE_CENTS_SQL, daily_purchase_cents
 from .sources.tables import load_table as _t
+
+
+# ---------------------------------------------------------------------------
+# Censored signup → first-purchase durations, shared by the survival family.
+# ---------------------------------------------------------------------------
+def _conversion_durations(spark: SparkSession, sf_dir: str, *lead: Column) -> DataFrame:
+    """One row per user with a signup: the ``lead`` columns, then ``d`` =
+    whole days from the first signup to the first strictly later purchase,
+    or to the last event of the corpus (the horizon) when none follows,
+    and ``ev`` = 1 for a purchase, 0 for a censored user.  The DuckDB twin
+    is `_conversion_durations_sql`."""
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", F.expr("unix_micros(ts)").alias("us"), "event_type"
+    )
+    horizon = ev.agg(F.max("us").cast("long").alias("h"))
+    t0 = (
+        ev.groupBy("user_id")
+        .agg(
+            F.min(F.when(F.col("event_type") == "signup", F.col("us")))
+            .cast("long")
+            .alias("s_us")
+        )
+        .filter(F.col("s_us").isNotNull())
+    )
+    conv = (
+        t0.join(ev, "user_id")
+        .groupBy("user_id", "s_us")
+        .agg(
+            F.min(
+                F.when(
+                    (F.col("event_type") == "purchase") & (F.col("us") > F.col("s_us")),
+                    F.col("us"),
+                )
+            )
+            .cast("long")
+            .alias("p_us")
+        )
+    )
+    return conv.crossJoin(F.broadcast(horizon)).select(
+        *lead,
+        F.when(F.col("p_us").isNotNull(), F.expr("(p_us - s_us) DIV 86400000000"))
+        .otherwise(F.expr("(h - s_us) DIV 86400000000"))
+        .alias("d"),
+        F.when(F.col("p_us").isNotNull(), 1).otherwise(0).alias("ev"),
+    )
+
+
+def _conversion_durations_sql(lead: str = "") -> str:
+    """CTEs e, horizon, t0, conv and dur: `_conversion_durations` as
+    ``dur`` (user_id, the ``lead`` select items, d, ev)."""
+    lead = f"\n             {lead}," if lead else ""
+    return f"""e AS (
+      SELECT user_id, epoch_ns(ts) // 1000 AS us, event_type FROM events),
+    horizon AS (SELECT max(us)::BIGINT AS h FROM e),
+    t0 AS (
+      SELECT user_id, min(CASE WHEN event_type = 'signup' THEN us END)::BIGINT AS s_us
+      FROM e GROUP BY user_id HAVING s_us IS NOT NULL),
+    conv AS (
+      SELECT t0.user_id, t0.s_us,
+             min(CASE WHEN e.event_type = 'purchase' AND e.us > t0.s_us
+                      THEN e.us END)::BIGINT AS p_us
+      FROM t0 JOIN e ON e.user_id = t0.user_id
+      GROUP BY t0.user_id, t0.s_us),
+    dur AS (
+      SELECT user_id,{lead}
+             CASE WHEN p_us IS NOT NULL THEN (p_us - s_us) // 86400000000
+                  ELSE ((SELECT h FROM horizon) - s_us) // 86400000000
+             END AS d,
+             CASE WHEN p_us IS NOT NULL THEN 1 ELSE 0 END AS ev
+      FROM conv)"""
 
 
 # ---------------------------------------------------------------------------
@@ -28,25 +98,7 @@ _KM_SURV = "exp(CAST(cum_ln AS DOUBLE) / 1000000.0)"
 @register(
     "kaplan_meier_conversion",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, epoch_ns(ts) // 1000 AS us, event_type FROM events),
-    horizon AS (SELECT max(us)::BIGINT AS h FROM e),
-    t0 AS (
-      SELECT user_id, min(CASE WHEN event_type = 'signup' THEN us END)::BIGINT AS s_us
-      FROM e GROUP BY user_id HAVING s_us IS NOT NULL),
-    conv AS (
-      SELECT t0.user_id, t0.s_us,
-             min(CASE WHEN e.event_type = 'purchase' AND e.us > t0.s_us
-                      THEN e.us END)::BIGINT AS p_us
-      FROM t0 JOIN e ON e.user_id = t0.user_id
-      GROUP BY t0.user_id, t0.s_us),
-    dur AS (
-      SELECT user_id,
-             CASE WHEN p_us IS NOT NULL THEN (p_us - s_us) // 86400000000
-                  ELSE ((SELECT h FROM horizon) - s_us) // 86400000000
-             END AS d,
-             CASE WHEN p_us IS NOT NULL THEN 1 ELSE 0 END AS ev
-      FROM conv),
+    WITH {_conversion_durations_sql()},
     days AS (
       SELECT d, sum(ev)::BIGINT AS n_events,
              sum(1 - ev)::BIGINT AS n_censored
@@ -92,44 +144,7 @@ def q_kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     AGGREGATE day table (one row per duration day — decades ≈ 10⁴ rows),
     so the unpartitioned prefix sums cost nothing at any corpus size.
     """
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(ts)").alias("us"),
-        "event_type",
-    )
-    horizon = ev.agg(F.max("us").cast("long").alias("h"))
-    t0 = (
-        ev.groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "signup", F.col("us")))
-            .cast("long")
-            .alias("s_us")
-        )
-        .filter(F.col("s_us").isNotNull())
-    )
-    conv = (
-        t0.join(ev, "user_id")
-        .groupBy("user_id", "s_us")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("us") > F.col("s_us")),
-                    F.col("us"),
-                )
-            )
-            .cast("long")
-            .alias("p_us")
-        )
-    )
-    dur = conv.crossJoin(F.broadcast(horizon)).select(
-        F.when(
-            F.col("p_us").isNotNull(),
-            F.expr("(p_us - s_us) DIV 86400000000"),
-        )
-        .otherwise(F.expr("(h - s_us) DIV 86400000000"))
-        .alias("d"),
-        F.when(F.col("p_us").isNotNull(), 1).otherwise(0).alias("ev"),
-    )
+    dur = _conversion_durations(spark, sf_dir)
     days = dur.groupBy("d").agg(
         F.sum("ev").cast("long").alias("n_events"),
         F.sum(1 - F.col("ev")).cast("long").alias("n_censored"),
@@ -162,10 +177,57 @@ _TRIM_MEAN = "(CAST(s_kept AS DOUBLE) / CAST(c_kept AS DOUBLE)) / 100.0"
 _RAW_MEAN = "(CAST(s_all AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0"
 
 
-@register(
-    "trimmed_mean_value",
-    oracle=f"""
-    WITH cents AS (
+def _trim_histogram(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The per-type cents histogram of event values, as two frames.
+    ``kept``: one row per (event_type, cents value c) with n (rows of the
+    type), k = n // TRIM_DIV, kc = how many of the value's rows rank
+    inside [k+1, n−k] (ties straddling a trim boundary split exactly),
+    c and cum (the value's cumulative count).
+    ``raw``: (event_type, s_all), the exact sum of all cents.  The
+    histogram is checkpointed: both frames read it, so the corpus is
+    scanned once.  The DuckDB twin is `_trim_histogram_sql`."""
+    ev = _t(spark, sf_dir, "events")
+    cents = ev.select(
+        "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c")
+    )
+    hist = cents.groupBy("event_type", "c").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    ).localCheckpoint(eager=True)
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("c")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wt = Window.partitionBy("event_type")
+    cum = hist.select(
+        "event_type",
+        "c",
+        "cnt",
+        F.sum("cnt").over(w).cast("long").alias("cum"),
+        F.sum("cnt").over(wt).cast("long").alias("n"),
+    )
+    kept = cum.select(
+        "event_type",
+        "n",
+        F.expr(f"n DIV {TRIM_DIV}").cast("long").alias("k"),
+        F.expr(
+            f"greatest(0, least(cum, n - (n DIV {TRIM_DIV}))"
+            f" - greatest(cum - cnt + 1, (n DIV {TRIM_DIV}) + 1) + 1)"
+        ).alias("kc"),
+        "c",
+        "cum",
+    )
+    # sum(c) over rows == sum(cnt*c) over the histogram cells, exactly
+    raw = hist.groupBy("event_type").agg(
+        F.sum(F.col("cnt").cast("decimal(38,0)") * F.col("c")).alias("s_all")
+    )
+    return kept, raw
+
+
+def _trim_histogram_sql() -> str:
+    """CTEs cents, hist, cum, kept and raw: `_trim_histogram`'s frames as
+    ``kept`` and ``raw``."""
+    return f"""cents AS (
       SELECT event_type, floor(value*100 + 0.5)::BIGINT AS c FROM events),
     hist AS (
       SELECT event_type, c, count(*)::BIGINT AS cnt
@@ -180,14 +242,20 @@ _RAW_MEAN = "(CAST(s_all AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0"
       SELECT event_type, n, (n // {TRIM_DIV})::BIGINT AS k,
              greatest(0, least(cum, n - (n // {TRIM_DIV}))
                          - greatest(cum - cnt + 1, (n // {TRIM_DIV}) + 1) + 1) AS kc,
-             c
+             c, cum
       FROM cum),
+    raw AS (
+      SELECT event_type, sum(c)::BIGINT AS s_all FROM cents GROUP BY 1)"""
+
+
+@register(
+    "trimmed_mean_value",
+    oracle=f"""
+    WITH {_trim_histogram_sql()},
     agg AS (
       SELECT event_type, n, k,
              sum(kc)::BIGINT AS c_kept, sum(kc::HUGEINT * c) AS s_kept
-      FROM kept GROUP BY 1, 2, 3),
-    raw AS (
-      SELECT event_type, sum(c)::BIGINT AS s_all FROM cents GROUP BY 1)
+      FROM kept GROUP BY 1, 2, 3)
     SELECT a.event_type, a.n, a.k AS n_trimmed_each_side,
            floor(({_TRIM_MEAN})*10000 + 0.5)/10000.0 AS trimmed_mean,
            floor(({_RAW_MEAN})*10000 + 0.5)/10000.0 AS raw_mean
@@ -220,46 +288,10 @@ def q_trimmed_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     would single-task each type's full slice at 100 TB; this shape
     cannot.
     """
-    ev = _t(spark, sf_dir, "events")
-    cents = ev.select(
-        "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c")
-    )
-    # checkpoint the (type, value) histogram: it fans out to the kept sum
-    # AND the raw mean — one corpus scan, not two
-    hist = cents.groupBy("event_type", "c").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    ).localCheckpoint(eager=True)
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "c",
-        "cnt",
-        F.sum("cnt").over(w).cast("long").alias("cum"),
-        F.sum("cnt").over(wt).cast("long").alias("n"),
-    )
-    kept = cum.select(
-        "event_type",
-        "n",
-        F.expr(f"n DIV {TRIM_DIV}").cast("long").alias("k"),
-        F.expr(
-            f"greatest(0, least(cum, n - (n DIV {TRIM_DIV}))"
-            f" - greatest(cum - cnt + 1, (n DIV {TRIM_DIV}) + 1) + 1)"
-        ).alias("kc"),
-        "c",
-    )
+    kept, raw = _trim_histogram(spark, sf_dir)
     agg = kept.groupBy("event_type", "n", "k").agg(
         F.sum("kc").cast("long").alias("c_kept"),
         F.sum(F.col("kc").cast("decimal(38,0)") * F.col("c")).alias("s_kept"),
-    )
-    # raw sum from the SAME histogram cells: sum(c) over rows == sum(cnt*c)
-    # over cells, an exact integer identity
-    raw = hist.groupBy("event_type").agg(
-        F.sum(F.col("cnt").cast("decimal(38,0)") * F.col("c")).alias("s_all")
     )
     return (
         agg.join(raw, "event_type")
@@ -622,23 +654,7 @@ _WINS_MEAN = (
 @register(
     "winsorized_mean_value",
     oracle=f"""
-    WITH cents AS (
-      SELECT event_type, floor(value*100 + 0.5)::BIGINT AS c FROM events),
-    hist AS (
-      SELECT event_type, c, count(*)::BIGINT AS cnt
-      FROM cents GROUP BY 1, 2),
-    cum AS (
-      SELECT event_type, c, cnt,
-             (sum(cnt) OVER (PARTITION BY event_type ORDER BY c
-                             ROWS UNBOUNDED PRECEDING))::BIGINT AS cum,
-             (sum(cnt) OVER (PARTITION BY event_type))::BIGINT AS n
-      FROM hist),
-    kept AS (
-      SELECT event_type, n, (n // {TRIM_DIV})::BIGINT AS k,
-             greatest(0, least(cum, n - (n // {TRIM_DIV}))
-                         - greatest(cum - cnt + 1, (n // {TRIM_DIV}) + 1) + 1) AS kc,
-             c, cum
-      FROM cum),
+    WITH {_trim_histogram_sql()},
     agg AS (
       SELECT event_type, n, k,
              sum(kc::HUGEINT * c) AS s_kept
@@ -647,9 +663,7 @@ _WINS_MEAN = (
       SELECT event_type,
              min(CASE WHEN cum >= k + 1 THEN c END)::BIGINT AS lo,
              min(CASE WHEN cum >= n - k THEN c END)::BIGINT AS hi
-      FROM kept GROUP BY event_type),
-    raw AS (
-      SELECT event_type, sum(c)::BIGINT AS s_all FROM cents GROUP BY 1)
+      FROM kept GROUP BY event_type)
     SELECT a.event_type, a.n, a.k AS n_clamped_each_side,
            floor((CAST(b.lo AS DOUBLE)/100.0)*10000 + 0.5)/10000.0 AS lo_clamp,
            floor((CAST(b.hi AS DOUBLE)/100.0)*10000 + 0.5)/10000.0 AS hi_clamp,
@@ -670,7 +684,7 @@ def q_winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     both clamp values, so the clamp width itself reads as the tail-mass
     diagnostic.
 
-    Exactness: the same (type, cents) histogram carries cumulative
+    Exactness: the trimmed mean's `_trim_histogram` carries cumulative
     ranks; the kept interior sum reuses the tie-exact overlap counts;
     the two clamp bounds are exact order statistics (smallest value
     whose cumulative count reaches rank k+1 / n−k) read off the SAME
@@ -681,39 +695,7 @@ def q_winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, cents-value) cells bounded by the value domain, windows run
     per type over aggregate cells, and no per-row global sort exists.
     """
-    ev = _t(spark, sf_dir, "events")
-    cents = ev.select(
-        "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("c")
-    )
-    # checkpoint the (type, value) histogram: it fans out to the interior
-    # sum, the clamp bounds AND the raw mean — one corpus scan, not three
-    hist = cents.groupBy("event_type", "c").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    ).localCheckpoint(eager=True)
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "c",
-        "cnt",
-        F.sum("cnt").over(w).cast("long").alias("cum"),
-        F.sum("cnt").over(wt).cast("long").alias("n"),
-    )
-    kept = cum.select(
-        "event_type",
-        "n",
-        F.expr(f"n DIV {TRIM_DIV}").cast("long").alias("k"),
-        F.expr(
-            f"greatest(0, least(cum, n - (n DIV {TRIM_DIV}))"
-            f" - greatest(cum - cnt + 1, (n DIV {TRIM_DIV}) + 1) + 1)"
-        ).alias("kc"),
-        "c",
-        "cum",
-    )
+    kept, raw = _trim_histogram(spark, sf_dir)
     agg = kept.groupBy("event_type", "n", "k").agg(
         F.sum(F.col("kc").cast("decimal(38,0)") * F.col("c")).alias("s_kept"),
     )
@@ -724,11 +706,6 @@ def q_winsorized_mean_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("cum") >= F.col("n") - F.col("k"), F.col("c")))
         .cast("long")
         .alias("hi"),
-    )
-    # raw sum from the SAME histogram cells: sum(c) over rows == sum(cnt*c)
-    # over cells, an exact integer identity
-    raw = hist.groupBy("event_type").agg(
-        F.sum(F.col("cnt").cast("decimal(38,0)") * F.col("c")).alias("s_all")
     )
     return (
         agg.join(bounds, "event_type")
@@ -1762,27 +1739,7 @@ _LR_Z = "(CAST(o1 * 1000000 - e1_micro AS DOUBLE) / 1000000.0) / sqrt(CAST(v_mic
 @register(
     "logrank_test_conversion",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, epoch_ns(ts) // 1000 AS us, event_type FROM events),
-    horizon AS (SELECT max(us)::BIGINT AS h FROM e),
-    t0 AS (
-      SELECT user_id, min(CASE WHEN event_type = 'signup' THEN us END)::BIGINT AS s_us
-      FROM e GROUP BY user_id HAVING s_us IS NOT NULL),
-    conv AS (
-      SELECT t0.user_id, t0.s_us,
-             min(CASE WHEN e.event_type = 'purchase' AND e.us > t0.s_us
-                      THEN e.us END)::BIGINT AS p_us
-      FROM t0 JOIN e ON e.user_id = t0.user_id
-      GROUP BY t0.user_id, t0.s_us),
-    dur AS (
-      SELECT user_id,
-             {salted_hash_sql("logrank", "user_id")}
-               % 2 AS arm,
-             CASE WHEN p_us IS NOT NULL THEN (p_us - s_us) // 86400000000
-                  ELSE ((SELECT h FROM horizon) - s_us) // 86400000000
-             END AS d,
-             CASE WHEN p_us IS NOT NULL THEN 1 ELSE 0 END AS ev
-      FROM conv),
+    WITH {_conversion_durations_sql(f"{salted_hash_sql('logrank', 'user_id')} % 2 AS arm")},
     days AS (
       SELECT d,
              sum(CASE WHEN arm = 0 THEN ev ELSE 0 END)::BIGINT AS d1,
@@ -1822,47 +1779,16 @@ def q_logrank_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit exists to certify.
 
     Exactness: durations, risk sets and event counts are exact integers
-    (the KM machinery, per arm); each event day's expectation and
-    variance terms are ONE shared DOUBLE text quantized to micro BEFORE
-    the sums; z is a single shared expression over the integer totals.
+    (the KM durations of `_conversion_durations`, per arm); each event
+    day's expectation and variance terms are ONE shared DOUBLE text
+    quantized to micro BEFORE the sums; z is a single shared expression over the integer totals.
 
     Scale: two partial-agg'd groupBys (per-user firsts, per-day arm
     counts) and reverse prefix sums on the day AGGREGATE — identical
     economics to the KM query it tests.
     """
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.expr("unix_micros(ts)").alias("us"), "event_type"
-    )
-    horizon = ev.agg(F.max("us").cast("long").alias("h"))
-    t0 = (
-        ev.groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "signup", F.col("us")))
-            .cast("long")
-            .alias("s_us")
-        )
-        .filter(F.col("s_us").isNotNull())
-    )
-    conv = (
-        t0.join(ev, "user_id")
-        .groupBy("user_id", "s_us")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase") & (F.col("us") > F.col("s_us")),
-                    F.col("us"),
-                )
-            )
-            .cast("long")
-            .alias("p_us")
-        )
-    )
-    dur = conv.crossJoin(F.broadcast(horizon)).select(
-        (salted_hash("logrank", "user_id") % 2).alias("arm"),
-        F.when(F.col("p_us").isNotNull(), F.expr("(p_us - s_us) DIV 86400000000"))
-        .otherwise(F.expr("(h - s_us) DIV 86400000000"))
-        .alias("d"),
-        F.when(F.col("p_us").isNotNull(), 1).otherwise(0).alias("ev"),
+    dur = _conversion_durations(
+        spark, sf_dir, (salted_hash("logrank", "user_id") % 2).alias("arm")
     )
     days = dur.groupBy("d").agg(
         F.sum(F.when(F.col("arm") == 0, F.col("ev")).otherwise(0)).cast("long").alias("d1"),
@@ -2182,6 +2108,78 @@ _EB_SHRUNK = (
 _EB_WEIGHT = f"({_EB_AB} / (CAST(n AS DOUBLE) + {_EB_AB}))"
 
 
+def _eb_shrunk_rates(cells: DataFrame, key: str, out: str) -> DataFrame:
+    """Empirical-Bayes shrinkage of the per-cell rates x/n of a (key, n, x)
+    cells frame: (out, n, x, raw_rate, shrunk_rate, shrink_weight) per
+    cell, ordered by ``out`` (``key`` renamed).  The beta prior is fitted
+    by method of moments over the nano-quantized cell rates.  The DuckDB
+    twin is `_eb_shrunk_rates_sql`."""
+    pn = cells.select(
+        key,
+        "n",
+        "x",
+        F.expr(
+            "CAST((CAST(x AS DECIMAL(38,0)) * 1000000000) DIV n AS BIGINT)"
+        ).alias("p_nano"),
+    )
+    g = pn.agg(
+        F.count(F.lit(1)).cast("long").alias("g"),
+        F.sum("p_nano").cast("long").alias("s_nano"),
+    )
+    var_ = (
+        pn.crossJoin(F.broadcast(g))
+        .agg(
+            F.sum(
+                (F.col("g") * F.col("p_nano") - F.col("s_nano"))
+                .cast("decimal(38,0)")
+                * (F.col("g") * F.col("p_nano") - F.col("s_nano"))
+            )
+            .cast("decimal(38,0)")
+            .alias("var_scaled")
+        )
+    )
+    return (
+        pn.crossJoin(F.broadcast(g))
+        .crossJoin(F.broadcast(var_))
+        .select(
+            key if out == key else F.col(key).alias(out),
+            "n",
+            "x",
+            F.expr(
+                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
+                "/10000.0 AS DOUBLE)"
+            ).alias("raw_rate"),
+            F.expr(
+                f"CAST(floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS DOUBLE)"
+            ).alias("shrunk_rate"),
+            F.expr(
+                f"CAST(floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS DOUBLE)"
+            ).alias("shrink_weight"),
+        )
+        .orderBy(out)
+    )
+
+
+def _eb_shrunk_rates_sql(key: str, out: str) -> str:
+    """CTEs after a ``cells`` CTE, and the final SELECT: the rows of
+    `_eb_shrunk_rates`."""
+    return f"""pn AS (
+      SELECT {key}, n, x, ((x::HUGEINT * 1000000000) // n)::BIGINT AS p_nano
+      FROM cells),
+    g AS (SELECT count(*)::BIGINT AS g, sum(p_nano)::BIGINT AS s_nano FROM pn),
+    var_ AS (
+      SELECT sum(((g.g * p_nano - g.s_nano)::HUGEINT
+                  * (g.g * p_nano - g.s_nano)))::HUGEINT AS var_scaled
+      FROM pn CROSS JOIN g)
+    SELECT pn.{key} AS {out}, pn.n, pn.x,
+           floor((CAST(pn.x AS DOUBLE) / CAST(pn.n AS DOUBLE))*10000 + 0.5)
+             /10000.0 AS raw_rate,
+           floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS shrunk_rate,
+           floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS shrink_weight
+    FROM pn CROSS JOIN g CROSS JOIN var_
+    ORDER BY pn.{key}"""
+
+
 @register(
     "eb_shrunk_hour_rates",
     oracle=f"""
@@ -2189,21 +2187,7 @@ _EB_WEIGHT = f"({_EB_AB} / (CAST(n AS DOUBLE) + {_EB_AB}))"
       SELECT hour(ts)::BIGINT AS h, count(*)::BIGINT AS n,
              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x
       FROM events GROUP BY 1),
-    pn AS (
-      SELECT h, n, x, ((x::HUGEINT * 1000000000) // n)::BIGINT AS p_nano
-      FROM cells),
-    g AS (SELECT count(*)::BIGINT AS g, sum(p_nano)::BIGINT AS s_nano FROM pn),
-    var_ AS (
-      SELECT sum(((g.g * p_nano - g.s_nano)::HUGEINT
-                  * (g.g * p_nano - g.s_nano)))::HUGEINT AS var_scaled
-      FROM pn CROSS JOIN g)
-    SELECT pn.h AS hour, pn.n, pn.x,
-           floor((CAST(pn.x AS DOUBLE) / CAST(pn.n AS DOUBLE))*10000 + 0.5)
-             /10000.0 AS raw_rate,
-           floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS shrunk_rate,
-           floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS shrink_weight
-    FROM pn CROSS JOIN g CROSS JOIN var_
-    ORDER BY pn.h
+    {_eb_shrunk_rates_sql("h", "hour")}
     """,
 )
 def q_eb_shrunk_hour_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2240,50 +2224,7 @@ def q_eb_shrunk_hour_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fans out to the rate table, the prior fit and the emit join
         .localCheckpoint(eager=True)
     )
-    pn = cells.select(
-        "h",
-        "n",
-        "x",
-        F.expr(
-            "CAST((CAST(x AS DECIMAL(38,0)) * 1000000000) DIV n AS BIGINT)"
-        ).alias("p_nano"),
-    )
-    g = pn.agg(
-        F.count(F.lit(1)).cast("long").alias("g"),
-        F.sum("p_nano").cast("long").alias("s_nano"),
-    )
-    var_ = (
-        pn.crossJoin(F.broadcast(g))
-        .agg(
-            F.sum(
-                (F.col("g") * F.col("p_nano") - F.col("s_nano"))
-                .cast("decimal(38,0)")
-                * (F.col("g") * F.col("p_nano") - F.col("s_nano"))
-            )
-            .cast("decimal(38,0)")
-            .alias("var_scaled")
-        )
-    )
-    return (
-        pn.crossJoin(F.broadcast(g))
-        .crossJoin(F.broadcast(var_))
-        .select(
-            F.col("h").alias("hour"),
-            "n",
-            "x",
-            F.expr(
-                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("raw_rate"),
-            F.expr(
-                f"CAST(floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS DOUBLE)"
-            ).alias("shrunk_rate"),
-            F.expr(
-                f"CAST(floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS DOUBLE)"
-            ).alias("shrink_weight"),
-        )
-        .orderBy("hour")
-    )
+    return _eb_shrunk_rates(cells, "h", "hour")
 
 
 # ---------------------------------------------------------------------------
@@ -2304,6 +2245,47 @@ _WILSON_LCB = (
 _WILSON_NANO = f"CAST(floor({_WILSON_LCB} * 1000000000 + 0.5) AS BIGINT)"
 
 
+def _wilson_ranking(cells: DataFrame, key: str, out: str) -> DataFrame:
+    """Rank the cells of a (key, n, x) cells frame by the Wilson lower
+    bound of x/n, ties on ``key``: (out, n, x, raw_rate, wilson_lcb, rank)
+    ordered by rank (``key`` renamed ``out``).  The DuckDB twin is
+    `_wilson_ranking_sql`."""
+    scored = cells.select(key, "n", "x", F.expr(_WILSON_NANO).alias("lcb_nano"))
+    w = Window.orderBy(F.desc("lcb_nano"), F.asc(key))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .select(
+            key if out == key else F.col(key).alias(out),
+            "n",
+            "x",
+            F.expr(
+                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
+                "/10000.0 AS DOUBLE)"
+            ).alias("raw_rate"),
+            F.expr(
+                "CAST(floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)"
+                "/10000.0 AS DOUBLE)"
+            ).alias("wilson_lcb"),
+            "rank",
+        )
+        .orderBy("rank")
+    )
+
+
+def _wilson_ranking_sql(key: str, out: str) -> str:
+    """The CTE after a ``cells`` CTE, and the final SELECT: the rows of
+    `_wilson_ranking`."""
+    return f"""scored AS (
+      SELECT {key}, n, x, {_WILSON_NANO} AS lcb_nano FROM cells)
+    SELECT {key} AS {out}, n, x,
+           floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)/10000.0
+             AS raw_rate,
+           floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)/10000.0
+             AS wilson_lcb,
+           (row_number() OVER (ORDER BY lcb_nano DESC, {key}))::INTEGER AS rank
+    FROM scored ORDER BY rank"""
+
+
 @register(
     "wilson_lcb_hour_ranking",
     oracle=f"""
@@ -2311,15 +2293,7 @@ _WILSON_NANO = f"CAST(floor({_WILSON_LCB} * 1000000000 + 0.5) AS BIGINT)"
       SELECT hour(ts)::BIGINT AS h, count(*)::BIGINT AS n,
              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x
       FROM events GROUP BY 1),
-    scored AS (
-      SELECT h, n, x, {_WILSON_NANO} AS lcb_nano FROM cells)
-    SELECT h AS hour, n, x,
-           floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)/10000.0
-             AS raw_rate,
-           floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)/10000.0
-             AS wilson_lcb,
-           (row_number() OVER (ORDER BY lcb_nano DESC, h))::INTEGER AS rank
-    FROM scored ORDER BY rank
+    {_wilson_ranking_sql("h", "hour")}
     """,
 )
 def q_wilson_lcb_hour_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2346,28 +2320,7 @@ def q_wilson_lcb_hour_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
     )
-    scored = cells.select(
-        "h", "n", "x", F.expr(_WILSON_NANO).alias("lcb_nano")
-    )
-    w = Window.orderBy(F.desc("lcb_nano"), F.asc("h"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .select(
-            F.col("h").alias("hour"),
-            "n",
-            "x",
-            F.expr(
-                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("raw_rate"),
-            F.expr(
-                "CAST(floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("wilson_lcb"),
-            "rank",
-        )
-        .orderBy("rank")
-    )
+    return _wilson_ranking(cells, "h", "hour")
 
 
 # ---------------------------------------------------------------------------
@@ -2383,15 +2336,7 @@ def q_wilson_lcb_hour_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT source, count(*)::BIGINT AS n,
              sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS x
       FROM documents GROUP BY 1),
-    scored AS (
-      SELECT source, n, x, {_WILSON_NANO} AS lcb_nano FROM cells)
-    SELECT source, n, x,
-           floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)/10000.0
-             AS raw_rate,
-           floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)/10000.0
-             AS wilson_lcb,
-           (row_number() OVER (ORDER BY lcb_nano DESC, source))::INTEGER AS rank
-    FROM scored ORDER BY rank
+    {_wilson_ranking_sql("source", "source")}
     """,
 )
 def q_wilson_lcb_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2404,9 +2349,8 @@ def q_wilson_lcb_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     source must outrank a 2/3 source even though the raw rates say
     otherwise.
 
-    Exactness: same shared `_WILSON_NANO` text as the hour ranking —
-    counts exact, bound nano-quantized BEFORE the rank window, ties on
-    the source key.
+    Exactness: the hour ranking's `_wilson_ranking` — counts exact,
+    bound nano-quantized BEFORE the rank window, ties on the source key.
 
     Scale: one partial-agg'd documents scan to |sources| cells; the rank
     window runs on the cell table (thousands of sources at 100 TB, still
@@ -2419,26 +2363,7 @@ def q_wilson_lcb_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
     )
-    scored = cells.select("source", "n", "x", F.expr(_WILSON_NANO).alias("lcb_nano"))
-    w = Window.orderBy(F.desc("lcb_nano"), F.asc("source"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .select(
-            "source",
-            "n",
-            "x",
-            F.expr(
-                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("raw_rate"),
-            F.expr(
-                "CAST(floor((CAST(lcb_nano AS DOUBLE) / 1000000000.0)*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("wilson_lcb"),
-            "rank",
-        )
-        .orderBy("rank")
-    )
+    return _wilson_ranking(cells, "source", "source")
 
 
 @register(
@@ -2449,30 +2374,16 @@ def q_wilson_lcb_source_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
              sum(CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS x
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1),
-    pn AS (
-      SELECT segment, n, x, ((x::HUGEINT * 1000000000) // n)::BIGINT AS p_nano
-      FROM cells),
-    g AS (SELECT count(*)::BIGINT AS g, sum(p_nano)::BIGINT AS s_nano FROM pn),
-    var_ AS (
-      SELECT sum(((g.g * p_nano - g.s_nano)::HUGEINT
-                  * (g.g * p_nano - g.s_nano)))::HUGEINT AS var_scaled
-      FROM pn CROSS JOIN g)
-    SELECT pn.segment, pn.n, pn.x,
-           floor((CAST(pn.x AS DOUBLE) / CAST(pn.n AS DOUBLE))*10000 + 0.5)
-             /10000.0 AS raw_rate,
-           floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS shrunk_rate,
-           floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS shrink_weight
-    FROM pn CROSS JOIN g CROSS JOIN var_
-    ORDER BY pn.segment
+    {_eb_shrunk_rates_sql("segment", "segment")}
     """,
 )
 def q_eb_shrunk_segment_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes shrinkage of per-market-segment order-fulfilment
     rates (status 'F') — the hour-cell estimator (`eb_shrunk_hour_rates`)
     re-aimed at a cell family reached through a JOIN: orders broadcast-
-    joined to the customer dimension, grouped by segment.  The estimator
-    texts (`_EB_SHRUNK`/`_EB_WEIGHT`) are shared verbatim, which is the
-    point: the prior-fit machinery is cell-family-agnostic, and a
+    joined to the customer dimension, grouped by segment.  Both queries
+    call `_eb_shrunk_rates` on their own cells, which is the point: the
+    prior-fit machinery is cell-family-agnostic, and a
     production dashboard fits one prior per family off the same fold.
 
     Exactness: identical integer/nano pipeline as the hour variant —
@@ -2499,50 +2410,7 @@ def q_eb_shrunk_segment_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fans out to the rate table, the prior fit and the emit join
         .localCheckpoint(eager=True)
     )
-    pn = cells.select(
-        "segment",
-        "n",
-        "x",
-        F.expr(
-            "CAST((CAST(x AS DECIMAL(38,0)) * 1000000000) DIV n AS BIGINT)"
-        ).alias("p_nano"),
-    )
-    g = pn.agg(
-        F.count(F.lit(1)).cast("long").alias("g"),
-        F.sum("p_nano").cast("long").alias("s_nano"),
-    )
-    var_ = (
-        pn.crossJoin(F.broadcast(g))
-        .agg(
-            F.sum(
-                (F.col("g") * F.col("p_nano") - F.col("s_nano"))
-                .cast("decimal(38,0)")
-                * (F.col("g") * F.col("p_nano") - F.col("s_nano"))
-            )
-            .cast("decimal(38,0)")
-            .alias("var_scaled")
-        )
-    )
-    return (
-        pn.crossJoin(F.broadcast(g))
-        .crossJoin(F.broadcast(var_))
-        .select(
-            "segment",
-            "n",
-            "x",
-            F.expr(
-                "CAST(floor((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))*10000 + 0.5)"
-                "/10000.0 AS DOUBLE)"
-            ).alias("raw_rate"),
-            F.expr(
-                f"CAST(floor(({_EB_SHRUNK})*10000 + 0.5)/10000.0 AS DOUBLE)"
-            ).alias("shrunk_rate"),
-            F.expr(
-                f"CAST(floor(({_EB_WEIGHT})*10000 + 0.5)/10000.0 AS DOUBLE)"
-            ).alias("shrink_weight"),
-        )
-        .orderBy("segment")
-    )
+    return _eb_shrunk_rates(cells, "segment", "segment")
 
 
 # ---------------------------------------------------------------------------
