@@ -69,6 +69,11 @@ RECENTLY_TOUCHED = frozenset(
         "eb_shrunk_segment_rates", "wilson_lcb_hour_ranking",
         "wilson_lcb_source_ranking", "trimmed_mean_value",
         "winsorized_mean_value", "ann_sq_topk", "ann_filtered_topk",
+        # one exact rescore per engine for the vector family, the
+        # single-query scans through knn_topk and one truncate stage
+        "ann_srp_topk", "dedup_embedding_srp",
+        "dedup_embedding_srp_narrow_demo", "mutual_knn_pairs", "knn_topk",
+        "hybrid_rrf_search", "mmr_diversify_topk", "rocchio_prf_search",
     }
 )
 

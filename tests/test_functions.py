@@ -168,23 +168,39 @@ def test_salted_hash_is_spelled_once():
 # Stages written once per engine, with the idiom that marks a spelled-out
 # copy (whitespace removed): the Gini split finder's cumulative window
 # (its cum_pos column; the boosting stumps' least-squares window has no
-# class counts) and the session-break flag (a lag of the microsecond time
-# column).  Each maps to the module holding the helpers and their count.
+# class counts), the session-break flag (a lag of the microsecond time
+# column), the ANN candidate rescore (candidate pairs joined to their
+# query vectors), the SRP pair rescore (the second vector join) and the
+# truncate-at-first-purchase stage (its cp column).  Each maps to the
+# module holding the helpers and their count.
 _STAGE_IDIOMS = {
     "gini split window": re.compile(r'alias\("cum_pos"\)|AScum_pos', re.I),
     "session break flag": re.compile(r'lag\("?(?:ts_)?us"?\)', re.I),
+    "candidate rescore": re.compile(
+        r'\.join\(F\.broadcast\(\w+\),"?(?:query_id|qid)|JOIN\w+ON(?:c|cand)\.(?:query_id|qid)='
+    ),
+    "pair rescore": re.compile(
+        r'F\.col\("embedding"\)\.alias\("v2"\)|JOINembeddingsbONc\.id_2=b\.vec_id'
+    ),
+    "truncate at first purchase": re.compile(r'withColumn\("cp",|AScp,'),
 }
 _STAGE_HELPERS = {
     # gini_split_scores, gini_split_scores_sql
     "registry_ml.py": {"gini split window": 2},
-    # sessions_gap_at_least (one lag) and sessions_gap_over (two), both engines
-    "operators/relational.py": {"session break flag": 6},
+    # sessions_gap_at_least (one lag) and sessions_gap_over (two), both
+    # engines; truncate_at_first_purchase and its _sql twin
+    "operators/relational.py": {"session break flag": 6, "truncate at first purchase": 2},
+    # exact_rescore_topk
+    "operators/ann.py": {"candidate rescore": 1},
+    # _SQL_RESCORED, and _srp_pair_scores / _SQL_SRP_PAIR_SCORED
+    "registry_extensions.py": {"candidate rescore": 1, "pair rescore": 2},
 }
 
 
 def test_shared_stages_are_spelled_once():
-    """The Gini split finder and the two sessionizers are spelled only in
-    their helpers; every other query calls them."""
+    """The Gini split finder, the two sessionizers, the truncate stage and
+    the ANN candidate and SRP pair rescores are spelled only in their
+    helpers; every other query calls them."""
     pkg = Path(__file__).resolve().parents[1] / "vector_search_spark"
     found = {}
     for path in sorted(pkg.rglob("*.py")):

@@ -9,17 +9,22 @@ correctness baseline; SURVEY.md §2.4).  Five paths, all DataFrame ops:
   with ``ivf_probe_sweep_topk``).  Recall < 1 by construction; tests pin
   recall@10 ≥ 0.9 vs. the exact oracle at nprobe=4/16.
 - **SRP-LSH** (``srp_topk``): md5-derived hyperplane signatures, banded
-  bucket candidates, exact rescore.
+  bucket candidates.
 - **int8-SQ** (``sq_topk``): per-dimension scalar quantization, an
-  approximate scan over the codes, exact rescore.
+  approximate scan over the codes.
 - **PQ** (``pq_topk``) and **IVF-PQ** (``ivfpq_topk``, and
   ``ivfpq_residual_topk`` over residual codes).  The three share one copy
   of each stage: the long-form LUT (``_pq_lut_long``), the exploded codes
-  (``_pq_codes_long``), the subspace-ordered ADC fold (``_adc_fold``),
-  the top-``rescore`` → exact rescore → top-k tail (``_rescore_topk``)
+  (``_pq_codes_long``), the subspace-ordered ADC fold (``_adc_fold``)
   and, for the IVF-PQ pair, the coarse probe (``_coarse_probe``).  They
   differ only in the candidate set (all codes, or the probed cells'
   codes) and in the fold's start value (0.0, or q·cen for residuals).
+
+Every path but IVF ends in one exact rescore, ``exact_rescore_topk``: the
+candidate ``(query_id, id)`` pairs are scored by dot product against the
+raw vectors and each query keeps its top k, ties broken by id.  SQ and
+the PQ family first cut each query's top ``rescore`` approximate
+candidates with ``_top_candidates``.
 
 SRP, SQ and the PQ family are SQL-expressible end to end, so each has a
 bit-exact DuckDB twin in the registry; IVF's numpy-refined centroids make
@@ -495,6 +500,27 @@ def srp_topk(
         .select(query_id_col, id_col)
         .distinct()
     )
+    return exact_rescore_topk(
+        emb, cand, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    )
+
+
+def exact_rescore_topk(
+    emb: DataFrame,
+    cand: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """(query_id, id, score, rank): the exact rescore every ANN path ends
+    in.  Each ``(query_id, id)`` candidate pair is scored by dot product of
+    its index vector and its query vector; each query keeps its top ``k``,
+    ties broken by id.  The candidate pairs and the query vectors are
+    broadcast into the index scan, so vectors never cross an exchange at
+    scale."""
     qv = queries.select(query_id_col, F.col(query_vec_col).alias("__qvec"))
     # two SEPARATE broadcasts: the narrow (query, id) pair set and the tiny
     # query-vector table.  Broadcasting their join instead would replicate a
@@ -517,6 +543,21 @@ def srp_topk(
         scored.select(query_id_col, id_col, "score")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
+    )
+
+
+def _top_candidates(approx: DataFrame, score_col: str, n: int, id_col: str) -> DataFrame:
+    """(query_id, id): each query's ``n`` best approximate candidates by
+    ``score_col``, ties broken by id (a WindowGroupLimit)."""
+    return (
+        approx.withColumn(
+            "cand_rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc(id_col))
+            ),
+        )
+        .filter(F.col("cand_rank") <= n)
+        .select("query_id", id_col)
     )
 
 
@@ -603,7 +644,8 @@ def sq_topk(
 
     Scale: the approximate pass is a broadcast-queries × codes scan with a
     WindowGroupLimit top-``rescore`` — no shuffle of codes or vectors; the
-    exact pass joins O(queries × rescore) ids back to the float table.
+    exact pass broadcasts the O(queries × rescore) candidate ids into the
+    float-table scan (``exact_rescore_topk``).
     Both passes use the same ordered fold as exact KNN, so every score is
     reproducible bit-for-bit (ties broken by id)."""
     dq = F.transform(
@@ -620,29 +662,8 @@ def sq_topk(
             dot_product(dq, F.col("query_vec")).alias("approx_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_score"), F.asc(id_col)
-    )
-    cand = (
-        approx.withColumn("cand_rank", F.row_number().over(w))
-        .filter(F.col("cand_rank") <= rescore)
-        .select("query_id", id_col)
-    )
-    exact = (
-        cand.join(emb.select(id_col, vec_col), id_col)
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            id_col,
-            dot_product(F.col(vec_col), F.col("query_vec")).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "score", F.col("rank").cast("int").alias("rank"))
-    )
+    cand = _top_candidates(approx, "approx_score", rescore, id_col)
+    return exact_rescore_topk(emb, cand, queries, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -723,7 +744,7 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, id_col: str = "vec_id", vec_c
 
 
 def _pq_lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(qid, s, code, l): each query's PQ_SUB×PQ_CODES ADC lookup table of
+    """(query_id, s, code, l): each query's PQ_SUB×PQ_CODES ADC lookup table of
     qsub·csub dot products, in LONG form.  One (s, code)-keyed broadcast
     join instead of PQ_SUB chained joins — a chain of per-subspace joins
     invites the optimizer to pair the LUT relations with each other first
@@ -732,7 +753,7 @@ def _pq_lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
     return (
         qids.crossJoin(F.broadcast(codebook))
         .select(
-            "qid",
+            "query_id",
             "code",
             F.explode(
                 F.array(
@@ -740,7 +761,7 @@ def _pq_lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
                         F.struct(
                             F.lit(s).alias("s"),
                             dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
+                                _sub(F.col("query_vec"), s), _sub(F.col("cvec"), s)
                             ).alias("l"),
                         )
                         for s in range(PQ_SUB)
@@ -748,7 +769,7 @@ def _pq_lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
                 )
             ).alias("sl"),
         )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
+        .select("query_id", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
     )
 
 
@@ -769,53 +790,18 @@ def _pq_codes_long(codes: DataFrame, id_col: str) -> DataFrame:
 
 
 def _adc_fold(looked_up: DataFrame, id_col: str, start: str | None = None) -> DataFrame:
-    """(id, qid[, start], a): approximate score per (vector, query) pair —
+    """(id, query_id[, start], a): approximate score per (vector, query) pair —
     the pair's LUT terms folded in fixed subspace order (sort by s, then
     add), bit-identical to the oracle's list_reduce(list_prepend(start,
     list(l ORDER BY s))).  The fold starts from 0.0, or from the per-pair
     ``start`` column (kept as a grouping key) when there is a base term."""
-    keys = [id_col, "qid"] + ([start] if start else [])
+    keys = [id_col, "query_id"] + ([start] if start else [])
     return looked_up.groupBy(*keys).agg(
         F.aggregate(
             F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
             F.col(start) if start else F.lit(0.0),
             lambda acc, x: acc + x["l"],
         ).alias("a")
-    )
-
-
-def _rescore_topk(
-    approx: DataFrame,
-    emb: DataFrame,
-    qids: DataFrame,
-    k: int,
-    rescore: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(query_id, id, raw, rank): keep each query's top-``rescore``
-    approximate candidates (WindowGroupLimit), rescore them exactly by dot
-    product against the raw vectors and keep the top k; ties break on id."""
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
     )
 
 
@@ -839,13 +825,14 @@ def pq_topk(
     PQ_SUB-byte codes, an 8-byte-per-vector scan where the raw corpus is
     256 bytes/vector, the classic PQ memory story.  All joins against
     LUT/codebook/queries broadcast; candidates are narrow id rows."""
-    qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    qids = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    )
     looked_up = _pq_codes_long(codes, id_col).join(
         F.broadcast(_pq_lut_long(qids, codebook)), ["s", "code"]
     )
-    return _rescore_topk(
-        _adc_fold(looked_up, id_col), emb, qids, k, rescore, id_col, vec_col
-    )
+    cand = _top_candidates(_adc_fold(looked_up, id_col), "a", rescore, id_col)
+    return exact_rescore_topk(emb, cand, qids, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -905,19 +892,19 @@ def coarse_assign(
 
 
 def _coarse_probe(qids: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """(qid, cell, qcen): each query's ``nprobe`` nearest coarse cells by
+    """(query_id, cell, qcen): each query's ``nprobe`` nearest coarse cells by
     the same |c|² − 2q·c identity as ``coarse_assign`` (ties on cell), with
     q·cen carried along for the residual fold; a caller that drops qcen
     gets it pruned from the plan."""
     cc = dot_product(F.col("cenvec"), F.col("cenvec"))
-    qc = dot_product(F.col("qvec"), F.col("cenvec"))
-    wp = Window.partitionBy("qid").orderBy("d", "cell")
+    qc = dot_product(F.col("query_vec"), F.col("cenvec"))
+    wp = Window.partitionBy("query_id").orderBy("d", "cell")
     return (
         qids.crossJoin(F.broadcast(cents))
-        .select("qid", "cell", (cc - 2.0 * qc).alias("d"), qc.alias("qcen"))
+        .select("query_id", "cell", (cc - 2.0 * qc).alias("d"), qc.alias("qcen"))
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= nprobe)
-        .select("qid", "cell", "qcen")
+        .select("query_id", "cell", "qcen")
     )
 
 
@@ -944,15 +931,16 @@ def ivfpq_topk(
     composition of IVF's pruning and PQ's compression; every
     centroid/LUT/query relation broadcasts, candidates stay narrow id
     rows, and both windows are WindowGroupLimit-bounded."""
-    qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    qids = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    )
     probe = _coarse_probe(qids, cents, nprobe)
-    cand_ids = assign.join(F.broadcast(probe), "cell").select("qid", id_col)
+    cand_ids = assign.join(F.broadcast(probe), "cell").select("query_id", id_col)
     looked_up = cand_ids.join(_pq_codes_long(codes, id_col), id_col).join(
-        F.broadcast(_pq_lut_long(qids, codebook)), ["qid", "s", "code"]
+        F.broadcast(_pq_lut_long(qids, codebook)), ["query_id", "s", "code"]
     )
-    return _rescore_topk(
-        _adc_fold(looked_up, id_col), emb, qids, k, rescore, id_col, vec_col
-    )
+    cand = _top_candidates(_adc_fold(looked_up, id_col), "a", rescore, id_col)
+    return exact_rescore_topk(emb, cand, qids, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1033,12 +1021,15 @@ def ivfpq_residual_topk(
     WindowGroupLimit tops.  The ordered fold starts FROM the base term
     (list_prepend(q·cen, ...) in the oracle) so both engines add the
     subspace terms in the identical order."""
-    qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    qids = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    )
     probe = _coarse_probe(qids, cents, nprobe)
-    cand_ids = assign.join(F.broadcast(probe), "cell").select(id_col, "qid", "qcen")
+    cand_ids = assign.join(F.broadcast(probe), "cell").select(id_col, "query_id", "qcen")
     looked_up = cand_ids.join(_pq_codes_long(codes, id_col), id_col).join(
-        F.broadcast(_pq_lut_long(qids, codebook)), ["qid", "s", "code"]
+        F.broadcast(_pq_lut_long(qids, codebook)), ["query_id", "s", "code"]
     )
-    return _rescore_topk(
-        _adc_fold(looked_up, id_col, start="qcen"), emb, qids, k, rescore, id_col, vec_col
+    cand = _top_candidates(
+        _adc_fold(looked_up, id_col, start="qcen"), "a", rescore, id_col
     )
+    return exact_rescore_topk(emb, cand, qids, k, id_col, vec_col)

@@ -505,6 +505,44 @@ def sessions_gap_over_sql(src: str, order: Sequence[str]) -> str:
         FROM {src} WINDOW w AS (PARTITION BY user_id ORDER BY {o})) l"""
 
 
+def truncate_at_first_purchase(sessions: DataFrame) -> DataFrame:
+    """Cut each session of ``sessions`` (``user_id``, ``sess``, ordered by
+    ``ts_us``, ``event_id``; the output of `sessions_gap_over`) after its
+    first purchase.  Adds ``cp``, the purchases strictly before the row in
+    its session (0 on every kept row), and ``rn``, the row's 1-based place
+    in its session.  DuckDB twin: `truncate_at_first_purchase_sql`."""
+    ws = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
+    return (
+        sessions.withColumn(
+            "cp",
+            F.coalesce(
+                F.sum(
+                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+                ).over(ws.rowsBetween(Window.unboundedPreceding, -1)),
+                F.lit(0),
+            ),
+        )
+        .withColumn("rn", F.row_number().over(ws))
+        .filter(F.col("cp") == 0)
+    )
+
+
+def truncate_at_first_purchase_sql(src: str) -> str:
+    """SELECT over the relation ``src`` with `truncate_at_first_purchase`'s
+    rows and its columns ``user_id, sess, ts_us, event_id, event_type, cp,
+    rn``."""
+    return f"""SELECT * FROM (
+        SELECT user_id, sess, ts_us, event_id, event_type,
+               COALESCE(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                 OVER (PARTITION BY user_id, sess ORDER BY ts_us, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                 AS cp,
+               row_number() OVER (PARTITION BY user_id, sess
+                                  ORDER BY ts_us, event_id) AS rn
+        FROM {src})
+      WHERE cp = 0"""
+
+
 def purchase_and_click_days(events: DataFrame) -> DataFrame:
     """Set op: (user, day) pairs with BOTH a purchase and a click that day
     — INTERSECT over a composite key."""

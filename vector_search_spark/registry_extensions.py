@@ -55,25 +55,46 @@ _SQL_SRP_CAND = " UNION ".join(
     f"SELECT q.query_id, i.vec_id FROM qb q JOIN ib i ON q.b{i} = i.b{i}"
     for i in range(_SRP_BANDS)
 )
+# DuckDB twin of `operators.ann.exact_rescore_topk`, the exact rescore every
+# bit-exact ANN oracle ends in: `rescored` holds each query's top 10 (the k
+# of every caller) of the (query_id, vec_id) pairs in `cand`, scored by dot
+# product with the query's own embeddings row; ties break on vec_id.
+_SQL_RESCORED = """rescored AS (
+      SELECT * FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY raw DESC, vec_id) AS rank
+        FROM (
+          SELECT c.query_id, c.vec_id,
+                 list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS raw
+          FROM cand c
+          JOIN embeddings e ON c.vec_id = e.vec_id
+          JOIN embeddings q ON c.query_id = q.vec_id))
+      WHERE rank <= 10)"""
+
+
+def _sql_top_cand(src: str, score: str, n: int) -> str:
+    """cand: each query's top ``n`` rows of ``src`` by ``score``, ties on
+    vec_id (`operators.ann._top_candidates`)."""
+    return f"""cand AS (
+      SELECT query_id, vec_id FROM (
+        SELECT query_id, vec_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY {score} DESC, vec_id) AS rn
+        FROM {src})
+      WHERE rn <= {n})"""
+
+
 _SRP_ORACLE = f"""
     WITH sig AS (
       SELECT vec_id, ({_SQL_SRP_SIG}) AS sig FROM embeddings),
     qb AS (SELECT vec_id AS query_id, {_SQL_SRP_BANDS} FROM sig WHERE vec_id < 20),
     ib AS (SELECT vec_id, {_SQL_SRP_BANDS} FROM sig),
     cand AS ({_SQL_SRP_CAND}),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q ON c.query_id = q.vec_id)
+    {_SQL_RESCORED}
     SELECT query_id, vec_id,
            floor((raw)*10000 + 0.5)/10000.0 AS score,
            rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM scored)
-    WHERE rank <= 10
+    FROM rescored
     """
 
 # IVF index artifact: the build (centroid sample + Lloyd refine +
@@ -379,25 +400,12 @@ def _sq_oracle(n_queries: int, where: str = "") -> str:
       SELECT q.query_id, d.vec_id,
              list_dot_product(d.dq, q.embedding::DOUBLE[]) AS approx_score
       FROM dql d CROSS JOIN q),
-    cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY approx_score DESC, vec_id) AS cr
-        FROM ap)
-      WHERE cr <= 40),
-    ex AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q2.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q2 ON c.query_id = q2.vec_id)
+    {_sql_top_cand("ap", "approx_score", 40)},
+    {_SQL_RESCORED}
     SELECT query_id, vec_id,
            floor(raw * 10000 + 0.5) / 10000.0 AS score,
            rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM ex)
-    WHERE rank <= 10
+    FROM rescored
     """
 
 
@@ -529,10 +537,53 @@ def _shared_srpw_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int
     return ib, n
 
 
-def _srpw_corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    """The embeddings COUNT(*) already paid by `_shared_srpw_index` —
-    consumers size their broadcast gates from this instead of re-scanning."""
-    return _shared_srpw_index(spark, sf_dir)[1]
+def _srp_pair_scores(
+    spark: SparkSession, sf_dir: str, ib: DataFrame, n_rows: int
+) -> DataFrame:
+    """(id_1, id_2, cos): every pair ``id_1 < id_2`` that shares a (band,
+    val) bucket of the band table ``ib``, scored exactly by dot product.
+    ``n_rows`` is the embeddings row count that sizes the broadcast gate.
+    DuckDB twin: `_SQL_SRP_PAIR_SCORED`."""
+    from .functions.vector import dot_product
+    from .partitioning import maybe_broadcast
+
+    l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
+    r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
+    cand = (
+        l.join(r, ["band", "val"])
+        .filter(F.col("id_1") < F.col("id_2"))
+        .select("id_1", "id_2")
+        .distinct()
+    )
+    emb = __load(spark, sf_dir, "embeddings")
+    e1 = emb.select(F.col("vec_id").alias("id_1"), F.col("embedding").alias("v1"))
+    e2 = emb.select(F.col("vec_id").alias("id_2"), F.col("embedding").alias("v2"))
+    # second vector fetch broadcast when the corpus fits (physical-only) —
+    # otherwise the join reshuffles candidate rows already carrying v1,
+    # pairs × vector bytes (the containment_bottomk wide-payload lesson).
+    # row_bytes=1024 is the IN-MEMORY HashedRelation cost of a 64-float
+    # row (256 B data × ~3-4× UnsafeRow/array-header/hash-page overhead),
+    # NOT the serialized size: the r11 decade-4 probe showed an 8M-row
+    # vector table passing a serialized-size gate and then dying on
+    # Spark's hard 8 GiB broadcast-relation cap — and the failed broadcast
+    # build took the whole local-mode context down with it.  The byte gate
+    # now admits ≤ ~6.3M vectors; past that the shuffle join runs, which
+    # is the correct shape on a real cluster anyway.
+    return (
+        cand.join(e1, "id_1")
+        .join(maybe_broadcast(e2, 8_000_000, n_rows=n_rows, row_bytes=1024), "id_2")
+        .select("id_1", "id_2", dot_product("v1", "v2").alias("cos"))
+    )
+
+
+# `scored`: the distinct (id_1, id_2) pairs of `cand` with their exact
+# cosine — the DuckDB twin of `_srp_pair_scores`.
+_SQL_SRP_PAIR_SCORED = """scored AS (
+      SELECT c.id_1, c.id_2,
+             list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
+      FROM (SELECT DISTINCT id_1, id_2 FROM cand) c
+      JOIN embeddings a ON c.id_1 = a.vec_id
+      JOIN embeddings b ON c.id_2 = b.vec_id)"""
 
 
 @register(
@@ -541,12 +592,7 @@ def _srpw_corpus_count(spark: SparkSession, sf_dir: str) -> int:
     WITH cfg AS ({_SQL_SRPW_CFG}),
     {_SQL_SRPW_BT},
     cand AS ({_SQL_SRPW_PAIR_CAND}),
-    scored AS (
-      SELECT c.id_1, c.id_2,
-             list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
-      FROM (SELECT DISTINCT id_1, id_2 FROM cand) c
-      JOIN embeddings a ON c.id_1 = a.vec_id
-      JOIN embeddings b ON c.id_2 = b.vec_id)
+    {_SQL_SRP_PAIR_SCORED}
     SELECT id_1, id_2, floor(cos*10000 + 0.5)/10000.0 AS cosine
     FROM scored
     ORDER BY cos DESC, id_1, id_2
@@ -586,45 +632,10 @@ def q_dedup_embedding_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject) — only the collision mass changes, and the
     adaptive width pins it linear in n by construction.
     """
-    from .functions.vector import dot_product
-
-    ib = _shared_srpw_index(spark, sf_dir)[0]
-    l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
-    r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
-    cand = (
-        l.join(r, ["band", "val"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
-    emb = __load(spark, sf_dir, "embeddings")
-    e1 = emb.select(F.col("vec_id").alias("id_1"), F.col("embedding").alias("v1"))
-    e2 = emb.select(F.col("vec_id").alias("id_2"), F.col("embedding").alias("v2"))
-    # second vector fetch broadcast when the corpus fits (physical-only) —
-    # otherwise the join reshuffles candidate rows already carrying v1,
-    # pairs × vector bytes (the containment_bottomk wide-payload lesson).
-    # n_rows comes from the index build's cached COUNT(*) — no re-scan per
-    # query build.  row_bytes=1024 is the IN-MEMORY HashedRelation cost of
-    # a 64-float row (256 B data × ~3-4× UnsafeRow/array-header/hash-page
-    # overhead), NOT the serialized size: the r11 decade-4 probe showed an
-    # 8M-row vector table passing a serialized-size gate and then dying on
-    # Spark's hard 8 GiB broadcast-relation cap — and the failed broadcast
-    # build took the whole local-mode context down with it.  The byte gate
-    # now admits ≤ ~6.3M vectors; past that the shuffle join runs, which
-    # is the correct shape on a real cluster anyway.
-    from .partitioning import maybe_broadcast
-
-    scored = (
-        cand.join(e1, "id_1")
-        .join(
-            maybe_broadcast(
-                e2, 8_000_000,
-                n_rows=_srpw_corpus_count(spark, sf_dir), row_bytes=1024,
-            ),
-            "id_2",
-        )
-        .select("id_1", "id_2", dot_product("v1", "v2").alias("cos"))
-    )
+    # the gate's row count is the index build's cached COUNT(*) — no
+    # re-scan per query build
+    ib, n = _shared_srpw_index(spark, sf_dir)
+    scored = _srp_pair_scores(spark, sf_dir, ib, n)
     return (
         scored.orderBy(F.desc("cos"), "id_1", "id_2")
         .limit(50)
@@ -640,12 +651,7 @@ def q_dedup_embedding_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM embeddings e JOIN cap USING (vec_id)),
     bt AS (SELECT vec_id, {_SQL_SRP_BANDS} FROM sig),
     cand AS ({_SQL_SRP_PAIR_CAND}),
-    scored AS (
-      SELECT c.id_1, c.id_2,
-             list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
-      FROM (SELECT DISTINCT id_1, id_2 FROM cand) c
-      JOIN embeddings a ON c.id_1 = a.vec_id
-      JOIN embeddings b ON c.id_2 = b.vec_id)
+    {_SQL_SRP_PAIR_SCORED}
     SELECT id_1, id_2, floor(cos*10000 + 0.5)/10000.0 AS cosine
     FROM scored
     ORDER BY cos DESC, id_1, id_2
@@ -682,8 +688,6 @@ def q_dedup_embedding_srp_narrow_demo(spark: SparkSession, sf_dir: str) -> DataF
     Within the cap: band semi-join of the session-shared index, narrow
     id pairs, rescore joins, top-50 TakeOrderedAndProject.
     """
-    from .functions.vector import dot_product
-
     emb_all = __load(spark, sf_dir, "embeddings")
     ib = _shared_srp_index(spark, sf_dir)  # (vec_id, band, val)
     n_all = emb_all.count()
@@ -695,29 +699,8 @@ def q_dedup_embedding_srp_narrow_demo(spark: SparkSession, sf_dir: str) -> DataF
         # the oracle's LIMIT text needs no branch (same result either way)
         cap_ids = emb_all.select("vec_id").orderBy("vec_id").limit(_SRP_DEMO_CAP)
         ib = ib.join(F.broadcast(cap_ids), "vec_id")
-    l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
-    r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
-    cand = (
-        l.join(r, ["band", "val"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
-    emb = __load(spark, sf_dir, "embeddings")
-    e1 = emb.select(F.col("vec_id").alias("id_1"), F.col("embedding").alias("v1"))
-    e2 = emb.select(F.col("vec_id").alias("id_2"), F.col("embedding").alias("v2"))
-    # second vector fetch broadcast when the corpus fits (physical-only;
-    # ~8M × 320 B ≈ 2.4 GB, inside the byte gate) — otherwise the join
-    # reshuffles candidate rows already carrying v1, pairs × vector bytes
-    # (the containment_bottomk wide-payload lesson).  n_rows reuses the
-    # cap-gate count above — no second scan.
-    from .partitioning import maybe_broadcast
-
-    scored = (
-        cand.join(e1, "id_1")
-        .join(maybe_broadcast(e2, 8_000_000, n_rows=n_all, row_bytes=1024), "id_2")
-        .select("id_1", "id_2", dot_product("v1", "v2").alias("cos"))
-    )
+    # the gate's row count reuses the cap-gate count above — no second scan
+    scored = _srp_pair_scores(spark, sf_dir, ib, n_all)
     return (
         scored.orderBy(F.desc("cos"), "id_1", "id_2")
         .limit(50)
@@ -846,7 +829,7 @@ def _sql_adc_fold(probed: bool, start: str = "0.0") -> str:
         rows = "codes_long cl JOIN lut_long lu ON lu.s = cl.s AND lu.code = cl.code"
     keys = ", ".join(["cl.vec_id", qid] + ([start] if start != "0.0" else []))
     return f"""approx AS (
-      SELECT cl.vec_id, {qid},
+      SELECT cl.vec_id, {qid} AS query_id,
              list_reduce(list_prepend({start}, list(lu.l ORDER BY lu.s)),
                          (a, b) -> a + b) AS a
       FROM {rows}
@@ -854,27 +837,14 @@ def _sql_adc_fold(probed: bool, start: str = "0.0") -> str:
 
 
 def _sql_rescore_topk(rescore: int) -> str:
-    """cand + exact + top 10: each query's top-``rescore`` approximate
-    candidates rescored exactly (_rescore_topk)."""
-    return f"""cand AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
-        FROM approx)
-      WHERE rn <= {rescore}),
-    exact AS (
-      SELECT cand.qid AS query_id, cand.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
-      FROM cand
-      JOIN embeddings e ON cand.vec_id = e.vec_id
-      JOIN q qq ON cand.qid = qq.qid)
+    """cand + rescored + top 10: each query's top-``rescore`` approximate
+    candidates rescored exactly."""
+    return f"""{_sql_top_cand("approx", "a", rescore)},
+    {_SQL_RESCORED}
     SELECT query_id, vec_id,
            floor(raw*10000 + 0.5)/10000.0 AS score,
            rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM exact)
-    WHERE rank <= 10
+    FROM rescored
     """
 
 
@@ -916,7 +886,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb, codes = _shared_pq_index(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
     out = pq_topk(emb, codes, cb, queries, k=10)
-    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")
+    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -945,11 +915,10 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mins, scales, codes = _shared_sq_index(spark, sf_dir)
     keep = emb.filter(F.col("label").between(2, 5)).select("vec_id")
     fcodes = codes.join(keep, "vec_id")
-    femb = emb.join(keep, "vec_id")
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = sq_topk(fcodes, femb, queries, mins, scales, k=10, rescore=40)
+    out = sq_topk(fcodes, emb, queries, mins, scales, k=10, rescore=40)
     return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
 
 
@@ -1058,16 +1027,7 @@ def q_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     qb AS (SELECT vec_id AS query_id, {_SQL_SRP_BANDS} FROM sig WHERE vec_id < 20),
     ib AS (SELECT vec_id, {_SQL_SRP_BANDS} FROM sig),
     cand AS ({_SQL_SRP_CAND}),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT c.query_id, c.vec_id,
-               row_number() OVER (PARTITION BY c.query_id ORDER BY
-                 list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC,
-                 c.vec_id) AS rank
-        FROM cand c
-        JOIN embeddings e ON c.vec_id = e.vec_id
-        JOIN embeddings q ON c.query_id = q.vec_id)
-      WHERE rank <= 10),
+    {_SQL_RESCORED},
     q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 20),
     exact AS (
       SELECT query_id, vec_id FROM (
@@ -1081,7 +1041,7 @@ def q_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(a.vec_id)::BIGINT AS hits,
            floor((count(a.vec_id) / 10.0) * 10000 + 0.5) / 10000.0 AS recall_at_10
     FROM exact x
-    LEFT JOIN approx a ON x.query_id = a.query_id AND x.vec_id = a.vec_id
+    LEFT JOIN rescored a ON x.query_id = a.query_id AND x.vec_id = a.vec_id
     GROUP BY x.query_id
     ORDER BY x.query_id
     """,
@@ -1553,42 +1513,15 @@ def q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring pass (identical float, no re-join against the vectors).
     Final top-50 is TakeOrderedAndProject.
     """
-    from .functions.vector import dot_product
-
-    ib = _shared_srpw_index(spark, sf_dir)[0]
-    l = ib.select(F.col("vec_id").alias("id_1"), "band", "val")
-    r = ib.select(F.col("vec_id").alias("id_2"), "band", "val")
-    cand = (
-        l.join(r, ["band", "val"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
-    emb = __load(spark, sf_dir, "embeddings")
-    e1 = emb.select(F.col("vec_id").alias("id_1"), F.col("embedding").alias("v1"))
-    e2 = emb.select(F.col("vec_id").alias("id_2"), F.col("embedding").alias("v2"))
-    from .partitioning import maybe_broadcast
-
-    scored_u = (
-        cand.join(e1, "id_1")
-        .join(
-            maybe_broadcast(
-                e2, 8_000_000,
-                n_rows=_srpw_corpus_count(spark, sf_dir), row_bytes=1024,
-            ),
-            "id_2",
-        )
-        .select("id_1", "id_2", dot_product("v1", "v2").alias("s"))
-    )
+    ib, n = _shared_srpw_index(spark, sf_dir)
+    scored_u = _srp_pair_scores(spark, sf_dir, ib, n)
     directed = scored_u.select(
-        F.col("id_1").alias("q_id"), F.col("id_2").alias("c_id"), "s"
+        F.col("id_1").alias("q_id"), F.col("id_2").alias("c_id"), F.col("cos").alias("s")
     ).unionByName(
         scored_u.select(
-            F.col("id_2").alias("q_id"), F.col("id_1").alias("c_id"), "s"
+            F.col("id_2").alias("q_id"), F.col("id_1").alias("c_id"), F.col("cos").alias("s")
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("q_id").orderBy(F.desc("s"), F.asc("c_id"))
     topk = (
         directed.withColumn("rank", F.row_number().over(w))
@@ -1667,7 +1600,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, assign = _shared_ivfpq_coarse(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
     out = ivfpq_topk(emb, codes, cb, cents, assign, queries, k=10)
-    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")
+    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -1736,4 +1669,4 @@ def q_ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rcb, rcodes = _shared_ivfpq_residual_index(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 20)
     out = ivfpq_residual_topk(emb, rcodes, rcb, cents, assign, queries, k=10)
-    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")
+    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")

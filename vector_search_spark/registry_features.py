@@ -52,6 +52,8 @@ from .operators.relational import (
     daily_purchase_cents,
     sessions_gap_over,
     sessions_gap_over_sql,
+    truncate_at_first_purchase,
+    truncate_at_first_purchase_sql,
 )
 from .sources.tables import load_table as _t
 
@@ -543,17 +545,7 @@ def _ma_oracle() -> str:
       SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type
       FROM events)""",
         f"""s AS MATERIALIZED ({sessions_gap_over_sql("e", ["ts_us", "event_id"])})""",
-        """k AS MATERIALIZED (
-      SELECT * FROM (
-        SELECT user_id, sess, ts_us, event_id, event_type,
-               COALESCE(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id, sess ORDER BY ts_us, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS cp,
-               row_number() OVER (PARTITION BY user_id, sess
-                                  ORDER BY ts_us, event_id) AS rn
-        FROM s)
-      WHERE cp = 0)""",
+        f"""k AS MATERIALIZED ({truncate_at_first_purchase_sql("s")})""",
         """tr AS MATERIALIZED (
       SELECT src, dst FROM (
         SELECT CASE WHEN event_type = 'purchase' THEN NULL ELSE event_type END
@@ -649,21 +641,7 @@ def _ma_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns DIV 1000").alias("ts_us"), "event_id", "event_type"
     )
-    sess = sessions_gap_over(ev, ["ts_us", "event_id"])
-    ws = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
-    kept = (
-        sess.withColumn(
-            "cp",
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).over(ws.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ),
-        )
-        .withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("cp") == 0)
-    )
+    kept = truncate_at_first_purchase(sessions_gap_over(ev, ["ts_us", "event_id"]))
     ws2 = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
     steps = (
         kept.withColumn("nxt", F.lead("event_type").over(ws2))
@@ -1303,17 +1281,7 @@ def _me_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id, event_type
       FROM events),
     s AS ({sessions_gap_over_sql("e", ["ts_us", "event_id"])}),
-    k AS (
-      SELECT * FROM (
-        SELECT user_id, sess, ts_us, event_id, event_type,
-               COALESCE(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id, sess ORDER BY ts_us, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 AS cp,
-               row_number() OVER (PARTITION BY user_id, sess
-                                  ORDER BY ts_us, event_id) AS rn
-        FROM s)
-      WHERE cp = 0),
+    k AS ({truncate_at_first_purchase_sql("s")}),
     conv AS (
       SELECT user_id, sess FROM k WHERE event_type = 'purchase'),
     touches AS (
@@ -1372,21 +1340,7 @@ def q_attribution_models_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts_ns DIV 1000").alias("ts_us"), "event_id", "event_type"
     )
-    sess = sessions_gap_over(ev, ["ts_us", "event_id"])
-    ws = Window.partitionBy("user_id", "sess").orderBy("ts_us", "event_id")
-    kept = (
-        sess.withColumn(
-            "cp",
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).over(ws.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ),
-        )
-        .withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("cp") == 0)
-    )
+    kept = truncate_at_first_purchase(sessions_gap_over(ev, ["ts_us", "event_id"]))
     conv = (
         kept.filter(F.col("event_type") == "purchase")
         .select("user_id", "sess")

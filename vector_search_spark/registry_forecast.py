@@ -1,10 +1,8 @@
 """Registry entries: time-series smoothing and seasonal forecasting.
 
-Holds the whole smoothing family after the round-6 module reorg:
-`acf_daily_revenue`, `seasonal_decomposition_dow`, `ses_revenue_forecast`
-and `brown_trend_forecast` (moved verbatim from registry_round6 — names
-and oracle texts unchanged) plus the round-6 `holt_winters_dow_forecast`
-documented below.
+Holds the whole smoothing family: `acf_daily_revenue`,
+`seasonal_decomposition_dow`, `ses_revenue_forecast` and
+`brown_trend_forecast`, plus `holt_winters_dow_forecast` documented below.
 
 `ses_revenue_forecast` (level) and `brown_trend_forecast` (level+trend)
 closed the smoothing family except for SEASONAL state — the one
@@ -274,8 +272,6 @@ def q_holt_winters_dow_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("dow")
     )
 
-
-# --- moved verbatim from registry_round6 (round-6 module reorg) ---
 
 # ---------------------------------------------------------------------------
 # Sample autocorrelation of daily purchase revenue, lags 1..7.

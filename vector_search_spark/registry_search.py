@@ -12,10 +12,10 @@ uses).  Both oracles are full DuckDB twins — the BM25 fold is ordered on
 both sides so double addition cannot drift (memory/cross-engine-
 determinism.md).
 
-Since the round-6 module reorg this module also holds the retrieval
-re-rankers moved verbatim from registry_round6: `mmr_diversify_topk`
+Two retrieval re-rankers sit on the same exact scan: `mmr_diversify_topk`
 (maximal-marginal-relevance diversification) and `rocchio_prf_search`
-(pseudo-relevance-feedback query expansion).
+(pseudo-relevance-feedback query expansion).  Every single-query exact
+scan here is `operators.knn.knn_topk`, fed the query vector by `.first()`.
 """
 
 from __future__ import annotations
@@ -50,15 +50,9 @@ from .sources.tables import load_table as _t
 )
 def q_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__qvec"))
-    scored = emb.crossJoin(F.broadcast(q)).withColumn(
-        "raw_score", dot_product("embedding", "__qvec")
-    )
-    return (
-        scored.orderBy(F.desc("raw_score"), F.asc("vec_id"))
-        .limit(20)
-        .select("vec_id", "label", round4("raw_score").alias("score"))
-    )
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    out = knn_topk(emb, qvec, k=20, payload_cols=["label"])
+    return out.select("vec_id", "label", round4("score").alias("score"))
 
 
 # ---------------------------------------------------------------------------
@@ -326,18 +320,14 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lex = bm25_topk(docs, _BM25_QUERY, k=50, k1=_K1, b=_B).select("doc_id", "rank")
 
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("__qvec"))
-    scored = emb.crossJoin(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        dot_product("embedding", "__qvec").alias("raw_score"),
-    )
-    # limit-then-rank: TakeOrderedAndProject bounds the dense leg before
-    # any window touches it (a pre-limit global window would single-task
-    # the whole embedding scan)
-    wd = Window.orderBy(F.desc("raw_score"), F.asc("doc_id"))
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    # limit-then-rank: knn_topk's TakeOrderedAndProject bounds the dense
+    # leg before any window touches it (a pre-limit global window would
+    # single-task the whole embedding scan)
+    wd = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     dense = (
-        scored.orderBy(F.desc("raw_score"), F.asc("doc_id"))
-        .limit(50)
+        knn_topk(emb, qvec, k=50)
+        .withColumnRenamed("vec_id", "doc_id")
         .withColumn("rank", F.row_number().over(wd))
         .select("doc_id", "rank")
     )
@@ -356,8 +346,6 @@ def q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-# --- moved verbatim from registry_round6 (round-6 module reorg) ---
 
 # ---------------------------------------------------------------------------
 # Maximal-marginal-relevance re-ranking of the exact top-20 candidates.
@@ -435,20 +423,17 @@ def q_mmr_diversify_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-planned per round on 1-row frames, which is why MMR is always a
     post-top-k stage and never a corpus operator.
     """
-    from .functions.vector import dot_product
-
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
     cand = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn("raw", dot_product("embedding", "q_emb"))
-        .orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(MMR_CAND)
+        knn_topk(
+            emb, qvec, k=MMR_CAND, payload_cols=["label", "embedding"],
+            where=F.col("vec_id") != 0,
+        )
         .select(
             "vec_id",
             "label",
-            F.expr("CAST(floor(raw * 1000000 + 0.5) AS BIGINT)").alias("rel"),
+            F.expr("CAST(floor(score * 1000000 + 0.5) AS BIGINT)").alias("rel"),
             "embedding",
         )
         .localCheckpoint(eager=True)
@@ -461,10 +446,7 @@ def q_mmr_diversify_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            F.expr(
-                "CAST(floor(aggregate(zip_with(ea, eb, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-                " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) * 1000000 + 0.5) AS BIGINT)"
-            ).alias("sim"),
+            F.floor(dot_product("ea", "eb") * 1000000 + 0.5).cast("long").alias("sim"),
         )
         .localCheckpoint(eager=True)
     )
@@ -552,31 +534,16 @@ def q_rocchio_prf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot both engines use.
 
     Scale: PRF costs one extra 64-row aggregate (posexplode of 10
-    feedback vectors), a 1-row array rebuild broadcast back into the
-    scan, and a second exact TakeOrderedAndProject pass — i.e. exactly
+    feedback vectors), a 1-row array rebuild fetched to the driver as the
+    expanded query, and a second exact TakeOrderedAndProject pass — i.e. exactly
     2× the KNN scan with no new shuffle, which is why PRF survives at
     corpus scale while feedback methods needing per-document state
     don't.
     """
-    from .functions.vector import dot_product
-
     emb = _t(spark, sf_dir, "embeddings")
-    docs = emb.filter(F.col("vec_id") != 0)
-    # the 1-row query vector feeds both the feedback scan and the q0
-    # explode — checkpoint it so only the two genuine PRF corpus passes
-    # remain (plan audit showed embeddings x4)
-    q = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").alias("q_emb"))
-        .localCheckpoint(eager=True)
-    )
-    fb = (
-        docs.crossJoin(F.broadcast(q))
-        .withColumn("s", dot_product("embedding", "q_emb"))
-        .orderBy(F.desc("s"), F.asc("vec_id"))
-        .limit(PRF_FB)
-        .select("embedding")
-    )
+    qvec = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
+    not_q = F.col("vec_id") != 0
+    fb = knn_topk(emb, qvec, k=PRF_FB, payload_cols=["embedding"], where=not_q)
     ex = (
         fb.select(F.posexplode("embedding").alias("dim0", "v"))
         .groupBy((F.col("dim0") + 1).alias("dim"))
@@ -586,32 +553,25 @@ def q_rocchio_prf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("csum")
         )
     )
-    q0e = q.select(F.posexplode("q_emb").alias("dim0", "v")).select(
-        (F.col("dim0") + 1).alias("dim"),
-        F.expr("CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5) AS BIGINT)").alias("q0m"),
-    )
+    q0e = spark.createDataFrame(
+        [(j + 1, v) for j, v in enumerate(qvec)], "dim int, v double"
+    ).select("dim", F.expr("CAST(floor(v * 1000000 + 0.5) AS BIGINT)").alias("q0m"))
     qp = q0e.join(ex, "dim").select(
         "dim", F.expr(f"q0m + {_fdiv('csum', str(2 * PRF_FB))}").alias("qpv")
     )
-    qparr = qp.agg(
+    qpl = qp.agg(
         F.expr(
             "transform(array_sort(collect_list(struct(dim, qpv))), x -> CAST(x.qpv AS DOUBLE))"
-        ).alias("qpl")
-    )
-    rescored = (
-        docs.crossJoin(F.broadcast(qparr))
-        .withColumn("raw", dot_product("embedding", "qpl"))
-    )
-    return (
-        rescored.orderBy(F.desc("raw"), F.asc("vec_id"))
-        .limit(PRF_TOPK)
-        .select(
-            "vec_id",
-            "label",
-            F.expr("CAST(floor((raw / 1000000.0) * 10000 + 0.5)/10000.0 AS DOUBLE)").alias(
-                "score"
-            ),
         )
+    ).first()[0]
+    return knn_topk(
+        emb, qpl, k=PRF_TOPK, payload_cols=["label"], where=not_q
+    ).select(
+        "vec_id",
+        "label",
+        F.expr("CAST(floor((score / 1000000.0) * 10000 + 0.5)/10000.0 AS DOUBLE)").alias(
+            "score"
+        ),
     )
 
 
