@@ -170,9 +170,11 @@ def test_salted_hash_is_spelled_once():
 # (its cum_pos column; the boosting stumps' least-squares window has no
 # class counts), the session-break flag (a lag of the microsecond time
 # column), the ANN candidate rescore (candidate pairs joined to their
-# query vectors), the SRP pair rescore (the second vector join) and the
-# truncate-at-first-purchase stage (its cp column).  Each maps to the
-# module holding the helpers and their count.
+# query vectors), the SRP pair rescore (the second vector join), the
+# truncate-at-first-purchase stage (its cp column), the fixed-round loop
+# (an aggregate() over sequence(1, ...) or a read of its accumulator) and
+# the Markov transition counts (a cell's prev/event_type test).  Each maps
+# to the module holding the helpers and their count.
 _STAGE_IDIOMS = {
     "gini split window": re.compile(r'alias\("cum_pos"\)|AScum_pos', re.I),
     "session break flag": re.compile(r'lag\("?(?:ts_)?us"?\)', re.I),
@@ -183,10 +185,16 @@ _STAGE_IDIOMS = {
         r'F\.col\("embedding"\)\.alias\("v2"\)|JOINembeddingsbONc\.id_2=b\.vec_id'
     ),
     "truncate at first purchase": re.compile(r'withColumn\("cp",|AScp,'),
+    "fixed-round loop": re.compile(r"aggregate\(sequence\(1,|element_at\(acc,"),
+    "transition counts": re.compile(
+        r"prev='\{a\}'ANDevent_type='\{b\}'"
+        r'|\(F\.col\("prev"\)==a\)&\(F\.col\("event_type"\)==b\)'
+    ),
 }
 _STAGE_HELPERS = {
-    # gini_split_scores, gini_split_scores_sql
-    "registry_ml.py": {"gini split window": 2},
+    # gini_split_scores, gini_split_scores_sql; iterate_rounds (the loop
+    # and its state read); _SQL_MK_COUNTS and markov_transition_counts
+    "registry_ml.py": {"gini split window": 2, "fixed-round loop": 2, "transition counts": 2},
     # sessions_gap_at_least (one lag) and sessions_gap_over (two), both
     # engines; truncate_at_first_purchase and its _sql twin
     "operators/relational.py": {"session break flag": 6, "truncate at first purchase": 2},
@@ -198,9 +206,10 @@ _STAGE_HELPERS = {
 
 
 def test_shared_stages_are_spelled_once():
-    """The Gini split finder, the two sessionizers, the truncate stage and
-    the ANN candidate and SRP pair rescores are spelled only in their
-    helpers; every other query calls them."""
+    """The Gini split finder, the two sessionizers, the truncate stage,
+    the ANN candidate and SRP pair rescores, the fixed-round loop and the
+    Markov transition counts are spelled only in their helpers; every
+    other query calls them."""
     pkg = Path(__file__).resolve().parents[1] / "vector_search_spark"
     found = {}
     for path in sorted(pkg.rglob("*.py")):

@@ -1,10 +1,13 @@
 """Round-11 optimization gates: the plan-shape rewrites must compute the
 same values as the shapes they replaced.
 
-- The HOF-loop form of the markov iteration (one aggregate() over an
-  array state) is pinned against the unrolled per-round text on a
-  synthetic count matrix — the bit-identity claim, tested directly.
-- `_hof_once` (the explode-array Generate barrier) must preserve row
+- A fixed-round iteration is written once and run by two engines: the
+  Spark loop (`iterate_rounds`, one aggregate() over an array state) and
+  the DuckDB chain (`iterate_rounds_sql`) must end in the same state on
+  synthetic inputs that hit the guards (a Markov state with no outgoing
+  transition, a hitting-time dead end) and the PCA round's DECIMAL
+  products.
+- `iterate_rounds`' explode-array Generate barrier must preserve row
   count and values.
 - The native `multimodal_features` expression is pinned against the
   mapInPandas operator path it replaced (same md5 stub, two routes).
@@ -17,6 +20,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -24,62 +29,76 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from conftest import SF_SMOKE  # noqa: E402
 
 from vector_search_spark import registry  # noqa: E402
+from vector_search_spark.registry_ml import _MK_K  # noqa: E402
 
 
-def test_markov_hof_loop_matches_unrolled(spark):
-    from vector_search_spark.registry_ml import (
-        _MK_K, _MK_SCALE, _hof_once, _mk_np_hof_expr, _mk_step_exprs,
-    )
-
-    # synthetic 5x5 count matrix with a zero-row (r3 = 0) to exercise the
-    # self-loop guard branch
-    cells = {}
-    v = 7
+def _markov_counts(dead: int) -> dict[str, int]:
+    """A synthetic 5x5 transition-count row whose state ``dead`` has no
+    outgoing transition (r_dead = 0), with its row sums."""
+    cells, v = {}, 7
     for i in range(_MK_K):
         for j in range(_MK_K):
-            cells[f"c{i}_{j}"] = 0 if i == 3 else (v := (v * 31 + 17) % 400)
+            cells[f"c{i}_{j}"] = 0 if i == dead else (v := (v * 31 + 17) % 400)
+    for i in range(_MK_K):
+        cells[f"r{i}"] = sum(cells[f"c{i}_{j}"] for j in range(_MK_K))
+    return cells
+
+
+def _pca_moments() -> dict[str, int]:
+    """A symmetric 4x4 moment matrix with entries near 1e15, so one
+    mat-vec product term (~1e21) overflows BIGINT: only the DECIMAL
+    products of the round text hold it."""
+    base = [[9, 4, 2, 1], [4, 8, 3, 2], [2, 3, 7, 1], [1, 2, 1, 6]]
+    return {
+        f"m{j}_{k}": base[j][k] * 313_000_000_000_000 + 17 * (j + k)
+        for j in range(4)
+        for k in range(4)
+    }
+
+
+def _twin_case(name: str):
+    from vector_search_spark.registry_graph import _hit_iteration
+    from vector_search_spark.registry_ml import _mk_iteration, _pca_iteration
+
+    if name == "markov_zero_row":  # the self-loop guard of a dead state
+        return _markov_counts(3), _mk_iteration()
+    if name == "hitting_dead_end":  # r1 = 0: no hitting time, NULL
+        return _markov_counts(1), _hit_iteration()
+    return _pca_moments(), _pca_iteration()  # DECIMAL products, w/wmax layers
+
+
+@pytest.mark.parametrize("case", ["markov_zero_row", "hitting_dead_end", "pca"])
+def test_iterate_rounds_twins_agree(spark, case):
+    """One round written once: the Spark loop and the DuckDB chain end in
+    the same state, at a round count no query uses."""
+    from vector_search_spark.registry_ml import iterate_rounds, iterate_rounds_sql
+
+    cols, it = _twin_case(case)
+    it = it._replace(rounds=9)
+    state = [s for s, _ in it.state]
     row = spark.createDataFrame(
-        [tuple(cells[f"c{i}_{j}"] for i in range(_MK_K) for j in range(_MK_K))],
-        ", ".join(f"c{i}_{j} long" for i in range(_MK_K) for j in range(_MK_K)),
+        [tuple(cols.values())], ", ".join(f"{c} long" for c in cols)
     )
-    for i in range(_MK_K):
-        row = row.withColumn(
-            f"r{i}", F.expr(" + ".join(f"c{i}_{j}" for j in range(_MK_K)))
-        )
+    got = tuple(iterate_rounds(row, "pv", it).select(*state).collect()[0])
 
-    iters = 9  # deliberately not the production constant
-    # unrolled reference: the pre-round-11 shape
-    un = row
-    for i in range(_MK_K):
-        un = un.withColumn(f"p{i}", F.lit(_MK_SCALE // _MK_K).cast("long"))
-    for _ in range(iters):
-        for name, sql in _mk_step_exprs():
-            un = un.withColumn(name, F.expr(sql))
-        for i in range(_MK_K):
-            un = un.withColumn(f"p{i}", F.col(f"np{i}"))
-        un = un.drop(*[f"np{i}" for i in range(_MK_K)])
-    expected = un.select(*[f"p{i}" for i in range(_MK_K)]).collect()[0]
-
-    # HOF form: the round-11 shape
-    steps = ", ".join(_mk_np_hof_expr(j, "acc") for j in range(_MK_K))
-    init = ", ".join(f"CAST({_MK_SCALE // _MK_K} AS BIGINT)" for _ in range(_MK_K))
-    hof = _hof_once(
-        row,
-        "pv",
-        f"aggregate(sequence(1, {iters}), array({init}),"
-        f" (acc, t) -> array({steps}))",
-    )
-    got = hof.select(
-        *[F.element_at("pv", i + 1).alias(f"p{i}") for i in range(_MK_K)]
-    ).collect()[0]
-    assert tuple(got) == tuple(expected)
+    src = ", ".join(f"CAST({v} AS BIGINT) AS {c}" for c, v in cols.items())
+    ctes, last = iterate_rounds_sql("it", "src", it)
+    expected = duckdb.connect().execute(
+        f"WITH src AS (SELECT {src}), {', '.join(ctes)}"
+        f" SELECT {', '.join(state)} FROM {last}"
+    ).fetchone()
+    assert got == expected
+    if case == "hitting_dead_end":
+        assert got == (None,) * len(state)
+    else:
+        assert None not in got
 
 
-def test_hof_once_preserves_rows_and_values(spark):
-    from vector_search_spark.registry_ml import _hof_once
+def test_iterate_rounds_preserves_rows_and_values(spark):
+    from vector_search_spark.registry_ml import Iteration, iterate_rounds
 
     df = spark.range(0, 100).withColumn("x", F.col("id") * 3)
-    out = _hof_once(df, "y", "x * x + 1")
+    out = iterate_rounds(df, "yv", Iteration([("y", "x")], 1, [("ny", "y * y + 1")], ["ny"]))
     rows = out.orderBy("id").collect()
     assert len(rows) == 100
     assert all(r["y"] == r["x"] * r["x"] + 1 for r in rows)

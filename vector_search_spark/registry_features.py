@@ -37,14 +37,16 @@ from .registry_dedup import (
     _shared_verified_pairs,
 )
 from .registry_ml import (
-    _MK_ITERS,
     _MK_K,
     _MK_SCALE,
     _MK_TYPES,
-    _hof_once,
-    _mk_np_hof_expr,
-    _mk_step_exprs,
+    _SQL_MK_COUNTS,
+    Iteration,
+    _mk_iteration,
     _plan_cached,
+    iterate_rounds,
+    iterate_rounds_sql,
+    markov_transition_counts,
 )
 from .registry_text import _SQL_ND, _SQL_NT, _SQL_QUALITY, _SQL_SR, _shared_doc_features
 from .operators.relational import (
@@ -479,18 +481,15 @@ def _ma_count_aggs() -> str:
     return ", ".join(parts)
 
 
-def _ma_step(v: str, excluded: str | None) -> list[tuple[str, str]]:
-    """One absorption round for variant ``v`` (channel ``excluded`` removed:
-    its state is unreachable and transitions into it leak to null)."""
+def _ma_iteration(v: str, excluded: str | None) -> Iteration:
+    """Absorption rounds for variant ``v`` from p = 0 (channel ``excluded``
+    removed: its state is unreachable and transitions into it leak to
+    null)."""
+    xs = [x for x in _MA_STATES if x != excluded]
     outs = []
-    for x in _MA_STATES:
-        if x == excluded:
-            continue
+    for x in xs:
         terms = [f"c_{x}_conv * {_MA_SCALE}"]
-        for y in _MA_STATES:
-            if y == excluded:
-                continue
-            terms.append(f"c_{x}_{y} * p_{v}_{y}")
+        terms += [f"c_{x}_{y} * p_{v}_{y}" for y in xs]
         num = " + ".join(terms)
         outs.append(
             (
@@ -500,7 +499,12 @@ def _ma_step(v: str, excluded: str | None) -> list[tuple[str, str]]:
                 f" AS BIGINT) END)",
             )
         )
-    return outs
+    return Iteration(
+        [(f"p_{v}_{x}", "CAST(0 AS BIGINT)") for x in xs],
+        _MA_ROUNDS,
+        outs,
+        [name for name, _ in outs],
+    )
 
 
 def _ma_start(v: str, excluded: str | None) -> str:
@@ -518,25 +522,6 @@ def _ma_start(v: str, excluded: str | None) -> str:
 
 
 _MA_VARIANTS = [("full", None)] + [(f"wo_{s}", s) for s in _MA_STATES]
-
-
-def _ma_np_hof_expr(v: str, excluded: str | None, x: str, acc: str) -> str:
-    """One variant-``v`` absorption update for state ``x`` with the state
-    vector read from an array lambda variable — the HOF-loop form of
-    ``_ma_step``'s text (p_{v}_{y} -> element_at(acc, idx)).  Same term
-    order, same integer numerator, same floor-divide — bit-identical."""
-    xs = [s for s in _MA_STATES if s != excluded]
-    terms = [f"c_{x}_conv * {_MA_SCALE}"]
-    for y in _MA_STATES:
-        if y == excluded:
-            continue
-        terms.append(f"c_{x}_{y} * element_at({acc}, {xs.index(y) + 1})")
-    num = " + ".join(terms)
-    return (
-        f"(CASE WHEN r_{x} = 0 THEN 0 ELSE "
-        f"CAST(floor(CAST({num} AS DOUBLE) / CAST(r_{x} AS DOUBLE))"
-        f" AS BIGINT) END)"
-    )
 
 
 def _ma_oracle() -> str:
@@ -563,27 +548,19 @@ def _ma_oracle() -> str:
       FROM k WHERE rn = 1)""",
         f"c AS MATERIALIZED (SELECT {_ma_count_aggs()} FROM tr)",
     ]
-    init = ", ".join(
-        f"0::BIGINT AS p_{v}_{x}"
-        for v, exc in _MA_VARIANTS
-        for x in _MA_STATES
-        if x != exc
+    # all five variants advance together, one CTE per round
+    its = [_ma_iteration(v, exc) for v, exc in _MA_VARIANTS]
+    rounds, prev = iterate_rounds_sql(
+        "it",
+        "c",
+        Iteration(
+            [col for i in its for col in i.state],
+            _MA_ROUNDS,
+            [b for i in its for b in i.step],
+            [o for i in its for o in i.outputs],
+        ),
     )
-    ctes.append(f"it0 AS (SELECT *, {init} FROM c)")
-    prev = "it0"
-    count_cols = []
-    for s in _ma_src_cols():
-        for t in _MA_STATES + ["conv"]:
-            count_cols.append(f"c_{s}_{t}")
-        count_cols.append(f"r_{s}")
-    keep = ", ".join(count_cols)  # counts carried through every round
-    for t in range(_MA_ROUNDS):
-        layer = []
-        for v, exc in _MA_VARIANTS:
-            for name, sql in _ma_step(v, exc):
-                layer.append(f"{sql} AS {name[1:]}")  # np_v_x -> p_v_x
-        ctes.append(f"it{t + 1} AS (SELECT {keep}, {', '.join(layer)} FROM {prev})")
-        prev = f"it{t + 1}"
+    ctes += rounds
     starts = ", ".join(
         f"{_ma_start(v, exc)} AS ps_{v}" for v, exc in _MA_VARIANTS
     )
@@ -629,8 +606,9 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one sessionization window (`sessions_gap_over`, the engine's
     standard exchange) + a partial-agg'd fold to a 30-cell count frame;
     all five chain variants (full + 4 removals) iterate on that 1-row
-    frame — corpus-size-free.  The plan compiles ~300 generated columns, so it is served
-    from the prepared-statement cache like the other unrolled iterations.
+    frame — corpus-size-free.  Each variant is one `iterate_rounds` loop;
+    the plan is served from the prepared-statement cache, so a warm
+    collect reuses the build-time checkpoint of the count frame.
     """
     return _plan_cached(
         "markov_attribution", spark, sf_dir, lambda: _ma_plan(spark, sf_dir)
@@ -679,28 +657,11 @@ def _ma_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias(f"r_{s}")
         )
-    # 1-row count frame materialized once (round 11; see _markov_plan) —
-    # warm collects rerun only the five HOF variants, as the unrolled
-    # plan's every-4-rounds barriers already made them do through r10.
+    # 1-row count frame materialized once (see markov_transition_counts):
+    # warm collects rerun only the five variant loops.
     it = tr.agg(*agg_exprs).localCheckpoint(eager=True)
-    # All five chain variants iterate as one aggregate() HOF each over
-    # sequence(1, ROUNDS) on an array<bigint> state (round 11): the
-    # unrolled form compiled ~300 generated columns + 4 localCheckpoint
-    # barriers (~6.8 s build per fresh plan); the HOF form is five small
-    # expressions with the same per-round text (_ma_np_hof_expr), so the
-    # arithmetic — and therefore the result — is unchanged.
     for v, exc in _MA_VARIANTS:
-        xs = [x for x in _MA_STATES if x != exc]
-        init = ", ".join("CAST(0 AS BIGINT)" for _ in xs)
-        steps = ", ".join(_ma_np_hof_expr(v, exc, x, "acc") for x in xs)
-        it = _hof_once(
-            it,
-            f"pv_{v}",
-            f"aggregate(sequence(1, {_MA_ROUNDS}), array({init}),"
-            f" (acc, t) -> array({steps}))",
-        )
-        for x in xs:
-            it = it.withColumn(f"p_{v}_{x}", F.element_at(f"pv_{v}", xs.index(x) + 1))
+        it = iterate_rounds(it, f"pv_{v}", _ma_iteration(v, exc))
     for v, exc in _MA_VARIANTS:
         it = it.withColumn(f"ps_{v}", F.expr(_ma_start(v, exc)))
     eff = " + ".join(f"(ps_full - ps_wo_{s})" for s in _MA_STATES)
@@ -1129,36 +1090,9 @@ def _me_entropy_exprs() -> list[tuple[str, str]]:
 
 
 def _me_oracle() -> str:
-    ITERS, K, SCALE, TYPES, step = _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
-    cnt = ", ".join(
-        f"sum(CASE WHEN prev = '{a}' AND event_type = '{b}' THEN 1 ELSE 0 END)"
-        f"::BIGINT AS c{i}_{j}"
-        for i, a in enumerate(TYPES)
-        for j, b in enumerate(TYPES)
-    )
-    rows = ", ".join(
-        "(" + " + ".join(f"c{i}_{j}" for j in range(K)) + f") AS r{i}"
-        for i in range(K)
-    )
-    init = ", ".join(f"{SCALE // K}::BIGINT AS p{i}" for i in range(K))
-    keep = ", ".join(
-        [f"c{i}_{j}" for i in range(K) for j in range(K)]
-        + [f"r{i}" for i in range(K)]
-    )
-    ctes = [
-        """pairs AS (
-      SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev,
-             event_type
-      FROM events)""",
-        f"c AS (SELECT {cnt} FROM pairs WHERE prev IS NOT NULL)",
-        f"it0 AS (SELECT *, {init} FROM (SELECT *, {rows} FROM c))",
-    ]
-    prev = "it0"
-    for t in range(ITERS):
-        layer = ", ".join(f"{sql} AS p{name[2:]}" for name, sql in step())
-        ctes.append(f"it{t + 1} AS (SELECT {keep}, {layer} FROM {prev})")
-        prev = f"it{t + 1}"
+    SCALE, TYPES = _MK_SCALE, _MK_TYPES
+    rounds, prev = iterate_rounds_sql("it", "c", _mk_iteration())
+    ctes = [_SQL_MK_COUNTS, *rounds]
     ent = ", ".join(f"{sql} AS {name}" for name, sql in _me_entropy_exprs())
     ctes.append(f"fin AS (SELECT *, {ent} FROM {prev})")
     sel = "\n      UNION ALL ".join(
@@ -1188,13 +1122,14 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     same structure).
 
     Exactness: the stationary π reuses `markov_stationary_events`' exact
-    unrolled iteration; every ln is taken of an INTEGER count and
+    12-round iteration; every ln is taken of an INTEGER count and
     micro-quantized once; row entropies and the π-weighted rate are
     integer folds with one portable floor division each.
 
     Scale: identical to the stationary query — one lag window, 25 BIGINT
     cells, corpus-size-free iteration; the entropy layer is pure scalar
-    text on the 1-row frame.  Plan-cached like the other unrolled plans.
+    text on the 1-row frame.  Plan-cached like the other iteration plans,
+    so a warm collect reuses the build-time checkpoint of the count frame.
     """
     return _plan_cached(
         "markov_entropy_rate", spark, sf_dir, lambda: _me_plan(spark, sf_dir)
@@ -1202,44 +1137,8 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _me_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ITERS, K, SCALE, TYPES, step = _MK_ITERS, _MK_K, _MK_SCALE, _MK_TYPES, _mk_step_exprs
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("prev"), "event_type"
-    ).filter(F.col("prev").isNotNull())
-    cnt_aggs = [
-        F.sum(
-            F.when(
-                (F.col("prev") == a) & (F.col("event_type") == b), F.lit(1)
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias(f"c{i}_{j}")
-        for i, a in enumerate(TYPES)
-        for j, b in enumerate(TYPES)
-    ]
-    # 1-row count matrix materialized once (round 11; see _markov_plan) —
-    # warm collects rerun only the iteration tail, as the unrolled plan's
-    # mid-loop barriers already made them do through r10.
-    it = pairs.agg(*cnt_aggs).localCheckpoint(eager=True)
-    for i in range(K):
-        it = it.withColumn(
-            f"r{i}", F.expr(" + ".join(f"c{i}_{j}" for j in range(K)))
-        )
-    # HOF-loop form of the stationary iteration (round 11): same per-round
-    # text as the oracle via _mk_np_hof_expr, one aggregate() expression
-    # instead of ITERS unrolled layers + localCheckpoint barriers.
-    steps = ", ".join(_mk_np_hof_expr(j, "acc") for j in range(K))
-    init = ", ".join(f"CAST({SCALE // K} AS BIGINT)" for _ in range(K))
-    it = _hof_once(
-        it,
-        "pv",
-        f"aggregate(sequence(1, {ITERS}), array({init}),"
-        f" (acc, t) -> array({steps}))",
-    )
-    for i in range(K):
-        it = it.withColumn(f"p{i}", F.element_at("pv", i + 1))
+    SCALE, TYPES = _MK_SCALE, _MK_TYPES
+    it = iterate_rounds(markov_transition_counts(spark, sf_dir), "pv", _mk_iteration())
     for name, sql in _me_entropy_exprs():
         it = it.withColumn(name, F.expr(sql))
     rows = it.select(

@@ -1,7 +1,7 @@
 """Registry entries: dup-graph / random-walk algorithms (label-propagation communities, eigenvector centrality, k-core, BFS hops, modularity, double-sweep diameter, personalized PageRank, Markov hitting times, TextRank).
 
-Query names and oracle texts are the stable contract: a refactor keeps
-each oracle text identical apart from whitespace.
+Query names and oracle rows are the stable contract: a refactor keeps
+each oracle's rows identical.
 """
 
 from __future__ import annotations
@@ -19,7 +19,14 @@ from .registry_dedup import (
     _shared_components,
     _shared_sym_edges,
 )
-from .registry_ml import _MK_K, _MK_TYPES, _hof_once
+from .registry_ml import (
+    _MK_TYPES,
+    _SQL_MK_COUNTS,
+    Iteration,
+    iterate_rounds,
+    iterate_rounds_sql,
+    markov_transition_counts,
+)
 from .sources.tables import load_table as _t
 
 
@@ -712,10 +719,13 @@ def _hit_nonabs() -> list[int]:
     return [i for i, t in enumerate(_MK_TYPES) if t != "purchase"]
 
 
-def _hit_step_exprs() -> list[tuple[str, str]]:
-    """One truncated hitting-time round as generated text (same in both
-    engines): e_i' = 1 step + Σ_{j non-absorbing} (c_ij/r_i)·e_j, in
-    micro-steps, floor(+0.5)-quantized per state per round."""
+def _hit_iteration() -> Iteration:
+    """The truncated hitting-time rounds from e = 0 as generated text (same
+    in both engines): e_i' = 1 step + Σ_{j non-absorbing} (c_ij/r_i)·e_j,
+    in micro-steps, floor(+0.5)-quantized per state per round.  A state
+    with no outgoing transition (r_i = 0) has no hitting time: its e_i is
+    NULL from the start (so Spark's loop state is nullable, see
+    ``Iteration``), and the NULL spreads to every other state."""
     nonabs = _hit_nonabs()
     out = []
     for i in nonabs:
@@ -725,55 +735,44 @@ def _hit_step_exprs() -> list[tuple[str, str]]:
         out.append(
             (
                 f"ne{i}",
-                f"CAST({_HIT_SCALE} + floor(({mv}) / CAST(r{i} AS DOUBLE) + 0.5)"
-                f" AS BIGINT)",
+                f"CASE WHEN r{i} = 0 THEN NULL ELSE"
+                f" CAST({_HIT_SCALE} + floor(({mv}) / CAST(r{i} AS DOUBLE) + 0.5)"
+                f" AS BIGINT) END",
             )
         )
-    return out
+    return Iteration(
+        [
+            (f"e{i}", f"CASE WHEN r{i} = 0 THEN NULL ELSE CAST(0 AS BIGINT) END")
+            for i in nonabs
+        ],
+        HIT_ROUNDS,
+        out,
+        [name for name, _ in out],
+    )
+
+
+def _hit_direct_prob(i: int) -> str:
+    """P(i -> purchase) rounded to 4 dp; NULL for a state with no outgoing
+    transition."""
+    pidx = _MK_TYPES.index("purchase")
+    return (
+        f"CASE WHEN r{i} = 0 THEN NULL ELSE"
+        f" floor((CAST(c{i}_{pidx} AS DOUBLE) / CAST(r{i} AS DOUBLE))*10000 + 0.5)"
+        f"/10000.0 END"
+    )
 
 
 def _hit_oracle() -> str:
-    nonabs = _hit_nonabs()
-    pidx = _MK_TYPES.index("purchase")
-    cnt = ", ".join(
-        f"sum(CASE WHEN prev = '{a}' AND event_type = '{b}' THEN 1 ELSE 0 END)::BIGINT"
-        f" AS c{i}_{j}"
-        for i, a in enumerate(_MK_TYPES)
-        for j, b in enumerate(_MK_TYPES)
-    )
-    rows = ", ".join(
-        "(" + " + ".join(f"c{i}_{j}" for j in range(_MK_K)) + f") AS r{i}"
-        for i in range(_MK_K)
-    )
-    init = ", ".join(f"0::BIGINT AS e{i}" for i in nonabs)
-    keep = ", ".join(
-        [f"c{i}_{j}" for i in range(_MK_K) for j in range(_MK_K)]
-        + [f"r{i}" for i in range(_MK_K)]
-    )
-    ctes = [
-        """pairs AS (
-      SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS prev,
-             event_type
-      FROM events)""",
-        f"c AS MATERIALIZED (SELECT {cnt} FROM pairs WHERE prev IS NOT NULL)",
-        f"it0 AS (SELECT *, {init} FROM (SELECT *, {rows} FROM c))",
-    ]
-    prev = "it0"
-    for t in range(HIT_ROUNDS):
-        layer = ", ".join(f"{sql} AS e{name[2:]}" for name, sql in _hit_step_exprs())
-        ctes.append(f"it{t + 1} AS MATERIALIZED (SELECT {keep}, {layer} FROM {prev})")
-        prev = f"it{t + 1}"
+    rounds, prev = iterate_rounds_sql("it", "c", _hit_iteration())
     sel = "\n      UNION ALL ".join(
         f"SELECT '{_MK_TYPES[i]}' AS event_type, "
         f"floor((CAST(e{i} AS DOUBLE) / {_HIT_SCALE}.0)*10000 + 0.5)/10000.0"
         f" AS expected_steps, "
-        f"floor((CAST(c{i}_{pidx} AS DOUBLE) / CAST(r{i} AS DOUBLE))*10000 + 0.5)"
-        f"/10000.0 AS direct_purchase_prob, "
+        f"{_hit_direct_prob(i)} AS direct_purchase_prob, "
         f"r{i}::BIGINT AS out_transitions FROM {prev}"
-        for i in nonabs
+        for i in _hit_nonabs()
     )
-    cte_block = ",\n    ".join(ctes)
+    cte_block = ",\n    ".join([_SQL_MK_COUNTS, *rounds])
     return f"""
     WITH {cte_block}
     {sel}
@@ -804,61 +803,9 @@ def q_markov_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the `markov_stationary_events` economics — ONE partial-agg'd
     scan collapses the corpus to a 25-cell count frame; all 48 rounds
-    are 1-row arithmetic (checkpoint barriers every 4 rounds keep
-    generated methods under the 64 KB codegen limit).
+    are one `iterate_rounds` loop of 1-row arithmetic.
     """
-    nonabs = _hit_nonabs()
-    pidx = _MK_TYPES.index("purchase")
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("prev"), "event_type"
-    ).filter(F.col("prev").isNotNull())
-    cnt_aggs = [
-        F.sum(
-            F.when((F.col("prev") == a) & (F.col("event_type") == b), F.lit(1)).otherwise(
-                F.lit(0)
-            )
-        )
-        .cast("long")
-        .alias(f"c{i}_{j}")
-        for i, a in enumerate(_MK_TYPES)
-        for j, b in enumerate(_MK_TYPES)
-    ]
-    # 1-row count matrix materialized once (round 11; see
-    # registry_ml._markov_plan) — warm collects rerun only the HOF tail,
-    # as the old every-4-rounds eager barriers already made them do.
-    it = pairs.agg(*cnt_aggs).localCheckpoint(eager=True)
-    for i in range(_MK_K):
-        it = it.withColumn(
-            f"r{i}", F.expr(" + ".join(f"c{i}_{j}" for j in range(_MK_K)))
-        )
-    # HOF-loop form (round 11): all HIT_ROUNDS rounds in one aggregate()
-    # expression over an array<bigint> state — replaces 48 unrolled
-    # layers + 12 eager localCheckpoint jobs (~3.1 s build) with one
-    # small expression.  Per-round text identical to _hit_step_exprs
-    # (e{j} -> element_at(acc, idx)), so the trajectory is bit-identical.
-    def _hit_hof_expr(i: int) -> str:
-        mv = " + ".join(
-            f"(CAST(c{i}_{j} AS DOUBLE) * CAST(element_at(acc, {nonabs.index(j) + 1})"
-            f" AS DOUBLE))"
-            for j in nonabs
-        )
-        return (
-            f"CAST({_HIT_SCALE} + floor(({mv}) / CAST(r{i} AS DOUBLE) + 0.5)"
-            f" AS BIGINT)"
-        )
-
-    init = ", ".join("CAST(0 AS BIGINT)" for _ in nonabs)
-    steps = ", ".join(_hit_hof_expr(i) for i in nonabs)
-    it = _hof_once(
-        it,
-        "ev",
-        f"aggregate(sequence(1, {HIT_ROUNDS}), array({init}),"
-        f" (acc, t) -> array({steps}))",
-    )
-    for i in nonabs:
-        it = it.withColumn(f"e{i}", F.element_at("ev", nonabs.index(i) + 1))
+    it = iterate_rounds(markov_transition_counts(spark, sf_dir), "ev", _hit_iteration())
     rows = it.select(
         F.explode(
             F.array(
@@ -869,13 +816,12 @@ def q_markov_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
                             f"CAST(floor((CAST(e{i} AS DOUBLE) / {_HIT_SCALE}.0)"
                             f"*10000 + 0.5)/10000.0 AS DOUBLE)"
                         ).alias("expected_steps"),
-                        F.expr(
-                            f"CAST(floor((CAST(c{i}_{pidx} AS DOUBLE) / CAST(r{i} AS DOUBLE))"
-                            f"*10000 + 0.5)/10000.0 AS DOUBLE)"
-                        ).alias("direct_purchase_prob"),
+                        F.expr(f"CAST({_hit_direct_prob(i)} AS DOUBLE)").alias(
+                            "direct_purchase_prob"
+                        ),
                         F.col(f"r{i}").cast("long").alias("out_transitions"),
                     )
-                    for i in nonabs
+                    for i in _hit_nonabs()
                 ]
             )
         ).alias("s")

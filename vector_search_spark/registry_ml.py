@@ -12,8 +12,8 @@ needed.  Among them:
                               normal equations + Cramer's rule (one scan).
 - ``decision_stump_returns``— exact best-split search per feature by
                               windowed cumulative Gini gain.
-- ``markov_stationary_events`` — user-journey transition matrix + unrolled
-                              power iteration to the stationary law.
+- ``markov_stationary_events`` — user-journey transition matrix + fixed-
+                              round power iteration to the stationary law.
 - ``nb_lang_classifier``    — multinomial naive Bayes train/predict/eval
                               on an md5 holdout split, micro-nat integers.
 - ``pca_top_component`` / ``pca_second_component`` /
@@ -39,7 +39,9 @@ training-data-pipeline north star.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -351,6 +353,85 @@ def q_decision_stump_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Fixed-round iteration on a 1-row frame: one Spark loop, one DuckDB chain.
+# ---------------------------------------------------------------------------
+class Iteration(NamedTuple):
+    """A fixed-round iteration on a 1-row frame, written once for both
+    engines: each round evaluates ``step``, ordered ``(name, sql)``
+    bindings over the state columns and earlier bindings, and then binding
+    ``outputs[k]`` becomes state column ``state[k]``.  Spark types the
+    loop state by the init array, so a state that a round can set to NULL
+    needs a nullable init (a non-nullable array reads NULL back as 0)."""
+
+    state: list[tuple[str, str]]  # (column, initial value as SQL)
+    rounds: int
+    step: list[tuple[str, str]]
+    outputs: list[str]
+
+
+def _inline(sql: str, env: dict[str, str]) -> str:
+    """``sql`` with every whole-word name in ``env`` replaced by its text."""
+    names = re.compile(r"\b(" + "|".join(map(re.escape, env)) + r")\b")
+    return names.sub(lambda m: env[m.group(1)], sql)
+
+
+def iterate_rounds(df: DataFrame, name: str, it: Iteration) -> DataFrame:
+    """Run ``it`` as ONE ``aggregate()`` over ``sequence(1, R)`` with an
+    array accumulator that starts as the init array, then unpack the final
+    state into the state columns.  Each round reads state k from slot k+1
+    of the accumulator with every binding inlined into the outputs
+    (bindings are deterministic, so textual duplication cannot change a
+    value); term order and quantization are the oracle's, so the
+    trajectory is IEEE-identical.
+
+    The loop sits behind an ``explode(array(...))`` Generate barrier in
+    column ``name``: ``aggregate()`` is a CodegenFallback expression, and
+    without the barrier CollapseProject inlines the loop into every
+    downstream consumer expression, where the interpreted evaluator
+    re-runs it once per textual copy (+0.06–0.14 s per warm collect on the
+    1-row iteration queries).  A Generate node is a projection-collapse
+    boundary, so the loop runs once per row; a single-element explode
+    keeps row count and values."""
+    env = {s: f"element_at(acc, {k + 1})" for k, (s, _) in enumerate(it.state)}
+    for b, sql in it.step:
+        env[b] = _inline(sql, env)
+    init = ", ".join(sql for _, sql in it.state)
+    body = ", ".join(env[o] for o in it.outputs)
+    loop = f"aggregate(sequence(1, {it.rounds}), array({init}), (acc, t) -> array({body}))"
+    df = df.select("*", F.explode(F.array(F.expr(loop))).alias(name))
+    for k, (s, _) in enumerate(it.state):
+        df = df.withColumn(s, F.element_at(name, k + 1))
+    return df
+
+
+def iterate_rounds_sql(tag: str, src: str, it: Iteration) -> tuple[list[str], str]:
+    """DuckDB twin of :func:`iterate_rounds`: ``it.rounds`` CTEs
+    ``{tag}1 .. {tag}R``, each MATERIALIZED.  The first reads ``src`` plus
+    the initial state, and every round carries all of ``src``'s columns.
+    Each round keeps its bindings layered: the non-output bindings in an
+    inner SELECT, the outputs renamed onto the state.  Returns the CTEs
+    and the last CTE's name."""
+    sql_of = dict(it.step)
+    inner = [(b, sql) for b, sql in it.step if b not in it.outputs]
+    new = ", ".join(f"{sql_of[o]} AS {s}" for o, (s, _) in zip(it.outputs, it.state))
+    init = ", ".join(f"{sql} AS {s}" for s, sql in it.state)
+    prev, ctes = f"(SELECT *, {init} FROM {src})", []
+    for t in range(1, it.rounds + 1):
+        if inner:
+            layer = ", ".join(f"{sql} AS {b}" for b, sql in inner)
+            drop = ", ".join(b for b, _ in inner)
+            body = (
+                f"SELECT * EXCLUDE ({drop}) REPLACE ({new})"
+                f" FROM (SELECT *, {layer} FROM {prev})"
+            )
+        else:
+            body = f"SELECT * REPLACE ({new}) FROM {prev}"
+        ctes.append(f"{tag}{t} AS MATERIALIZED ({body})")
+        prev = f"{tag}{t}"
+    return ctes, prev
+
+
+# ---------------------------------------------------------------------------
 # Markov stationary distribution of the user-journey event chain.
 # ---------------------------------------------------------------------------
 _MK_TYPES = ["click", "error", "purchase", "signup", "view"]  # fixed domain
@@ -359,11 +440,12 @@ _MK_ITERS = 12
 _MK_SCALE = 1_000_000
 
 
-def _mk_step_exprs() -> list[tuple[str, str]]:
-    """One power-iteration step pi' = pi·P on micro-integer pi — shared SQL
-    text; P_ij = c{i}_{j}/r{i} formed in DOUBLE inside the expression.
-    Row-sum guard: a state with no outgoing transition self-loops (keeps
-    the chain stochastic without data-dependent surprises)."""
+def _mk_iteration() -> Iteration:
+    """One power-iteration step pi' = pi·P on micro-integer pi, from the
+    uniform start; P_ij = c{i}_{j}/r{i} formed in DOUBLE inside the
+    expression.  Row-sum guard: a state with no outgoing transition
+    self-loops (keeps the chain stochastic without data-dependent
+    surprises)."""
     steps = []
     for j in range(_MK_K):
         terms = []
@@ -374,77 +456,74 @@ def _mk_step_exprs() -> list[tuple[str, str]]:
             )
             terms.append(f"CAST(p{i} AS DOUBLE) * {frac}")
         steps.append((f"np{j}", f"CAST(floor({' + '.join(terms)}) AS BIGINT)"))
-    return steps
-
-
-def _hof_once(df: DataFrame, name: str, loop_sql: str) -> DataFrame:
-    """Attach a HOF-loop column behind an ``explode(array(...))`` Generate
-    barrier (round 11).  ``aggregate()`` HOFs are CodegenFallback
-    expressions; without the barrier, CollapseProject inlines the whole
-    loop into EVERY downstream consumer expression and the interpreted
-    evaluator re-runs it once per textual copy — measured +0.06–0.14 s
-    per warm collect on the 1-row iteration queries.  A Generate node is
-    a projection-collapse boundary, so the loop is evaluated exactly
-    once per row and consumers reference the output attribute.  A
-    single-element array explode preserves row count and values."""
-    return df.select("*", F.explode(F.array(F.expr(loop_sql))).alias(name))
-
-
-def _mk_np_hof_expr(j: int, acc: str) -> str:
-    """The same np{j} step text as ``_mk_step_exprs`` with the state read
-    from an array lambda variable (p{i} -> element_at(acc, i+1)) — the
-    HOF-loop form of one pi·P round.  Term order and quantization are
-    identical to the unrolled/oracle text, so the arithmetic is
-    IEEE-identical; only the plan shape changes."""
-    terms = []
-    for i in range(_MK_K):
-        frac = (
-            f"(CASE WHEN r{i} = 0 THEN (CASE WHEN {i} = {j} THEN 1.0 ELSE 0.0 END)"
-            f" ELSE CAST(c{i}_{j} AS DOUBLE) / CAST(r{i} AS DOUBLE) END)"
-        )
-        terms.append(f"CAST(element_at({acc}, {i + 1}) AS DOUBLE) * {frac}")
-    return f"CAST(floor({' + '.join(terms)}) AS BIGINT)"
-
-
-def _mk_oracle() -> str:
-    cnt = ", ".join(
-        f"sum(CASE WHEN prev = '{a}' AND event_type = '{b}' THEN 1 ELSE 0 END)::BIGINT"
-        f" AS c{i}_{j}"
-        for i, a in enumerate(_MK_TYPES)
-        for j, b in enumerate(_MK_TYPES)
+    return Iteration(
+        [(f"p{i}", f"CAST({_MK_SCALE // _MK_K} AS BIGINT)") for i in range(_MK_K)],
+        _MK_ITERS,
+        steps,
+        [f"np{j}" for j in range(_MK_K)],
     )
-    rows = ", ".join(
-        "(" + " + ".join(f"c{i}_{j}" for j in range(_MK_K)) + f") AS r{i}"
-        for i in range(_MK_K)
-    )
-    init = ", ".join(
-        f"{_MK_SCALE // _MK_K}::BIGINT AS p{i}" for i in range(_MK_K)
-    )
-    keep = ", ".join(
-        [f"c{i}_{j}" for i in range(_MK_K) for j in range(_MK_K)]
-        + [f"r{i}" for i in range(_MK_K)]
-    )
-    ctes = [
-        """pairs AS (
+
+
+# The first-order transition counts of the user-journey chain: per-user
+# `lag(event_type)` pairs folded to 25 BIGINT cells c{i}_{j} (from state i
+# to state j) plus the row sums r{i}, as one row.
+_MK_COUNT_CELLS = ", ".join(
+    f"sum(CASE WHEN prev = '{a}' AND event_type = '{b}' THEN 1 ELSE 0 END)::BIGINT"
+    f" AS c{i}_{j}"
+    for i, a in enumerate(_MK_TYPES)
+    for j, b in enumerate(_MK_TYPES)
+)
+_MK_ROW_SUMS = ", ".join(
+    "(" + " + ".join(f"c{i}_{j}" for j in range(_MK_K)) + f") AS r{i}"
+    for i in range(_MK_K)
+)
+_SQL_MK_COUNTS = f"""pairs AS (
       SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                AS prev,
              event_type
-      FROM events)""",
-        f"c AS (SELECT {cnt} FROM pairs WHERE prev IS NOT NULL)",
-        f"it0 AS (SELECT *, {init} FROM (SELECT *, {rows} FROM c))",
+      FROM events),
+    c AS MATERIALIZED (SELECT *, {_MK_ROW_SUMS} FROM (
+      SELECT {_MK_COUNT_CELLS} FROM pairs WHERE prev IS NOT NULL))"""
+
+
+def markov_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_SQL_MK_COUNTS``.  The 1-row count frame is
+    materialized once by an eager ``localCheckpoint``: a plan-cached query
+    re-collected warm reruns only its iteration tail, not the corpus
+    window and aggregate; cold (build + first collect) carries them."""
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = ev.select(
+        F.lag("event_type").over(w).alias("prev"), "event_type"
+    ).filter(F.col("prev").isNotNull())
+    cnt_aggs = [
+        F.sum(
+            F.when(
+                (F.col("prev") == a) & (F.col("event_type") == b), F.lit(1)
+            ).otherwise(F.lit(0))
+        )
+        .cast("long")
+        .alias(f"c{i}_{j}")
+        for i, a in enumerate(_MK_TYPES)
+        for j, b in enumerate(_MK_TYPES)
     ]
-    prev = "it0"
-    for t in range(_MK_ITERS):
-        layer = ", ".join(f"{sql} AS p{name[2:]}" for name, sql in _mk_step_exprs())
-        ctes.append(f"it{t + 1} AS (SELECT {keep}, {layer} FROM {prev})")
-        prev = f"it{t + 1}"
+    it = pairs.agg(*cnt_aggs).localCheckpoint(eager=True)
+    for i in range(_MK_K):
+        it = it.withColumn(
+            f"r{i}", F.expr(" + ".join(f"c{i}_{j}" for j in range(_MK_K)))
+        )
+    return it
+
+
+def _mk_oracle() -> str:
+    rounds, last = iterate_rounds_sql("it", "c", _mk_iteration())
     sel = "\n      UNION ALL ".join(
         f"SELECT '{a}' AS event_type, "
         f"{_r4(f'CAST(p{i} AS DOUBLE) / {_MK_SCALE}.0')} AS stationary_prob, "
-        f"r{i}::BIGINT AS out_transitions FROM {prev}"
+        f"r{i}::BIGINT AS out_transitions FROM {last}"
         for i, a in enumerate(_MK_TYPES)
     )
-    cte_block = ",\n    ".join(ctes)
+    cte_block = ",\n    ".join([_SQL_MK_COUNTS, *rounds])
     return f"""
     WITH {cte_block}
     {sel}
@@ -457,10 +536,11 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the first-order user-journey Markov chain
     (what fraction of time an endless session spends in each event state) —
     the classic behavioral summary behind Markov attribution and journey
-    simulation.  Transition counts come from per-user `lag` pairs; the
-    stationary law is 12 unrolled rounds of pi·P on a 1-row frame.
+    simulation.  Transition counts come from per-user `lag` pairs
+    (`markov_transition_counts`); the stationary law is 12 rounds of pi·P
+    on the 1-row count frame, run as one `iterate_rounds` loop.
 
-    Exactness: counts are exact integers; every iteration is generated
+    Exactness: counts are exact integers; every round is generated
     ONCE as SQL text (micro-integer pi, DOUBLE mat-vec with fixed operand
     order, floor-quantize each round) and evaluated by both engines, the
     `q_pca_top_component` recipe applied to a stochastic
@@ -481,51 +561,7 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _markov_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("prev"), "event_type"
-    ).filter(F.col("prev").isNotNull())
-    cnt_aggs = [
-        F.sum(
-            F.when(
-                (F.col("prev") == a) & (F.col("event_type") == b), F.lit(1)
-            ).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias(f"c{i}_{j}")
-        for i, a in enumerate(_MK_TYPES)
-        for j, b in enumerate(_MK_TYPES)
-    ]
-    # 1-row count matrix materialized once (round 11): every re-collect of
-    # the plan-cached frame reruns only the iteration tail, not the corpus
-    # window+aggregate — the same disclosed build-time-checkpoint model the
-    # unrolled entropy/attribution plans used through r10 (their mid-loop
-    # barriers doubled as this); cold (= build + first collect) carries it.
-    it = pairs.agg(*cnt_aggs).localCheckpoint(eager=True)
-    for i in range(_MK_K):
-        it = it.withColumn(
-            f"r{i}", F.expr(" + ".join(f"c{i}_{j}" for j in range(_MK_K)))
-        )
-    # The _MK_ITERS power-iteration rounds are ONE aggregate() HOF over
-    # sequence(1, N) on an array<bigint> state instead of N unrolled
-    # withColumn layers (round 11, guide §1.2: the unrolled plan cost
-    # ~2.2 s of Catalyst analysis + Janino codegen per fresh build vs
-    # ~0.3 s for the single-expression loop; per-round arithmetic — term
-    # order, floor quantization — is the same generated text with
-    # p{i} -> element_at(acc, i+1), so results are bit-identical).
-    steps = ", ".join(
-        _mk_np_hof_expr(j, "acc") for j in range(_MK_K)
-    )
-    init = ", ".join(f"CAST({_MK_SCALE // _MK_K} AS BIGINT)" for _ in range(_MK_K))
-    it = _hof_once(
-        it,
-        "pv",
-        f"aggregate(sequence(1, {_MK_ITERS}), array({init}),"
-        f" (acc, t) -> array({steps}))",
-    )
-    for i in range(_MK_K):
-        it = it.withColumn(f"p{i}", F.element_at("pv", i + 1))
+    it = iterate_rounds(markov_transition_counts(spark, sf_dir), "pv", _mk_iteration())
     rows = it.select(
         F.explode(
             F.array(
@@ -724,9 +760,10 @@ def q_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Plan cache: prepared-statement semantics for expression-heavy queries.
 # ---------------------------------------------------------------------------
-# The wide-replica and unrolled-iteration plans below execute in ~0.1 s but
-# cost seconds of Catalyst optimization + Janino codegen PER FRESH
-# DataFrame (measured: bootstrap 4.3 s/call rebuilt vs 0.1 s re-collected).
+# The wide-replica and iteration plans below execute in ~0.1 s but cost
+# up to seconds of Catalyst optimization + Janino codegen, or an eager
+# build-time checkpoint, PER FRESH DataFrame (measured: bootstrap 4.3 s/call
+# rebuilt vs 0.1 s re-collected).
 # A DataFrame object caches its optimized/physical plan, so returning the
 # same object per (session, sf_dir) amortizes compile exactly like a
 # prepared statement — no DATA is cached; every collect re-executes.
@@ -2492,24 +2529,23 @@ def _pca_m_exprs() -> list[tuple[str, str]]:
     ]
 
 
-def _pca_iter_exprs(src: str) -> list[tuple[str, str]]:
-    """[(col_name, sql_expr)] for one matrix-vector step + renormalize,
-    reading v components ``{src}0..{src}{D-1}`` — plain SQL text valid in
-    both Spark SQL and DuckDB (CAST/floor/abs/greatest only).
+def _pca_iteration() -> Iteration:
+    """One matrix-vector step + max-norm renormalize on the moment matrix
+    ``m{j}_{k}``, from v = (1e6, ..., 1e6) — plain SQL text valid in both
+    Spark SQL and DuckDB (CAST/floor/abs/greatest only).
 
-    The mat-vec products multiply in DECIMAL, not BIGINT (round-9: the
-    1000× campaign caught ARITHMETIC_OVERFLOW — M_jk ≈ Q·n grows with
-    row count, so M·v·D ≈ 2.4e19 > 2^63 at 600M lineitem rows; 100×
-    passed at 2.4e18).  Widths are chosen for DuckDB's strict
-    width-addition rule (25+7 = 32 ≤ 38): DECIMAL(25,0) holds the
-    moment sums to ~1e21 rows, DECIMAL(7,0) the ±1e6-unit iterate.
-    Exact integer arithmetic either way, so gate results are
-    bit-unchanged."""
+    The mat-vec products multiply in DECIMAL, not BIGINT: M_jk ≈ Q·n
+    grows with row count, so M·v·D ≈ 2.4e19 > 2^63 at 600M lineitem rows
+    (ARITHMETIC_OVERFLOW; 100× passed at 2.4e18).  Widths are chosen for
+    DuckDB's strict width-addition rule (25+7 = 32 ≤ 38): DECIMAL(25,0)
+    holds the moment sums to ~1e21 rows, DECIMAL(7,0) the ±1e6-unit
+    iterate.  Exact integer arithmetic either way, so results are the
+    BIGINT ones wherever BIGINT did not overflow."""
     steps = []
     for j in range(_PCA_D):
         dot = " + ".join(
             f"CAST({_pca_m_name(j, k)} AS DECIMAL(25,0))"
-            f" * CAST({src}{k} AS DECIMAL(7,0))"
+            f" * CAST(v{k} AS DECIMAL(7,0))"
             for k in range(_PCA_D)
         )
         steps.append((f"w{j}", f"({dot})"))
@@ -2523,50 +2559,18 @@ def _pca_iter_exprs(src: str) -> list[tuple[str, str]]:
                 f" / CAST(wmax AS DOUBLE)) AS BIGINT)",
             )
         )
-    return steps
-
-
-def _pca_hof_loop_expr(iters: int, mpfx: str = "m") -> str:
-    """The power-iteration rounds as ONE aggregate() HOF over
-    sequence(1, iters) on an array<bigint> state (round 11): the same
-    per-round text as ``_pca_iter_exprs`` with v{k} -> element_at(acc,
-    k+1) and w{j}/wmax inlined (they are deterministic, so textual
-    duplication cannot change the value).  Identical operand order and
-    quantization ⇒ bit-identical trajectory; the plan shrinks from
-    iters × (2D+1) unrolled column layers to one expression.
-
-    ``mpfx`` selects the moment-matrix column family (``m`` for the
-    phase-1 matrix, any other prefix for e.g. a deflated matrix whose
-    columns follow the same ``{pfx}{j}_{k}`` naming)."""
-
-    def w_text(j: int) -> str:
-        return (
-            "("
-            + " + ".join(
-                f"CAST({mpfx}{j}_{k} AS DECIMAL(25,0))"
-                f" * CAST(element_at(acc, {k + 1}) AS DECIMAL(7,0))"
-                for k in range(_PCA_D)
-            )
-            + ")"
-        )
-
-    wmax = "greatest(" + ", ".join(f"abs({w_text(j)})" for j in range(_PCA_D)) + ")"
-    steps = ", ".join(
-        f"CAST(floor((CAST({w_text(j)} AS DOUBLE) * {_PCA_SCALE}.0)"
-        f" / CAST({wmax} AS DOUBLE)) AS BIGINT)"
-        for j in range(_PCA_D)
-    )
-    init = ", ".join(f"CAST({_PCA_SCALE} AS BIGINT)" for _ in range(_PCA_D))
-    return (
-        f"aggregate(sequence(1, {iters}), array({init}),"
-        f" (acc, t) -> array({steps}))"
+    return Iteration(
+        [(f"v{j}", f"CAST({_PCA_SCALE} AS BIGINT)") for j in range(_PCA_D)],
+        _PCA_ITERS,
+        steps,
+        [f"n{j}" for j in range(_PCA_D)],
     )
 
 
 def _pca_lambda_expr(v: str) -> str:
     """Rayleigh quotient v'Mv / v'v in DOUBLE, fixed left-to-right sums.
     Inner M·v products in DECIMAL for the same overflow headroom as
-    :func:`_pca_iter_exprs` (the sum is cast to DOUBLE afterwards, so
+    :func:`_pca_iteration` (the sum is cast to DOUBLE afterwards, so
     the emitted float is unchanged wherever BIGINT didn't overflow)."""
     mv = " + ".join(
         "CAST("
@@ -2589,30 +2593,12 @@ def _pca_oracle() -> str:
     m_aggs = ",\n             ".join(
         f"{sql}::BIGINT AS {name}" for name, sql in _pca_m_exprs()
     )
+    rounds, prev = iterate_rounds_sql("it", "m", _pca_iteration())
     ctes = [
         f"feats AS (SELECT {feats} FROM lineitem)",
         f"m AS (SELECT {m_aggs} FROM feats)",
+        *rounds,
     ]
-    init = ", ".join(f"{_PCA_SCALE}::BIGINT AS v{j}" for j in range(_PCA_D))
-    ctes.append(f"it0 AS (SELECT *, {init} FROM m)")
-    m_cols = ", ".join(_pca_m_name(j, k) for j in range(_PCA_D) for k in range(_PCA_D))
-    prev = "it0"
-    for t in range(_PCA_ITERS):
-        w_layer = ", ".join(
-            f"{expr} AS {name}"
-            for name, expr in _pca_iter_exprs("v")
-            if not name.startswith("n")
-        )
-        n_layer = ", ".join(
-            f"{expr} AS v{name[1:]}"
-            for name, expr in _pca_iter_exprs("v")
-            if name.startswith("n")
-        )
-        ctes.append(
-            f"it{t + 1} AS (SELECT {m_cols}, {n_layer} FROM "
-            f"(SELECT *, {w_layer} FROM {prev}))"
-        )
-        prev = f"it{t + 1}"
     lam = _pca_lambda_expr("v")
     dims = "\n      UNION ALL ".join(
         f"SELECT {j} AS dim, "
@@ -2667,18 +2653,13 @@ def _pca_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = li.select(
         *[F.expr(e).alias(f"x{j}") for j, e in enumerate(_PCA_FEATURES)]
     )
-    # 1-row moment matrix materialized once (round 11): warm collects rerun
-    # only the iteration tail (same disclosed build-checkpoint model as the
-    # markov/svd family; cold = build + first collect carries the scan).
+    # 1-row moment matrix materialized once: warm collects rerun only the
+    # iteration tail (same build-checkpoint model as the markov/svd family;
+    # cold = build + first collect carries the scan).
     it = feats.agg(
         *[F.expr(sql).cast("long").alias(name) for name, sql in _pca_m_exprs()]
     ).localCheckpoint(eager=True)
-    # HOF-loop form of the 8 power-iteration rounds (round 11; see
-    # _pca_hof_loop_expr — bit-identical arithmetic, tiny plan; the
-    # _hof_once Generate barrier keeps the loop evaluated once).
-    it = _hof_once(it, "pv", _pca_hof_loop_expr(_PCA_ITERS))
-    for j in range(_PCA_D):
-        it = it.withColumn(f"v{j}", F.element_at("pv", j + 1))
+    it = iterate_rounds(it, "pv", _pca_iteration())
     lam = F.expr(_pca_lambda_expr("v"))
     rows = it.select(
         F.explode(
@@ -2704,8 +2685,8 @@ def _pca_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _p2_mvv_text() -> str:
     """u'Mu in DOUBLE, fixed left-to-right order (shared text).  Inner
-    M·u products in DECIMAL — same r9 overflow fix as
-    ``_pca_iter_exprs`` (M_jk grows with row count; BIGINT overflowed at
+    M·u products in DECIMAL — the overflow headroom of
+    ``_pca_iteration`` (M_jk grows with row count; BIGINT overflowed at
     600M lineitem rows)."""
     return " + ".join(
         "CAST("
@@ -2752,36 +2733,12 @@ def _pca2_oracle() -> str:
         f"{sql}::BIGINT AS {name}" for name, sql in _pca_m_exprs()
     )
     m_cols = ", ".join(_pca_m_name(j, k) for j in range(_PCA_D) for k in range(_PCA_D))
-    init = ", ".join(f"{_PCA_SCALE}::BIGINT AS v{j}" for j in range(_PCA_D))
-
-    def iter_ctes(tag: str, first: str, carry: str) -> tuple[list[str], str]:
-        ctes, prev = [], first
-        for t in range(_PCA_ITERS):
-            w_layer = ", ".join(
-                f"{expr} AS {name}"
-                for name, expr in _pca_iter_exprs("v")
-                if not name.startswith("n")
-            )
-            n_layer = ", ".join(
-                f"{expr} AS v{name[1:]}"
-                for name, expr in _pca_iter_exprs("v")
-                if name.startswith("n")
-            )
-            cur = f"{tag}{t + 1}"
-            ctes.append(
-                f"{cur} AS (SELECT {carry}, {n_layer} FROM "
-                f"(SELECT *, {w_layer} FROM {prev}))"
-            )
-            prev = cur
-        return ctes, prev
-
+    phase1, prev1 = iterate_rounds_sql("ita", "m", _pca_iteration())
     ctes = [
         f"feats AS (SELECT {feats} FROM lineitem)",
         f"m AS (SELECT {m_aggs} FROM feats)",
-        f"ita0 AS (SELECT *, {init} FROM m)",
+        *phase1,
     ]
-    phase1, prev1 = iter_ctes("ita", "ita0", m_cols)
-    ctes += phase1
     u_cols = ", ".join(f"v{j} AS u{j}" for j in range(_PCA_D))
     ctes.append(f"uphase AS (SELECT {m_cols}, {u_cols} FROM {prev1})")
     ctes.append(
@@ -2795,8 +2752,7 @@ def _pca2_oracle() -> str:
     )
     u_keep = ", ".join(f"u{j}" for j in range(_PCA_D))
     ctes.append(f"defl AS MATERIALIZED (SELECT {d_cols}, {u_keep}, uvv FROM ustats)")
-    ctes.append(f"itb0 AS (SELECT *, {init} FROM defl)")
-    phase2, prev2 = iter_ctes("itb", "itb0", f"{m_cols}, {u_keep}, uvv")
+    phase2, prev2 = iterate_rounds_sql("itb", "defl", _pca_iteration())
     ctes += phase2
     lam = _pca_lambda_expr("v")
     ortho = _p2_ortho_text()
@@ -2836,29 +2792,21 @@ def q_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs noise ≈ λ2).
 
     Scale: same economics as `pca_top_component` — ONE partial-agg'd
-    scan for the 16-entry matrix, then 1-row arithmetic; the eager
-    1-row localCheckpoint between phases is the house codegen barrier
-    (>64 KB generated methods fall back to interpreted eval).
+    scan for the 16-entry matrix, then 1-row arithmetic: each phase is
+    one `iterate_rounds` loop, and the deflation between them is a
+    plain projection on the same 1-row frame.
     """
     def build() -> DataFrame:
         li = _t(spark, sf_dir, "lineitem")
         feats = li.select(
             *[F.expr(e).alias(f"x{j}") for j, e in enumerate(_PCA_FEATURES)]
         )
-        # 1-row moment matrix materialized once (round 11; same model as
+        # 1-row moment matrix materialized once (same model as
         # pca_top_component — warm reruns only the two iteration phases).
         it = feats.agg(
             *[F.expr(sql).cast("long").alias(name) for name, sql in _pca_m_exprs()]
         ).localCheckpoint(eager=True)
-
-        # Both 8-round phases are ONE aggregate() HOF each (round 11;
-        # _pca_hof_loop_expr — bit-identical arithmetic, tiny plan; the
-        # _hof_once Generate barrier keeps each loop evaluated once); the
-        # eager localCheckpoint codegen barrier between phases is gone
-        # because there is no >64 KB generated method anymore.
-        it = _hof_once(it, "pva", _pca_hof_loop_expr(_PCA_ITERS))
-        for j in range(_PCA_D):
-            it = it.withColumn(f"v{j}", F.element_at("pva", j + 1))
+        it = iterate_rounds(it, "pva", _pca_iteration())
         for j in range(_PCA_D):
             it = it.withColumn(f"u{j}", F.col(f"v{j}")).drop(f"v{j}")
         it = it.withColumn("uvv", F.expr(_p2_vv_text())).withColumn(
@@ -2873,9 +2821,7 @@ def q_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"u{j}") for j in range(_PCA_D)],
             "uvv",
         )
-        it2 = _hof_once(defl, "pvb", _pca_hof_loop_expr(_PCA_ITERS))
-        for j in range(_PCA_D):
-            it2 = it2.withColumn(f"v{j}", F.element_at("pvb", j + 1))
+        it2 = iterate_rounds(defl, "pvb", _pca_iteration())
         lam = F.expr(_pca_lambda_expr("v"))
         ortho = F.expr(_p2_ortho_text())
         rows = it2.select(
@@ -2914,10 +2860,11 @@ _SVD2_P1_ROUNDS = 8    # sigma1/sigma2 gap is wide: 8 rounds suffice for v1
 _SVD2_P2_ROUNDS = 48   # deflated spectrum is near-degenerate: see docstring
 
 
-def _svd2_w_exprs(gpfx: str) -> list[tuple[str, str]]:
+def _svd2_iteration(gpfx: str, rounds: int) -> Iteration:
     """One mat-vec + max-norm renormalize on the 5x5 ``{gpfx}j_k`` DOUBLE
-    matrix — shared SQL text (DOUBLE ops on exactly-agreed inputs are
-    IEEE-identical cross-engine; v requantizes to 1e6-unit BIGINT)."""
+    matrix, from v = (1e6, ..., 1e6) — shared SQL text (DOUBLE ops on
+    exactly-agreed inputs are IEEE-identical cross-engine; v requantizes
+    to 1e6-unit BIGINT)."""
     steps = []
     for j in range(_SVD2_K):
         dot = " + ".join(
@@ -2931,36 +2878,11 @@ def _svd2_w_exprs(gpfx: str) -> list[tuple[str, str]]:
         steps.append(
             (f"n{j}", f"CAST(floor(w{j} * {_SVD2_SCALE}.0 / wmax) AS BIGINT)")
         )
-    return steps
-
-
-def _svd2_hof_loop_expr(rounds: int, gpfx: str) -> str:
-    """All ``rounds`` mat-vec + max-norm renormalize steps as ONE
-    aggregate() HOF on an array<bigint> state (round 11): per-round text
-    identical to ``_svd2_w_exprs`` with v{k} -> element_at(acc, k+1) and
-    w{j}/wmax inlined (deterministic subexpressions — duplication cannot
-    change the value).  Bit-identical trajectory, no unrolled layers, no
-    1-row localCheckpoint codegen barriers."""
-
-    def w_text(j: int) -> str:
-        return (
-            "("
-            + " + ".join(
-                f"{gpfx}{j}_{k} * CAST(element_at(acc, {k + 1}) AS DOUBLE)"
-                for k in range(_SVD2_K)
-            )
-            + ")"
-        )
-
-    wmax = "greatest(" + ", ".join(f"abs({w_text(j)})" for j in range(_SVD2_K)) + ")"
-    steps = ", ".join(
-        f"CAST(floor({w_text(j)} * {_SVD2_SCALE}.0 / {wmax}) AS BIGINT)"
-        for j in range(_SVD2_K)
-    )
-    init = ", ".join(f"CAST({_SVD2_SCALE} AS BIGINT)" for _ in range(_SVD2_K))
-    return (
-        f"aggregate(sequence(1, {rounds}), array({init}),"
-        f" (acc, t) -> array({steps}))"
+    return Iteration(
+        [(f"v{j}", f"CAST({_SVD2_SCALE} AS BIGINT)") for j in range(_SVD2_K)],
+        rounds,
+        steps,
+        [f"n{j}" for j in range(_SVD2_K)],
     )
 
 
@@ -3001,23 +2923,6 @@ def _svd2_ortho_expr() -> str:
     return f"(({dot}) / (sqrt(pvv) * sqrt({_svd2_vv_expr('v')})))"
 
 
-def _svd2_iter_cte(tag: str, t: int, prev: str, carry: str, gpfx: str) -> str:
-    w_layer = ", ".join(
-        f"{expr} AS {name}"
-        for name, expr in _svd2_w_exprs(gpfx)
-        if not name.startswith("n")
-    )
-    n_layer = ", ".join(
-        f"{expr} AS v{name[1:]}"
-        for name, expr in _svd2_w_exprs(gpfx)
-        if name.startswith("n")
-    )
-    return (
-        f"{tag}{t} AS MATERIALIZED (SELECT {carry}, {n_layer} FROM "
-        f"(SELECT *, {w_layer} FROM {prev}))"
-    )
-
-
 def _svd2_oracle() -> str:
     s = _SVD2_SCALE
     piv = ", ".join(
@@ -3038,7 +2943,7 @@ def _svd2_oracle() -> str:
     gd_cols = ", ".join(
         f"gd{j}_{k}" for j in range(_SVD2_K) for k in range(_SVD2_K)
     )
-    init = ", ".join(f"{s}::BIGINT AS v{j}" for j in range(_SVD2_K))
+    phase1, prev = iterate_rounds_sql("ita", "g", _svd2_iteration("gd", _SVD2_P1_ROUNDS))
     ctes = [
         """m AS MATERIALIZED (
       SELECT user_id, event_type,
@@ -3047,12 +2952,8 @@ def _svd2_oracle() -> str:
         f"pu AS MATERIALIZED (SELECT user_id, {piv} FROM m GROUP BY 1)",
         f"gi AS (SELECT {gagg} FROM pu)",
         f"g AS (SELECT {gd} FROM gi)",
-        f"ita0 AS (SELECT *, {init} FROM g)",
+        *phase1,
     ]
-    prev = "ita0"
-    for t in range(1, _SVD2_P1_ROUNDS + 1):
-        ctes.append(_svd2_iter_cte("ita", t, prev, gd_cols, "gd"))
-        prev = f"ita{t}"
     lam1 = _svd2_lam_expr("gd")
     keep_p = ", ".join(f"v{j} AS p{j}" for j in range(_SVD2_K))
     ctes.append(
@@ -3065,18 +2966,11 @@ def _svd2_oracle() -> str:
         for k in range(_SVD2_K)
     )
     p_cols = ", ".join(f"p{j}" for j in range(_SVD2_K))
-    dd_cols = ", ".join(
-        f"dd{j}_{k}" for j in range(_SVD2_K) for k in range(_SVD2_K)
-    )
-    carry2 = f"{dd_cols}, {p_cols}, pvv, lam1"
     ctes.append(
         f"defl AS MATERIALIZED (SELECT {d_cols}, {p_cols}, pvv, lam1 FROM ph1b)"
     )
-    ctes.append(f"itb0 AS (SELECT *, {init} FROM defl)")
-    prev = "itb0"
-    for t in range(1, _SVD2_P2_ROUNDS + 1):
-        ctes.append(_svd2_iter_cte("itb", t, prev, carry2, "dd"))
-        prev = f"itb{t}"
+    phase2, prev = iterate_rounds_sql("itb", "defl", _svd2_iteration("dd", _SVD2_P2_ROUNDS))
+    ctes += phase2
     lam2 = _svd2_lam_expr("dd")
     ortho = _svd2_ortho_expr()
     rows = "\n    UNION ALL ".join(
@@ -3124,9 +3018,9 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gram aggregate shuffles k² scalars per task and iteration touches no
     data; the distributed user factor, when needed, is u_i = M v_i / σ_i,
     one broadcast join away (demonstrated at rank 1 by
-    `svd_rank1_affinity`'s alternating form).  Codegen: 56 unrolled
-    rounds exceed the 64 KB method limit, so a 1-row eager
-    localCheckpoint barrier lands every 8 rounds (house lesson).
+    `svd_rank1_affinity`'s alternating form).  Each phase is one
+    `iterate_rounds` loop on the 1-row Gram frame, so the 56 rounds add
+    no Spark job and no generated-code size.
     """
     def build() -> DataFrame:
         s = _SVD2_SCALE
@@ -3160,9 +3054,8 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k in range(_SVD2_K)
             ]
         )
-        # 1-row Gram matrix materialized once (round 11): warm collects
-        # rerun only the iteration tail — the unrolled plan's every-8-rounds
-        # eager barriers already gave warm exactly this scope through r10.
+        # 1-row Gram matrix materialized once: warm collects rerun only the
+        # iteration tail.
         it = gi.select(
             *[
                 F.col(f"gi{j}_{k}").cast("double").alias(f"gd{j}_{k}")
@@ -3170,13 +3063,7 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k in range(_SVD2_K)
             ]
         ).localCheckpoint(eager=True)
-        # Both iteration phases are ONE aggregate() HOF each (round 11;
-        # _svd2_hof_loop_expr): bit-identical arithmetic, no unrolled
-        # layers, no eager localCheckpoint barrier jobs.  _hof_once's
-        # Generate barrier keeps each loop evaluated once per row.
-        it = _hof_once(it, "pva", _svd2_hof_loop_expr(_SVD2_P1_ROUNDS, "gd"))
-        for j in range(_SVD2_K):
-            it = it.withColumn(f"v{j}", F.element_at("pva", j + 1))
+        it = iterate_rounds(it, "pva", _svd2_iteration("gd", _SVD2_P1_ROUNDS))
         it = it.withColumn("lam1", F.expr(_svd2_lam_expr("gd")))
         for j in range(_SVD2_K):
             it = it.withColumn(f"p{j}", F.col(f"v{j}")).drop(f"v{j}")
@@ -3190,9 +3077,7 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pvv",
             "lam1",
         )
-        it = _hof_once(it, "pvb", _svd2_hof_loop_expr(_SVD2_P2_ROUNDS, "dd"))
-        for j in range(_SVD2_K):
-            it = it.withColumn(f"v{j}", F.element_at("pvb", j + 1))
+        it = iterate_rounds(it, "pvb", _svd2_iteration("dd", _SVD2_P2_ROUNDS))
         lam2 = _svd2_lam_expr("dd")
         ortho = _svd2_ortho_expr()
         rows = it.select(
